@@ -43,7 +43,7 @@ import json
 from dataclasses import dataclass
 from typing import Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,6 +109,46 @@ def index_to_id(index: int) -> str:
     return "%024d" % index
 
 
+# plumbing columns carrying a durable record's seq and stored document
+# next to its typed view (a document key of the same name disables them)
+_SEQ_COL = "__bn_seq__"
+_VALUE_COL = "__bn_value__"
+
+
+class StoredDoc(Row):
+    """A served durable record: its ``id`` and ``value``, the document
+    exactly as the log stores it — sent on the wire verbatim."""
+
+
+def _stored_docs(rows: list) -> list:
+    """``(seq, value)`` rows → :class:`StoredDoc`, order kept."""
+    return [StoredDoc(id=index_to_id(seq), value=v) for seq, v in rows]
+
+
+def strip_nulls(v):
+    """Drop dict entries whose value is null — the typed view carries
+    every schema column, absent keys surface as nulls, and the wire
+    document must be the inserted shape (``native.go:294-311`` stores
+    the document verbatim plus ``id``).  Nulls inside arrays are kept
+    (array length is data, not schema)."""
+    if isinstance(v, dict):
+        return {k: strip_nulls(x) for k, x in v.items() if x is not None}
+    if isinstance(v, list):
+        return [strip_nulls(x) for x in v]
+    return v
+
+
+def _fetch_order(col: str, direction: int) -> Column:
+    return F.col(col).desc() if direction < 0 else F.col(col).asc()
+
+
+def _order_limit(df: DataFrame, order: Column, limit: int) -> DataFrame:
+    """``orderBy`` plus ``limit(N)`` when N > 0 — a TakeOrderedAndProject
+    then, one job and no global sort."""
+    df = df.orderBy(order)
+    return df.limit(limit) if limit > 0 else df
+
+
 @dataclass
 class Metadata:
     """Progress metadata frame (structs.go:75-82)."""
@@ -121,15 +161,14 @@ class Metadata:
     no_more_data: bool = False
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "current": self.current,
-                "total": self.total,
-                "numberOfWritten": self.number_of_written,
-                "leftOff": self.left_off,
-                "truncatedTimestamp": self.truncated_timestamp,
-                "noMoreData": self.no_more_data,
-            }
+        """The frame as ``json.dumps`` of its field dict would print it
+        (the counters are ints), without building the dict."""
+        return (
+            f'{{"current": {self.current}, "total": {self.total}, '
+            f'"numberOfWritten": {self.number_of_written}, '
+            f'"leftOff": {json.dumps(self.left_off)}, '
+            f'"truncatedTimestamp": {self.truncated_timestamp}, '
+            f'"noMoreData": {"true" if self.no_more_data else "false"}}}'
         )
 
 
@@ -799,7 +838,10 @@ class BasenineDB:
         return self._df
 
     def _typed_view(
-        self, min_seq: Optional[int] = None, max_seq: Optional[int] = None
+        self,
+        min_seq: Optional[int] = None,
+        max_seq: Optional[int] = None,
+        stored: bool = False,
     ) -> DataFrame:
         """Schema-free docs → typed DataFrame (SURVEY §1.4).
 
@@ -810,18 +852,16 @@ class BasenineDB:
         Fallback (legacy logs, or after non-additive schema evolution /
         a dynamic insertion-filter batch): ``from_json`` over the raw
         ``value``.  id-range predicates hit the *physical* ``seq``
-        column in both paths, pruning files via min/max stats."""
-        assert self._log is not None
-        if self._log.live_count == 0:
-            raise ValueError("no data ingested")
-        if self._typed_schema is None:
-            self._infer_schema_from_log()
-        if self._shred_ok and self._typed_schema.fields:
+        column in both paths, pruning files via min/max stats.
+        ``stored=True`` keeps ``seq`` and the raw ``value`` beside the
+        typed columns as ``_SEQ_COL`` / ``_VALUE_COL``."""
+        schema = self._view_schema()
+        shredded = self._shred_ok and bool(schema.fields)
+        if shredded:
             from .log import LOG_SCHEMA
 
             read_schema = T.StructType(
-                list(LOG_SCHEMA.fields)
-                + [T.StructField("doc", self._typed_schema, True)]
+                list(LOG_SCHEMA.fields) + [T.StructField("doc", schema, True)]
             )
             scan = self.spark.read.schema(read_schema).parquet(
                 self._log.path
@@ -832,11 +872,24 @@ class BasenineDB:
             scan = scan.filter(F.col("seq") >= min_seq)
         if max_seq is not None:
             scan = scan.filter(F.col("seq") <= max_seq)
-        if self._shred_ok and self._typed_schema.fields:
-            return scan.select("doc.*")
+        names = [_SEQ_COL, _VALUE_COL] if stored else []
+        extra = [F.col(c).alias(n) for c, n in zip(("seq", "value"), names)]
+        if shredded:
+            return scan.select("doc.*", *extra)
         return scan.select(
-            F.from_json(F.col("value"), self._typed_schema).alias("doc")
-        ).select("doc.*")
+            F.from_json(F.col("value"), schema).alias("doc"),
+            *extra,
+        ).select("doc.*", *names)
+
+    def _view_schema(self) -> T.StructType:
+        """The typed view's schema (inferred once for a log that has
+        none persisted); raises when the log holds no records."""
+        assert self._log is not None
+        if self._log.live_count == 0:
+            raise ValueError("no data ingested")
+        if self._typed_schema is None:
+            self._infer_schema_from_log()
+        return self._typed_schema
 
     def _infer_schema_from_log(self) -> None:
         """Schema recovery for logs with no persisted schema (created
@@ -917,6 +970,21 @@ class BasenineDB:
         truncation still applies (records rotated out are gone —
         snapshots reach back only to the retention horizon)."""
         q = self._prepare(query)
+        df, _ = self._query_frame(q, left_off, as_of=as_of)
+        return _order_limit(df, F.col(self.id_col).asc(), q.limit)
+
+    def _query_frame(
+        self,
+        q: Query,
+        left_off: int | str,
+        as_of: int | None = None,
+        stored: bool = False,
+    ) -> tuple[DataFrame, bool]:
+        """The records of :meth:`query`, unordered and unlimited, and
+        whether they are stored documents.  ``stored=True`` asks for
+        :meth:`_stored_frame`'s ``(seq, value)`` shape where the log
+        can give it; otherwise the frame is the typed view after
+        :meth:`_apply_bfl`."""
         if self._log is not None:
             # resume offset as a physical seq predicate → file pruning
             min_seq = None
@@ -924,6 +992,10 @@ class BasenineDB:
                 min_seq = max(self._log.total_written - 1, 0)
             elif left_off not in (0, None, ""):
                 min_seq = int(left_off) + 1
+            if stored:
+                sdf = self._stored_frame(q, min_seq=min_seq, max_seq=as_of)
+                if sdf is not None:
+                    return sdf, True
             df = self._typed_view(min_seq=min_seq, max_seq=as_of)
         else:
             df = self.dataframe()
@@ -946,11 +1018,52 @@ class BasenineDB:
                     df = df.filter(F.col(self.id_col) >= F.lit(last))
                 else:
                     df = df.filter(F.col(self.id_col) > F.lit(left_off))
-        df = self._apply_bfl(df, q)
-        df = df.orderBy(F.col(self.id_col).asc())
-        if q.limit > 0:
-            df = df.limit(q.limit)
-        return df
+        return self._apply_bfl(df, q), False
+
+    def _stored_frame(
+        self,
+        q: Query,
+        min_seq: Optional[int] = None,
+        max_seq: Optional[int] = None,
+    ) -> Optional[DataFrame]:
+        """Durable records in ``[min_seq, max_seq]`` that ``q`` keeps,
+        as ``(seq, value)``: ``value`` is the stored document itself
+        (id included, ``log.py:_append_driver``), so serving it needs
+        no typed-row re-serialization and keeps what the typed view
+        loses (explicit nulls, numbers before a later batch widened
+        their leaf).  The filter runs on the typed columns as in
+        :meth:`_apply_bfl`; the scan reads ``seq``, ``value`` and the
+        predicate's columns only.  None when the filter needs the
+        typed fallback (it does not compile to a Column) or a document
+        key shadows a plumbing column."""
+        schema = self._view_schema()
+        if set(schema.fieldNames()) & {_SEQ_COL, _VALUE_COL}:
+            return None
+        try:
+            compiled = compile_filter(q, schema)
+        except UnsupportedBFL:
+            return None
+        view = self._typed_view(min_seq=min_seq, max_seq=max_seq, stored=True)
+        if compiled.predicate is not None:
+            view = view.filter(compiled.predicate)
+        return view.select(
+            F.col(_SEQ_COL).alias("seq"), F.col(_VALUE_COL).alias("value")
+        )
+
+    def _served_frame(
+        self, q: Query, left_off: int | str
+    ) -> tuple[DataFrame, bool, bool]:
+        """The DataFrame a QUERY poll collects: ``(df, stored, ordered)``.
+        Spark orders it only under ``limit(N)`` (TakeOrderedAndProject,
+        one job) or for a mounted table (natural ids, Spark's
+        ordering); otherwise it is one unsorted scan, sorted on the
+        driver after the collect — no range-partition sampling job,
+        no shuffle."""
+        df, stored = self._query_frame(q, left_off, stored=True)
+        if q.limit > 0 or self._mounted:
+            order = F.col("seq" if stored else self.id_col).asc()
+            return _order_limit(df, order, q.limit), stored, True
+        return df, stored, False
 
     def query_with_metadata(
         self, query: str = "", left_off: int | str = 0
@@ -962,8 +1075,19 @@ class BasenineDB:
         frame), ``numberOfWritten`` is the running delivered count, and
         ``leftOff`` is the delivered record's id — the resume token a
         client hands back to continue.  ``noMoreData`` stays false in
-        query mode (it is a FETCH concept)."""
-        rows = self.query(query, left_off=left_off).collect()
+        query mode (it is a FETCH concept).
+
+        Durable rows are :class:`StoredDoc` where the filter compiles
+        (see :meth:`_stored_frame`), typed or row-backend rows
+        otherwise."""
+        q = self._prepare(query)
+        df, stored, ordered = self._served_frame(q, left_off)
+        rows = df.collect()
+        if not ordered:
+            key = 0 if stored else self.id_col
+            rows.sort(key=lambda r: r[key])
+        if stored:
+            rows = _stored_docs(rows)
         contiguous = not self._mounted
         if self._log is not None:
             total = self._log.live_count
@@ -1042,6 +1166,43 @@ class BasenineDB:
             return json.loads(new_doc)
         return doc
 
+    def single_json(self, record_id, query: str = "") -> Optional[str]:
+        """/single's wire document.  In durable mode, unless the query
+        redacts, it is the stored document — the bytes QUERY and FETCH
+        send for the same record; otherwise :meth:`single`'s record,
+        serialized with schema-null keys dropped."""
+        if self._log is not None and self._log.live_count > 0:
+            try:
+                seq: Optional[int] = int(record_id)
+            except (TypeError, ValueError):
+                seq = None
+            if seq is not None:
+                rows = (
+                    self._log.scan()
+                    .filter(
+                        (F.col("seq") == seq)
+                        & (F.col(ID_COL) == F.lit(record_id))
+                    )
+                    .select("value")
+                    .limit(1)
+                    .collect()
+                )
+                if not rows:
+                    return None  # "Record does not exist!"
+                q = self._prepare(query)
+                if q.expr is None:
+                    return rows[0][0]
+                if collect_redact_taints(q.expr) == []:
+                    from ..bfl.pyeval import eval_query
+
+                    # evaluated for its errors only, as single() does
+                    eval_query(q, rows[0][0])
+                    return rows[0][0]
+        rec = self.single(record_id, query)
+        if rec is None:
+            return None
+        return json.dumps(strip_nulls(rec), separators=(",", ":"), default=str)
+
     def fetch(
         self,
         left_off: int | str,
@@ -1057,23 +1218,40 @@ class BasenineDB:
         (``handleSpecialLeftOff``, increment 0 — ``native.go:627-631,
         1157-1176``)."""
         left_off = self._resolve_fetch_left_off(left_off)
-        if self._log is not None:
-            if direction < 0:
-                df = self._typed_view(max_seq=int(left_off) - 1)
-                order = F.col(self.id_col).desc()
-            else:
-                df = self._typed_view(min_seq=int(left_off))
-                order = F.col(self.id_col).asc()
-        elif direction < 0:
-            df = self.dataframe().filter(F.col(self.id_col) < F.lit(left_off))
-            order = F.col(self.id_col).desc()
-        else:
-            df = self.dataframe().filter(F.col(self.id_col) >= F.lit(left_off))
-            order = F.col(self.id_col).asc()
+        q = self._fetch_query(query)
+        df, _ = self._fetch_frame(q, left_off, direction)
+        return df.orderBy(_fetch_order(self.id_col, direction)).limit(limit)
+
+    def _fetch_query(self, query: str) -> Query:
         q = self._prepare(query)
         q.limit = 0  # limit() helper ineffective in FETCH mode
-        df = self._apply_bfl(df, q)
-        return df.orderBy(order).limit(limit)
+        return q
+
+    def _fetch_frame(
+        self,
+        q: Query,
+        left_off: int | str,
+        direction: int,
+        stored: bool = False,
+    ) -> tuple[DataFrame, bool]:
+        """The candidates of :meth:`fetch` on a resolved ``left_off``,
+        unordered and unlimited, and whether they are stored documents
+        (``stored=True``: as in :meth:`_query_frame`)."""
+        if self._log is not None:
+            if direction < 0:
+                lo, hi = None, int(left_off) - 1
+            else:
+                lo, hi = int(left_off), None
+            if stored:
+                sdf = self._stored_frame(q, min_seq=lo, max_seq=hi)
+                if sdf is not None:
+                    return sdf, True
+            df = self._typed_view(min_seq=lo, max_seq=hi)
+        elif direction < 0:
+            df = self.dataframe().filter(F.col(self.id_col) < F.lit(left_off))
+        else:
+            df = self.dataframe().filter(F.col(self.id_col) >= F.lit(left_off))
+        return self._apply_bfl(df, q), False
 
     def _resolve_fetch_left_off(self, left_off: int | str) -> int | str:
         """``handleSpecialLeftOff(leftOff, 0)`` + the out-of-range guard
@@ -1128,7 +1306,12 @@ class BasenineDB:
         consumes (``noMoreData`` ⇒ stop paging).
         """
         resolved = self._resolve_fetch_left_off(left_off)
-        rows = self.fetch(resolved, direction, query, limit).collect()
+        q = self._fetch_query(query)
+        df, stored = self._fetch_frame(q, resolved, direction, stored=True)
+        order = _fetch_order("seq" if stored else self.id_col, direction)
+        rows = df.orderBy(order).limit(limit).collect()
+        if stored:
+            rows = _stored_docs(rows)
         contiguous = not self._mounted  # ids are %024d of a dense seq
         if self._log is not None:
             total = self._log.live_count

@@ -149,9 +149,10 @@ def _pagerank_body(
                 ).alias("rank"),
             )
         )
-        if plan_sink is not None and i == 1:
+        if plan_sink is not None and i == min(1, iters - 1):
             # steady-state iteration plan (plans/r15 evidence; i=0 reads
-            # the pre-loop rank projection instead of a checkpoint)
+            # the pre-loop rank projection instead of a checkpoint, so
+            # it is captured only when it is the sole iteration)
             plan_sink["iteration"] = update._jdf.queryExecution(
             ).explainString(
                 update.sparkSession._jvm.org.apache.spark.sql.execution

@@ -32,7 +32,16 @@ Spark-first shape: the server is a *driver-side* component — each
 connection's queries run as ordinary pruned Spark scans against the
 durable log, so the heavy lifting (filter pushdown, file pruning via
 the physical ``seq`` column, typed fast path vs row backend) is
-exactly the batch engine's.  Follow mode re-expresses the reference's
+exactly the batch engine's.  Like the reference, which writes each
+matching record's stored bytes to the socket (``native.go:481-495``),
+a durable QUERY/FETCH/SINGLE sends the log's stored document: the
+filter runs on the typed columns and the scan projects only ``seq``
+and the raw ``value``, so nothing is re-serialized (typed rows are
+re-serialized only for redact queries and the non-durable and mounted
+modes).  A QUERY poll is one unsorted scan sorted by seq on the
+driver; only ``limit(N)`` (TakeOrderedAndProject) and mounted tables
+order in Spark.  Replies are written in sendall calls of about
+``SEND_CHUNK_BYTES``.  Follow mode re-expresses the reference's
 fsnotify wait (``native.go:520-522,1139-1155``) as an incremental
 re-scan from the last served sequence: each poll's ``seq > leftOff``
 predicate prunes all previously-served files via Parquet min/max
@@ -63,7 +72,7 @@ import socket
 import threading
 from typing import Optional
 
-from .engine.db import BasenineDB, Metadata, index_to_id
+from .engine.db import BasenineDB, StoredDoc, index_to_id, strip_nulls
 
 CMD_INSERT = "/insert"
 CMD_INSERTION_FILTER = "/insert-filter"
@@ -83,27 +92,22 @@ _TIMEOUT = object()  # sentinel: readline timed out (no complete line yet)
 # one INSERT-mode flush: at most this many docs per Spark append job
 INSERT_BATCH_MAX = 10_000
 
-
-def _strip_nulls(v):
-    """Drop dict entries whose value is null — the typed view carries
-    every schema column, absent keys surface as nulls, and the wire
-    document must be the inserted shape (``native.go:294-311`` stores
-    the document verbatim plus ``id``).  Nulls inside arrays are kept
-    (array length is data, not schema)."""
-    if isinstance(v, dict):
-        return {k: _strip_nulls(x) for k, x in v.items() if x is not None}
-    if isinstance(v, list):
-        return [_strip_nulls(x) for x in v]
-    return v
+# QUERY/FETCH replies go out in sendall calls of about this size
+SEND_CHUNK_BYTES = 64 * 1024
 
 
 def row_to_doc(row, id_col: str = "id") -> str:
-    """Serialize one query-result row to its wire document.
+    """The wire document of one served row.
 
-    Row-backend results (schema exactly ``(id, value)`` with ``value``
-    a JSON object string — ``engine/db.py`` ``_row_backend``) already
-    carry the evaluated document; typed rows are re-serialized with
-    schema-null keys dropped."""
+    A :class:`~basenine_spark.engine.db.StoredDoc` (durable mode,
+    filter compiled to a Column) is the stored document and is sent
+    verbatim.  The rest is the typed-row fallback: row-backend results
+    (schema exactly ``(id, value)`` with ``value`` a JSON object string
+    — ``engine/db.py`` ``_row_backend``) already carry the evaluated
+    document; typed rows are re-serialized with schema-null keys
+    dropped."""
+    if type(row) is StoredDoc:
+        return row[1]
     fields = row.__fields__
     if len(fields) == 2 and id_col in fields and "value" in fields:
         v = row["value"]
@@ -113,8 +117,33 @@ def row_to_doc(row, id_col: str = "id") -> str:
                     return v
             except ValueError:
                 pass
-    d = _strip_nulls(row.asDict(recursive=True))
+    d = strip_nulls(row.asDict(recursive=True))
     return json.dumps(d, separators=(",", ":"), default=str)
+
+
+class _ChunkedWriter:
+    """Wire lines joined into one ``sendall`` per ~``SEND_CHUNK_BYTES``
+    (counted in characters); the byte stream is the same as one send
+    per line.  ``write``/``flush`` return False once a send fails."""
+
+    def __init__(self, send, conn: socket.socket):
+        self._send = send
+        self._conn = conn
+        self._lines: list[str] = []
+        self._size = 0
+
+    def write(self, line: str) -> bool:
+        self._lines.append(line)
+        self._size += len(line) + 1
+        return self._size < SEND_CHUNK_BYTES or self.flush()
+
+    def flush(self) -> bool:
+        if not self._lines:
+            return True
+        text = "\n".join(self._lines)
+        self._lines.clear()
+        self._size = 0
+        return self._send(self._conn, text)
 
 
 # the reference sizes its scanner buffer at 200 MiB on both the server
@@ -445,10 +474,11 @@ class BasenineServer:
                 self._send(conn, f"Error: {e}")
                 return
             poll_base = written
+            out = _ChunkedWriter(self._send, conn)
             for row, frame in zip(rows, frames):
                 if limit > 0 and written >= limit:
                     break
-                if not self._send(conn, row_to_doc(row, self.db.id_col)):
+                if not out.write(row_to_doc(row, self.db.id_col)):
                     return
                 # numberOfWritten is cumulative across the whole stream
                 # (native.go:495-505), not per re-scan
@@ -464,11 +494,11 @@ class BasenineServer:
                         frame.left_off = index_to_id(seq + 1)
                 except ValueError:
                     pass
-                if not self._send(
-                    conn, f"{CMD_METADATA} {frame.to_json()}"
-                ):
+                if not out.write(f"{CMD_METADATA} {frame.to_json()}"):
                     return
                 written += 1
+            if not out.flush():
+                return
             if mounted or (limit > 0 and written >= limit):
                 # stream done (limit hit, or a mounted table has no
                 # follow semantics); the connection stays open until
@@ -512,17 +542,11 @@ class BasenineServer:
             self._send(conn, f"Index out of range: {idx}")
             return
         try:
-            rec = self.db.single(index_to_id(idx), qtext)
+            doc = self.db.single_json(index_to_id(idx), qtext)
         except Exception as e:  # noqa: BLE001
             self._send(conn, f"Eval error: {e}")
             return
-        if rec is None:
-            self._send(conn, "Record does not exist!")
-            return
-        self._send(
-            conn,
-            json.dumps(_strip_nulls(rec), separators=(",", ":"), default=str),
-        )
+        self._send(conn, "Record does not exist!" if doc is None else doc)
 
     def _serve_fetch(self, conn: socket.socket, reader: _LineReader) -> None:
         """FETCH mode: ``/metadata`` frame *before* each record
@@ -570,13 +594,15 @@ class BasenineServer:
         except Exception as e:  # noqa: BLE001
             self._send(conn, f"Error: {e}")
             return
+        out = _ChunkedWriter(self._send, conn)
         for i, frame in enumerate(frames):
-            if not self._send(conn, f"{CMD_METADATA} {frame.to_json()}"):
+            if not out.write(f"{CMD_METADATA} {frame.to_json()}"):
                 return
             if i < len(rows):
-                if not self._send(conn, row_to_doc(rows[i], self.db.id_col)):
+                if not out.write(row_to_doc(rows[i], self.db.id_col)):
                     return
-        self._send(conn, CLOSE_CONNECTION)
+        out.write(CLOSE_CONNECTION)
+        out.flush()
 
     def _serve_validate(self, conn: socket.socket, reader: _LineReader) -> None:
         line = reader.readline()

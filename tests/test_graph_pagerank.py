@@ -55,3 +55,12 @@ def test_knn_composition_coverage(spark):
     assert total == pytest.approx(1.0, abs=1e-3)
     assert len(rows) > 400  # nearly every vector participates
     assert len({r["node"] for r in rows}) == len(rows)
+
+
+@pytest.mark.parametrize("iters", [1, 3])
+def test_plan_sink_captures_an_iteration_plan(spark, iters):
+    # iters == 1 has only iteration 0: its plan is the one captured
+    edf = spark.createDataFrame(EDGES, "src long, dst long")
+    sink: dict = {}
+    graph.pagerank(edf, iters=iters, plan_sink=sink).collect()
+    assert "Physical Plan" in sink.get("iteration", "")

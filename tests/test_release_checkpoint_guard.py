@@ -20,6 +20,7 @@ that obligation into CI:
 """
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from basenine_spark.ops import graph
 from basenine_spark.ops.dedup import connected_components
@@ -37,7 +38,7 @@ def test_released_checkpoint_is_dead(spark):
     # lineage is truncated to the (now unpersisted) RDD blocks: any
     # consumer must throw, NOT silently recompute — pin it so a future
     # refactor can't flip release into either a no-op or a recompute
-    with pytest.raises(Exception):
+    with pytest.raises(Py4JJavaError, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         df.count()
 
 
