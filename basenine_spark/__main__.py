@@ -5,10 +5,11 @@ the reference server binary's flags (``server/server.go:33-39``):
     -port    port to listen on           (default 9099)
     -debug   enable debug logs
     -version print version and exit
-    -persistent  durable mode: records survive restart (the reference
-                 dumps/restores a core file in pwd; here the document
-                 log is partitioned Parquet in the storage directory,
-                 restored on boot — S8)
+    -persistent  records survive restart: the document log (partitioned
+                 Parquet) lives in the storage directory and is restored
+                 on boot (S8; the reference dumps/restores a core file
+                 in pwd).  Without it the same log runs in a private
+                 temporary directory, removed at exit
     -storage      storage driver (only "native", like the reference)
     -storage-args native driver argument: the storage directory
                   (default ./basenine_spark.db in pwd, matching the
@@ -25,8 +26,8 @@ spellings are accepted.
 
 Graceful shutdown: SIGINT/SIGTERM close client connections and stop
 the server, like the reference's signal channel (server.go:75-85);
-in persistent mode the data is already durably on disk at every
-micro-batch, so there is no exit-time dump step to lose.
+the data is already on disk at every micro-batch, so there is no
+exit-time dump step to lose (a non-persistent store is deleted).
 """
 
 from __future__ import annotations
@@ -47,7 +48,11 @@ def _parser() -> argparse.ArgumentParser:
     p.add_argument("-port", "--port", type=int, default=9099, help="listen port")
     p.add_argument("-debug", "--debug", action="store_true", help="debug logs")
     p.add_argument("-version", "--version", action="store_true", help="print version and exit")
-    p.add_argument("-persistent", "--persistent", action="store_true", help="durable mode")
+    p.add_argument(
+        "-persistent", "--persistent", action="store_true",
+        help="keep the log in the storage directory across restarts "
+        "(default: a temporary directory removed at exit)",
+    )
     p.add_argument("-storage", "--storage", default="native", help='storage driver ("native")')
     p.add_argument(
         "-storage-args", "--storage-args", dest="storage_args", default="",
@@ -101,10 +106,11 @@ def main(argv: list[str] | None = None) -> int:
         compat_left_off=not args.no_skip_left_off,
     )
     server.start()
+    kind = "persistent" if args.persistent else "temporary"
     print(
         f"basenine_spark {__version__} listening on "
         f"{args.addr or '0.0.0.0'}:{server.port} "
-        f"({'persistent' if args.persistent else 'in-memory'} mode)",
+        f"({kind} store {db._log.path})",
         flush=True,
     )
 

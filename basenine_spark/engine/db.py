@@ -40,6 +40,9 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import json
+import shutil
+import tempfile
+import weakref
 from dataclasses import dataclass
 from typing import Iterator, Optional
 
@@ -57,6 +60,7 @@ from ..bfl.compiler import (
     compile_filter,
     compile_redact_fast,
     prefix_overlap,
+    pure_redact_paths,
     split_conjuncts,
 )
 from ..bfl.macros import add_macro as _add_macro
@@ -68,6 +72,7 @@ from .schema import (
     infer_batch_schema,
     infer_json_lines_schema,
     merge_types,
+    override_path_string,
     schema_from_json,
     schema_to_json,
     shred_write_schema,
@@ -109,14 +114,14 @@ def index_to_id(index: int) -> str:
     return "%024d" % index
 
 
-# plumbing columns carrying a durable record's seq and stored document
+# plumbing columns carrying a log record's seq and stored document
 # next to its typed view (a document key of the same name disables them)
 _SEQ_COL = "__bn_seq__"
 _VALUE_COL = "__bn_value__"
 
 
 class StoredDoc(Row):
-    """A served durable record: its ``id`` and ``value``, the document
+    """A served log record: its ``id`` and ``value``, the document
     exactly as the log stores it — sent on the wire verbatim."""
 
 
@@ -182,40 +187,46 @@ class BasenineDB:
         id_col: str = ID_COL,
         path: Optional[str] = None,
     ):
-        """``path`` switches on the durable mode: records live in a
-        partitioned-Parquet :class:`DocumentLog` (surviving restart,
-        S4/S8) instead of an in-memory DataFrame chain; the schema-free
-        document is the record of truth and a typed view is derived per
-        schema generation."""
+        """Records live in a partitioned-Parquet :class:`DocumentLog`;
+        the schema-free document is the record of truth and a typed
+        view is derived per schema generation.  ``path`` makes the db
+        persistent: the log and its ``_state.json`` survive restart
+        (S4/S8).  Without it the same log runs in a private temporary
+        directory, removed when the db is collected or the interpreter
+        exits — like the reference, which always writes partition files
+        and only restores them on boot with ``-persistent``."""
+        if path is None:
+            path = tempfile.mkdtemp(prefix="basenine-")
+            weakref.finalize(self, shutil.rmtree, path, ignore_errors=True)
+        self._setup(spark, id_col, DocumentLog(spark, path))
+        self._load_state()
+
+    def _setup(
+        self, spark: SparkSession, id_col: str, log: Optional[DocumentLog]
+    ) -> None:
+        """Session state; ``log`` is None only for a mounted table."""
         self.spark = spark
         self.id_col = id_col
-        self._df: Optional[DataFrame] = None
+        self._log = log
+        self._df: Optional[DataFrame] = None  # the mounted table
         self.macros: dict[str, str] = {}
         self.insertion_filter: str = ""
         self.retention_bytes: int = 0
-        self._insert_counter = 0
-        self._log: Optional[DocumentLog] = DocumentLog(spark, path) if path else None
-        self._typed_schema = None  # parse-ready typed-view schema (log mode)
+        self._typed_schema = None  # parse-ready typed-view schema
         self._schema_acc = None  # raw merged shape (NullType placeholders kept)
         # shredded reads allowed: every file carries a doc column and
         # schema evolution has been additive; fresh logs start True,
         # logs predating shredding (or with a dynamic insertion-filter
         # batch) read via from_json instead
-        self._shred_ok = self._log is not None and self._log.total_written == 0
+        self._shred_ok = log is not None and log.total_written == 0
         self._known_keys: set[str] = set()  # top-level doc keys seen
-        self._mounted = False  # True ⇔ from_dataframe (natural ids)
-        self._mounted_total: Optional[int] = None  # cached count, mounted mode
-        if self._log is not None:
-            self._load_state()
-            # resume the id counter from the restored log so leftOff /
-            # "latest" tokens are correct immediately after restart
-            self._insert_counter = self._log.total_written
+        self._mounted_total: Optional[int] = None  # cached count, mounted
+        self._latest_cache = None  # cached max natural id, mounted
 
-    # -- durable session state (core-dump analog, native.go:155-258) ----
+    # -- session state (core-dump analog, native.go:155-258) -------------
 
     @property
     def _state_path(self) -> str:
-        assert self._log is not None
         # underscore prefix → invisible to Spark's parquet reader
         return f"{self._log.path}/_state.json"
 
@@ -232,7 +243,7 @@ class BasenineDB:
         self.macros = state.get("macros", {})
         self.insertion_filter = state.get("insertion_filter", "")
         self.retention_bytes = state.get("retention_bytes", 0)
-        if self._log is not None and self.retention_bytes:
+        if self.retention_bytes:
             self._log.retention_bytes = self.retention_bytes
         # Schema-as-metadata (Delta-style): the typed-view schema is
         # maintained at write time and restored here, so the first query
@@ -245,16 +256,15 @@ class BasenineDB:
         # the reference gob-dumps TruncatedTimestamp too
         # (native.go:183,249) — metadata frames after a restart must
         # keep reporting what retention dropped (ADVICE r2)
-        if self._log is not None:
-            self._log.truncated_timestamp = max(
-                self._log.truncated_timestamp,
-                state.get("truncated_timestamp", 0),
-            )
-            self._shred_ok = state.get(
-                "shred_ok", self._log.total_written == 0
-            )
+        self._log.truncated_timestamp = max(
+            self._log.truncated_timestamp,
+            state.get("truncated_timestamp", 0),
+        )
+        self._shred_ok = state.get("shred_ok", self._log.total_written == 0)
 
     def _save_state(self) -> None:
+        """Persist the session state next to the log (no-op for a
+        mounted table)."""
         import os
 
         if self._log is None:
@@ -272,11 +282,7 @@ class BasenineDB:
                         else None
                     ),
                     "known_keys": sorted(self._known_keys),
-                    "truncated_timestamp": (
-                        self._log.truncated_timestamp
-                        if self._log is not None
-                        else 0
-                    ),
+                    "truncated_timestamp": self._log.truncated_timestamp,
                     "shred_ok": self._shred_ok,
                 },
                 fh,
@@ -289,7 +295,9 @@ class BasenineDB:
         cls, spark: SparkSession, df: DataFrame, id_col: str
     ) -> "BasenineDB":
         """Mount an existing (parquet-backed) table as the document log;
-        ``id_col`` plays the role of the injected monotone id.
+        ``id_col`` plays the role of the injected monotone id.  A
+        mounted table is read-only: inserts and /flush raise
+        ``ValueError``.
 
         Rows with a NULL natural id are dropped at mount: in the
         reference every record HAS an id by construction (the server
@@ -297,184 +305,55 @@ class BasenineDB:
         outside the document model — and letting it through corrupts
         ordering (Spark sorts NULL ids first, ahead of every real
         record) and resume-token arithmetic."""
-        db = cls(spark, id_col=id_col)
+        db = cls.__new__(cls)
+        db._setup(spark, id_col, None)
         db._df = df.filter(F.col(id_col).isNotNull())
-        db._mounted = True
         return db
 
+    def _writable_log(self) -> DocumentLog:
+        """The log a write goes to; a mounted table has none."""
+        if self._log is None:
+            raise ValueError(
+                "a mounted table is read-only — insert into a "
+                "log-backed BasenineDB"
+            )
+        return self._log
+
     def insert_json(self, lines: list[str]) -> list[str]:
-        """INSERT mode: each line one JSON doc; applies the insertion
+        """INSERT mode: each line one JSON object; applies the insertion
         filter (with redact) and assigns contiguous ids
-        (``native.go:266-334``).  Returns assigned ids.  Driver-side id
-        accounting mirrors the reference's single counter; the per-batch
-        work is distributed."""
-        if self._log is not None:
-            # Durable mode: fully distributed (executor-side filter/redact,
-            # zipWithIndex ids, Parquet append) — no driver loop.
-            flt_text = (
-                expand_macros(self.macros, self.insertion_filter)
-                if self.insertion_filter
-                else ""
-            )
-            # Write-time schema maintenance: merge this batch's shape
-            # into the running union schema (Spark-inference-compatible
-            # promotion rules, engine/schema.py) instead of invalidating
-            # the cache — the typed view never re-learns its schema from
-            # the data, at any scale.
-            parsed_docs = [json.loads(line) for line in lines]
-            new_keys = set()
-            for doc in parsed_docs:
-                if isinstance(doc, dict):
-                    new_keys.update(doc.keys())
-            first_new_seq = self._log.total_written
-            # An always-truthy pure-redact filter (the common ingest
-            # PII-scrub) keeps schema inference driver-side: the stored
-            # shape is the wire shape with each redacted leaf → string.
-            pure_paths = None
-            if flt_text:
-                from ..bfl.compiler import pure_redact_paths
-
-                flt_q = parse(flt_text)
-                if flt_q.expr is not None:
-                    pure_paths = pure_redact_paths(flt_q.expr)
-            batch = None
-            shred = None
-            if not flt_text or pure_paths is not None:
-                # stored docs carry the injected id key on top of the
-                # wire shape (native.go:294-311)
-                from pyspark.sql import types as T
-
-                batch = merge_types(
-                    infer_batch_schema(parsed_docs),
-                    T.StructType([T.StructField(ID_COL, T.StringType(), True)]),
+        (``native.go:266-334``).  Returns assigned ids.  The whole batch
+        is validated before any id is assigned: a line that is not
+        JSON, or is JSON but not an object, raises ``ValueError`` and
+        nothing is written (a bad line must not orphan ids)."""
+        log = self._writable_log()
+        docs = [json.loads(line) for line in lines]
+        for i, doc in enumerate(docs):
+            if not isinstance(doc, dict):
+                raise ValueError(
+                    f"line {i + 1}: expected a JSON object, "
+                    f"got {type(doc).__name__}"
                 )
-                from .schema import override_path_string
-
-                for p in pure_paths or []:
-                    batch = override_path_string(batch, p)
-                # Shredded storage stays readable under one explicit
-                # union read schema only while schema evolution is
-                # additive; a changed common leaf (e.g. long → double)
-                # turns shredding off for this log (queries fall back
-                # to the from_json view — still exact).
-                if self._shred_ok:
-                    merged_candidate = (
-                        batch
-                        if self._schema_acc is None
-                        else merge_types(self._schema_acc, batch)
-                    )
-                    old_ws = (
-                        shred_write_schema(self._schema_acc)
-                        if self._schema_acc is not None
-                        else None
-                    )
-                    new_ws = shred_write_schema(merged_candidate)
-                    if old_ws is None or common_leaves_unchanged(
-                        old_ws, new_ws
-                    ):
-                        # write with the MERGED leaf types: a batch
-                        # re-narrowing a previously-widened leaf (int
-                        # after double) must not bind a narrower
-                        # parquet type than the union read schema
-                        # (engine/schema.py:widen_to_merged)
-                        shred = shred_write_schema(
-                            widen_to_merged(batch, merged_candidate)
-                        )
-                        if not shred.fields:
-                            shred = None
-            ids = self._log.append(
-                lines, insertion_filter_text=flt_text, shred_schema=shred
-            )
-            self._insert_counter = self._log.total_written
-            if shred is None and self._log.total_written > first_new_seq:
-                # this batch's files carry no doc column — a shredded
-                # read would silently null them out
-                self._shred_ok = False
-            if batch is None and self._log.total_written > first_new_seq:
-                # the filter can drop records or rewrite values
-                # dynamically — infer from the just-appended slice, a
-                # batch-bounded job pruned by the seq predicate
-                appended = (
-                    self._log.scan()
-                    .filter(F.col("seq") >= first_new_seq)
-                    .select("value")
-                )
-                batch = self.spark.read.json(
-                    appended.rdd.map(lambda r: r.value)
-                ).schema
-            if batch is not None:
-                merged = (
-                    batch
-                    if self._schema_acc is None
-                    else merge_types(self._schema_acc, batch)
-                )
-                if merged != self._schema_acc:
-                    self._schema_acc = merged
-                    self._typed_schema = finalize_type(merged)
-            self._known_keys |= new_keys
-            self._save_state()
-            return ids
-
-        # Non-durable mode: same distributed shape as the durable path
-        # (executor-side filter/redact via mapPartitions, zipWithIndex
-        # ids) — no driver-side per-record loop (VERDICT r2).
-        # Validate the whole batch BEFORE assigning any ids: a bad line
-        # must not orphan ids already consumed by earlier lines (the
-        # reference validates and persists each record independently,
-        # native.go:266-334; batched here, so validation is all-or-none).
-        for line in lines:
-            json.loads(line)  # non-JSON insert is rejected (server_test.go:30)
-        if not lines:
+        if not docs:
             return []
-        sc = self.spark.sparkContext
-        rdd = sc.parallelize(lines, min(len(lines), sc.defaultParallelism))
-        if self.insertion_filter:
-            flt_text = expand_macros(self.macros, self.insertion_filter)
-
-            def apply_filter(part: Iterator[str]) -> Iterator[str]:
-                from ..bfl import parse as _parse
-                from ..bfl.pyeval import eval_query as _eval
-
-                parsed = _parse(flt_text)
-                for line in part:
-                    truth, doc = _eval(parsed, line)
-                    if truth:
-                        yield doc
-
-            rdd = rdd.mapPartitions(apply_filter)
-        base = self._insert_counter
-        rdd = rdd.cache()  # zipWithIndex triggers a count job; reuse it
-        written = rdd.count()
-
-        def stamp(pairs: Iterator[tuple]) -> Iterator[str]:
-            import json as _json
-
-            for doc, idx in pairs:
-                obj = _json.loads(doc)
-                obj[ID_COL] = index_to_id(base + idx)
-                yield _json.dumps(obj, separators=(",", ":"))
-
-        if written:
-            new = self.spark.read.json(rdd.zipWithIndex().mapPartitions(stamp))
-            self._df = new if self._df is None else self._df.unionByName(
-                new, allowMissingColumns=True
+        flt_text, _, pure_paths = self._filter_plan()
+        batch = shred = None
+        if not flt_text or pure_paths is not None:
+            batch, shred = self._batch_schema(
+                infer_batch_schema(docs), pure_paths
             )
-            # each insert nests one more Union into the logical plan; a
-            # client looping small inserts (the reference's wire pattern)
-            # would grow planning cost per batch without bound — truncate
-            # the lineage periodically (same driver-OOM class as the
-            # label-propagation loop, see ops/dedup.py)
-            self._union_depth = getattr(self, "_union_depth", 0) + 1
-            if self._union_depth >= 32:
-                self._df = self._df.localCheckpoint(eager=True)
-                self._union_depth = 0
-        rdd.unpersist()
-        self._insert_counter = base + written
-        return [index_to_id(base + i) for i in range(written)]
+        first_new_seq = log.total_written
+        ids = log.append(
+            lines, insertion_filter_text=flt_text, shred_schema=shred
+        )
+        self._commit_schema(
+            batch, shred, first_new_seq, {k for d in docs for k in d}
+        )
+        return ids
 
     def insert_json_df(self, df, schema_sampling_ratio: float = 1.0) -> int:
         """Bulk INSERT of a DataFrame holding ONE string column of
-        JSON lines — the backfill path (durable mode only): unlike
+        JSON lines — the backfill path: unlike
         :meth:`insert_json` (the wire-protocol shape, where the server
         necessarily holds the batch it read off the socket), the batch
         here never materializes on the driver. Per-record work
@@ -500,26 +379,9 @@ class BasenineDB:
         the rare key is delayed, not merely un-shredded. Use the
         default full-pass ratio when the batch may carry keys seen
         nowhere else."""
-        if self._log is None:
-            raise ValueError(
-                "insert_json_df requires a durable (path-backed) db — "
-                "the non-durable mode is the wire surface, use "
-                "insert_json"
-            )
-        flt_text = (
-            expand_macros(self.macros, self.insertion_filter)
-            if self.insertion_filter
-            else ""
-        )
-        first_new_seq = self._log.total_written
-        pure_paths = None
-        flt_q = None
-        if flt_text:
-            from ..bfl.compiler import pure_redact_paths
-
-            flt_q = parse(flt_text)
-            if flt_q.expr is not None:
-                pure_paths = pure_redact_paths(flt_q.expr)
+        log = self._writable_log()
+        flt_text, flt_q, pure_paths = self._filter_plan()
+        first_new_seq = log.total_written
         # The batch lineage is consumed by at least two jobs (schema
         # inference, then append_df's count+stamp): pin it once so an
         # expensive upstream (a sorted backfill is the common replay
@@ -540,28 +402,17 @@ class BasenineDB:
         # (redact, dynamic shapes), or inference yields nothing.
         send_filter_text = flt_text
         prevalidated = False
-        if (
-            flt_text
-            and pure_paths is None
-            and flt_q is not None
-            and flt_q.expr is not None
-        ):
+        if flt_text and pure_paths is None and flt_q.expr is not None:
             fast_df = self._bulk_filter_column(df, flt_q)
             if fast_df is not None:
-                from pyspark import StorageLevel
-
                 # the filtered lines are read twice (stored-schema
                 # inference, then append) — persist so the from_json
                 # filter runs once; spills past memory like append_df
                 df = fast_df.persist(StorageLevel.MEMORY_AND_DISK)
                 send_filter_text = ""
                 prevalidated = True
-        batch = None
-        shred = None
-        inferred = None
+        batch = shred = inferred = None
         if not send_filter_text or pure_paths is not None:
-            from pyspark.sql import types as T
-
             # distributed inference over the batch itself — the same
             # promotion rules the driver-side infer_batch_schema
             # mirrors, evaluated by Spark's JSON reader JVM-side (no
@@ -574,16 +425,8 @@ class BasenineDB:
                 # empty batch (or all-corrupt, which append_df rejects
                 # anyway): nothing to infer, nothing will be written
                 inferred = None
-            if inferred is None or not inferred.fields:
+            if inferred is not None and not inferred.fields:
                 inferred = None
-                batch = None
-            else:
-                batch = merge_types(
-                    inferred,
-                    T.StructType(
-                        [T.StructField(ID_COL, T.StringType(), True)]
-                    ),
-                )
             # A FULL-pass inference that surfaced no _corrupt_record
             # has already Jackson-validated every line, and the reader
             # is pinned to json.loads acceptance (strict-mode pin +
@@ -602,35 +445,10 @@ class BasenineDB:
                 and "_corrupt_record" not in inferred.fieldNames()
             ):
                 prevalidated = True
-            if batch is not None:
-                from .schema import override_path_string
-
-                for p in pure_paths or []:
-                    batch = override_path_string(batch, p)
-                if self._shred_ok:
-                    merged_candidate = (
-                        batch
-                        if self._schema_acc is None
-                        else merge_types(self._schema_acc, batch)
-                    )
-                    old_ws = (
-                        shred_write_schema(self._schema_acc)
-                        if self._schema_acc is not None
-                        else None
-                    )
-                    new_ws = shred_write_schema(merged_candidate)
-                    if old_ws is None or common_leaves_unchanged(
-                        old_ws, new_ws
-                    ):
-                        # merged leaf types, same rationale as
-                        # insert_json (widen_to_merged docstring)
-                        shred = shred_write_schema(
-                            widen_to_merged(batch, merged_candidate)
-                        )
-                        if not shred.fields:
-                            shred = None
+            if inferred is not None:
+                batch, shred = self._batch_schema(inferred, pure_paths)
         try:
-            written = self._log.append_df(
+            written = log.append_df(
                 df,
                 insertion_filter_text=send_filter_text,
                 shred_schema=shred,
@@ -643,19 +461,97 @@ class BasenineDB:
             if prevalidated:
                 df.unpersist()
             src_persisted.unpersist()
-        self._insert_counter = self._log.total_written
-        if shred is None and self._log.total_written > first_new_seq:
+        self._commit_schema(
+            batch,
+            shred,
+            first_new_seq,
+            set(inferred.fieldNames()) if inferred is not None else None,
+        )
+        return written
+
+    # -- write-time schema maintenance ------------------------------------
+
+    def _filter_plan(self) -> tuple[str, Optional[Query], Optional[list]]:
+        """The macro-expanded insertion filter, its parse, and — when it
+        is an always-truthy pure redact (the common ingest PII scrub) —
+        its redact paths: the stored shape is then the wire shape with
+        each redacted leaf → string, so the batch schema is known
+        before the append."""
+        text = (
+            expand_macros(self.macros, self.insertion_filter)
+            if self.insertion_filter
+            else ""
+        )
+        if not text:
+            return "", None, None
+        q = parse(text)
+        pure = pure_redact_paths(q.expr) if q.expr is not None else None
+        return text, q, pure
+
+    def _batch_schema(
+        self, inferred: T.StructType, pure_paths: Optional[list]
+    ) -> tuple[T.StructType, Optional[T.StructType]]:
+        """Before an append: the batch's stored shape (``inferred`` plus
+        the injected id, each pure-redact path → string) and its shred
+        write schema — None when the batch must be stored unshredded.
+        Shredded storage stays readable under one explicit union read
+        schema only while schema evolution is additive; a changed
+        common leaf (e.g. long → double) turns shredding off for this
+        log (queries fall back to the from_json view — still exact)."""
+        batch = merge_types(
+            inferred,
+            T.StructType([T.StructField(ID_COL, T.StringType(), True)]),
+        )
+        for p in pure_paths or []:
+            batch = override_path_string(batch, p)
+        shred = None
+        if self._shred_ok:
+            merged = (
+                batch
+                if self._schema_acc is None
+                else merge_types(self._schema_acc, batch)
+            )
+            if self._schema_acc is None or common_leaves_unchanged(
+                shred_write_schema(self._schema_acc),
+                shred_write_schema(merged),
+            ):
+                # write with the MERGED leaf types: a batch re-narrowing
+                # a previously-widened leaf (int after double) must not
+                # bind a narrower parquet type than the union read
+                # schema (engine/schema.py:widen_to_merged)
+                shred = shred_write_schema(widen_to_merged(batch, merged))
+                if not shred.fields:
+                    shred = None
+        return batch, shred
+
+    def _commit_schema(
+        self,
+        batch: Optional[T.StructType],
+        shred: Optional[T.StructType],
+        first_new_seq: int,
+        keys: Optional[set],
+    ) -> None:
+        """After an append from seq ``first_new_seq``: merge the batch's
+        shape into the running union schema (no invalidation — the
+        typed view never re-learns its schema from the data), record
+        the top-level ``keys`` seen (default: the batch's), and persist
+        the state.  ``batch`` None means the insertion filter could drop
+        records or rewrite values dynamically: the shape is then
+        inferred from the just-appended slice, a batch-bounded job
+        pruned by the seq predicate."""
+        wrote = self._log.total_written > first_new_seq
+        if shred is None and wrote:
+            # this batch's files carry no doc column — a shredded read
+            # would silently null them out
             self._shred_ok = False
-        if batch is None and self._log.total_written > first_new_seq:
+        if batch is None and wrote:
             appended = (
                 self._log.scan()
                 .filter(F.col("seq") >= first_new_seq)
                 .select("value")
             )
             batch = infer_json_lines_schema(self.spark, appended)
-        if batch is not None and (
-            self._log.total_written > first_new_seq or inferred is not None
-        ):
+        if batch is not None:
             merged = (
                 batch
                 if self._schema_acc is None
@@ -664,12 +560,10 @@ class BasenineDB:
             if merged != self._schema_acc:
                 self._schema_acc = merged
                 self._typed_schema = finalize_type(merged)
-        if inferred is not None:
-            self._known_keys |= set(inferred.fieldNames())
-        elif batch is not None:
-            self._known_keys |= set(batch.fieldNames()) - {ID_COL}
+            if keys is None:
+                keys = set(batch.fieldNames()) - {ID_COL}
+        self._known_keys |= keys or set()
         self._save_state()
-        return written
 
     def _bulk_filter_column(self, df, q: Query):
         """Compile a pure (non-mutating) insertion filter to a Column
@@ -831,11 +725,9 @@ class BasenineDB:
     # -- retrieval modes ---------------------------------------------------
 
     def dataframe(self) -> DataFrame:
-        if self._log is not None:
-            return self._typed_view()
-        if self._df is None:
-            raise ValueError("no data ingested")
-        return self._df
+        if self._log is None:
+            return self._df
+        return self._typed_view()
 
     def _typed_view(
         self,
@@ -964,8 +856,8 @@ class BasenineDB:
         ``as_of`` is a SNAPSHOT read: only records with seq <=
         ``as_of`` are visible — the append-only log makes any past
         corpus state reproducible byte-for-byte (audits, debugging a
-        model trained against an earlier release).  In durable mode
-        the bound is a physical ``seq`` predicate, so parquet min/max
+        model trained against an earlier release).  On the log the
+        bound is a physical ``seq`` predicate, so parquet min/max
         stats prune every file appended after the snapshot; retention
         truncation still applies (records rotated out are gone —
         snapshots reach back only to the retention horizon)."""
@@ -985,39 +877,28 @@ class BasenineDB:
         :meth:`_stored_frame`'s ``(seq, value)`` shape where the log
         can give it; otherwise the frame is the typed view after
         :meth:`_apply_bfl`."""
-        if self._log is not None:
-            # resume offset as a physical seq predicate → file pruning
-            min_seq = None
-            if left_off == "latest":  # T2 (native.go:1158-1176)
-                min_seq = max(self._log.total_written - 1, 0)
-            elif left_off not in (0, None, ""):
-                min_seq = int(left_off) + 1
-            if stored:
-                sdf = self._stored_frame(q, min_seq=min_seq, max_seq=as_of)
-                if sdf is not None:
-                    return sdf, True
-            df = self._typed_view(min_seq=min_seq, max_seq=as_of)
-        else:
-            df = self.dataframe()
+        if self._log is None:
+            # a mounted table: natural ids, compared raw
+            df = self._df
             if as_of is not None:
-                # mounted tables carry natural ids (compare raw);
-                # insert-built stores use the 24-digit sequence form
-                bound = as_of if self._mounted else index_to_id(as_of)
-                df = df.filter(F.col(self.id_col) <= F.lit(bound))
-            if left_off not in (0, None, ""):
-                if left_off == "latest":
-                    if not self._mounted and self._insert_counter > 0:
-                        # O(1): derived from the running counter, not a
-                        # max() scan (perf fix, VERDICT r1) — but ONLY
-                        # for a purely insert-built db: a mounted table
-                        # has natural ids the counter knows nothing
-                        # about (ADVICE r2)
-                        last = index_to_id(self._insert_counter - 1)
-                    else:
-                        last = df.agg(F.max(self.id_col)).collect()[0][0]
-                    df = df.filter(F.col(self.id_col) >= F.lit(last))
-                else:
-                    df = df.filter(F.col(self.id_col) > F.lit(left_off))
+                df = df.filter(F.col(self.id_col) <= F.lit(as_of))
+            if left_off == "latest":
+                last = df.agg(F.max(self.id_col)).collect()[0][0]
+                df = df.filter(F.col(self.id_col) >= F.lit(last))
+            elif left_off not in (0, None, ""):
+                df = df.filter(F.col(self.id_col) > F.lit(left_off))
+            return self._apply_bfl(df, q), False
+        # resume offset as a physical seq predicate → file pruning
+        min_seq = None
+        if left_off == "latest":  # T2 (native.go:1158-1176)
+            min_seq = max(self._log.total_written - 1, 0)
+        elif left_off not in (0, None, ""):
+            min_seq = int(left_off) + 1
+        if stored:
+            sdf = self._stored_frame(q, min_seq=min_seq, max_seq=as_of)
+            if sdf is not None:
+                return sdf, True
+        df = self._typed_view(min_seq=min_seq, max_seq=as_of)
         return self._apply_bfl(df, q), False
 
     def _stored_frame(
@@ -1026,9 +907,9 @@ class BasenineDB:
         min_seq: Optional[int] = None,
         max_seq: Optional[int] = None,
     ) -> Optional[DataFrame]:
-        """Durable records in ``[min_seq, max_seq]`` that ``q`` keeps,
+        """Log records in ``[min_seq, max_seq]`` that ``q`` keeps,
         as ``(seq, value)``: ``value`` is the stored document itself
-        (id included, ``log.py:_append_driver``), so serving it needs
+        (id included, ``DocumentLog.append``), so serving it needs
         no typed-row re-serialization and keeps what the typed view
         loses (explicit nulls, numbers before a later batch widened
         their leaf).  The filter runs on the typed columns as in
@@ -1060,7 +941,7 @@ class BasenineDB:
         driver after the collect — no range-partition sampling job,
         no shuffle."""
         df, stored = self._query_frame(q, left_off, stored=True)
-        if q.limit > 0 or self._mounted:
+        if q.limit > 0 or self._log is None:
             order = F.col("seq" if stored else self.id_col).asc()
             return _order_limit(df, order, q.limit), stored, True
         return df, stored, False
@@ -1077,9 +958,8 @@ class BasenineDB:
         client hands back to continue.  ``noMoreData`` stays false in
         query mode (it is a FETCH concept).
 
-        Durable rows are :class:`StoredDoc` where the filter compiles
-        (see :meth:`_stored_frame`), typed or row-backend rows
-        otherwise."""
+        Log rows are :class:`StoredDoc` where the filter compiles (see
+        :meth:`_stored_frame`), typed or row-backend rows otherwise."""
         q = self._prepare(query)
         df, stored, ordered = self._served_frame(q, left_off)
         rows = df.collect()
@@ -1088,28 +968,13 @@ class BasenineDB:
             rows.sort(key=lambda r: r[key])
         if stored:
             rows = _stored_docs(rows)
-        contiguous = not self._mounted
-        if self._log is not None:
-            total = self._log.live_count
-            trunc = self._log.truncated_timestamp
-        else:
-            total = self.metadata().total
-            trunc = 0
-        if left_off == "latest":
-            start = max(
-                (
-                    self._log.total_written
-                    if self._log is not None
-                    else self._insert_counter
-                )
-                - 1,
-                0,
-            )
-        elif left_off in (0, None, ""):
-            start = 0
-        else:
-            start = int(left_off) + 1
-        prev = start - 1
+        meta = self.metadata()
+        contiguous = self._log is not None  # ids are %024d of a dense seq
+        prev = -1  # the seq before the first candidate
+        if contiguous and left_off == "latest":
+            prev = max(self._log.total_written - 1, 0) - 1
+        elif contiguous and left_off not in (0, None, ""):
+            prev = int(left_off)
         frames: list[Metadata] = []
         for i, row in enumerate(rows):
             if contiguous:
@@ -1123,24 +988,26 @@ class BasenineDB:
             frames.append(
                 Metadata(
                     current=current,
-                    total=total,
+                    total=meta.total,
                     number_of_written=i + 1,
                     left_off=token,
-                    truncated_timestamp=trunc,
+                    truncated_timestamp=meta.truncated_timestamp,
                 )
             )
         return rows, frames
 
     def single(self, record_id, query: str = "") -> Optional[dict]:
         """/single (M2): one record by id; the query only matters for
-        record-altering helpers (redact) — native.go:526-601.  In
-        durable mode the lookup is a *physical* ``seq`` point predicate
+        record-altering helpers (redact) — native.go:526-601.  On the
+        log the lookup is a *physical* ``seq`` point predicate
         (the doc id IS the sequence) so parquet row-group stats prune
         before any JSON parse; a derived-column filter after
         ``from_json`` would scan the corpus."""
-        if self._log is not None:
-            if self._log.live_count == 0:
-                return None  # "Record does not exist!"
+        if self._log is None:
+            df = self._df
+        elif self._log.live_count == 0:
+            return None  # "Record does not exist!"
+        else:
             try:
                 idx: Optional[int] = int(record_id)
             except (TypeError, ValueError):
@@ -1149,12 +1016,9 @@ class BasenineDB:
                 df = self._typed_view(min_seq=idx, max_seq=idx)
             else:
                 df = self.dataframe()
-            df = df.filter(F.col(self.id_col) == F.lit(record_id))
-        else:
-            df = self.dataframe().filter(
-                F.col(self.id_col) == F.lit(record_id)
-            )
-        rows = df.limit(1).collect()
+        rows = (
+            df.filter(F.col(self.id_col) == F.lit(record_id)).limit(1).collect()
+        )
         if not rows:
             return None  # "Record does not exist!"
         doc = rows[0].asDict(recursive=True)
@@ -1167,7 +1031,7 @@ class BasenineDB:
         return doc
 
     def single_json(self, record_id, query: str = "") -> Optional[str]:
-        """/single's wire document.  In durable mode, unless the query
+        """/single's wire document.  From the log, unless the query
         redacts, it is the stored document — the bytes QUERY and FETCH
         send for the same record; otherwise :meth:`single`'s record,
         serialized with schema-null keys dropped."""
@@ -1237,50 +1101,39 @@ class BasenineDB:
         """The candidates of :meth:`fetch` on a resolved ``left_off``,
         unordered and unlimited, and whether they are stored documents
         (``stored=True``: as in :meth:`_query_frame`)."""
-        if self._log is not None:
-            if direction < 0:
-                lo, hi = None, int(left_off) - 1
-            else:
-                lo, hi = int(left_off), None
-            if stored:
-                sdf = self._stored_frame(q, min_seq=lo, max_seq=hi)
-                if sdf is not None:
-                    return sdf, True
-            df = self._typed_view(min_seq=lo, max_seq=hi)
-        elif direction < 0:
-            df = self.dataframe().filter(F.col(self.id_col) < F.lit(left_off))
+        if self._log is None:
+            bound = F.lit(left_off)
+            id_ = F.col(self.id_col)
+            df = self._df.filter(id_ < bound if direction < 0 else id_ >= bound)
+            return self._apply_bfl(df, q), False
+        if direction < 0:
+            lo, hi = None, int(left_off) - 1
         else:
-            df = self.dataframe().filter(F.col(self.id_col) >= F.lit(left_off))
+            lo, hi = int(left_off), None
+        if stored:
+            sdf = self._stored_frame(q, min_seq=lo, max_seq=hi)
+            if sdf is not None:
+                return sdf, True
+        df = self._typed_view(min_seq=lo, max_seq=hi)
         return self._apply_bfl(df, q), False
 
     def _resolve_fetch_left_off(self, left_off: int | str) -> int | str:
         """``handleSpecialLeftOff(leftOff, 0)`` + the out-of-range guard
         (``native.go:627-655``)."""
+        if self._log is None:
+            if left_off != "latest":
+                return left_off
+            # a mount never changes, so the serving hot path must not
+            # launch a driver job per /fetch latest (VERDICT r10)
+            if self._latest_cache is None:
+                self._latest_cache = (
+                    self._df.agg(F.max(self.id_col)).collect()[0][0]
+                )
+            return self._latest_cache
         if left_off == "latest":
-            if self._log is not None:
-                return max(self._log.total_written - 1, 0)
-            if not self._mounted:
-                return index_to_id(max(self._insert_counter - 1, 0))
-            # cache the mounted max-id keyed on the insert counter: a
-            # static mount never changes, so the serving hot path must
-            # not launch a driver job per /fetch latest (VERDICT r10);
-            # an insert bumps the counter, invalidating naturally
-            cache = getattr(self, "_latest_cache", None)
-            if cache is not None and cache[0] == self._insert_counter:
-                return cache[1]
-            latest = (
-                self.dataframe().agg(F.max(self.id_col)).collect()[0][0]
-            )
-            self._latest_cache = (self._insert_counter, latest)
-            return latest
-        if not self._mounted:
-            total = (
-                self._log.total_written
-                if self._log is not None
-                else self._insert_counter
-            )
-            if int(left_off) > total:
-                raise IndexError(f"Index out of range: {int(left_off)}")
+            return max(self._log.total_written - 1, 0)
+        if int(left_off) > self._log.total_written:
+            raise IndexError(f"Index out of range: {int(left_off)}")
         return left_off
 
     def fetch_with_metadata(
@@ -1312,16 +1165,12 @@ class BasenineDB:
         rows = df.orderBy(order).limit(limit).collect()
         if stored:
             rows = _stored_docs(rows)
-        contiguous = not self._mounted  # ids are %024d of a dense seq
-        if self._log is not None:
-            total = self._log.live_count
-            trunc = self._log.truncated_timestamp
+        meta = self.metadata()
+        total, trunc = meta.total, meta.truncated_timestamp
+        contiguous = self._log is not None  # ids are %024d of a dense seq
+        if contiguous:
             first_seq = self._log.total_written - self._log.live_count
             last_seq = self._log.total_written - 1
-        else:
-            total = self.metadata().total
-            trunc = 0
-            first_seq, last_seq = 0, self._insert_counter - 1
         base = int(resolved) if contiguous else 0
         frames: list[Metadata] = []
         exhausted = False
@@ -1382,10 +1231,9 @@ class BasenineDB:
     # -- operational commands ----------------------------------------------
 
     def add_macro(self, name: str, expansion: str) -> None:
-        """/macro (M5) — persisted in durable mode (native.go:185)."""
+        """/macro (M5) — persisted with the log (native.go:185)."""
         _add_macro(self.macros, name, expansion)
-        if self._log is not None:
-            self._save_state()
+        self._save_state()
 
     def set_insertion_filter(self, query: str) -> None:
         """/insert-filter (M6) — validated like the reference
@@ -1394,20 +1242,19 @@ class BasenineDB:
         if not ok:
             raise ValueError(msg)
         self.insertion_filter = query
-        if self._log is not None:
-            self._save_state()
+        self._save_state()
 
     def compact(self, target_bytes: int = 128 * 1024 * 1024) -> int:
         """Maintenance: merge small log files (micro-batch ingest debris)
         into ~target-size parquet files.  See
-        :meth:`DocumentLog.compact`; no-op in non-durable mode."""
+        :meth:`DocumentLog.compact`; no-op for a mounted table."""
         if self._log is None:
             return 0
         return self._log.compact(target_bytes=target_bytes)
 
     def set_retention_bytes(self, n: int) -> None:
-        """/limit (M7): size-bound retention — enforced on the durable
-        log's rolling partitions (effective limit n/2, ≤2 live
+        """/limit (M7): size-bound retention — enforced on the log's
+        rolling partitions (effective limit n/2, ≤2 live
         partitions, ``native.go:1207-1211``)."""
         self.retention_bytes = n
         if self._log is not None:
@@ -1416,20 +1263,14 @@ class BasenineDB:
 
     def flush(self) -> None:
         """/flush (M8): drop all records (``native.go:888-904``)."""
-        self._df = None
-        self._insert_counter = 0
+        self._writable_log().flush()
         self._typed_schema = None
         self._schema_acc = None
         self._known_keys = set()
-        self._mounted_total = None
-        self._latest_cache = None  # flushed mount: max-id cache is stale
-        if self._log is not None:
-            self._shred_ok = True  # wiped log: shredding restarts clean
-        if self._log is not None:
-            self._log.flush()
-            # /flush keeps macros/filter/limit (only /reset clears them,
-            # native.go:888-928) — re-persist them after the wipe
-            self._save_state()
+        self._shred_ok = True  # wiped log: shredding restarts clean
+        # /flush keeps macros/filter/limit (only /reset clears them,
+        # native.go:888-928) — re-persist them after the wipe
+        self._save_state()
 
     def reset(self) -> None:
         """/reset (M8): flush + clear macros/filter/limit
@@ -1438,8 +1279,7 @@ class BasenineDB:
         self.macros = {}
         self.insertion_filter = ""
         self.retention_bytes = 0
-        if self._log is not None:
-            self._save_state()
+        self._save_state()
 
     # -- metadata -----------------------------------------------------------
 
@@ -1450,24 +1290,19 @@ class BasenineDB:
         ``total`` is the O(1) running counter (reference keeps plain
         ints, ``native.go:397-401``) — a metadata ping must never cost a
         table scan (perf fix, VERDICT r1)."""
-        if self._log is not None:
-            total = self._log.live_count
-            trunc = self._log.truncated_timestamp
-        elif self._df is None:
-            total = self._insert_counter
-            trunc = 0
-        else:
-            # mounted external table (possibly with inserts on top):
-            # count the mounted base once, then serve from the cache +
-            # running insert counter
+        if self._log is None:
+            # a mount never changes: count it once
             if self._mounted_total is None:
-                self._mounted_total = self._df.count() - self._insert_counter
-            total = self._mounted_total + self._insert_counter
-            trunc = 0
+                self._mounted_total = self._df.count()
+            return Metadata(
+                current=queried,
+                total=self._mounted_total,
+                number_of_written=written,
+            )
         return Metadata(
             current=queried,
-            total=total,
+            total=self._log.live_count,
             number_of_written=written,
-            left_off=index_to_id(max(self._insert_counter - 1, 0)),
-            truncated_timestamp=trunc,
+            left_off=self._log.last_id,
+            truncated_timestamp=self._log.truncated_timestamp,
         )

@@ -21,11 +21,14 @@ gob core dump + restore         the log IS the state: ``seq`` max and
                                  (``native.go:986-1044``)
 =============================  =======================================
 
-Scale notes (100 TB): the ingest batch is filtered/redacted in an
-Arrow-batched ``mapInPandas`` (embarrassingly parallel); contiguous id
-assignment uses ``zipWithIndex`` (one count job, no shuffle, no driver
-loop); queries read Parquet with ``seq`` range predicates that prune at
-file level. The driver holds only counters, never records.
+Ingest has two input shapes.  A wire batch (:meth:`DocumentLog.append`)
+is already on the driver, so it is validated, filtered and stamped
+there and written in one Spark job.  A bulk DataFrame
+(:meth:`DocumentLog.append_df`) never reaches the driver: it is
+filtered/redacted in Arrow-batched ``mapInPandas`` stages and stamped
+from per-partition offsets, the driver advancing only the sequence
+counter.  Queries read Parquet with ``seq`` range predicates that prune
+at file level.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -159,111 +162,17 @@ class DocumentLog:
 
         A wire batch is DRIVER-RESIDENT by construction (the server
         holds what it read off the socket), and validation already
-        parses every line on the driver — so batches up to
-        ``BN_DRIVER_STAMP_MAX`` lines (default 65536) are filtered and
+        parses every line on the driver — so the batch is filtered and
         stamped in that same driver pass and written with ONE Spark job
-        (optimization guide §1.2/§4: the per-record work is microseconds
-        of json round-trip; the old 3-job pickled-RDD pipeline was pure
-        scheduling overhead at wire batch sizes). Larger batches keep
-        the distributed path: per-record work in executors, the driver
-        advancing only the sequence counter (``native.go:302``).
-        Invalid JSON anywhere in the batch fails the whole batch before
-        any id is assigned (all-or-none; a bad line must not orphan ids
-        — see ADVICE r1). Both paths produce byte-identical rows: same
-        json round-trip normalization, same id injection, same doc_ts
-        extraction."""
-        if not lines:
-            return []
-        max_driver = int(os.environ.get("BN_DRIVER_STAMP_MAX", "65536"))
-        if len(lines) <= max_driver:
-            return self._append_driver(
-                lines, insertion_filter_text, shred_schema
-            )
-        for line in lines:  # cheap driver-side validation, all-or-none
-            json.loads(line)
-
-        sc = self.spark.sparkContext
-        n_slices = min(len(lines), sc.defaultParallelism)
-        rdd = sc.parallelize(lines, n_slices)
-
-        if insertion_filter_text:
-            flt_text = insertion_filter_text
-
-            def apply_filter(part: Iterator[str]) -> Iterator[str]:
-                from ..bfl import parse as _parse
-                from ..bfl.pyeval import eval_query as _eval
-
-                parsed = _parse(flt_text)
-                for line in part:
-                    truth, doc = _eval(parsed, line)
-                    if truth:
-                        yield doc
-
-            rdd = rdd.mapPartitions(apply_filter)
-
-        base = self._count
-        rdd = rdd.cache()  # zipWithIndex triggers a count job; reuse it
-        written = rdd.count()
-        with_idx = rdd.zipWithIndex()  # contiguous, order-stable, no shuffle
-
-        def stamp(pairs: Iterator[tuple]) -> Iterator[tuple]:
-            import json as _json
-
-            for doc, idx in pairs:
-                seq = base + idx
-                obj = _json.loads(doc)
-                rid = "%024d" % seq
-                obj["id"] = rid
-                ts = obj.get("timestamp")
-                doc_ts = int(ts) if isinstance(ts, (int, float)) and not isinstance(ts, bool) else None
-                yield (
-                    seq,
-                    rid,
-                    _json.dumps(obj, separators=(",", ":")),
-                    doc_ts,
-                )
-
-        part = self._part
-        rows = with_idx.mapPartitions(stamp).map(lambda r: r + (part,))
-        df = self.spark.createDataFrame(rows, LOG_SCHEMA)
-        if shred_schema is not None and shred_schema.fields:
-            # Shredded storage: parse ONCE at ingest into a typed struct
-            # column, so queries read real parquet columns (row-group
-            # pruning + nested predicate pushdown) instead of running
-            # from_json over the corpus.  The raw ``value`` stays the
-            # record of truth for the exact row backend.
-            df = df.withColumn(
-                "doc", F.from_json(F.col("value"), shred_schema)
-            )
-        if written:
-            df.write.mode("append").partitionBy("part").parquet(self.path)
-        rdd.unpersist()
-
-        ids = ["%024d" % (base + i) for i in range(written)]
-        self._count = base + written
-        if written and self.retention_bytes > 0:
-            # event-time bookkeeping is only needed for truncatedTimestamp
-            self._refresh_part_ts(part)
-        self._maybe_rotate()
-        return ids
-
-    def _append_driver(
-        self,
-        lines: list[str],
-        insertion_filter_text: str = "",
-        shred_schema: Optional[T.StructType] = None,
-    ) -> list[str]:
-        """Driver-pass stamp + one-job write for wire-sized batches.
-
-        Semantics identical to the distributed path: ``json.loads`` of
-        every line first (all-or-none ValueError before any id), the
-        same BFL ``eval_query`` per line for the insertion filter
-        (+redact), the same loads → inject ``id`` → compact-dumps
-        normalization of the stored ``value``, the same ``timestamp``
-        → ``doc_ts`` extraction. The batch lands as ONE parquet file
-        (vs one per task slice) — fewer files per micro-batch is the
-        guide-§6 layout the ``compact()`` maintenance op otherwise has
-        to repair."""
+        (the per-record work is microseconds of json round-trip).  A
+        batch that lives in cluster storage takes :meth:`append_df`
+        instead.  Invalid JSON anywhere in the batch fails the whole
+        batch before any id is assigned (all-or-none; a bad line must
+        not orphan ids — see ADVICE r1).  The stored ``value`` is the
+        loads → inject ``id`` → compact-dumps normalization of the
+        (filtered) line, ``doc_ts`` its numeric ``timestamp``; the batch
+        lands as ONE parquet file, the layout ``compact()`` otherwise
+        has to repair."""
         objs = [json.loads(line) for line in lines]  # all-or-none
         if insertion_filter_text:
             from ..bfl import parse as _parse
@@ -312,6 +221,12 @@ class DocumentLog:
             )
             out = self.spark.createDataFrame(tbl).coalesce(1)
             if shred_schema is not None and shred_schema.fields:
+                # Shredded storage: parse ONCE at ingest into a typed
+                # struct column, so queries read real parquet columns
+                # (row-group pruning + nested predicate pushdown)
+                # instead of running from_json over the corpus.  The
+                # raw ``value`` stays the record of truth for the exact
+                # row backend.
                 out = out.withColumn(
                     "doc", F.from_json(F.col("value"), shred_schema)
                 )
@@ -320,6 +235,7 @@ class DocumentLog:
         ids = ["%024d" % (base + i) for i in range(written)]
         self._count = base + written
         if written and self.retention_bytes > 0:
+            # event-time bookkeeping is only needed for truncatedTimestamp
             self._refresh_part_ts(self._part)
         self._maybe_rotate()
         return ids

@@ -24,7 +24,7 @@ import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves stringified hints
                      # (PEP 563 is active in this file) via module globals
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
@@ -223,19 +223,6 @@ def _verify_jaccard(
 NUM_PERM = 64
 BANDS = 16
 ROWS_PER_BAND = NUM_PERM // BANDS
-
-
-def minhash_signature(shingles: Column, num_perm: int = NUM_PERM) -> Column:
-    """num_perm-wide MinHash signature: perm *i* = min over the shingle
-    set of ``xxhash64(shingle, i)``. Deterministic (xxhash64 is a fixed
-    public hash), vectorized, no UDF. Empty set → nulls (no bands).
-
-    NOTE: generates a ``num_perm``-wide expression tree — fine for small
-    ``num_perm``; the production path is :func:`minhash_signature_udf`
-    whose plan size is O(1) regardless of permutations."""
-    return F.array(
-        *[F.array_min(F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i)))) for i in range(num_perm)]
-    )
 
 
 def minhash_signature_udf(num_perm: int = NUM_PERM):

@@ -1477,11 +1477,6 @@ def _order_violation_agg(approx: DataFrame, part_col: str) -> DataFrame:
     )
 
 
-def _order_violation_count(approx: DataFrame, part_col: str) -> int:
-    row = _order_violation_agg(approx, part_col).collect()[0]
-    return int(row["order_viol"])
-
-
 def _sim_mismatch_agg(
     spark: SparkSession,
     sf_dir: str,

@@ -30,17 +30,18 @@ first line         connection mode (``server.go:234-280``)
 
 Spark-first shape: the server is a *driver-side* component — each
 connection's queries run as ordinary pruned Spark scans against the
-durable log, so the heavy lifting (filter pushdown, file pruning via
-the physical ``seq`` column, typed fast path vs row backend) is
-exactly the batch engine's.  Like the reference, which writes each
-matching record's stored bytes to the socket (``native.go:481-495``),
-a durable QUERY/FETCH/SINGLE sends the log's stored document: the
-filter runs on the typed columns and the scan projects only ``seq``
-and the raw ``value``, so nothing is re-serialized (typed rows are
-re-serialized only for redact queries and the non-durable and mounted
-modes).  A QUERY poll is one unsorted scan sorted by seq on the
-driver; only ``limit(N)`` (TakeOrderedAndProject) and mounted tables
-order in Spark.  Replies are written in sendall calls of about
+document log (persistent or in a private temporary directory, one
+engine either way), so the heavy lifting (filter pushdown, file
+pruning via the physical ``seq`` column, typed fast path vs row
+backend) is exactly the batch engine's.  Like the reference, which
+writes each matching record's stored bytes to the socket
+(``native.go:481-495``), QUERY/FETCH/SINGLE send the log's stored
+document: the filter runs on the typed columns and the scan projects
+only ``seq`` and the raw ``value``, so nothing is re-serialized (typed
+rows are re-serialized only for redact queries and mounted tables).  A
+QUERY poll is one unsorted scan sorted by seq on the driver; only
+``limit(N)`` (TakeOrderedAndProject) and mounted tables order in
+Spark.  Replies are written in sendall calls of about
 ``SEND_CHUNK_BYTES``.  Follow mode re-expresses the reference's
 fsnotify wait (``native.go:520-522,1139-1155``) as an incremental
 re-scan from the last served sequence: each poll's ``seq > leftOff``
@@ -99,7 +100,7 @@ SEND_CHUNK_BYTES = 64 * 1024
 def row_to_doc(row, id_col: str = "id") -> str:
     """The wire document of one served row.
 
-    A :class:`~basenine_spark.engine.db.StoredDoc` (durable mode,
+    A :class:`~basenine_spark.engine.db.StoredDoc` (a log record,
     filter compiled to a Column) is the stored document and is sent
     verbatim.  The rest is the typed-row fallback: row-backend results
     (schema exactly ``(id, value)`` with ``value`` a JSON object string
@@ -432,10 +433,8 @@ class BasenineServer:
             self._send(conn, str(e))
 
     def _db_total(self) -> int:
-        db = self.db
-        return (
-            db._log.total_written if db._log is not None else db._insert_counter
-        )
+        """Records ever written to the db's log (not for a mount)."""
+        return self.db._log.total_written
 
     def _serve_query(self, conn: socket.socket, reader: _LineReader) -> None:
         """QUERY mode (follow): snapshot + incremental re-scan.  Wire
@@ -456,16 +455,17 @@ class BasenineServer:
         written = 0
         left_off: int | str = left_line.strip() or 0
         last_seq = -1
-        mounted = self.db._mounted
+        mounted = self.db._log is None
         while not self._stop.is_set():
             if not self._conn_alive(conn):
                 return
-            if not mounted and self._db_total() == 0:
-                # a QUERY connection may open before the first INSERT
-                # (server_test.go InsertionFilter flow)
-                self._stop.wait(self.poll_interval)
-                continue
-            snapshot_total = self._db_total()
+            if not mounted:
+                snapshot_total = self._db_total()
+                if snapshot_total == 0:
+                    # a QUERY connection may open before the first
+                    # INSERT (server_test.go InsertionFilter flow)
+                    self._stop.wait(self.poll_interval)
+                    continue
             try:
                 rows, frames = self.db.query_with_metadata(
                     qtext, left_off=left_off
@@ -508,16 +508,11 @@ class BasenineServer:
                 return
             # resume after everything scanned this round: the next poll's
             # seq predicate prunes all files already served. The token is
-            # the 24-digit id form, NOT a plain decimal string: query()
-            # parses it via int() on the durable path, and on the
-            # NON-durable path it is compared lexicographically against
-            # 24-digit ids — a bare "4" sorts before every id and either
-            # re-serves everything ("0") or never matches again (ADVICE
-            # r6 high). A STRING (not int 0) deliberately: query() reads
-            # the int 0 as "from the beginning" but any non-empty string
-            # as a real resume token, so a single-record store hands back
-            # index_to_id(0) (round-6 fix, pinned in
-            # test_wire_protocol.py)
+            # the 24-digit id form, as a STRING (not int 0) deliberately:
+            # query() reads the int 0 as "from the beginning" but any
+            # non-empty string as a real resume token, so a
+            # single-record store hands back index_to_id(0) (round-6
+            # fix, pinned in test_wire_protocol.py)
             left_off = index_to_id(max(snapshot_total - 1, last_seq, 0))
             self._stop.wait(self.poll_interval)
 
@@ -536,8 +531,7 @@ class BasenineServer:
                 f"Error: While converting the index to integer: {e}",
             )
             return
-        total = self._db_total()
-        if not self.db._mounted and idx >= total:
+        if self.db._log is not None and idx >= self._db_total():
             # native.go:544-550 distinguishes past-the-end from removed
             self._send(conn, f"Index out of range: {idx}")
             return

@@ -105,7 +105,7 @@ def anomaly_stream(
     rows never reappear; pair the stable checkpoint with a durable
     sink when replay-safe output matters. Returns the StreamingQuery."""
     if db._log is None:
-        raise ValueError("anomaly_stream requires a durable (path-backed) db")
+        raise ValueError("anomaly_stream requires a log-backed db, not a mount")
     from ..engine.log import LOG_SCHEMA
 
     stream = db.spark.readStream.schema(LOG_SCHEMA).parquet(db._log.path)

@@ -46,7 +46,9 @@ def attribution_join_stream(
     rows never reappear; pair the stable checkpoint with a durable
     sink when replay-safe output matters. Returns the StreamingQuery."""
     if db._log is None:
-        raise ValueError("attribution_join_stream requires a durable db")
+        raise ValueError(
+            "attribution_join_stream requires a log-backed db, not a mount"
+        )
     from ..engine.log import LOG_SCHEMA
 
     def side(event_type: str, alias: str):

@@ -84,7 +84,9 @@ def blocklist_gate_stream(
     Returns the StreamingQuery.
     """
     if db._log is None:
-        raise ValueError("blocklist_gate_stream requires a durable db")
+        raise ValueError(
+            "blocklist_gate_stream requires a log-backed db, not a mount"
+        )
     from ..engine.log import LOG_SCHEMA
 
     block = _with_grams(

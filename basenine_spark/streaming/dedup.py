@@ -60,7 +60,7 @@ def dedup_stream(
     consume a state-store slot.
     """
     if db._log is None:
-        raise ValueError("dedup_stream requires a durable (path-backed) db")
+        raise ValueError("dedup_stream requires a log-backed db, not a mount")
     from ..engine.log import LOG_SCHEMA
 
     stream = db.spark.readStream.schema(LOG_SCHEMA).parquet(db._log.path)

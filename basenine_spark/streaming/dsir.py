@@ -107,7 +107,9 @@ def dsir_admit_stream(
     dropped.  Returns the StreamingQuery.
     """
     if db._log is None:
-        raise ValueError("dsir_admit_stream requires a durable db")
+        raise ValueError(
+            "dsir_admit_stream requires a log-backed db, not a mount"
+        )
     from pyspark.sql.functions import pandas_udf
 
     from ..engine.log import LOG_SCHEMA

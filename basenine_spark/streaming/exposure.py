@@ -47,7 +47,9 @@ def incident_exposure_stream(
     rows never reappear; pair the stable checkpoint with a durable
     sink when replay-safe output matters. Returns the StreamingQuery."""
     if db._log is None:
-        raise ValueError("incident_exposure_stream requires a durable db")
+        raise ValueError(
+            "incident_exposure_stream requires a log-backed db, not a mount"
+        )
     from ..engine.log import LOG_SCHEMA
 
     pad_ms = pad_minutes * 60_000

@@ -176,7 +176,7 @@ def funnel_stream(
 
     Returns the StreamingQuery."""
     if db._log is None:
-        raise ValueError("funnel_stream requires a durable (path-backed) db")
+        raise ValueError("funnel_stream requires a log-backed db, not a mount")
     from ..engine.log import LOG_SCHEMA
 
     stream = db.spark.readStream.schema(LOG_SCHEMA).parquet(db._log.path)

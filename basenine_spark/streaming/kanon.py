@@ -139,7 +139,7 @@ def k_anonymity_stream(
     StreamingQuery."""
     if db._log is None:
         raise ValueError(
-            "k_anonymity_stream requires a durable (path-backed) db"
+            "k_anonymity_stream requires a log-backed db, not a mount"
         )
     from ..engine.log import LOG_SCHEMA
 

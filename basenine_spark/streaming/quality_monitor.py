@@ -44,7 +44,7 @@ def quality_monitor_stream(
     sink when replay-safe output matters. Returns the StreamingQuery."""
     if db._log is None:
         raise ValueError(
-            "quality_monitor_stream requires a durable (path-backed) db"
+            "quality_monitor_stream requires a log-backed db, not a mount"
         )
     if not rules:
         raise ValueError("no rules given")

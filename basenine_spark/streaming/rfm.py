@@ -138,7 +138,7 @@ def rfm_stream(
     one pass over every log segment).
     """
     if db._log is None:
-        raise ValueError("rfm_stream requires a durable (path-backed) db")
+        raise ValueError("rfm_stream requires a log-backed db, not a mount")
     from ..engine.log import LOG_SCHEMA
 
     stream = db.spark.readStream.schema(LOG_SCHEMA).parquet(db._log.path)

@@ -128,7 +128,7 @@ def semantic_admit_stream(
 
     if db._log is None:
         raise ValueError(
-            "semantic_admit_stream requires a durable (path-backed) db"
+            "semantic_admit_stream requires a log-backed db, not a mount"
         )
     from ..engine.log import LOG_SCHEMA
 

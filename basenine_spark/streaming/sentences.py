@@ -54,7 +54,7 @@ def sentence_scrub_stream(
     StreamingQuery."""
     if db._log is None:
         raise ValueError(
-            "sentence_scrub_stream requires a durable (path-backed) db"
+            "sentence_scrub_stream requires a log-backed db, not a mount"
         )
     from ..engine.log import LOG_SCHEMA
 

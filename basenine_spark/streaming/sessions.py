@@ -120,7 +120,7 @@ def session_stream(
     (see ``replay._drain_stateful``'s docstring), so input-row
     accounting is the supported bounded-replay mechanism."""
     if db._log is None:
-        raise ValueError("session_stream requires a durable (path-backed) db")
+        raise ValueError("session_stream requires a log-backed db, not a mount")
     from ..engine.log import LOG_SCHEMA
 
     stream = db.spark.readStream.schema(LOG_SCHEMA).parquet(db._log.path)

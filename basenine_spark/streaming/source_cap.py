@@ -97,7 +97,7 @@ def source_cap_admit_stream(
     admission across restarts (pinned in pytest)."""
     if db._log is None:
         raise ValueError(
-            "source_cap_admit_stream requires a durable (path-backed) db"
+            "source_cap_admit_stream requires a log-backed db, not a mount"
         )
     from ..engine.log import LOG_SCHEMA
 

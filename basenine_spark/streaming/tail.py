@@ -65,7 +65,9 @@ class TailQuery:
         frame_cadence: str = "delivered",
     ):
         if db._log is None:
-            raise ValueError("tail requires a durable (path-backed) BasenineDB")
+            raise ValueError(
+                "tail requires a log-backed BasenineDB, not a mount"
+            )
         if frame_cadence not in ("delivered", "scanned"):
             raise ValueError(
                 "frame_cadence must be 'delivered' or 'scanned', got "

@@ -47,7 +47,9 @@ def windowed_counts_stream(
     rows never reappear; pair the stable checkpoint with a durable
     sink when replay-safe output matters. Returns the StreamingQuery."""
     if db._log is None:
-        raise ValueError("windowed_counts_stream requires a durable db")
+        raise ValueError(
+            "windowed_counts_stream requires a log-backed db, not a mount"
+        )
     from ..engine.log import LOG_SCHEMA
 
     stream = db.spark.readStream.schema(LOG_SCHEMA).parquet(db._log.path)

@@ -192,7 +192,7 @@ def test_insert_json_bad_line_keeps_counter_and_data(spark):
     with pytest.raises(ValueError):
         db.insert_json(['{"a": 1}', "not json", '{"a": 2}'])
     # nothing inserted, no ids consumed
-    assert db._insert_counter == 0
+    assert db._log.total_written == 0
     ids = db.insert_json(['{"a": 3}'])
     assert ids == ["%024d" % 0]
     assert db.dataframe().count() == 1
@@ -243,13 +243,16 @@ def test_tail_does_not_leak_seq_into_documents(spark, tmp_path):
 
 
 def test_metadata_mounted_plus_inserts(spark):
+    """A mounted table is read-only: an insert raises and leaves the
+    mounted count as it was."""
     from basenine_spark.engine.db import BasenineDB
 
     df = spark.createDataFrame([(i,) for i in range(10)], "id long")
     db = BasenineDB.from_dataframe(spark, df, id_col="id")
     assert db.metadata().total == 10
-    db.insert_json(['{"id": "x"}'])
-    assert db.metadata().total == 11
+    with pytest.raises(ValueError, match="read-only"):
+        db.insert_json(['{"id": "x"}'])
+    assert db.metadata().total == 10
 
 
 def test_schema_cache_survives_same_shape_inserts(spark, tmp_path):

@@ -135,8 +135,8 @@ def test_mounted_parquet_table(spark):
 
 def test_many_small_inserts_bounded_plan(spark):
     """The reference's wire pattern is many small inserts on one
-    connection; the in-memory union lineage must stay bounded (periodic
-    truncation) so the 100th batch plans as fast as the first."""
+    connection; the plan over the log must not grow with the number of
+    batches, so the 100th batch plans as fast as the first."""
     import json as _json
 
     from basenine_spark.engine.db import BasenineDB

@@ -249,11 +249,10 @@ def test_query_mode_follow_streams_new_inserts(served):
 
 
 def test_query_mode_follow_streams_new_inserts_non_durable(spark):
-    """ADVICE r7 high: follow-mode over a NON-durable (in-memory) db.
-    The poll-resume token must be the 24-digit id form — a plain
-    decimal string ("4") compares lexicographically against 24-digit
-    ids on this path, so new inserts were never delivered (or, for
-    token "0", everything was re-delivered each poll)."""
+    """ADVICE r7 high: follow-mode over a non-persistent db (the log in
+    a private temporary directory).  New inserts are delivered exactly
+    once, in order: a wrong poll-resume token either stalls or
+    re-delivers earlier records."""
     db = BasenineDB(spark)
     server = BasenineServer(db, poll_interval=0.05).start()
     try:
