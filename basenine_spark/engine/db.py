@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 import shutil
 import tempfile
+import threading
 import weakref
 from dataclasses import dataclass
 from typing import Iterator, Optional
@@ -219,7 +220,11 @@ class BasenineDB:
         # logs predating shredding (or with a dynamic insertion-filter
         # batch) read via from_json instead
         self._shred_ok = log is not None and log.total_written == 0
-        self._known_keys: set[str] = set()  # top-level doc keys seen
+        # commit clock: bumped (and waiters woken) once a batch's schema
+        # is merged, so a follower never reads records ahead of it
+        self._commit = threading.Condition()
+        self._commit_version = 0
+        self._committed_total = 0 if log is None else log.total_written
         self._mounted_total: Optional[int] = None  # cached count, mounted
         self._latest_cache = None  # cached max natural id, mounted
 
@@ -252,7 +257,6 @@ class BasenineDB:
         if acc:
             self._schema_acc = schema_from_json(acc)
             self._typed_schema = finalize_type(self._schema_acc)
-        self._known_keys = set(state.get("known_keys", []))
         # the reference gob-dumps TruncatedTimestamp too
         # (native.go:183,249) — metadata frames after a restart must
         # keep reporting what retention dropped (ADVICE r2)
@@ -281,7 +285,6 @@ class BasenineDB:
                         if self._schema_acc is not None
                         else None
                     ),
-                    "known_keys": sorted(self._known_keys),
                     "truncated_timestamp": self._log.truncated_timestamp,
                     "shred_ok": self._shred_ok,
                 },
@@ -346,9 +349,7 @@ class BasenineDB:
         ids = log.append(
             lines, insertion_filter_text=flt_text, shred_schema=shred
         )
-        self._commit_schema(
-            batch, shred, first_new_seq, {k for d in docs for k in d}
-        )
+        self._commit_schema(batch, shred, first_new_seq)
         return ids
 
     def insert_json_df(self, df, schema_sampling_ratio: float = 1.0) -> int:
@@ -461,12 +462,7 @@ class BasenineDB:
             if prevalidated:
                 df.unpersist()
             src_persisted.unpersist()
-        self._commit_schema(
-            batch,
-            shred,
-            first_new_seq,
-            set(inferred.fieldNames()) if inferred is not None else None,
-        )
+        self._commit_schema(batch, shred, first_new_seq)
         return written
 
     # -- write-time schema maintenance ------------------------------------
@@ -529,16 +525,14 @@ class BasenineDB:
         batch: Optional[T.StructType],
         shred: Optional[T.StructType],
         first_new_seq: int,
-        keys: Optional[set],
     ) -> None:
         """After an append from seq ``first_new_seq``: merge the batch's
         shape into the running union schema (no invalidation — the
-        typed view never re-learns its schema from the data), record
-        the top-level ``keys`` seen (default: the batch's), and persist
-        the state.  ``batch`` None means the insertion filter could drop
-        records or rewrite values dynamically: the shape is then
-        inferred from the just-appended slice, a batch-bounded job
-        pruned by the seq predicate."""
+        typed view never re-learns its schema from the data), persist
+        the state, and publish the commit.  ``batch`` None means the
+        insertion filter could drop records or rewrite values
+        dynamically: the shape is then inferred from the just-appended
+        slice, a batch-bounded job pruned by the seq predicate."""
         wrote = self._log.total_written > first_new_seq
         if shred is None and wrote:
             # this batch's files carry no doc column — a shredded read
@@ -560,10 +554,45 @@ class BasenineDB:
             if merged != self._schema_acc:
                 self._schema_acc = merged
                 self._typed_schema = finalize_type(merged)
-            if keys is None:
-                keys = set(batch.fieldNames()) - {ID_COL}
-        self._known_keys |= keys or set()
         self._save_state()
+        self._publish_commit()
+
+    def _publish_commit(self) -> None:
+        """Make every record written so far visible to
+        :meth:`wait_commit` callers.  Called only once the records'
+        schema is merged: a follower compiling its filter against an
+        older schema would match nothing and resume past them."""
+        with self._commit:
+            self._commit_version += 1
+            self._committed_total = self._log.total_written
+            self._commit.notify_all()
+
+    def wait_commit(
+        self,
+        seen: int,
+        timeout: Optional[float],
+        stop: Optional[threading.Event] = None,
+    ) -> tuple[int, int]:
+        """``(version, committed_total)`` of the commit clock, once its
+        version differs from ``seen``, ``stop`` is set (then woken by
+        :meth:`wake_waiters`) or ``timeout`` seconds pass.  Records
+        with seq < ``committed_total`` are written and their schema is
+        merged; a reader bounded by it (``as_of=committed_total - 1``)
+        sees no half-committed batch.  A mounted table never
+        commits."""
+        with self._commit:
+            self._commit.wait_for(
+                lambda: self._commit_version != seen
+                or (stop is not None and stop.is_set()),
+                timeout,
+            )
+            return self._commit_version, self._committed_total
+
+    def wake_waiters(self) -> None:
+        """Wake every :meth:`wait_commit` caller to re-check its
+        ``stop`` event."""
+        with self._commit:
+            self._commit.notify_all()
 
     def _bulk_filter_column(self, df, q: Query):
         """Compile a pure (non-mutating) insertion filter to a Column
@@ -833,7 +862,6 @@ class BasenineDB:
             sample = merged
         self._schema_acc = sample
         self._typed_schema = finalize_type(sample)
-        self._known_keys |= set(sample.fieldNames())
         self._save_state()
 
     def query(
@@ -891,7 +919,7 @@ class BasenineDB:
         # resume offset as a physical seq predicate → file pruning
         min_seq = None
         if left_off == "latest":  # T2 (native.go:1158-1176)
-            min_seq = max(self._log.total_written - 1, 0)
+            min_seq = self._latest_seq(as_of)
         elif left_off not in (0, None, ""):
             min_seq = int(left_off) + 1
         if stored:
@@ -900,6 +928,12 @@ class BasenineDB:
                 return sdf, True
         df = self._typed_view(min_seq=min_seq, max_seq=as_of)
         return self._apply_bfl(df, q), False
+
+    def _latest_seq(self, as_of: int | None) -> int:
+        """The seq a ``"latest"`` QUERY resumes at: the last record
+        written, or the last one an ``as_of`` snapshot sees."""
+        last = self._log.total_written - 1
+        return max(last if as_of is None else min(last, as_of), 0)
 
     def _stored_frame(
         self,
@@ -932,7 +966,7 @@ class BasenineDB:
         )
 
     def _served_frame(
-        self, q: Query, left_off: int | str
+        self, q: Query, left_off: int | str, as_of: int | None = None
     ) -> tuple[DataFrame, bool, bool]:
         """The DataFrame a QUERY poll collects: ``(df, stored, ordered)``.
         Spark orders it only under ``limit(N)`` (TakeOrderedAndProject,
@@ -940,14 +974,17 @@ class BasenineDB:
         ordering); otherwise it is one unsorted scan, sorted on the
         driver after the collect — no range-partition sampling job,
         no shuffle."""
-        df, stored = self._query_frame(q, left_off, stored=True)
+        df, stored = self._query_frame(q, left_off, as_of=as_of, stored=True)
         if q.limit > 0 or self._log is None:
             order = F.col("seq" if stored else self.id_col).asc()
             return _order_limit(df, order, q.limit), stored, True
         return df, stored, False
 
     def query_with_metadata(
-        self, query: str = "", left_off: int | str = 0
+        self,
+        query: str = "",
+        left_off: int | str = 0,
+        as_of: int | None = None,
     ) -> tuple[list, list[Metadata]]:
         """/query with the wire's per-record metadata frames
         (``native.go:488-511``): each delivered record is followed by a
@@ -959,9 +996,10 @@ class BasenineDB:
         query mode (it is a FETCH concept).
 
         Log rows are :class:`StoredDoc` where the filter compiles (see
-        :meth:`_stored_frame`), typed or row-backend rows otherwise."""
+        :meth:`_stored_frame`), typed or row-backend rows otherwise.
+        ``as_of`` bounds the scan at that seq, as in :meth:`query`."""
         q = self._prepare(query)
-        df, stored, ordered = self._served_frame(q, left_off)
+        df, stored, ordered = self._served_frame(q, left_off, as_of)
         rows = df.collect()
         if not ordered:
             key = 0 if stored else self.id_col
@@ -972,7 +1010,7 @@ class BasenineDB:
         contiguous = self._log is not None  # ids are %024d of a dense seq
         prev = -1  # the seq before the first candidate
         if contiguous and left_off == "latest":
-            prev = max(self._log.total_written - 1, 0) - 1
+            prev = self._latest_seq(as_of) - 1
         elif contiguous and left_off not in (0, None, ""):
             prev = int(left_off)
         frames: list[Metadata] = []
@@ -1160,11 +1198,15 @@ class BasenineDB:
         """
         resolved = self._resolve_fetch_left_off(left_off)
         q = self._fetch_query(query)
-        df, stored = self._fetch_frame(q, resolved, direction, stored=True)
-        order = _fetch_order("seq" if stored else self.id_col, direction)
-        rows = df.orderBy(order).limit(limit).collect()
-        if stored:
-            rows = _stored_docs(rows)
+        rows: list = []
+        # a log with no live records has no view schema to scan: its
+        # page is the trailing record-less noMoreData frame alone
+        if self._log is None or self._log.live_count > 0:
+            df, stored = self._fetch_frame(q, resolved, direction, stored=True)
+            order = _fetch_order("seq" if stored else self.id_col, direction)
+            rows = df.orderBy(order).limit(limit).collect()
+            if stored:
+                rows = _stored_docs(rows)
         meta = self.metadata()
         total, trunc = meta.total, meta.truncated_timestamp
         contiguous = self._log is not None  # ids are %024d of a dense seq
@@ -1266,11 +1308,11 @@ class BasenineDB:
         self._writable_log().flush()
         self._typed_schema = None
         self._schema_acc = None
-        self._known_keys = set()
         self._shred_ok = True  # wiped log: shredding restarts clean
         # /flush keeps macros/filter/limit (only /reset clears them,
         # native.go:888-928) — re-persist them after the wipe
         self._save_state()
+        self._publish_commit()
 
     def reset(self) -> None:
         """/reset (M8): flush + clear macros/filter/limit

@@ -43,14 +43,17 @@ QUERY poll is one unsorted scan sorted by seq on the driver; only
 ``limit(N)`` (TakeOrderedAndProject) and mounted tables order in
 Spark.  Replies are written in sendall calls of about
 ``SEND_CHUNK_BYTES``.  Follow mode re-expresses the reference's
-fsnotify wait (``native.go:520-522,1139-1155``) as an incremental
-re-scan from the last served sequence: each poll's ``seq > leftOff``
+fsnotify wait (``native.go:520-522,1139-1155``) as a commit-driven
+incremental scan: a follower sleeps on the db's commit clock
+(``BasenineDB.wait_commit``) until a batch is committed — written and
+its keys merged into the typed schema — then scans from the last
+served sequence up to the committed total.  The ``seq > leftOff``
 predicate prunes all previously-served files via Parquet min/max
-stats, so an idle tail costs one file-listing job per interval and a
-busy tail scans only the new tail files.  At cluster scale the
-per-connection state is one integer (the resume seq) — connections
-are stateless against the storage, so the server can be replicated
-behind a TCP balancer with a shared log directory.
+stats, so an idle tail costs no Spark job and a busy tail scans only
+the new tail files, once per committed batch.  The per-connection
+state is one integer (the resume seq); the log's counters, typed
+schema and ``_state.json`` live in the serving process, so one daemon
+owns its log directory, as in the reference.
 
 QUERY-mode ``leftOff`` tokens are reference-faithful BY DEFAULT
 (round 10, VERDICT r8 #9): the reference mints the metadata token as
@@ -235,7 +238,14 @@ class BasenineServer:
         ``False`` opts out: the token is the delivered id itself and
         resume starts just after it — no skip (strictly better, but
         observably different to a client that replays tokens
-        byte-for-byte)."""
+        byte-for-byte).
+
+        A QUERY follower sleeps until the db commits a batch, so it
+        runs no Spark job while idle; ``poll_interval`` (seconds) is
+        how often an idle follower wakes to notice a client hang-up
+        and, after a ``limit(N)`` stream or on a mounted table, how
+        often it checks for one.  ``stop()`` wakes followers at
+        once."""
         self.db = db
         self.poll_interval = poll_interval
         self.compat_left_off = compat_left_off
@@ -261,6 +271,7 @@ class BasenineServer:
         """Graceful shutdown: ``%quit%`` to every live connection then
         close (``server.go:226-230`` ``quitConnections``)."""
         self._stop.set()
+        self.db.wake_waiters()
         try:
             self._listener.close()
         except OSError:
@@ -437,7 +448,8 @@ class BasenineServer:
         return self.db._log.total_written
 
     def _serve_query(self, conn: socket.socket, reader: _LineReader) -> None:
-        """QUERY mode (follow): snapshot + incremental re-scan.  Wire
+        """QUERY mode (follow): snapshot, then one incremental scan per
+        committed batch (``BasenineDB.wait_commit``).  Wire
         framing is record line then ``/metadata`` frame
         (``native.go:488-511``); ``limit(N)`` stops the stream but not
         the connection (``native.go:513-517``)."""
@@ -456,19 +468,29 @@ class BasenineServer:
         left_off: int | str = left_line.strip() or 0
         last_seq = -1
         mounted = self.db._log is None
+        seen = -1  # commit version of the last poll: the first one runs
+        committed = 0
         while not self._stop.is_set():
             if not self._conn_alive(conn):
                 return
             if not mounted:
-                snapshot_total = self._db_total()
-                if snapshot_total == 0:
+                version, committed = self.db.wait_commit(
+                    seen, self.poll_interval, self._stop
+                )
+                if version == seen:
+                    continue  # idle: re-check hang-up and stop()
+                seen = version
+                if committed == 0:
                     # a QUERY connection may open before the first
                     # INSERT (server_test.go InsertionFilter flow)
-                    self._stop.wait(self.poll_interval)
                     continue
             try:
+                # bounded by the commit: a batch whose schema is not
+                # merged yet would fail the filter and be skipped
                 rows, frames = self.db.query_with_metadata(
-                    qtext, left_off=left_off
+                    qtext,
+                    left_off=left_off,
+                    as_of=None if mounted else committed - 1,
                 )
             except Exception as e:  # noqa: BLE001
                 self._send(conn, f"Error: {e}")
@@ -513,8 +535,7 @@ class BasenineServer:
             # non-empty string as a real resume token, so a
             # single-record store hands back index_to_id(0) (round-6
             # fix, pinned in test_wire_protocol.py)
-            left_off = index_to_id(max(snapshot_total - 1, last_seq, 0))
-            self._stop.wait(self.poll_interval)
+            left_off = index_to_id(max(committed - 1, last_seq, 0))
 
     def _serve_single(self, conn: socket.socket, reader: _LineReader) -> None:
         index_line = reader.readline()

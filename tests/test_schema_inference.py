@@ -120,7 +120,7 @@ def test_legacy_log_without_persisted_schema(spark, tmp_path):
     state_path = db._state_path
     state = json.load(open(state_path))
     state.pop("typed_schema")
-    state.pop("known_keys")
+    state.pop("known_keys", None)
     json.dump(state, open(state_path, "w"))
 
     db2 = BasenineDB(spark, path=path)
@@ -130,6 +130,22 @@ def test_legacy_log_without_persisted_schema(spark, tmp_path):
     # ...and persisted, so a third open restores without inference
     db3 = BasenineDB(spark, path=path)
     assert db3._typed_schema == schema
+
+
+def test_state_file_with_known_keys_field_still_loads(spark, tmp_path):
+    # older state files carry a "known_keys" list the db no longer keeps
+    path = str(tmp_path / "store")
+    db = BasenineDB(spark, path=path)
+    db.insert_json(['{"a": 1}'])
+    state = json.load(open(db._state_path))
+    state["known_keys"] = ["a"]
+    json.dump(state, open(db._state_path, "w"))
+
+    db2 = BasenineDB(spark, path=path)
+    assert db2._typed_schema == db._typed_schema
+    db2.insert_json(['{"a": 2}'])
+    assert [r["a"] for r in db2.query("").collect()] == [1, 2]
+    assert "known_keys" not in json.load(open(db2._state_path))
 
 
 def test_pure_redact_filter_schema_stays_driver_side(spark, tmp_path):
@@ -185,7 +201,7 @@ def test_legacy_recovery_missed_key_stays_bounded(spark, tmp_path, monkeypatch):
     expected = db._typed_schema
     state = json.load(open(db._state_path))
     state.pop("typed_schema")
-    state.pop("known_keys")
+    state.pop("known_keys", None)
     json.dump(state, open(db._state_path, "w"))
 
     monkeypatch.setattr(dbmod, "SCHEMA_SAMPLE_DOCS", 5)

@@ -443,6 +443,42 @@ def test_flush_and_reset_modes(served):
     assert db._log.total_written == 0
 
 
+def _raw_fetch(server, left_off: str, direction: int) -> list[str]:
+    with bn.BasenineClient(server.host, server.port, timeout=30) as c:
+        c.send_text(f"/fetch\n{left_off}\n{direction}\n\n10")
+        lines = []
+        while (line := c._read_line()) is not None:
+            lines.append(line)
+        return lines
+
+
+def test_fetch_on_empty_log_is_an_empty_page(served):
+    """A FETCH on a log with no live records — before the first INSERT,
+    and after /flush — answers the record-less noMoreData frame, then
+    ``%quit%``."""
+    db, server = served
+    empty_page = [
+        "/metadata "
+        + json.dumps(
+            {
+                "current": 0,
+                "total": 0,
+                "numberOfWritten": 0,
+                "leftOff": index_to_id(0),
+                "truncatedTimestamp": 0,
+                "noMoreData": True,
+            }
+        ),
+        "%quit%",
+    ]
+    for flushed in (False, True):
+        if flushed:
+            db.insert_json([PAYLOAD] * 3)
+            assert bn.flush(server.host, server.port) is None
+        for left_off, direction in (("0", 1), ("latest", -1)):
+            assert _raw_fetch(server, left_off, direction) == empty_page
+
+
 def test_unrecognized_command(served100):
     _, server = served100
     with bn.BasenineClient(server.host, server.port) as c:
