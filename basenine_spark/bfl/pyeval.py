@@ -519,37 +519,37 @@ def _eval(expr: Expr, ctx: _Ctx) -> Any:
     return False
 
 
-def eval_query(
-    query: Query, doc: str, now_ms: Optional[int] = None
-) -> Tuple[bool, str]:
-    """Evaluate a parsed BFL query against one JSON document.
+def eval_doc(
+    query: Query, obj: Any, now_ms: Optional[int] = None
+) -> Tuple[bool, Any]:
+    """Evaluate a parsed BFL query against one parsed JSON document.
 
-    Returns ``(truth, new_json)`` — like reference ``Eval``
-    (``eval.go:802-812``); ``new_json`` differs from the input only when
-    ``redact`` ran (which can happen even when truth is false, e.g.
-    ``redact(...) and id == 0``, ``eval_test.go:123``)."""
-    obj = json.loads(doc)
+    Returns ``(truth, new_obj)`` — like reference ``Eval``
+    (``eval.go:802-812``); ``new_obj`` differs from ``obj`` only when
+    ``redact`` ran, which edits ``obj`` in place (and can run even when
+    truth is false, e.g. ``redact(...) and id == 0``,
+    ``eval_test.go:123``)."""
     if query.expr is None:
-        return True, json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
+        return True, obj
     import time as _time
 
     ctx = _Ctx(obj, now_ms if now_ms is not None else int(_time.time() * 1000))
     try:
-        v = _eval(query.expr, ctx)
-        truth = bool_operand(v)
+        truth = bool_operand(_eval(query.expr, ctx))
     except _Collapse:
         truth = False
-    return truth, json.dumps(ctx.obj, separators=(",", ":"), ensure_ascii=False)
+    return truth, ctx.obj
+
+
+def eval_query(
+    query: Query, doc: str, now_ms: Optional[int] = None
+) -> Tuple[bool, str]:
+    """:func:`eval_doc` on one JSON document text: ``(truth,
+    new_json)``."""
+    truth, obj = eval_doc(query, json.loads(doc), now_ms)
+    return truth, json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
 
 
 def eval_obj(query: Query, obj: Any, now_ms: Optional[int] = None) -> bool:
     """Truthiness only, against an already-parsed document (dict)."""
-    if query.expr is None:
-        return True
-    import time as _time
-
-    ctx = _Ctx(obj, now_ms if now_ms is not None else int(_time.time() * 1000))
-    try:
-        return bool_operand(_eval(query.expr, ctx))
-    except _Collapse:
-        return False
+    return eval_doc(query, obj, now_ms)[0]

@@ -347,7 +347,7 @@ class BasenineDB:
             )
         first_new_seq = log.total_written
         ids = log.append(
-            lines, insertion_filter_text=flt_text, shred_schema=shred
+            docs, insertion_filter_text=flt_text, shred_schema=shred
         )
         self._commit_schema(batch, shred, first_new_seq)
         return ids
@@ -1119,9 +1119,10 @@ class BasenineDB:
         ``left_off="latest"`` resolves to the last written record
         (``handleSpecialLeftOff``, increment 0 — ``native.go:627-631,
         1157-1176``)."""
-        left_off = self._resolve_fetch_left_off(left_off)
+        committed = self._committed_total
+        left_off = self._resolve_fetch_left_off(left_off, committed)
         q = self._fetch_query(query)
-        df, _ = self._fetch_frame(q, left_off, direction)
+        df, _ = self._fetch_frame(q, left_off, direction, committed)
         return df.orderBy(_fetch_order(self.id_col, direction)).limit(limit)
 
     def _fetch_query(self, query: str) -> Query:
@@ -1134,11 +1135,13 @@ class BasenineDB:
         q: Query,
         left_off: int | str,
         direction: int,
+        committed: int,
         stored: bool = False,
     ) -> tuple[DataFrame, bool]:
-        """The candidates of :meth:`fetch` on a resolved ``left_off``,
-        unordered and unlimited, and whether they are stored documents
-        (``stored=True``: as in :meth:`_query_frame`)."""
+        """The candidates of :meth:`fetch` on a resolved ``left_off``
+        among the ``committed`` records, unordered and unlimited, and
+        whether they are stored documents (``stored=True``: as in
+        :meth:`_query_frame`)."""
         if self._log is None:
             bound = F.lit(left_off)
             id_ = F.col(self.id_col)
@@ -1147,7 +1150,7 @@ class BasenineDB:
         if direction < 0:
             lo, hi = None, int(left_off) - 1
         else:
-            lo, hi = int(left_off), None
+            lo, hi = int(left_off), committed - 1
         if stored:
             sdf = self._stored_frame(q, min_seq=lo, max_seq=hi)
             if sdf is not None:
@@ -1155,9 +1158,12 @@ class BasenineDB:
         df = self._typed_view(min_seq=lo, max_seq=hi)
         return self._apply_bfl(df, q), False
 
-    def _resolve_fetch_left_off(self, left_off: int | str) -> int | str:
+    def _resolve_fetch_left_off(
+        self, left_off: int | str, committed: int
+    ) -> int | str:
         """``handleSpecialLeftOff(leftOff, 0)`` + the out-of-range guard
-        (``native.go:627-655``)."""
+        (``native.go:627-655``), over the ``committed`` records: a
+        record whose schema is not merged yet is not there to page."""
         if self._log is None:
             if left_off != "latest":
                 return left_off
@@ -1169,8 +1175,8 @@ class BasenineDB:
                 )
             return self._latest_cache
         if left_off == "latest":
-            return max(self._log.total_written - 1, 0)
-        if int(left_off) > self._log.total_written:
+            return max(committed - 1, 0)
+        if int(left_off) > committed:
             raise IndexError(f"Index out of range: {int(left_off)}")
         return left_off
 
@@ -1196,23 +1202,26 @@ class BasenineDB:
         only at delivery points, which is the part a paging client
         consumes (``noMoreData`` ⇒ stop paging).
         """
-        resolved = self._resolve_fetch_left_off(left_off)
+        committed = self._committed_total
+        resolved = self._resolve_fetch_left_off(left_off, committed)
         q = self._fetch_query(query)
+        contiguous = self._log is not None  # ids are %024d of a dense seq
+        if contiguous:
+            first_seq = self._log.total_written - self._log.live_count
+            last_seq = committed - 1
         rows: list = []
-        # a log with no live records has no view schema to scan: its
-        # page is the trailing record-less noMoreData frame alone
-        if self._log is None or self._log.live_count > 0:
-            df, stored = self._fetch_frame(q, resolved, direction, stored=True)
+        # a log with no live committed records has no view schema to
+        # scan: its page is the trailing record-less noMoreData frame
+        if not contiguous or last_seq >= first_seq:
+            df, stored = self._fetch_frame(
+                q, resolved, direction, committed, stored=True
+            )
             order = _fetch_order("seq" if stored else self.id_col, direction)
             rows = df.orderBy(order).limit(limit).collect()
             if stored:
                 rows = _stored_docs(rows)
         meta = self.metadata()
         total, trunc = meta.total, meta.truncated_timestamp
-        contiguous = self._log is not None  # ids are %024d of a dense seq
-        if contiguous:
-            first_seq = self._log.total_written - self._log.live_count
-            last_seq = self._log.total_written - 1
         base = int(resolved) if contiguous else 0
         frames: list[Metadata] = []
         exhausted = False

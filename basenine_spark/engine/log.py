@@ -9,8 +9,10 @@ reference                       here
 length-prefixed log writer      Parquet append (``native.go:313-333``)
 ``data_%09d.db`` partitions     ``part=N`` directory partitions
   (``native.go:951-964``)         (rotated by byte size)
-offsets/partitionRefs index     Parquet file/row-group min-max stats
-  (``native.go:66-81``)           on the ``seq`` column (free pruning)
+offsets/partitionRefs index     Parquet row-group min-max stats on
+  (``native.go:66-81``)           ``seq``; Spark still lists and opens
+                                 every file of the log, the stats prune
+                                 only after the listing
 gob core dump + restore         the log IS the state: ``seq`` max and
   (``native.go:155-258``)        partition sizes recovered by scanning
                                  footers at boot
@@ -23,12 +25,14 @@ gob core dump + restore         the log IS the state: ``seq`` max and
 
 Ingest has two input shapes.  A wire batch (:meth:`DocumentLog.append`)
 is already on the driver, so it is validated, filtered and stamped
-there and written in one Spark job.  A bulk DataFrame
+there and written with ``pyarrow`` as one file, made visible by an
+atomic rename (the file sink of the Structured Streaming paper: write,
+then commit) — no Spark job.  A bulk DataFrame
 (:meth:`DocumentLog.append_df`) never reaches the driver: it is
 filtered/redacted in Arrow-batched ``mapInPandas`` stages and stamped
 from per-partition offsets, the driver advancing only the sequence
-counter.  Queries read Parquet with ``seq`` range predicates that prune
-at file level.
+counter.  Queries read Parquet with ``seq`` range predicates, which
+skip row groups by their min/max stats.
 """
 
 from __future__ import annotations
@@ -36,11 +40,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 LOG_SCHEMA = T.StructType(
     [
@@ -51,6 +59,27 @@ LOG_SCHEMA = T.StructType(
         T.StructField("part", T.LongType(), False),
     ]
 )
+
+def _stats_columns(schema: pa.Schema) -> list[str]:
+    """The columns a wire-batch file keeps min/max statistics for:
+    every leaf reached through structs alone, except floating-point
+    ones.  Arrow leaves NaN out of a float column's min/max, so a
+    pushed-down ``f > 0`` would skip a file whose only value above 0
+    is NaN; Spark's writer keeps that file.  Array elements take no
+    pushdown, and a dotted field name would make an ambiguous path."""
+    out: list[str] = []
+
+    def walk(t: pa.DataType, path: str) -> None:
+        if pa.types.is_struct(t):
+            for f in t:
+                if "." not in f.name:
+                    walk(f.type, f"{path}.{f.name}")
+        elif not (pa.types.is_floating(t) or pa.types.is_list(t)):
+            out.append(path)
+
+    for f in schema:
+        walk(f.type, f.name)
+    return out
 
 
 class DocumentLog:
@@ -112,8 +141,6 @@ class DocumentLog:
         None when any column chunk lacks min/max statistics."""
         import glob
 
-        import pyarrow.parquet as pq
-
         out: dict[int, list] = {}
         for part in self._live_parts():
             agg = [None, None, 0]
@@ -153,48 +180,56 @@ class DocumentLog:
 
     def append(
         self,
-        lines: list[str],
+        docs: list,
         insertion_filter_text: str = "",
         shred_schema: Optional[T.StructType] = None,
     ) -> list[str]:
         """Ingest of one wire batch: validate → insertion filter
         (+redact) → contiguous id assignment → Parquet append.
 
+        ``docs`` holds JSON lines or already-parsed objects (the
+        caller's parse is reused; the objects are stamped in place).
         A wire batch is DRIVER-RESIDENT by construction (the server
-        holds what it read off the socket), and validation already
-        parses every line on the driver — so the batch is filtered and
-        stamped in that same driver pass and written with ONE Spark job
-        (the per-record work is microseconds of json round-trip).  A
-        batch that lives in cluster storage takes :meth:`append_df`
-        instead.  Invalid JSON anywhere in the batch fails the whole
-        batch before any id is assigned (all-or-none; a bad line must
-        not orphan ids — see ADVICE r1).  The stored ``value`` is the
-        loads → inject ``id`` → compact-dumps normalization of the
-        (filtered) line, ``doc_ts`` its numeric ``timestamp``; the batch
-        lands as ONE parquet file, the layout ``compact()`` otherwise
-        has to repair."""
-        objs = [json.loads(line) for line in lines]  # all-or-none
+        holds what it read off the socket), so it is filtered, stamped
+        and written in that same driver pass with ``pyarrow`` — no
+        Spark job (:meth:`_commit_file`).  A batch that lives in
+        cluster storage takes :meth:`append_df` instead.  Invalid JSON
+        anywhere in the batch fails the whole batch before any id is
+        assigned (all-or-none; a bad line must not orphan ids — see
+        ADVICE r1).  The stored ``value`` is the inject ``id`` →
+        compact-dumps normalization of the (filtered) document,
+        ``doc_ts`` its numeric ``timestamp``; the batch lands as ONE
+        parquet file.
+
+        With ``shred_schema`` the file also holds the typed ``doc``
+        struct, converted by Arrow from the parsed objects.  The
+        schema is inferred from this batch and widened to the merged
+        leaf types, so Arrow converts exactly where Spark's
+        ``from_json`` would (int → double or decimal, NaN, nulls,
+        ``{}``); the one value that does not fit is a non-string under
+        a ``string`` leaf (a mixed-kind leaf), where ``from_json``
+        keeps the JSON text.  Arrow refuses it (as it refuses an int
+        that is not exact in ``double``), and any such refusal sends
+        the batch through the Spark ``from_json`` writer instead."""
+        objs = [json.loads(d) if isinstance(d, str) else d for d in docs]
         if insertion_filter_text:
             from ..bfl import parse as _parse
-            from ..bfl.pyeval import eval_query as _eval
+            from ..bfl.pyeval import eval_doc
 
             parsed = _parse(insertion_filter_text)
-            survivors = []
-            for line in lines:
-                truth, doc = _eval(parsed, line)
-                if truth:
-                    survivors.append(json.loads(doc))
-            objs = survivors
+            objs = [
+                doc
+                for truth, doc in (eval_doc(parsed, obj) for obj in objs)
+                if truth
+            ]
 
         base = self._count
         written = len(objs)
-        seqs: list[int] = []
-        rids: list[str] = []
+        seqs = list(range(base, base + written))
+        ids = ["%024d" % seq for seq in seqs]
         values: list[str] = []
         doc_tss: list[Optional[int]] = []
-        for i, obj in enumerate(objs):
-            seq = base + i
-            rid = "%024d" % seq
+        for obj, rid in zip(objs, ids):
             obj["id"] = rid
             ts = obj.get("timestamp")
             doc_tss.append(
@@ -202,43 +237,75 @@ class DocumentLog:
                 if isinstance(ts, (int, float)) and not isinstance(ts, bool)
                 else None
             )
-            seqs.append(seq)
-            rids.append(rid)
             values.append(json.dumps(obj, separators=(",", ":")))
 
         if written:
-            import pyarrow as pa
-
             part = self._part
             tbl = pa.table(
                 {
                     "seq": pa.array(seqs, pa.int64()),
-                    "id": pa.array(rids, pa.string()),
+                    "id": pa.array(ids, pa.string()),
                     "value": pa.array(values, pa.string()),
                     "doc_ts": pa.array(doc_tss, pa.int64()),
-                    "part": pa.array([part] * written, pa.int64()),
                 }
             )
-            out = self.spark.createDataFrame(tbl).coalesce(1)
-            if shred_schema is not None and shred_schema.fields:
-                # Shredded storage: parse ONCE at ingest into a typed
-                # struct column, so queries read real parquet columns
-                # (row-group pruning + nested predicate pushdown)
-                # instead of running from_json over the corpus.  The
-                # raw ``value`` stays the record of truth for the exact
-                # row backend.
-                out = out.withColumn(
-                    "doc", F.from_json(F.col("value"), shred_schema)
+            try:
+                out = tbl
+                if shred_schema is not None and shred_schema.fields:
+                    out = tbl.append_column(
+                        "doc", pa.array(objs, to_arrow_type(shred_schema))
+                    )
+                self._commit_file(out, part)
+            except (pa.ArrowException, UnicodeEncodeError):
+                # a value Arrow refuses (a lone-surrogate string fails
+                # to encode before Arrow sees it)
+                df = self.spark.createDataFrame(tbl).coalesce(1)
+                self._write_spark(
+                    df.withColumn("part", F.lit(part).cast("long")),
+                    shred_schema,
                 )
-            out.write.mode("append").partitionBy("part").parquet(self.path)
+            batch_ts = max((t for t in doc_tss if t is not None), default=None)
+            if batch_ts is not None:
+                self._part_ts[part] = max(
+                    batch_ts, self._part_ts.get(part, batch_ts)
+                )
 
-        ids = ["%024d" % (base + i) for i in range(written)]
         self._count = base + written
-        if written and self.retention_bytes > 0:
-            # event-time bookkeeping is only needed for truncatedTimestamp
-            self._refresh_part_ts(self._part)
         self._maybe_rotate()
         return ids
+
+    def _commit_file(self, tbl: pa.Table, part: int) -> None:
+        """Write ``tbl`` as one parquet file of ``part=N/``, made visible
+        by an atomic rename: it is written under a ``.``-prefixed name,
+        which Spark's file index skips, so a concurrent scan never
+        lists a half-written file."""
+        pdir = os.path.join(self.path, f"part={part}")
+        os.makedirs(pdir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(pdir, f".{name}.tmp")
+        try:
+            # no ARROW:schema footer entry: Spark does not read it, and
+            # it is ~5% of a 200-document file
+            pq.write_table(
+                tbl,
+                tmp,
+                store_schema=False,
+                write_statistics=_stats_columns(tbl.schema),
+            )
+            os.rename(tmp, os.path.join(pdir, name))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+
+    def _write_spark(
+        self, df: DataFrame, shred_schema: Optional[T.StructType]
+    ) -> None:
+        """The log's Spark writer: ``df`` holds ``(seq, id, value,
+        doc_ts, part)``; with a shred schema the ``doc`` struct is
+        parsed from ``value`` by ``from_json``."""
+        if shred_schema is not None and shred_schema.fields:
+            df = df.withColumn("doc", F.from_json(F.col("value"), shred_schema))
+        df.write.mode("append").partitionBy("part").parquet(self.path)
 
     def append_df(
         self,
@@ -422,13 +489,7 @@ class DocumentLog:
                 out = work.coalesce(n_files).mapInPandas(
                     stamp, "seq long, id string, value string, doc_ts long"
                 ).withColumn("part", F.lit(part).cast("long"))
-                if shred_schema is not None and shred_schema.fields:
-                    out = out.withColumn(
-                        "doc", F.from_json(F.col("value"), shred_schema)
-                    )
-                out.write.mode("append").partitionBy("part").parquet(
-                    self.path
-                )
+                self._write_spark(out, shred_schema)
         finally:
             work.unpersist()
 
@@ -524,8 +585,8 @@ class DocumentLog:
     # -- read (S5) ------------------------------------------------------
 
     def scan(self) -> DataFrame:
-        """The log as a DataFrame — Parquet scan with ``seq`` min/max
-        pruning for id-range predicates."""
+        """The log as a DataFrame — Parquet scan whose id-range
+        predicates skip row groups by their ``seq`` min/max stats."""
         return self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
 
     # -- counters / ops -------------------------------------------------
@@ -555,8 +616,9 @@ class DocumentLog:
         ``native.go:951-964``) but a parquet log does.  Per partition:
         read → coalesce to ⌈size/target⌉ files → write to a temp dir →
         atomic directory swap.  All columns (including the shredded
-        ``doc`` struct) pass through with the file's own schema; seq
-        ordering, footer statistics and counters are unaffected.
+        ``doc`` struct) pass through under the union of the files'
+        schemas; seq ordering, footer statistics and counters are
+        unaffected.
         Returns the number of partitions rewritten."""
         import math
 
@@ -575,7 +637,11 @@ class DocumentLog:
             if os.path.isdir(tmp):
                 shutil.rmtree(tmp)
             (
-                self.spark.read.parquet(pdir)
+                # merged: a file written before a batch added a key
+                # lacks that key's doc column, and one file's schema
+                # would drop it from every record
+                self.spark.read.option("mergeSchema", "true")
+                .parquet(pdir)
                 .coalesce(want)
                 .write.mode("overwrite")
                 .parquet(tmp)

@@ -93,7 +93,7 @@ CLOSE_CONNECTION = "%quit%"
 
 _TIMEOUT = object()  # sentinel: readline timed out (no complete line yet)
 
-# one INSERT-mode flush: at most this many docs per Spark append job
+# one INSERT-mode flush: at most this many docs per appended file
 INSERT_BATCH_MAX = 10_000
 
 # QUERY/FETCH replies go out in sendall calls of about this size
@@ -396,8 +396,10 @@ class BasenineServer:
     def _serve_insert(self, conn: socket.socket, reader: _LineReader) -> None:
         """INSERT mode: each line one document.  Lines are micro-batched
         (drain what is already buffered, flush on idle) so a firehose
-        client costs one Spark append job per batch, not per record —
-        while ids stay contiguous in arrival order.  A non-JSON-object
+        client costs one parquet file and one schema commit per batch,
+        not per record — while ids stay contiguous in arrival order.
+        The batch is written on the driver, without a Spark job
+        (``DocumentLog.append``).  A non-JSON-object
         line ends the connection after the valid prefix is flushed
         (reference: ``InsertData`` returns the unmarshal error and the
         connection loop breaks, ``server.go:163-164,211-213``)."""
@@ -442,10 +444,6 @@ class BasenineServer:
             self._send(conn, "OK")
         except Exception as e:  # noqa: BLE001 — parse error text on wire
             self._send(conn, str(e))
-
-    def _db_total(self) -> int:
-        """Records ever written to the db's log (not for a mount)."""
-        return self.db._log.total_written
 
     def _serve_query(self, conn: socket.socket, reader: _LineReader) -> None:
         """QUERY mode (follow): snapshot, then one incremental scan per
@@ -552,7 +550,7 @@ class BasenineServer:
                 f"Error: While converting the index to integer: {e}",
             )
             return
-        if self.db._log is not None and idx >= self._db_total():
+        if self.db._log is not None and idx >= self.db._committed_total:
             # native.go:544-550 distinguishes past-the-end from removed
             self._send(conn, f"Index out of range: {idx}")
             return

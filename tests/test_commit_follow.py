@@ -196,3 +196,89 @@ def test_idle_follower_hang_up_ends_its_handler(db):
         assert _wait_until(lambda: not server._conns, 1.0)
     finally:
         server.stop()
+
+
+@pytest.fixture()
+def slow_commit(db):
+    """Hold a batch between its append and its schema commit:
+    ``slow_commit(lines)`` runs ``insert_json`` in a thread, returns
+    once the batch is written, and gives back a function that lets the
+    commit finish."""
+    import threading
+
+    commit = db._commit_schema
+    release = threading.Event()
+    threads = []
+
+    def hold(lines):
+        entered = threading.Event()
+
+        def held(*args):
+            entered.set()
+            release.wait(30)
+            commit(*args)
+
+        db._commit_schema = held
+        t = threading.Thread(target=db.insert_json, args=(lines,))
+        t.start()
+        threads.append(t)
+        assert entered.wait(30)
+
+        def finish():
+            release.set()
+            t.join(30)
+            assert not t.is_alive()
+
+        return finish
+
+    yield hold
+    release.set()
+    for t in threads:
+        t.join(30)
+        assert not t.is_alive()
+
+
+def test_fetch_sees_only_committed_records(db, slow_commit):
+    """FETCH over a batch that is written but not committed: ``latest``
+    is the last committed record, a leftOff past it is out of range,
+    and a forward page ends at it."""
+    db.insert_json(['{"a":1}'])
+    slow_commit(['{"a":2,"b":2}'])
+    assert db._log.total_written == 2
+    rows, frames = db.fetch_with_metadata("latest", -1, "", 10)
+    assert [r.id for r in rows] == []
+    assert frames[-1].left_off == index_to_id(0)
+    with pytest.raises(IndexError):
+        db.fetch_with_metadata(2, 1, "", 10)
+    rows, frames = db.fetch_with_metadata(0, 1, "", 10)
+    assert [r.id for r in rows] == [index_to_id(0)]
+    assert frames[-1].no_more_data
+    assert frames[-1].left_off == index_to_id(1)
+
+
+def test_forward_fetch_does_not_page_past_a_new_key(db, slow_commit):
+    """``b == 2`` compiled against the schema before the batch that
+    adds ``b`` matches nothing; the page must end before that batch,
+    so the next page from its ``leftOff`` finds the record."""
+    db.insert_json(['{"a":1}'])
+    finish = slow_commit(['{"a":2,"b":2}'])
+    rows, frames = db.fetch_with_metadata(0, 1, "b == 2", 10)
+    assert rows == []
+    resume = int(frames[-1].left_off)
+    assert resume <= 1
+    finish()
+    rows, _ = db.fetch_with_metadata(resume, 1, "b == 2", 10)
+    assert [r.value for r in rows] == ['{"a":2,"b":2,"id":"%s"}' % index_to_id(1)]
+
+
+def test_single_of_an_uncommitted_record_is_out_of_range(db, slow_commit):
+    db.insert_json(['{"a":1}'])
+    slow_commit(['{"a":2}'])
+    server = BasenineServer(db).start()
+    try:
+        assert bn.single(server.host, server.port, 1) == "Index out of range: 1"
+        assert bn.single(server.host, server.port, 0) == (
+            '{"a":1,"id":"%s"}' % index_to_id(0)
+        )
+    finally:
+        server.stop()

@@ -239,17 +239,22 @@ def test_compact_preserves_shredded_reads(spark, tmp_path):
     db = BasenineDB(spark, path=str(tmp_path / "s"))
     for batch in range(6):
         db.insert_json([_json.dumps({"a": batch * 3 + i}) for i in range(3)])
+    # a key added by a later batch: only the last file has its column
+    db.insert_json([_json.dumps({"a": 100, "b": 3})])
     assert db._shred_ok
     expected = sorted(r["a"] for r in db.query("a > 4").collect())
+    assert db.query("b == 3").count() == 1
     assert db.compact() == 1
     assert db._shred_ok
     got = sorted(r["a"] for r in db.query("a > 4").collect())
-    assert got == expected == list(range(5, 18))
+    assert got == expected == list(range(5, 18)) + [100]
+    assert db.query("b == 3").count() == 1
 
 
 def test_restore_ignores_crashed_write_artifacts(spark, tmp_path):
     """A killed executor leaves `_temporary/`, `_SUCCESS`, and `.crc`
-    litter behind; restore and queries must ignore all of it (Spark's
+    litter behind, and a killed driver a hidden half-written wire-batch
+    file; restore and queries must ignore all of it (Spark's
     hidden-file filter + the part= enumeration), recovering exactly the
     committed records."""
     import json as _json
@@ -269,6 +274,8 @@ def test_restore_ignores_crashed_write_artifacts(spark, tmp_path):
     open(f"{path}/_SUCCESS", "w").close()
     part_dir = next(d for d in os.listdir(path) if d.startswith("part="))
     open(f"{path}/{part_dir}/.part-junk.parquet.crc", "w").close()
+    with open(f"{path}/{part_dir}/.part-torn.parquet.tmp", "wb") as f:
+        f.write(b"PAR1torn")
 
     db2 = BasenineDB(spark, path=path)
     out = db2.query("n >= 0")
