@@ -47,7 +47,7 @@ import weakref
 from dataclasses import dataclass
 from typing import Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,37 +115,64 @@ def index_to_id(index: int) -> str:
     return "%024d" % index
 
 
-# plumbing columns carrying a log record's seq and stored document
-# next to its typed view (a document key of the same name disables them)
-_SEQ_COL = "__bn_seq__"
-_VALUE_COL = "__bn_value__"
+def _plumbing_names(schema: T.StructType) -> tuple[str, str]:
+    """Names for a log record's seq and stored document beside its
+    typed columns, used by no top-level key of ``schema`` (compared
+    case-insensitively, as Spark resolves columns)."""
+    taken = {n.lower() for n in schema.fieldNames()}
+    seq, value = "__bn_seq__", "__bn_value__"
+    while seq in taken or value in taken:
+        seq, value = "_" + seq, "_" + value
+    return seq, value
 
 
-class StoredDoc(Row):
-    """A served log record: its ``id`` and ``value``, the document
-    exactly as the log stores it — sent on the wire verbatim."""
+def _seq_range(
+    df: DataFrame, min_seq: Optional[int], max_seq: Optional[int]
+) -> DataFrame:
+    """``df`` bounded by a physical ``seq`` predicate (file pruning)."""
+    if min_seq is not None:
+        df = df.filter(F.col("seq") >= min_seq)
+    if max_seq is not None:
+        df = df.filter(F.col("seq") <= max_seq)
+    return df
 
 
-def _stored_docs(rows: list) -> list:
-    """``(seq, value)`` rows → :class:`StoredDoc`, order kept."""
-    return [StoredDoc(id=index_to_id(seq), value=v) for seq, v in rows]
-
-
-def strip_nulls(v):
-    """Drop dict entries whose value is null — the typed view carries
-    every schema column, absent keys surface as nulls, and the wire
-    document must be the inserted shape (``native.go:294-311`` stores
-    the document verbatim plus ``id``).  Nulls inside arrays are kept
-    (array length is data, not schema)."""
-    if isinstance(v, dict):
-        return {k: strip_nulls(x) for k, x in v.items() if x is not None}
-    if isinstance(v, list):
-        return [strip_nulls(x) for x in v]
-    return v
+def _pushdown(q: Query, schema: T.StructType) -> Optional[Column]:
+    """The compilable top-level conjuncts of a query that needs the row
+    backend, as one Column pre-filter — or None.  A conjunct is only
+    sound to pre-evaluate against the scan if no redact in the query
+    mutates a path it reads (the reference evaluates and-chains
+    left-to-right over the mutated document)."""
+    pre = None
+    taints = collect_redact_taints(q.expr) if q.expr is not None else None
+    if taints is None:
+        return None  # no filter, or an unresolvable redact target
+    for conj in split_conjuncts(q.expr):
+        reads: list = []
+        collect_path_reads(conj, reads)
+        if any(prefix_overlap(t, r) for t in taints for r in reads):
+            continue
+        try:
+            comp = compile_filter(Query(expr=conj, text=q.text), schema)
+        except UnsupportedBFL:
+            continue
+        if comp.predicate is not None:
+            pre = comp.predicate if pre is None else pre & comp.predicate
+    return pre
 
 
 def _fetch_order(col: str, direction: int) -> Column:
     return F.col(col).desc() if direction < 0 else F.col(col).asc()
+
+
+def _fetch_range(
+    left_off: int | str, direction: int, committed: int
+) -> tuple[Optional[int], int]:
+    """The seq range a FETCH page from a resolved ``left_off`` scans
+    among the ``committed`` records."""
+    if direction < 0:
+        return None, int(left_off) - 1
+    return int(left_off), committed - 1
 
 
 def _order_limit(df: DataFrame, order: Column, limit: int) -> DataFrame:
@@ -686,34 +713,7 @@ class BasenineDB:
                 if pred is not None:
                     df = df.filter(pred)
                 return apply_redact_paths(df, paths)
-            pre = None
-            if q.expr is not None:
-                # a conjunct is only sound to pre-evaluate against the
-                # scan if no redact in the query mutates a path it reads
-                # (the reference evaluates and-chains left-to-right over
-                # the mutated document)
-                taints = collect_redact_taints(q.expr)
-                for conj in split_conjuncts(q.expr):
-                    if taints is None:
-                        break  # unresolvable redact target: push nothing
-                    reads: list = []
-                    collect_path_reads(conj, reads)
-                    if any(
-                        prefix_overlap(t, r) for t in taints for r in reads
-                    ):
-                        continue
-                    try:
-                        comp = compile_filter(
-                            Query(expr=conj, text=q.text), df
-                        )
-                    except UnsupportedBFL:
-                        continue
-                    if comp.predicate is not None:
-                        pre = (
-                            comp.predicate
-                            if pre is None
-                            else pre & comp.predicate
-                        )
+            pre = _pushdown(q, df.schema)
             if pre is not None:
                 df = df.filter(pre)
             return self._row_backend(df, q)
@@ -721,33 +721,61 @@ class BasenineDB:
             df = df.filter(compiled.predicate)
         return df
 
-    def _row_backend(self, df: DataFrame, q: Query) -> DataFrame:
-        """Arrow-batched exact evaluator: serialize each row to its JSON
-        document, run :func:`pyeval.eval_query` (collapse/redact exact),
-        return surviving documents.  Output schema: ``value STRING``
-        (the possibly-redacted document), plus the id column for order."""
-        schema = f"`{self.id_col}` string, value string"
+    def _row_backend(
+        self, df: DataFrame, q: Query, stored: bool = False
+    ) -> DataFrame:
+        """Arrow-batched exact evaluator: run :func:`pyeval.eval_doc`
+        (collapse/redact exact) on each row's JSON document and return
+        the surviving ones.
+
+        Typed rows (``stored=False``) are serialized to their document
+        first; the output is ``(id, value)`` with ``value`` the
+        evaluated document.  Log records (``stored=True``: ``(seq,
+        value)``, ``value`` the stored document) give ``(seq, value)``
+        with ``value`` unchanged when the query cannot redact, else the
+        redacted object in the encoding the log stores."""
+        key = "seq" if stored else self.id_col
+        schema = f"`{key}` {'long' if stored else 'string'}, value string"
         query_text = q.text
-        id_col = self.id_col
+        keep = stored and collect_redact_taints(q.expr) == []
 
         def run(batches: Iterator) -> Iterator:
             import pandas as pd
 
             from ..bfl import parse as _parse
-            from ..bfl.pyeval import eval_query as _eval
+            from ..bfl.pyeval import eval_doc as _eval
 
             parsed = _parse(query_text)
             for pdf in batches:
-                ids, docs = [], []
-                for rec in pdf.to_dict(orient="records"):
-                    doc = json.dumps(
-                        _jsonable(rec), separators=(",", ":"), default=str
+                if stored:
+                    docs = zip(pdf["seq"], pdf["value"])
+                else:
+                    docs = (
+                        (
+                            str(rec.get(key)),
+                            json.dumps(
+                                _jsonable(rec),
+                                separators=(",", ":"),
+                                default=str,
+                            ),
+                        )
+                        for rec in pdf.to_dict(orient="records")
                     )
-                    truth, new_doc = _eval(parsed, doc)
+                keys, values = [], []
+                for k, doc in docs:
+                    truth, obj = _eval(parsed, json.loads(doc))
                     if truth:
-                        ids.append(str(rec.get(id_col)))
-                        docs.append(new_doc)
-                yield pd.DataFrame({id_col: ids, "value": docs})
+                        keys.append(k)
+                        values.append(
+                            doc
+                            if keep
+                            else json.dumps(
+                                obj,
+                                separators=(",", ":"),
+                                ensure_ascii=stored,
+                            )
+                        )
+                yield pd.DataFrame({key: keys, "value": values})
 
         return df.mapInPandas(run, schema=schema)
 
@@ -762,7 +790,8 @@ class BasenineDB:
         self,
         min_seq: Optional[int] = None,
         max_seq: Optional[int] = None,
-        stored: bool = False,
+        keep: tuple = (),
+        batch: Optional[DataFrame] = None,
     ) -> DataFrame:
         """Schema-free docs → typed DataFrame (SURVEY §1.4).
 
@@ -774,10 +803,12 @@ class BasenineDB:
         a dynamic insertion-filter batch): ``from_json`` over the raw
         ``value``.  id-range predicates hit the *physical* ``seq``
         column in both paths, pruning files via min/max stats.
-        ``stored=True`` keeps ``seq`` and the raw ``value`` beside the
-        typed columns as ``_SEQ_COL`` / ``_VALUE_COL``."""
+        ``keep`` names two columns that carry each record's ``seq`` and
+        stored ``value`` beside the typed ones; ``batch`` (log rows of
+        a tail micro-batch) is read in place of the log, via
+        ``from_json``."""
         schema = self._view_schema()
-        shredded = self._shred_ok and bool(schema.fields)
+        shredded = batch is None and self._shred_ok and bool(schema.fields)
         if shredded:
             from .log import LOG_SCHEMA
 
@@ -788,27 +819,23 @@ class BasenineDB:
                 self._log.path
             )
         else:
-            scan = self._log.scan()
-        if min_seq is not None:
-            scan = scan.filter(F.col("seq") >= min_seq)
-        if max_seq is not None:
-            scan = scan.filter(F.col("seq") <= max_seq)
-        names = [_SEQ_COL, _VALUE_COL] if stored else []
-        extra = [F.col(c).alias(n) for c, n in zip(("seq", "value"), names)]
+            scan = self._log.scan() if batch is None else batch
+        scan = _seq_range(scan, min_seq, max_seq)
+        extra = [F.col(c).alias(n) for c, n in zip(("seq", "value"), keep)]
         if shredded:
             return scan.select("doc.*", *extra)
         return scan.select(
             F.from_json(F.col("value"), schema).alias("doc"),
             *extra,
-        ).select("doc.*", *names)
+        ).select("doc.*", *keep)
 
     def _view_schema(self) -> T.StructType:
         """The typed view's schema (inferred once for a log that has
         none persisted); raises when the log holds no records."""
         assert self._log is not None
-        if self._log.live_count == 0:
-            raise ValueError("no data ingested")
         if self._typed_schema is None:
+            if self._log.live_count == 0:
+                raise ValueError("no data ingested")
             self._infer_schema_from_log()
         return self._typed_schema
 
@@ -890,21 +917,6 @@ class BasenineDB:
         truncation still applies (records rotated out are gone —
         snapshots reach back only to the retention horizon)."""
         q = self._prepare(query)
-        df, _ = self._query_frame(q, left_off, as_of=as_of)
-        return _order_limit(df, F.col(self.id_col).asc(), q.limit)
-
-    def _query_frame(
-        self,
-        q: Query,
-        left_off: int | str,
-        as_of: int | None = None,
-        stored: bool = False,
-    ) -> tuple[DataFrame, bool]:
-        """The records of :meth:`query`, unordered and unlimited, and
-        whether they are stored documents.  ``stored=True`` asks for
-        :meth:`_stored_frame`'s ``(seq, value)`` shape where the log
-        can give it; otherwise the frame is the typed view after
-        :meth:`_apply_bfl`."""
         if self._log is None:
             # a mounted table: natural ids, compared raw
             df = self._df
@@ -915,19 +927,21 @@ class BasenineDB:
                 df = df.filter(F.col(self.id_col) >= F.lit(last))
             elif left_off not in (0, None, ""):
                 df = df.filter(F.col(self.id_col) > F.lit(left_off))
-            return self._apply_bfl(df, q), False
-        # resume offset as a physical seq predicate → file pruning
-        min_seq = None
+        else:
+            df = self._typed_view(self._resume_seq(left_off, as_of), as_of)
+        df = self._apply_bfl(df, q)
+        return _order_limit(df, F.col(self.id_col).asc(), q.limit)
+
+    def _resume_seq(
+        self, left_off: int | str, as_of: int | None
+    ) -> Optional[int]:
+        """The first seq a QUERY from ``left_off`` reads (None: the
+        beginning), as a physical seq predicate → file pruning."""
         if left_off == "latest":  # T2 (native.go:1158-1176)
-            min_seq = self._latest_seq(as_of)
-        elif left_off not in (0, None, ""):
-            min_seq = int(left_off) + 1
-        if stored:
-            sdf = self._stored_frame(q, min_seq=min_seq, max_seq=as_of)
-            if sdf is not None:
-                return sdf, True
-        df = self._typed_view(min_seq=min_seq, max_seq=as_of)
-        return self._apply_bfl(df, q), False
+            return self._latest_seq(as_of)
+        if left_off in (0, None, ""):
+            return None
+        return int(left_off) + 1
 
     def _latest_seq(self, as_of: int | None) -> int:
         """The seq a ``"latest"`` QUERY resumes at: the last record
@@ -935,50 +949,66 @@ class BasenineDB:
         last = self._log.total_written - 1
         return max(last if as_of is None else min(last, as_of), 0)
 
-    def _stored_frame(
+    # -- serving: the stored documents --------------------------------------
+
+    def _served_log(self) -> DocumentLog:
+        """The log QUERY/FETCH/SINGLE serve; a mounted table has no
+        stored documents and is read through the typed API only."""
+        if self._log is None:
+            raise ValueError(
+                "a mounted table is not served — read it with "
+                "query/fetch/single"
+            )
+        return self._log
+
+    def _records(
         self,
         q: Query,
         min_seq: Optional[int] = None,
         max_seq: Optional[int] = None,
-    ) -> Optional[DataFrame]:
-        """Log records in ``[min_seq, max_seq]`` that ``q`` keeps,
-        as ``(seq, value)``: ``value`` is the stored document itself
-        (id included, ``DocumentLog.append``), so serving it needs
-        no typed-row re-serialization and keeps what the typed view
-        loses (explicit nulls, numbers before a later batch widened
-        their leaf).  The filter runs on the typed columns as in
-        :meth:`_apply_bfl`; the scan reads ``seq``, ``value`` and the
-        predicate's columns only.  None when the filter needs the
-        typed fallback (it does not compile to a Column) or a document
-        key shadows a plumbing column."""
-        schema = self._view_schema()
-        if set(schema.fieldNames()) & {_SEQ_COL, _VALUE_COL}:
-            return None
-        try:
-            compiled = compile_filter(q, schema)
-        except UnsupportedBFL:
-            return None
-        view = self._typed_view(min_seq=min_seq, max_seq=max_seq, stored=True)
-        if compiled.predicate is not None:
-            view = view.filter(compiled.predicate)
-        return view.select(
-            F.col(_SEQ_COL).alias("seq"), F.col(_VALUE_COL).alias("value")
-        )
+        batch: Optional[DataFrame] = None,
+    ) -> DataFrame:
+        """The log records in ``[min_seq, max_seq]`` that ``q`` keeps,
+        unordered, as ``(seq, value)``: ``value`` is the document as
+        the log stores it (id included, ``DocumentLog.append``), which
+        is what the wire sends — like the reference's ``Eval`` result
+        (``native.go:481``, ``eval.go:802-812``), it differs from the
+        stored bytes only in the leaves a ``redact`` replaced.
 
-    def _served_frame(
-        self, q: Query, left_off: int | str, as_of: int | None = None
-    ) -> tuple[DataFrame, bool, bool]:
-        """The DataFrame a QUERY poll collects: ``(df, stored, ordered)``.
-        Spark orders it only under ``limit(N)`` (TakeOrderedAndProject,
-        one job) or for a mounted table (natural ids, Spark's
-        ordering); otherwise it is one unsorted scan, sorted on the
-        driver after the collect — no range-partition sampling job,
-        no shuffle."""
-        df, stored = self._query_frame(q, left_off, as_of=as_of, stored=True)
-        if q.limit > 0 or self._log is None:
-            order = F.col("seq" if stored else self.id_col).asc()
-            return _order_limit(df, order, q.limit), stored, True
-        return df, stored, False
+        * No filter: ``seq, value`` straight from the log scan; no
+          typed view is built.
+        * A filter that compiles to a Column runs on the typed columns,
+          and the scan reads ``seq``, ``value`` and the predicate's
+          columns only.
+        * Anything else (redact, dynamic shapes) pre-filters on its
+          compilable conjuncts the same way, then runs the row backend
+          over the stored documents.
+
+        ``batch`` (log rows of a tail micro-batch) is read in place of
+        the log."""
+        log = self._served_log()
+        if batch is None and log.live_count == 0:
+            raise ValueError("no data ingested")
+        pred, exact = None, False
+        if q.expr is not None:
+            schema = self._view_schema()
+            try:
+                pred = compile_filter(q, schema).predicate
+            except UnsupportedBFL:
+                pred, exact = _pushdown(q, schema), True
+        if pred is None:
+            raw = log.scan() if batch is None else batch
+            df = _seq_range(raw, min_seq, max_seq).select("seq", "value")
+        else:
+            keep = _plumbing_names(schema)
+            df = (
+                self._typed_view(min_seq, max_seq, keep, batch)
+                .filter(pred)
+                .select(
+                    F.col(keep[0]).alias("seq"), F.col(keep[1]).alias("value")
+                )
+            )
+        return self._row_backend(df, q, stored=True) if exact else df
 
     def query_with_metadata(
         self,
@@ -995,43 +1025,35 @@ class BasenineDB:
         client hands back to continue.  ``noMoreData`` stays false in
         query mode (it is a FETCH concept).
 
-        Log rows are :class:`StoredDoc` where the filter compiles (see
-        :meth:`_stored_frame`), typed or row-backend rows otherwise.
-        ``as_of`` bounds the scan at that seq, as in :meth:`query`."""
+        Rows are :meth:`_records`' ``(seq, value)`` in seq order.  Only
+        ``limit(N)`` orders in Spark (TakeOrderedAndProject, one job);
+        otherwise the poll is one unsorted scan, sorted on the driver —
+        no range-partition sampling job, no shuffle.  ``as_of`` bounds
+        the scan at that seq, as in :meth:`query`."""
+        self._served_log()
         q = self._prepare(query)
-        df, stored, ordered = self._served_frame(q, left_off, as_of)
-        rows = df.collect()
-        if not ordered:
-            key = 0 if stored else self.id_col
-            rows.sort(key=lambda r: r[key])
-        if stored:
-            rows = _stored_docs(rows)
+        min_seq = self._resume_seq(left_off, as_of)
+        df = self._records(q, min_seq, as_of)
+        if q.limit > 0:
+            rows = _order_limit(df, F.col("seq").asc(), q.limit).collect()
+        else:
+            rows = df.collect()
+            rows.sort(key=lambda r: r[0])
         meta = self.metadata()
-        contiguous = self._log is not None  # ids are %024d of a dense seq
-        prev = -1  # the seq before the first candidate
-        if contiguous and left_off == "latest":
-            prev = self._latest_seq(as_of) - 1
-        elif contiguous and left_off not in (0, None, ""):
-            prev = int(left_off)
+        # the seq before the first candidate
+        prev = -1 if min_seq is None else min_seq - 1
         frames: list[Metadata] = []
-        for i, row in enumerate(rows):
-            if contiguous:
-                seq = int(row[self.id_col])
-                current = seq - prev
-                prev = seq
-                token = index_to_id(seq)
-            else:
-                current = 1
-                token = str(row[self.id_col])
+        for i, (seq, _) in enumerate(rows):
             frames.append(
                 Metadata(
-                    current=current,
+                    current=seq - prev,
                     total=meta.total,
                     number_of_written=i + 1,
-                    left_off=token,
+                    left_off=index_to_id(seq),
                     truncated_timestamp=meta.truncated_timestamp,
                 )
             )
+            prev = seq
         return rows, frames
 
     def single(self, record_id, query: str = "") -> Optional[dict]:
@@ -1068,42 +1090,38 @@ class BasenineDB:
             return json.loads(new_doc)
         return doc
 
-    def single_json(self, record_id, query: str = "") -> Optional[str]:
-        """/single's wire document.  From the log, unless the query
-        redacts, it is the stored document — the bytes QUERY and FETCH
-        send for the same record; otherwise :meth:`single`'s record,
-        serialized with schema-null keys dropped."""
-        if self._log is not None and self._log.live_count > 0:
-            try:
-                seq: Optional[int] = int(record_id)
-            except (TypeError, ValueError):
-                seq = None
-            if seq is not None:
-                rows = (
-                    self._log.scan()
-                    .filter(
-                        (F.col("seq") == seq)
-                        & (F.col(ID_COL) == F.lit(record_id))
-                    )
-                    .select("value")
-                    .limit(1)
-                    .collect()
-                )
-                if not rows:
-                    return None  # "Record does not exist!"
-                q = self._prepare(query)
-                if q.expr is None:
-                    return rows[0][0]
-                if collect_redact_taints(q.expr) == []:
-                    from ..bfl.pyeval import eval_query
-
-                    # evaluated for its errors only, as single() does
-                    eval_query(q, rows[0][0])
-                    return rows[0][0]
-        rec = self.single(record_id, query)
-        if rec is None:
+    def single_json(self, record_id, query: str = ""):
+        """/single's wire record ``(seq, value)``, or None when no
+        record has the id: ``value`` is the stored document after the
+        query's redacts, by :meth:`_records`' rule — the bytes QUERY
+        and FETCH send for the same record.  The query's truth does not
+        matter (``native.go:526-601``)."""
+        log = self._served_log()
+        try:
+            seq = int(record_id)
+        except (TypeError, ValueError):
+            return None  # "Record does not exist!"
+        if log.live_count == 0:
             return None
-        return json.dumps(strip_nulls(rec), separators=(",", ":"), default=str)
+        rows = (
+            log.scan()
+            .filter((F.col("seq") == seq) & (F.col(ID_COL) == F.lit(record_id)))
+            .select("seq", "value")
+            .limit(1)
+            .collect()
+        )
+        if not rows:
+            return None  # "Record does not exist!"
+        value = rows[0][1]
+        q = self._prepare(query)
+        if q.expr is not None:
+            from ..bfl.pyeval import eval_doc
+
+            # evaluated for its errors too, as single() does
+            _, obj = eval_doc(q, json.loads(value))
+            if collect_redact_taints(q.expr) != []:
+                value = json.dumps(obj, separators=(",", ":"))
+        return seq, value
 
     def fetch(
         self,
@@ -1122,41 +1140,19 @@ class BasenineDB:
         committed = self._committed_total
         left_off = self._resolve_fetch_left_off(left_off, committed)
         q = self._fetch_query(query)
-        df, _ = self._fetch_frame(q, left_off, direction, committed)
+        if self._log is None:
+            bound = F.lit(left_off)
+            id_ = F.col(self.id_col)
+            df = self._df.filter(id_ < bound if direction < 0 else id_ >= bound)
+        else:
+            df = self._typed_view(*_fetch_range(left_off, direction, committed))
+        df = self._apply_bfl(df, q)
         return df.orderBy(_fetch_order(self.id_col, direction)).limit(limit)
 
     def _fetch_query(self, query: str) -> Query:
         q = self._prepare(query)
         q.limit = 0  # limit() helper ineffective in FETCH mode
         return q
-
-    def _fetch_frame(
-        self,
-        q: Query,
-        left_off: int | str,
-        direction: int,
-        committed: int,
-        stored: bool = False,
-    ) -> tuple[DataFrame, bool]:
-        """The candidates of :meth:`fetch` on a resolved ``left_off``
-        among the ``committed`` records, unordered and unlimited, and
-        whether they are stored documents (``stored=True``: as in
-        :meth:`_query_frame`)."""
-        if self._log is None:
-            bound = F.lit(left_off)
-            id_ = F.col(self.id_col)
-            df = self._df.filter(id_ < bound if direction < 0 else id_ >= bound)
-            return self._apply_bfl(df, q), False
-        if direction < 0:
-            lo, hi = None, int(left_off) - 1
-        else:
-            lo, hi = int(left_off), committed - 1
-        if stored:
-            sdf = self._stored_frame(q, min_seq=lo, max_seq=hi)
-            if sdf is not None:
-                return sdf, True
-        df = self._typed_view(min_seq=lo, max_seq=hi)
-        return self._apply_bfl(df, q), False
 
     def _resolve_fetch_left_off(
         self, left_off: int | str, committed: int
@@ -1196,59 +1192,46 @@ class BasenineDB:
         ``limit`` matches (range exhausted by non-matching candidates),
         one trailing record-less frame carries ``noMoreData`` — the
         batch analog of the reference's final per-candidate frame.
+        Rows are :meth:`_records`' ``(seq, value)`` in page order.
 
         Granularity note (SURVEY §7.4): the reference also streams a
         frame per *non-matching* candidate; a batch API returns frames
         only at delivery points, which is the part a paging client
         consumes (``noMoreData`` ⇒ stop paging).
         """
+        log = self._served_log()
         committed = self._committed_total
-        resolved = self._resolve_fetch_left_off(left_off, committed)
+        base = int(self._resolve_fetch_left_off(left_off, committed))
         q = self._fetch_query(query)
-        contiguous = self._log is not None  # ids are %024d of a dense seq
-        if contiguous:
-            first_seq = self._log.total_written - self._log.live_count
-            last_seq = committed - 1
+        first_seq = log.total_written - log.live_count
+        last_seq = committed - 1
         rows: list = []
-        # a log with no live committed records has no view schema to
-        # scan: its page is the trailing record-less noMoreData frame
-        if not contiguous or last_seq >= first_seq:
-            df, stored = self._fetch_frame(
-                q, resolved, direction, committed, stored=True
-            )
-            order = _fetch_order("seq" if stored else self.id_col, direction)
+        # a log with no live committed records has nothing to scan:
+        # its page is the trailing record-less noMoreData frame
+        if last_seq >= first_seq:
+            df = self._records(q, *_fetch_range(base, direction, committed))
+            order = _fetch_order("seq", direction)
             rows = df.orderBy(order).limit(limit).collect()
-            if stored:
-                rows = _stored_docs(rows)
         meta = self.metadata()
         total, trunc = meta.total, meta.truncated_timestamp
-        base = int(resolved) if contiguous else 0
         frames: list[Metadata] = []
         exhausted = False
-        for i, row in enumerate(rows):
-            if contiguous:
-                seq = int(row[self.id_col])
-                if direction < 0:
-                    queried = base - seq
-                    run = seq  # _leftOff after the per-candidate decrement
-                    last_candidate = seq == first_seq
-                else:
-                    queried = seq - base + 1
-                    run = seq + 1
-                    last_candidate = seq == last_seq
+        for i, (seq, _) in enumerate(rows):
+            if direction < 0:
+                queried = base - seq
+                run = seq  # _leftOff after the per-candidate decrement
+                last_candidate = seq == first_seq
             else:
-                queried = i + 1
-                run = row[self.id_col]
-                last_candidate = False
+                queried = seq - base + 1
+                run = seq + 1
+                last_candidate = seq == last_seq
             exhausted = exhausted or last_candidate
             frames.append(
                 Metadata(
                     current=queried,
                     total=total,
                     number_of_written=i,
-                    left_off=(
-                        index_to_id(run) if contiguous else str(run)
-                    ),
+                    left_off=index_to_id(run),
                     truncated_timestamp=trunc,
                     no_more_data=last_candidate,
                 )
@@ -1256,19 +1239,14 @@ class BasenineDB:
         if not exhausted and len(rows) < limit:
             # fewer matches than limit ⇒ the scan ran off the end of
             # the range without a delivered final candidate
-            if contiguous:
-                end = first_seq if direction < 0 else last_seq + 1
-                span = base - first_seq if direction < 0 else last_seq - base + 1
-            else:
-                end, span = len(rows), len(rows)
+            end = first_seq if direction < 0 else last_seq + 1
+            span = base - first_seq if direction < 0 else last_seq - base + 1
             frames.append(
                 Metadata(
                     current=max(span, 0),
                     total=total,
                     number_of_written=len(rows),
-                    left_off=(
-                        index_to_id(max(end, 0)) if contiguous else str(end)
-                    ),
+                    left_off=index_to_id(max(end, 0)),
                     truncated_timestamp=trunc,
                     no_more_data=True,
                 )

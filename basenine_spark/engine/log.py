@@ -38,6 +38,7 @@ skip row groups by their min/max stats.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import uuid
@@ -59,6 +60,18 @@ LOG_SCHEMA = T.StructType(
         T.StructField("part", T.LongType(), False),
     ]
 )
+
+def _doc_ts(ts) -> Optional[int]:
+    """A document's ``timestamp`` as its ``doc_ts``: the value when it
+    is a finite number inside the int64 range, else None (a bool is
+    not a number here)."""
+    if isinstance(ts, bool) or not isinstance(ts, (int, float)):
+        return None
+    if isinstance(ts, float) and not math.isfinite(ts):
+        return None
+    n = int(ts)
+    return n if -(2**63) <= n < 2**63 else None
+
 
 def _stats_columns(schema: pa.Schema) -> list[str]:
     """The columns a wire-batch file keeps min/max statistics for:
@@ -231,12 +244,7 @@ class DocumentLog:
         doc_tss: list[Optional[int]] = []
         for obj, rid in zip(objs, ids):
             obj["id"] = rid
-            ts = obj.get("timestamp")
-            doc_tss.append(
-                int(ts)
-                if isinstance(ts, (int, float)) and not isinstance(ts, bool)
-                else None
-            )
+            doc_tss.append(_doc_ts(obj.get("timestamp")))
             values.append(json.dumps(obj, separators=(",", ":")))
 
         if written:
@@ -464,13 +472,7 @@ class DocumentLog:
                             obj = _json.loads(line)
                             rid = "%024d" % seq
                             obj["id"] = rid
-                            ts = obj.get("timestamp")
-                            out_ts.append(
-                                int(ts)
-                                if isinstance(ts, (int, float))
-                                and not isinstance(ts, bool)
-                                else None
-                            )
+                            out_ts.append(_doc_ts(obj.get("timestamp")))
                             out_seq.append(seq)
                             out_id.append(rid)
                             out_val.append(

@@ -35,14 +35,15 @@ engine either way), so the heavy lifting (filter pushdown, file
 pruning via the physical ``seq`` column, typed fast path vs row
 backend) is exactly the batch engine's.  Like the reference, which
 writes each matching record's stored bytes to the socket
-(``native.go:481-495``), QUERY/FETCH/SINGLE send the log's stored
-document: the filter runs on the typed columns and the scan projects
-only ``seq`` and the raw ``value``, so nothing is re-serialized (typed
-rows are re-serialized only for redact queries and mounted tables).  A
+(``native.go:481-495``), QUERY/FETCH/SINGLE send each record's stored
+document (``BasenineDB._records``): an unfiltered scan reads only
+``seq`` and ``value``; a filter that compiles runs on the typed columns
+and projects the same two; a redact query rewrites only the redacted
+leaves of the stored document.  Nothing else is re-serialized.  A
 QUERY poll is one unsorted scan sorted by seq on the driver; only
-``limit(N)`` (TakeOrderedAndProject) and mounted tables order in
-Spark.  Replies are written in sendall calls of about
-``SEND_CHUNK_BYTES``.  Follow mode re-expresses the reference's
+``limit(N)`` (TakeOrderedAndProject) orders in Spark.  Replies are
+written in sendall calls of about ``SEND_CHUNK_BYTES``.  A mounted
+table is not served.  Follow mode re-expresses the reference's
 fsnotify wait (``native.go:520-522,1139-1155``) as a commit-driven
 incremental scan: a follower sleeps on the db's commit clock
 (``BasenineDB.wait_commit``) until a batch is committed — written and
@@ -76,7 +77,7 @@ import socket
 import threading
 from typing import Optional
 
-from .engine.db import BasenineDB, StoredDoc, index_to_id, strip_nulls
+from .engine.db import BasenineDB, index_to_id
 
 CMD_INSERT = "/insert"
 CMD_INSERTION_FILTER = "/insert-filter"
@@ -99,30 +100,15 @@ INSERT_BATCH_MAX = 10_000
 # QUERY/FETCH replies go out in sendall calls of about this size
 SEND_CHUNK_BYTES = 64 * 1024
 
+# seconds between an idle QUERY follower's checks for a client hang-up
+# and ``stop()``, and between those checks after a ``limit(N)`` stream
+POLL_INTERVAL = 0.15
 
-def row_to_doc(row, id_col: str = "id") -> str:
-    """The wire document of one served row.
 
-    A :class:`~basenine_spark.engine.db.StoredDoc` (a log record,
-    filter compiled to a Column) is the stored document and is sent
-    verbatim.  The rest is the typed-row fallback: row-backend results
-    (schema exactly ``(id, value)`` with ``value`` a JSON object string
-    — ``engine/db.py`` ``_row_backend``) already carry the evaluated
-    document; typed rows are re-serialized with schema-null keys
-    dropped."""
-    if type(row) is StoredDoc:
-        return row[1]
-    fields = row.__fields__
-    if len(fields) == 2 and id_col in fields and "value" in fields:
-        v = row["value"]
-        if isinstance(v, str) and v.startswith("{"):
-            try:
-                if isinstance(json.loads(v), dict):
-                    return v
-            except ValueError:
-                pass
-    d = strip_nulls(row.asDict(recursive=True))
-    return json.dumps(d, separators=(",", ":"), default=str)
+def row_to_doc(row) -> str:
+    """The wire document of one served ``(seq, value)`` record
+    (``BasenineDB._records``): its ``value``."""
+    return row[1]
 
 
 class _ChunkedWriter:
@@ -223,7 +209,6 @@ class BasenineServer:
         db: BasenineDB,
         host: str = "127.0.0.1",
         port: int = 0,
-        poll_interval: float = 0.15,
         compat_left_off: bool = True,
         max_record_bytes: int = MAX_RECORD_BYTES,
     ):
@@ -241,13 +226,16 @@ class BasenineServer:
         byte-for-byte).
 
         A QUERY follower sleeps until the db commits a batch, so it
-        runs no Spark job while idle; ``poll_interval`` (seconds) is
-        how often an idle follower wakes to notice a client hang-up
-        and, after a ``limit(N)`` stream or on a mounted table, how
-        often it checks for one.  ``stop()`` wakes followers at
-        once."""
+        runs no Spark job while idle; it wakes every ``POLL_INTERVAL``
+        seconds to notice a client hang-up, and ``stop()`` wakes it at
+        once.  ``db`` must be log-backed: a mounted table raises
+        ``ValueError``."""
+        if db._log is None:
+            raise ValueError(
+                "BasenineServer serves a log-backed BasenineDB, "
+                "not a mounted table"
+            )
         self.db = db
-        self.poll_interval = poll_interval
         self.compat_left_off = compat_left_off
         self.max_record_bytes = max_record_bytes
         self._listener = socket.create_server((host, port))
@@ -465,30 +453,25 @@ class BasenineServer:
         written = 0
         left_off: int | str = left_line.strip() or 0
         last_seq = -1
-        mounted = self.db._log is None
         seen = -1  # commit version of the last poll: the first one runs
-        committed = 0
         while not self._stop.is_set():
             if not self._conn_alive(conn):
                 return
-            if not mounted:
-                version, committed = self.db.wait_commit(
-                    seen, self.poll_interval, self._stop
-                )
-                if version == seen:
-                    continue  # idle: re-check hang-up and stop()
-                seen = version
-                if committed == 0:
-                    # a QUERY connection may open before the first
-                    # INSERT (server_test.go InsertionFilter flow)
-                    continue
+            version, committed = self.db.wait_commit(
+                seen, POLL_INTERVAL, self._stop
+            )
+            if version == seen:
+                continue  # idle: re-check hang-up and stop()
+            seen = version
+            if committed == 0:
+                # a QUERY connection may open before the first
+                # INSERT (server_test.go InsertionFilter flow)
+                continue
             try:
                 # bounded by the commit: a batch whose schema is not
                 # merged yet would fail the filter and be skipped
                 rows, frames = self.db.query_with_metadata(
-                    qtext,
-                    left_off=left_off,
-                    as_of=None if mounted else committed - 1,
+                    qtext, left_off=left_off, as_of=committed - 1
                 )
             except Exception as e:  # noqa: BLE001
                 self._send(conn, f"Error: {e}")
@@ -498,7 +481,7 @@ class BasenineServer:
             for row, frame in zip(rows, frames):
                 if limit > 0 and written >= limit:
                     break
-                if not out.write(row_to_doc(row, self.db.id_col)):
+                if not out.write(row_to_doc(row)):
                     return
                 # numberOfWritten is cumulative across the whole stream
                 # (native.go:495-505), not per re-scan
@@ -507,24 +490,19 @@ class BasenineServer:
                 # DELIVERED seq; compat mode changes only the token on
                 # the wire (the reference's index+1 mint), never the
                 # internal arithmetic
-                try:
-                    seq = int(frame.left_off)
-                    last_seq = max(last_seq, seq)
-                    if self.compat_left_off:
-                        frame.left_off = index_to_id(seq + 1)
-                except ValueError:
-                    pass
+                last_seq = max(last_seq, row[0])
+                if self.compat_left_off:
+                    frame.left_off = index_to_id(row[0] + 1)
                 if not out.write(f"{CMD_METADATA} {frame.to_json()}"):
                     return
                 written += 1
             if not out.flush():
                 return
-            if mounted or (limit > 0 and written >= limit):
-                # stream done (limit hit, or a mounted table has no
-                # follow semantics); the connection stays open until
-                # the client hangs up (native.go:513-517)
+            if limit > 0 and written >= limit:
+                # stream done; the connection stays open until the
+                # client hangs up (native.go:513-517)
                 while not self._stop.is_set() and self._conn_alive(conn):
-                    self._stop.wait(self.poll_interval)
+                    self._stop.wait(POLL_INTERVAL)
                 return
             # resume after everything scanned this round: the next poll's
             # seq predicate prunes all files already served. The token is
@@ -550,16 +528,18 @@ class BasenineServer:
                 f"Error: While converting the index to integer: {e}",
             )
             return
-        if self.db._log is not None and idx >= self.db._committed_total:
+        if idx >= self.db._committed_total:
             # native.go:544-550 distinguishes past-the-end from removed
             self._send(conn, f"Index out of range: {idx}")
             return
         try:
-            doc = self.db.single_json(index_to_id(idx), qtext)
+            rec = self.db.single_json(index_to_id(idx), qtext)
         except Exception as e:  # noqa: BLE001
             self._send(conn, f"Eval error: {e}")
             return
-        self._send(conn, "Record does not exist!" if doc is None else doc)
+        self._send(
+            conn, "Record does not exist!" if rec is None else row_to_doc(rec)
+        )
 
     def _serve_fetch(self, conn: socket.socket, reader: _LineReader) -> None:
         """FETCH mode: ``/metadata`` frame *before* each record
@@ -612,7 +592,7 @@ class BasenineServer:
             if not out.write(f"{CMD_METADATA} {frame.to_json()}"):
                 return
             if i < len(rows):
-                if not out.write(row_to_doc(rows[i], self.db.id_col)):
+                if not out.write(row_to_doc(rows[i])):
                     return
         out.write(CLOSE_CONNECTION)
         out.flush()

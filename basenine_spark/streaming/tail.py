@@ -11,10 +11,10 @@ blocking resume ``native.go:520-522``, ``watchPartitions``
 
 Spark-first mapping: the fsnotify loop dissolves into a Structured
 Streaming **file source** over the Parquet log directory — Spark's own
-source listing is the wake-up mechanism; each micro-batch runs the
-compiled BFL filter (typed fast path, row-backend fallback — the same
-``_apply_bfl`` the batch modes use) and delivers matching records in
-seq order. ``limit(N)`` stops the streaming query from the driver loop
+source listing is the wake-up mechanism; each micro-batch goes through
+``BasenineDB._records``, the path QUERY and FETCH serve from, and
+delivers the matching stored documents in seq order. ``limit(N)``
+stops the streaming query from the driver loop
 (SURVEY §7.4 item 6).
 
 Metadata cadence (``frame_cadence``): the default ``"delivered"``
@@ -79,11 +79,10 @@ class TailQuery:
         self.query_text = query
         self.prepared: Query = db._prepare(query)
         if frame_cadence == "scanned" and self.prepared.expr is not None:
-            # fail FAST (ADVICE r10): the scanned cadence keys matches
-            # back to their seq via the injected id, so a query whose
-            # redact could mutate the id column would only surface as
-            # an async ValueError inside the first matching micro-batch
-            # — reject the misconfiguration synchronously instead
+            # the scanned cadence frames every candidate by its id; a
+            # redact that may rewrite the id column would deliver
+            # records whose id disagrees with their frame's leftOff —
+            # refused synchronously (ADVICE r10)
             from ..bfl.compiler import collect_redact_taints
 
             taints = collect_redact_taints(self.prepared.expr)
@@ -124,11 +123,10 @@ class TailQuery:
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         db = self.db
-        # typed view of this micro-batch (same path as batch-mode M1).
-        # The schema is normally maintained at write time; a tail that
-        # follows a log this process never wrote (or that started on an
-        # empty db, reference: a QUERY connection may open before any
-        # INSERT) learns it from the batch itself.
+        # The typed schema is normally maintained at write time; a tail
+        # that follows a log this process never wrote (or that started
+        # on an empty db, reference: a QUERY connection may open before
+        # any INSERT) learns it from the batch itself.
         if db._typed_schema is None:
             if batch_df.isEmpty():
                 return
@@ -143,40 +141,21 @@ class TailQuery:
                 else merge_types(db._schema_acc, batch_schema)
             )
             db._typed_schema = finalize_type(db._schema_acc)
-        # physical seq is only a filter key — drop it BEFORE the BFL
-        # stage so row-backend (redact) document rewrites never see a
-        # spurious "seq" field
-        typed = (
-            batch_df.filter(F.col("seq") >= self.min_seq)
-            .select(F.from_json(F.col("value"), db._typed_schema).alias("doc"))
-            .select("doc.*")
-        )
-        filtered = db._apply_bfl(typed, self.prepared)
-        cols = filtered.columns
-        out_val = (
-            F.col("value")
-            if "value" in cols
-            else F.to_json(F.struct(*cols))
-        )
-        id_col = db.id_col if db.id_col in cols else None
-        rows = (
-            filtered.select(
-                (F.col(id_col) if id_col else F.lit(None)).alias("_id"), out_val.alias("_v")
-            )
-            .collect()
-        )
-        rows.sort(key=lambda r: r["_id"] or "")
+        # the same (seq, value) records QUERY serves, from this batch
+        rows = db._records(self.prepared, min_seq=self.min_seq, batch=batch_df)
+        rows = sorted(rows.collect())
         if self.frame_cadence == "scanned":
             self._emit_scanned(batch_df, rows)
             return
         with self._lock:
-            for r in rows:
+            for seq, value in rows:
                 if self.limit > 0 and self.written >= self.limit:
                     break
+                rid = index_to_id(seq)
                 self.written += 1
-                self.records.append((r["_id"], r["_v"]))
+                self.records.append((rid, value))
                 if self.on_record:
-                    self.on_record(r["_id"], r["_v"])
+                    self.on_record(rid, value)
                 if self.on_metadata:
                     # per-record frame interleaving, field-for-field
                     # with native.go:497-511: `numberOfWritten` is the
@@ -187,15 +166,9 @@ class TailQuery:
                     # charged to the next frame), `leftOff` is the
                     # delivered record's resume token
                     md = db.metadata(written=self.written, queried=1)
-                    if r["_id"]:
-                        md.left_off = r["_id"]
-                        try:
-                            seq = int(r["_id"])
-                        except ValueError:
-                            seq = None
-                        if seq is not None:
-                            md.current = seq - self._prev_seq
-                            self._prev_seq = seq
+                    md.left_off = rid
+                    md.current = seq - self._prev_seq
+                    self._prev_seq = seq
                     self.on_metadata(md)
             if self.limit > 0 and self.written >= self.limit:
                 self._limit_hit.set()
@@ -206,17 +179,10 @@ class TailQuery:
         not — ``current`` = records scanned since the previous frame
         (1 on the normal contiguous path), ``numberOfWritten``
         cumulative, ``leftOff`` the scanned record's own resume token.
-        Matches are keyed back to their seq via the injected 24-digit
-        id (S3 — every durable-log record carries it); only the bare
-        seq longs of non-matching candidates travel to the driver."""
+        Only the bare seq longs of non-matching candidates travel to
+        the driver."""
         db = self.db
-        matched = {r["_id"]: r["_v"] for r in rows if r["_id"]}
-        if rows and not matched:
-            raise ValueError(
-                "frame_cadence='scanned' needs the injected id column to"
-                " key matches back to scanned seqs; the query projected"
-                " it away"
-            )
+        matched = dict(rows)
         scan_seqs = sorted(
             r["seq"]
             for r in batch_df.filter(F.col("seq") >= self.min_seq)
@@ -228,7 +194,7 @@ class TailQuery:
                 if self.limit > 0 and self.written >= self.limit:
                     break
                 rid = index_to_id(seq)
-                v = matched.get(rid)
+                v = matched.get(seq)
                 if v is not None:
                     self.written += 1
                     self.records.append((rid, v))

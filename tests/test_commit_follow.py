@@ -9,12 +9,19 @@ import pytest
 
 from basenine_spark import client as bn
 from basenine_spark.engine.db import BasenineDB, index_to_id
+from basenine_spark import server as server_mod
 from basenine_spark.server import BasenineServer
 
 
 @pytest.fixture()
 def db(spark, tmp_path):
     return BasenineDB(spark, path=str(tmp_path / "store"))
+
+
+@pytest.fixture()
+def slow_poll(monkeypatch):
+    """An idle follower wakes only every 5 s on its own."""
+    monkeypatch.setattr(server_mod, "POLL_INTERVAL", 5.0)
 
 
 def _count_polls(db) -> list:
@@ -63,7 +70,7 @@ def test_follower_keeps_a_record_whose_schema_commit_is_slow(db):
 
     db._commit_schema = slow_commit
     calls = _count_polls(db)
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     try:
         with bn.BasenineClient(server.host, server.port, timeout=5) as c:
             frames = c.query("", "b == 2")
@@ -100,7 +107,7 @@ def test_poll_stops_at_the_committed_total(db):
 
     db._commit_schema = slow_commit
     db.query_with_metadata = slow_poll
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     try:
         with bn.BasenineClient(server.host, server.port, timeout=10) as c:
             frames = c.query("", "a == 2 or b == 2")
@@ -121,7 +128,7 @@ def test_poll_stops_at_the_committed_total(db):
 def test_idle_follower_polls_once(db):
     db.insert_json(['{"k":1}'])
     calls = _count_polls(db)
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     try:
         with bn.BasenineClient(server.host, server.port, timeout=30) as c:
             frames = c.query("", "")
@@ -133,12 +140,12 @@ def test_idle_follower_polls_once(db):
 
 
 @pytest.mark.parametrize("writer", ["insert_json", "insert_json_df"])
-def test_commit_wakes_follower_before_poll_interval(spark, db, writer):
-    """With a 5 s ``poll_interval``, a record committed after the
+def test_commit_wakes_follower_before_poll_interval(spark, db, writer, slow_poll):
+    """With a 5 s ``POLL_INTERVAL``, a record committed after the
     follower's first poll arrives within 2 s — through both insert
     paths."""
     db.insert_json(['{"k":0}'])
-    server = BasenineServer(db, poll_interval=5.0).start()
+    server = BasenineServer(db).start()
     try:
         with bn.BasenineClient(server.host, server.port, timeout=10) as c:
             frames = c.query("", "k >= 0")
@@ -156,12 +163,12 @@ def test_commit_wakes_follower_before_poll_interval(spark, db, writer):
         server.stop()
 
 
-def test_follower_after_flush_gets_new_records(db):
+def test_follower_after_flush_gets_new_records(db, slow_poll):
     """/flush publishes the emptied log: a follower opened after it
     waits for the next commit instead of scanning up to the total the
     log had before the flush."""
     db.insert_json(['{"k":%d}' % i for i in range(3)])
-    server = BasenineServer(db, poll_interval=5.0).start()
+    server = BasenineServer(db).start()
     try:
         assert bn.flush(server.host, server.port) is None
         with bn.BasenineClient(server.host, server.port, timeout=10) as c:
@@ -175,9 +182,9 @@ def test_follower_after_flush_gets_new_records(db):
         server.stop()
 
 
-def test_stop_wakes_an_idle_follower(db):
+def test_stop_wakes_an_idle_follower(db, slow_poll):
     db.insert_json(['{"k":1}'])
-    server = BasenineServer(db, poll_interval=5.0).start()
+    server = BasenineServer(db).start()
     with bn.BasenineClient(server.host, server.port, timeout=10) as c:
         _next_record(c.query("", ""))
         t0 = time.monotonic()
@@ -188,7 +195,7 @@ def test_stop_wakes_an_idle_follower(db):
 
 def test_idle_follower_hang_up_ends_its_handler(db):
     db.insert_json(['{"k":1}'])
-    server = BasenineServer(db, poll_interval=0.2).start()
+    server = BasenineServer(db).start()
     try:
         with bn.BasenineClient(server.host, server.port, timeout=10) as c:
             _next_record(c.query("", ""))
@@ -246,12 +253,12 @@ def test_fetch_sees_only_committed_records(db, slow_commit):
     slow_commit(['{"a":2,"b":2}'])
     assert db._log.total_written == 2
     rows, frames = db.fetch_with_metadata("latest", -1, "", 10)
-    assert [r.id for r in rows] == []
+    assert rows == []
     assert frames[-1].left_off == index_to_id(0)
     with pytest.raises(IndexError):
         db.fetch_with_metadata(2, 1, "", 10)
     rows, frames = db.fetch_with_metadata(0, 1, "", 10)
-    assert [r.id for r in rows] == [index_to_id(0)]
+    assert [seq for seq, _ in rows] == [0]
     assert frames[-1].no_more_data
     assert frames[-1].left_off == index_to_id(1)
 

@@ -285,3 +285,25 @@ def test_restore_ignores_crashed_write_artifacts(spark, tmp_path):
     # id sequence resumes exactly where the committed log left off
     assert more == ["%024d" % 20]
     assert db2.query("n == 99").count() == 1
+
+
+@pytest.mark.parametrize("ts", ["NaN", "Infinity", "1e300", "-1e300", "%d" % 2**63])
+@pytest.mark.parametrize("writer", ["insert_json", "insert_json_df"])
+def test_timestamp_outside_int64_is_stored_with_null_doc_ts(spark, log_path, writer, ts):
+    """A ``timestamp`` that is not a finite number inside the int64
+    range does not fail the INSERT: the record is stored and served
+    byte-identical, and its ``doc_ts`` is null."""
+    db = BasenineDB(spark, path=log_path)
+    lines = ['{"timestamp":%s,"k":"odd"}' % ts, '{"timestamp":1700000000000,"k":"ok"}']
+    if writer == "insert_json":
+        db.insert_json(lines)
+    else:
+        db.insert_json_df(spark.createDataFrame([(x,) for x in lines], ["value"]))
+    expected = [json.dumps(json.loads(x), separators=(",", ":"))[:-1] for x in lines]
+    expected = [x + ',"id":"%024d"}' % i for i, x in enumerate(expected)]
+    rows = db._log.scan().orderBy("seq").collect()
+    assert [r["value"] for r in rows] == expected
+    assert [r["doc_ts"] for r in rows] == [None, 1700000000000]
+    served, _ = db.query_with_metadata("")
+    assert [v for _, v in served] == expected
+    assert db.single_json("%024d" % 0, "") == (0, expected[0])

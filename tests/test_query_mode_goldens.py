@@ -118,7 +118,7 @@ def test_fetch_metadata_limit_hit(db100):
     assert len(rows) == len(frames) == 5
     for i, (r, f) in enumerate(zip(rows, frames)):
         seq = 12 - i
-        assert r["id"] == index_to_id(seq)
+        assert r[0] == seq
         assert f.current == 13 - seq  # candidates scanned so far
         assert f.left_off == index_to_id(seq)  # running resume token
         assert f.number_of_written == i

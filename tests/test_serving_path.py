@@ -1,6 +1,7 @@
 """The durable serving path: QUERY, FETCH and SINGLE send each record's
-stored document, a QUERY poll is one unsorted Spark job, and replies
-are written in ~64 KiB chunks with the same bytes on the wire."""
+stored document (a redact rewrites only the redacted leaves), a QUERY
+poll is one unsorted Spark job, and replies are written in ~64 KiB
+chunks with the same bytes on the wire."""
 
 import json
 import re
@@ -10,8 +11,10 @@ import time
 import pytest
 
 from basenine_spark import client as bn
-from basenine_spark.engine.db import BasenineDB, Metadata, StoredDoc, index_to_id
-from basenine_spark.server import SEND_CHUNK_BYTES, BasenineServer, row_to_doc
+from pyspark.sql.classic import dataframe as classic_df
+
+from basenine_spark.engine.db import BasenineDB, Metadata, index_to_id
+from basenine_spark.server import SEND_CHUNK_BYTES, BasenineServer
 
 
 def _stored_values(db) -> dict[str, str]:
@@ -39,7 +42,7 @@ def widened(spark, tmp_path):
     db = BasenineDB(spark, path=str(tmp_path / "store"))
     db.insert_json(['{"a":null,"n":1,"s":"x"}', '{"n":2,"s":"y"}'])
     db.insert_json(['{"n":1.5,"s":"z"}'])
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     yield db, server
     server.stop()
 
@@ -49,9 +52,9 @@ def test_wire_sends_stored_bytes(widened):
     stored = _stored_values(db)
     # the stored log keeps the null and the unwidened integer ...
     assert stored[index_to_id(0)] == '{"a":null,"n":1,"s":"x","id":"%s"}' % index_to_id(0)
-    # ... which the typed view loses (a dropped, n widened to 1.0)
+    # ... which the typed view loses (n widened to 1.0)
     typed = db.query("").collect()
-    assert json.loads(row_to_doc(typed[0])) == {"n": 1.0, "s": "x", "id": index_to_id(0)}
+    assert typed[0].asDict() == {"a": None, "id": index_to_id(0), "n": 1.0, "s": "x"}
 
     for query in ("", "n > 0", 's != "nope"'):
         got = _query_records(server, "", query, 3)
@@ -69,12 +72,17 @@ def test_wire_sends_stored_bytes(widened):
     assert db.single(index_to_id(0))["n"] == 1.0
 
 
-def test_redact_keeps_the_typed_fallback(widened):
-    _, server = widened
+def test_redact_serves_the_stored_object(widened):
+    """A redact query sends the stored document with only the redacted
+    leaves replaced: key order, the explicit null and the unwidened
+    integer stay."""
+    db, server = widened
     (rec,) = _query_records(server, "", 'redact("s") and n == 2', 1)
-    assert json.loads(rec) == {"n": 2.0, "s": "[REDACTED]", "id": index_to_id(1)}
+    assert rec == '{"n":2,"s":"[REDACTED]","id":"%s"}' % index_to_id(1)
+    records, _, _ = bn.fetch(server.host, server.port, "0", 1, 'redact("s")', 1)
+    assert records == ['{"a":null,"n":1,"s":"[REDACTED]","id":"%s"}' % index_to_id(0)]
     line = bn.single(server.host, server.port, 2, 'redact("s")')
-    assert json.loads(line) == {"n": 1.5, "s": "[REDACTED]", "id": index_to_id(2)}
+    assert line == '{"n":1.5,"s":"[REDACTED]","id":"%s"}' % index_to_id(2)
 
 
 def test_stored_docs_parse_equal_to_typed_rows(spark, tmp_path):
@@ -87,21 +95,23 @@ def test_stored_docs_parse_equal_to_typed_rows(spark, tmp_path):
     db.insert_json(docs)
     rows, _ = db.query_with_metadata("k > 3")
     typed = db.query("k > 3").collect()
-    assert all(type(r) is StoredDoc for r in rows)
-    assert [json.loads(r.value) for r in rows] == [
-        json.loads(row_to_doc(t)) for t in typed
+    assert [seq for seq, _ in rows] == list(range(3, 39))
+    assert [json.loads(v) for _, v in rows] == [
+        t.asDict(recursive=True) for t in typed
     ]
 
 
-def test_plumbing_name_collision_falls_back(spark, tmp_path):
+def test_plumbing_names_avoid_document_keys(spark, tmp_path):
+    """Document keys named like the plumbing columns (in any case) do
+    not turn the compiled path off: the filter reads the document's
+    own key and the record is served from its stored bytes."""
     db = BasenineDB(spark, path=str(tmp_path / "store"))
-    db.insert_json(['{"__bn_value__":"v","n":1}'])
-    rows, frames = db.query_with_metadata("n == 1")
-    assert type(rows[0]) is not StoredDoc
-    assert json.loads(row_to_doc(rows[0])) == {
-        "__bn_value__": "v", "n": 1, "id": index_to_id(0)
-    }
-    assert frames[0].left_off == index_to_id(0)
+    db.insert_json(['{"__bn_value__":"v","__BN_SEQ__":7,"n":1}', '{"n":2}'])
+    stored = _stored_values(db)
+    for query in ("n == 1", '__bn_value__ == "v"', "__BN_SEQ__ == 7"):
+        rows, frames = db.query_with_metadata(query)
+        assert rows == [(0, stored[index_to_id(0)])], query
+        assert frames[0].left_off == index_to_id(0)
 
 
 # -- plan and job shape of a poll ---------------------------------------
@@ -121,9 +131,21 @@ def polled(spark, tmp_path_factory):
 
 
 def _plan(db, query: str, left_off) -> str:
-    df, stored, _ = db._served_frame(db._prepare(query), left_off)
-    assert stored
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The executed plan of the one collect a poll runs."""
+    plans = []
+    collect = classic_df.DataFrame.collect
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    classic_df.DataFrame.collect = spy
+    try:
+        db.query_with_metadata(query, left_off=left_off)
+    finally:
+        classic_df.DataFrame.collect = collect
+    (plan,) = plans
+    return plan
 
 
 def test_unbounded_poll_runs_one_job(spark, polled):
@@ -137,7 +159,7 @@ def test_unbounded_poll_runs_one_job(spark, polled):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup("bn-serving-poll")) == 1
-    assert [int(r.id) for r in rows] == [s for s in range(100, 300) if s % 5 >= 3]
+    assert [seq for seq, _ in rows] == [s for s in range(100, 300) if s % 5 >= 3]
     assert [f.number_of_written for f in frames] == list(range(1, len(rows) + 1))
 
 
@@ -152,9 +174,7 @@ def test_limit_poll_plans_take_ordered(polled):
     plan = _plan(polled, "status >= 500 and limit(7)", 0)
     assert "TakeOrderedAndProject" in plan, plan
     rows, _ = polled.query_with_metadata("status >= 500 and limit(7)")
-    assert [r.id for r in rows] == [
-        index_to_id(s) for s in range(300) if s % 5 >= 3
-    ][:7]
+    assert [seq for seq, _ in rows] == [s for s in range(300) if s % 5 >= 3][:7]
 
 
 def test_poll_reads_seq_value_and_predicate_columns(polled):
@@ -194,7 +214,7 @@ PAD = "x" * 900  # ~1 KiB per document: ~60 record/frame pairs per chunk
 def big(spark, tmp_path_factory):
     db = BasenineDB(spark, path=str(tmp_path_factory.mktemp("big") / "store"))
     db.insert_json([json.dumps({"i": i, "pad": PAD}) for i in range(3000)])
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     yield db, server
     server.stop()
 
@@ -271,3 +291,99 @@ def test_client_hangup_mid_replay_ends_the_handler(big):
     while time.time() < deadline and any(t.is_alive() for t in server._threads):
         time.sleep(0.05)
     assert not any(t.is_alive() for t in server._threads)
+
+
+# -- every path serves the stored bytes ------------------------------------
+
+PROBES = ['{"z":1,"a":null,"s":"secret"}', '{"b":2,"s":"x","m":{"q":1}}']
+
+
+def _wire_all(server, query: str, n: int) -> tuple[list, list, list]:
+    """``(QUERY records, FETCH records, SINGLE lines)`` for records
+    ``0..n-1`` over the wire."""
+    got = _query_records(server, "", query, n) if n else []
+    fetched, _, _ = bn.fetch(server.host, server.port, "0", 1, query, 10)
+    single = [bn.single(server.host, server.port, i, query) for i in range(2)]
+    return got, fetched, single
+
+
+def test_motivation_probes_are_byte_exact(spark, tmp_path):
+    """Unfiltered, compiled and redact queries over a document with an
+    explicit null and one with a nested object: every reply is the
+    stored document, with only the redacted leaves replaced."""
+    db = BasenineDB(spark, path=str(tmp_path / "store"))
+    db.insert_json(PROBES)
+    stored = [_stored_values(db)[index_to_id(i)] for i in range(2)]
+    assert stored == [p[:-1] + ',"id":"%s"}' % index_to_id(i) for i, p in enumerate(PROBES)]
+    server = BasenineServer(db).start()
+    try:
+        assert _wire_all(server, "", 2) == (stored, stored, stored)
+        assert _wire_all(server, 's == "x"', 1) == ([stored[1]], [stored[1]], stored)
+        red = [
+            '{"z":1,"a":null,"s":"[REDACTED]","id":"%s"}' % index_to_id(0),
+            '{"b":2,"s":"[REDACTED]","m":{"q":1},"id":"%s"}' % index_to_id(1),
+        ]
+        assert _wire_all(server, 'redact("s")', 2) == (red, red, red)
+        # SINGLE answers whatever the truth: record 0 has no m.q, so the
+        # and-chain collapses before its redact runs
+        red_m = '{"b":2,"s":"x","m":"[REDACTED]","id":"%s"}' % index_to_id(1)
+        assert _wire_all(server, 'm.q == 1 and redact("m")', 1) == (
+            [red_m], [red_m], [stored[0], red_m]
+        )
+    finally:
+        server.stop()
+
+
+def test_row_backend_keeps_non_ascii_bytes(spark, tmp_path, monkeypatch):
+    """A query the typed columns cannot run (recursive descent, redact)
+    goes through the row backend, which sends the stored bytes — the
+    log stores non-ASCII characters as ``\\u`` escapes — and encodes a
+    redacted document the same way."""
+    db = BasenineDB(spark, path=str(tmp_path / "store"))
+    db.insert_json(['{"who":{"name":"Zoë","n":1},"city":"東京"}'])
+    (stored,) = _stored_values(db).values()
+    assert stored == (
+        '{"who":{"name":"Zo\\u00eb","n":1},"city":"\\u6771\\u4eac","id":"%s"}'
+        % index_to_id(0)
+    )
+    calls = []
+    row_backend = BasenineDB._row_backend
+
+    def counted(self, df, q, stored=False):
+        calls.append(q.text)
+        return row_backend(self, df, q, stored)
+
+    monkeypatch.setattr(BasenineDB, "_row_backend", counted)
+    redacted = stored.replace('"Zo\\u00eb"', '"[REDACTED]"')
+    for query, want in (("who..n == 1", stored), ('redact("who.name")', redacted)):
+        rows, _ = db.query_with_metadata(query)
+        assert rows == [(0, want)], query
+        rows, _ = db.fetch_with_metadata(0, 1, query, 5)
+        assert rows == [(0, want)], query
+        assert db.single_json(index_to_id(0), query) == (0, want)
+    # QUERY and FETCH of each query
+    assert calls == ["who..n == 1"] * 2 + ['redact("who.name")'] * 2
+
+
+def test_unfiltered_reads_survive_a_key_case_collision(spark, tmp_path):
+    """Keys that collide case-insensitively (``a``/``A``) break the typed
+    view, which an unfiltered read never builds."""
+    db = BasenineDB(spark, path=str(tmp_path / "store"))
+    db.insert_json(['{"a":1,"A":2}', '{"b":3}'])
+    stored = [_stored_values(db)[index_to_id(i)] for i in range(2)]
+    server = BasenineServer(db).start()
+    try:
+        assert _wire_all(server, "", 2) == (stored, stored, stored)
+    finally:
+        server.stop()
+
+
+def test_server_refuses_a_mounted_db(spark):
+    df = spark.createDataFrame([(1, "x")], "id long, v string")
+    mounted = BasenineDB.from_dataframe(spark, df, id_col="id")
+    with pytest.raises(ValueError, match="mounted"):
+        BasenineServer(mounted)
+    with pytest.raises(ValueError, match="mounted"):
+        mounted.query_with_metadata("")
+    # the typed API still reads it
+    assert [r.v for r in mounted.query("").collect()] == ["x"]

@@ -21,7 +21,7 @@ PAYLOAD = '{"brand":{"name":"Chevrolet"},"model":"Camaro","year":2021}'
 def served(spark, tmp_path):
     """Fresh durable db + running server per test."""
     db = BasenineDB(spark, path=str(tmp_path / "store"))
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     yield db, server
     server.stop()
 
@@ -37,7 +37,7 @@ def served100(spark, tmp_path_factory):
     )
     db.insert_json([PAYLOAD] * 100)
     server = BasenineServer(
-        db, poll_interval=0.05, compat_left_off=False
+        db, compat_left_off=False
     ).start()
     yield db, server
     server.stop()
@@ -48,7 +48,7 @@ def test_default_server_is_reference_token_compatible(spark, tmp_path):
     reference's +1 QUERY tokens — drop-in for token-replaying reference
     clients; no-skip is the opt-out."""
     db = BasenineDB(spark, path=str(tmp_path / "store"))
-    server = BasenineServer(db, poll_interval=0.05)
+    server = BasenineServer(db)
     try:
         assert server.compat_left_off is True
         db.insert_json([PAYLOAD] * 3)
@@ -151,7 +151,7 @@ def served100_compat(spark, tmp_path_factory):
     )
     db.insert_json([PAYLOAD] * 100)
     server = BasenineServer(
-        db, poll_interval=0.05, compat_left_off=True
+        db, compat_left_off=True
     ).start()
     yield db, server
     server.stop()
@@ -254,7 +254,7 @@ def test_query_mode_follow_streams_new_inserts_non_durable(spark):
     once, in order: a wrong poll-resume token either stalls or
     re-delivers earlier records."""
     db = BasenineDB(spark)
-    server = BasenineServer(db, poll_interval=0.05).start()
+    server = BasenineServer(db).start()
     try:
         db.insert_json([PAYLOAD] * 3)
         seen = []
@@ -554,7 +554,7 @@ def test_record_over_max_size_closes_connection(spark, tmp_path):
 
     db = BasenineDB(spark, path=str(tmp_path / "store"))
     server = BasenineServer(
-        db, poll_interval=0.05, max_record_bytes=64 * 1024
+        db, max_record_bytes=64 * 1024
     ).start()
     try:
         with _socket.create_connection(
