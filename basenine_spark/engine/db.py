@@ -44,10 +44,12 @@ import shutil
 import tempfile
 import threading
 import weakref
+from collections import Counter
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,6 +117,44 @@ def index_to_id(index: int) -> str:
     return "%024d" % index
 
 
+# compiled filters kept per BasenineDB (``_match``) before the cache is
+# emptied
+MATCH_CACHE = 256
+
+# a served (seq, value) record
+_Record = Row("seq", "value")
+
+
+@contextmanager
+def job_group(sc, group: str, description: str):
+    """Tag the Spark jobs this thread starts inside the block with a job
+    group and description; the thread's own tags come back after."""
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    before = [sc.getLocalProperty(k) for k in keys]
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        for k, v in zip(keys, before):
+            sc.setLocalProperty(k, v)
+
+
+def _case_collision(t: T.DataType) -> bool:
+    """Whether two field names of one struct in ``t``, at any depth,
+    differ only in case.  Spark resolves columns case-insensitively,
+    so a typed view of such a schema cannot be read."""
+    if isinstance(t, T.ArrayType):
+        return _case_collision(t.elementType)
+    if isinstance(t, T.MapType):
+        return _case_collision(t.valueType)
+    if not isinstance(t, T.StructType):
+        return False
+    names = [f.name.lower() for f in t.fields]
+    return len(set(names)) < len(names) or any(
+        _case_collision(f.dataType) for f in t.fields
+    )
+
+
 def _plumbing_names(schema: T.StructType) -> tuple[str, str]:
     """Names for a log record's seq and stored document beside its
     typed columns, used by no top-level key of ``schema`` (compared
@@ -180,6 +220,22 @@ def _order_limit(df: DataFrame, order: Column, limit: int) -> DataFrame:
     then, one job and no global sort."""
     df = df.orderBy(order)
     return df.limit(limit) if limit > 0 else df
+
+
+class _CommitScan:
+    """One commit's shared follower scan over ``window`` (``[min_seq,
+    max_seq]``): the sorted records each served filter text keeps.
+    ``texts`` counts the followers registered per text when the scan
+    began; ``left`` is how many of them have yet to take their
+    records."""
+
+    def __init__(self, window: tuple, texts: Counter, version: int):
+        self.window = window
+        self.texts = texts
+        self.version = version
+        self.rows: dict[str, list] = {}
+        self.left = 0
+        self.done = threading.Event()
 
 
 @dataclass
@@ -252,6 +308,14 @@ class BasenineDB:
         self._commit = threading.Condition()
         self._commit_version = 0
         self._committed_total = 0 if log is None else log.total_written
+        # the latest commit's window is [_commit_from, _committed_total)
+        self._commit_from = self._committed_total
+        # QUERY followers' filter texts, and the commit reader's result
+        # (both guarded by _commit)
+        self._followers: Counter = Counter()
+        self._commit_scan: Optional[_CommitScan] = None
+        # query text → (view schema, _match result)
+        self._matches: dict[str, tuple] = {}
         self._mounted_total: Optional[int] = None  # cached count, mounted
         self._latest_cache = None  # cached max natural id, mounted
 
@@ -591,6 +655,7 @@ class BasenineDB:
         older schema would match nothing and resume past them."""
         with self._commit:
             self._commit_version += 1
+            self._commit_from = self._committed_total
             self._committed_total = self._log.total_written
             self._commit.notify_all()
 
@@ -620,6 +685,21 @@ class BasenineDB:
         ``stop`` event."""
         with self._commit:
             self._commit.notify_all()
+
+    @contextmanager
+    def following(self, query: str):
+        """Register a QUERY follower's filter text with the commit
+        reader (:meth:`_commit_records`) for the duration of the
+        block."""
+        with self._commit:
+            self._followers[query] += 1
+        try:
+            yield
+        finally:
+            with self._commit:
+                self._followers[query] -= 1
+                if not self._followers[query]:
+                    del self._followers[query]
 
     def _bulk_filter_column(self, df, q: Query):
         """Compile a pure (non-mutating) insertion filter to a Column
@@ -792,6 +872,8 @@ class BasenineDB:
         max_seq: Optional[int] = None,
         keep: tuple = (),
         batch: Optional[DataFrame] = None,
+        files: Optional[list[str]] = None,
+        schema: Optional[T.StructType] = None,
     ) -> DataFrame:
         """Schema-free docs → typed DataFrame (SURVEY §1.4).
 
@@ -806,8 +888,11 @@ class BasenineDB:
         ``keep`` names two columns that carry each record's ``seq`` and
         stored ``value`` beside the typed ones; ``batch`` (log rows of
         a tail micro-batch) is read in place of the log, via
-        ``from_json``."""
-        schema = self._view_schema()
+        ``from_json``; ``files`` (``DocumentLog.files``) in place of the
+        log directory.  ``schema`` is the view schema a caller compiled
+        its filters against (default: the current one)."""
+        if schema is None:
+            schema = self._view_schema()
         shredded = batch is None and self._shred_ok and bool(schema.fields)
         if shredded:
             from .log import LOG_SCHEMA
@@ -815,11 +900,9 @@ class BasenineDB:
             read_schema = T.StructType(
                 list(LOG_SCHEMA.fields) + [T.StructField("doc", schema, True)]
             )
-            scan = self.spark.read.schema(read_schema).parquet(
-                self._log.path
-            )
+            scan = self._log.scan(files, read_schema)
         else:
-            scan = self._log.scan() if batch is None else batch
+            scan = self._log.scan(files) if batch is None else batch
         scan = _seq_range(scan, min_seq, max_seq)
         extra = [F.col(c).alias(n) for c, n in zip(("seq", "value"), keep)]
         if shredded:
@@ -961,54 +1044,98 @@ class BasenineDB:
             )
         return self._log
 
+    def _match(
+        self, q: Query, schema: Optional[T.StructType]
+    ) -> tuple[Optional[Column], bool]:
+        """How ``q`` selects log records under the view ``schema``:
+        ``(predicate, False)`` when it compiles to a Column (None keeps
+        every record); otherwise ``(pre-filter or None, True)`` — the
+        row backend decides, after the compilable conjuncts.  A schema
+        whose names collide case-insensitively always takes the row
+        backend.  Compiled once per query text and schema."""
+        if q.expr is None:
+            return None, False
+        hit = self._matches.get(q.text)
+        if hit is not None and hit[0] is schema:
+            return hit[1]
+        if _case_collision(schema):
+            match = None, True
+        else:
+            try:
+                match = compile_filter(q, schema).predicate, False
+            except UnsupportedBFL:
+                match = _pushdown(q, schema), True
+        if len(self._matches) >= MATCH_CACHE:
+            self._matches.clear()
+        self._matches[q.text] = schema, match
+        return match
+
     def _records(
         self,
-        q: Query,
+        qs: list[Query],
         min_seq: Optional[int] = None,
         max_seq: Optional[int] = None,
         batch: Optional[DataFrame] = None,
+        files: Optional[list[str]] = None,
     ) -> DataFrame:
-        """The log records in ``[min_seq, max_seq]`` that ``q`` keeps,
-        unordered, as ``(seq, value)``: ``value`` is the document as
-        the log stores it (id included, ``DocumentLog.append``), which
-        is what the wire sends — like the reference's ``Eval`` result
-        (``native.go:481``, ``eval.go:802-812``), it differs from the
-        stored bytes only in the leaves a ``redact`` replaced.
+        """The log records in ``[min_seq, max_seq]`` that any query of
+        ``qs`` keeps, unordered, as ``(seq, value)``; several queries
+        add ``m``, where ``m[i]`` says whether ``qs[i]`` keeps the
+        record.  ``value`` is the document
+        as the log stores it (id included, ``DocumentLog.append``),
+        which is what the wire sends — like the reference's ``Eval``
+        result (``native.go:481``, ``eval.go:802-812``), it differs
+        from the stored bytes only in the leaves a ``redact`` replaced.
 
         * No filter: ``seq, value`` straight from the log scan; no
           typed view is built.
-        * A filter that compiles to a Column runs on the typed columns,
-          and the scan reads ``seq``, ``value`` and the predicate's
-          columns only.
-        * Anything else (redact, dynamic shapes) pre-filters on its
+        * Filters that compile to Columns run on the typed columns,
+          and the scan reads ``seq``, ``value`` and the predicates'
+          columns only.  One query filters on its predicate, which
+          reaches the Parquet reader; several filter on ``m``, since a
+          k-way OR pushed into the reader costs more to plan than it
+          saves on a commit's files.
+        * Anything else (redact, dynamic shapes, a view schema whose
+          names collide case-insensitively) pre-filters on its
           compilable conjuncts the same way, then runs the row backend
-          over the stored documents.
+          over the stored documents.  Such a query is read alone.
 
         ``batch`` (log rows of a tail micro-batch) is read in place of
-        the log."""
+        the log, ``files`` in place of the log directory."""
         log = self._served_log()
         if batch is None and log.live_count == 0:
             raise ValueError("no data ingested")
-        pred, exact = None, False
-        if q.expr is not None:
+        schema = None
+        if any(q.expr is not None for q in qs):
             schema = self._view_schema()
-            try:
-                pred = compile_filter(q, schema).predicate
-            except UnsupportedBFL:
-                pred, exact = _pushdown(q, schema), True
-        if pred is None:
-            raw = log.scan() if batch is None else batch
-            df = _seq_range(raw, min_seq, max_seq).select("seq", "value")
+        matches = [self._match(q, schema) for q in qs]
+        exact = any(ex for _, ex in matches)
+        if exact and len(qs) > 1:
+            raise ValueError("a row-backend query is read alone")
+        preds = [p for p, _ in matches]
+        if all(p is None for p in preds):
+            raw = log.scan(files) if batch is None else batch
+            df = _seq_range(raw, min_seq, max_seq)
+            cols = ["seq", "value"]
         else:
             keep = _plumbing_names(schema)
-            df = (
-                self._typed_view(min_seq, max_seq, keep, batch)
-                .filter(pred)
-                .select(
-                    F.col(keep[0]).alias("seq"), F.col(keep[1]).alias("value")
-                )
+            df = self._typed_view(
+                min_seq, max_seq, keep, batch, files, schema
             )
-        return self._row_backend(df, q, stored=True) if exact else df
+            if len(qs) == 1:
+                df = df.filter(preds[0])
+            cols = [
+                F.col(keep[0]).alias("seq"), F.col(keep[1]).alias("value")
+            ]
+        if exact:
+            return self._row_backend(df.select(*cols), qs[0], stored=True)
+        if len(qs) == 1:
+            return df.select(*cols)
+        flags = F.array(*(F.lit(True) if p is None else p for p in preds))
+        df = df.select(*cols, flags.alias("m"))
+        if all(p is not None for p in preds):
+            df = df.filter(F.array_contains("m", True))
+        return df
 
     def query_with_metadata(
         self,
@@ -1029,16 +1156,26 @@ class BasenineDB:
         ``limit(N)`` orders in Spark (TakeOrderedAndProject, one job);
         otherwise the poll is one unsorted scan, sorted on the driver —
         no range-partition sampling job, no shuffle.  ``as_of`` bounds
-        the scan at that seq, as in :meth:`query`."""
+        the scan at that seq, as in :meth:`query`.
+
+        When the range is exactly the latest commit's and ``query`` is
+        a registered follower's (:meth:`following`), the rows come from
+        that commit's one shared scan (:meth:`_commit_records`)
+        instead of a scan of their own."""
         self._served_log()
         q = self._prepare(query)
         min_seq = self._resume_seq(left_off, as_of)
-        df = self._records(q, min_seq, as_of)
-        if q.limit > 0:
-            rows = _order_limit(df, F.col("seq").asc(), q.limit).collect()
+        rows = self._commit_records(query, min_seq, as_of)
+        if rows is not None:
+            if q.limit > 0:
+                rows = rows[: q.limit]
         else:
-            rows = df.collect()
-            rows.sort(key=lambda r: r[0])
+            df = self._records([q], min_seq, as_of)
+            if q.limit > 0:
+                rows = _order_limit(df, F.col("seq").asc(), q.limit).collect()
+            else:
+                rows = df.collect()
+                rows.sort(key=lambda r: r[0])
         meta = self.metadata()
         # the seq before the first candidate
         prev = -1 if min_seq is None else min_seq - 1
@@ -1055,6 +1192,90 @@ class BasenineDB:
             )
             prev = seq
         return rows, frames
+
+    def _commit_records(
+        self, query: str, min_seq: Optional[int], max_seq: Optional[int]
+    ) -> Optional[list]:
+        """A follower's sorted ``(seq, value)`` records in ``[min_seq,
+        max_seq]`` from the commit reader, or None when the follower
+        must scan on its own: its range is not the latest commit's (a
+        first poll, or a follower that missed commits), or its filter
+        is not in the shared scan (it needs the row backend, fails to
+        compile, or was registered after the scan began).
+
+        The first follower to ask for a commit's range runs the scan
+        (:meth:`_scan_commit`); the others wait for it and take their
+        records.  The records are dropped once every follower they
+        served has taken them; the scan itself when the next commit's
+        scan begins, so a late follower of its range never re-runs it."""
+        window = (min_seq, max_seq)
+        with self._commit:
+            scan = self._commit_scan
+            owner = scan is None or scan.window != window
+            if owner:
+                latest = (self._commit_from, self._committed_total - 1)
+                if window != latest or query not in self._followers:
+                    return None
+                scan = self._commit_scan = _CommitScan(
+                    window, Counter(self._followers), self._commit_version
+                )
+        if owner:
+            try:
+                self._scan_commit(scan)
+            finally:
+                scan.done.set()
+        else:
+            scan.done.wait()
+        with self._commit:
+            rows = scan.rows.get(query)
+            if rows is not None:
+                scan.left -= 1
+                if scan.left <= 0:
+                    scan.rows.clear()
+        return rows
+
+    def _scan_commit(self, scan: _CommitScan) -> None:
+        """Fill ``scan.rows`` for every registered filter text that
+        compiles, with one Spark job over the files of its window (a
+        directory scan with a ``seq`` range when the log does not know
+        them, ``DocumentLog.files``).  A text that fails to prepare or
+        compile is left out, and so is every text when the scan fails:
+        those followers scan on their own and report their own
+        errors."""
+        served = []
+        for text in scan.texts:
+            try:
+                q = self._prepare(text)
+                schema = None if q.expr is None else self._view_schema()
+                if not self._match(q, schema)[1]:
+                    served.append((text, q))
+            except Exception:  # noqa: BLE001 — its follower reports it
+                continue
+        if not served:
+            return
+        lo, hi = scan.window
+        files = self._log.files(lo, hi)
+        if files is not None:
+            # no seq predicate: every commit's scan is then the same
+            # plan, and its generated code is compiled once
+            lo = hi = None
+        try:
+            df = self._records([q for _, q in served], lo, hi, files=files)
+            with job_group(
+                self.spark.sparkContext,
+                f"bn-commit-{scan.version}",
+                f"commit v={scan.version} filters={len(served)}",
+            ):
+                got = df.collect()
+        except Exception:  # noqa: BLE001 — each follower re-runs alone
+            return
+        got.sort(key=lambda r: r[0])
+        one = len(served) == 1  # then every row is the one query's
+        for i, (text, _) in enumerate(served):
+            scan.rows[text] = [
+                _Record(r[0], r[1]) for r in got if one or r[2][i]
+            ]
+        scan.left = sum(scan.texts[text] for text, _ in served)
 
     def single(self, record_id, query: str = "") -> Optional[dict]:
         """/single (M2): one record by id; the query only matters for
@@ -1209,7 +1430,9 @@ class BasenineDB:
         # a log with no live committed records has nothing to scan:
         # its page is the trailing record-less noMoreData frame
         if last_seq >= first_seq:
-            df = self._records(q, *_fetch_range(base, direction, committed))
+            df = self._records(
+                [q], *_fetch_range(base, direction, committed)
+            )
             order = _fetch_order("seq", direction)
             rows = df.orderBy(order).limit(limit).collect()
         meta = self.metadata()

@@ -142,7 +142,9 @@ class TailQuery:
             )
             db._typed_schema = finalize_type(db._schema_acc)
         # the same (seq, value) records QUERY serves, from this batch
-        rows = db._records(self.prepared, min_seq=self.min_seq, batch=batch_df)
+        rows = db._records(
+            [self.prepared], min_seq=self.min_seq, batch=batch_df
+        )
         rows = sorted(rows.collect())
         if self.frame_cadence == "scanned":
             self._emit_scanned(batch_df, rows)

@@ -3,6 +3,10 @@ a committed batch (written, and its keys merged into the typed schema),
 then scans only up to the committed total — no poll while idle, no
 read of a batch whose schema is not merged yet."""
 
+import json
+import logging
+import socket
+import threading
 import time
 
 import pytest
@@ -289,3 +293,330 @@ def test_single_of_an_uncommitted_record_is_out_of_range(db, slow_commit):
         )
     finally:
         server.stop()
+
+
+# -- the commit reader: one shared scan per commit ----------------------
+
+
+class _Reader:
+    """One QUERY connection whose raw wire lines a thread collects."""
+
+    def __init__(self, server, query: str, left_off: str = ""):
+        self.client = bn.BasenineClient(server.host, server.port, timeout=120)
+        for line in ("/query", left_off, query):
+            self.client.send_text(line)
+        self.lines: list[str] = []
+        self.thread = threading.Thread(target=self._run, daemon=True)
+        self.thread.start()
+
+    def _run(self) -> None:
+        while True:
+            try:
+                line = self.client._read_line()
+            except (TimeoutError, OSError):
+                return
+            if line is None:
+                return
+            self.lines.append(line)
+
+    def records(self) -> list[str]:
+        return [x for x in self.lines if not x.startswith("/metadata ")]
+
+    def close(self) -> None:
+        try:
+            self.client.sock.shutdown(socket.SHUT_RDWR)
+        except OSError:
+            pass
+        self.client.close()
+        self.thread.join(10)
+
+
+def _doc(i: int) -> dict:
+    return {"k": i, "s": "s%d" % i, "m": {"q": i % 3}}
+
+
+def _stored(i: int, **override) -> str:
+    return json.dumps(
+        dict(_doc(i), **override, id=index_to_id(i)), separators=(",", ":")
+    )
+
+
+# name -> (BFL, predicate over _doc(i), the record the wire sends)
+FOLLOWERS = {
+    "slow": ("k > 2", lambda d: d["k"] > 2, _stored),
+    "all": ("", lambda d: True, _stored),
+    "typed": ("m.q == 1", lambda d: d["m"]["q"] == 1, _stored),
+    "helper": (
+        's.startsWith("s1")', lambda d: d["s"].startswith("s1"), _stored
+    ),
+    "redact": (
+        'm.q != 1 and redact("s")',
+        lambda d: d["m"]["q"] != 1,
+        lambda i: _stored(i, s="[REDACTED]"),
+    ),
+}
+
+
+def _insert(db, lo: int, hi: int) -> None:
+    db.insert_json([json.dumps(_doc(i)) for i in range(lo, hi)])
+
+
+def _follow_commits(db) -> dict[str, list[str]]:
+    """Followers on every filter of ``FOLLOWERS`` over ten preloaded
+    records, then five 4-record commits, each one polled by every
+    follower before the next.  The ``slow`` follower's socket stalls
+    after commit 1 and resumes after commit 4, so its next poll starts
+    behind the frontier.  Returns each follower's wire lines."""
+    _insert(db, 0, 10)
+    polls = _count_polls(db)
+    server = BasenineServer(db).start()
+    readers = {}
+    try:
+        readers["slow"] = _Reader(server, FOLLOWERS["slow"][0])
+        assert _wait_until(lambda: len(server._conns) == 1, 10)
+        slow_conn = server._conns[0]
+        for name, (query, _, _) in FOLLOWERS.items():
+            if name != "slow":
+                readers[name] = _Reader(server, query)
+        assert _wait_until(lambda: len(polls) == 5, 60)
+        gate = threading.Event()
+        send = server._send
+
+        def stalled(conn, text):
+            if conn is slow_conn:
+                assert gate.wait(60)
+            return send(conn, text)
+
+        server._send = stalled
+        n = 10
+        for commit, followers in enumerate((5, 4, 4, 4, 5), start=1):
+            before = len(polls)
+            _insert(db, n, n + 4)
+            n += 4
+            assert _wait_until(lambda: len(polls) == before + followers, 60)
+            if commit == 4:
+                gate.set()  # the slow socket drains; it catches up
+                assert _wait_until(lambda: len(polls) == before + 5, 60)
+
+        def expected(name):
+            _, keep, wire = FOLLOWERS[name]
+            return [wire(i) for i in range(n) if keep(_doc(i))]
+
+        for name, reader in readers.items():
+            assert _wait_until(
+                lambda: len(reader.records()) >= len(expected(name)), 30
+            ), name
+        time.sleep(0.3)  # nothing more arrives
+        for name, reader in readers.items():
+            assert reader.records() == expected(name), name
+        return {name: reader.lines for name, reader in readers.items()}
+    finally:
+        for reader in readers.values():
+            reader.close()
+        server.stop()
+
+
+def test_followers_get_their_streams_from_the_commit_reader(spark, tmp_path):
+    """Every follower gets exactly its oracle stream, and every wire line
+    (records and ``/metadata`` frames) equals what per-follower scans
+    send.  A follower behind the frontier takes no shared result: the
+    slow follower's catch-up poll must read the commits it missed."""
+    shared = BasenineDB(spark, path=str(tmp_path / "shared"))
+    scans = []
+    scan_commit = shared._scan_commit
+
+    def counted(scan):
+        scans.append(scan.window)
+        scan_commit(scan)
+
+    shared._scan_commit = counted
+    got = _follow_commits(shared)
+    # one shared scan per commit, each over that commit's records only
+    assert scans == [(10 + 4 * c, 13 + 4 * c) for c in range(5)]
+
+    alone = BasenineDB(spark, path=str(tmp_path / "alone"))
+    alone._commit_records = lambda *args: None
+    assert _follow_commits(alone) == got
+
+
+def _marker_job(sc) -> int:
+    """The id of one tiny job run now."""
+    from basenine_spark.engine.db import job_group
+
+    with job_group(sc, "test-marker", "marker"):
+        sc.parallelize([0], 1).count()
+    return max(sc.statusTracker().getJobIdsForGroup("test-marker"))
+
+
+@pytest.mark.parametrize("followers", [1, 8, 64])
+def test_one_spark_job_per_commit(spark, db, followers):
+    """However many compiled-filter followers there are, a commit costs
+    one Spark job: the commit reader's, tagged with its version."""
+    assert not spark.streams.active  # every job in the window is ours
+    sc = spark.sparkContext
+    batch = ['{"k":%d}' % i for i in range(64)]
+    db.insert_json(batch)
+    polls = _count_polls(db)
+    server = BasenineServer(db).start()
+    readers = []
+    try:
+        start = _marker_job(sc)
+        readers = [_Reader(server, f"k >= {i}") for i in range(followers)]
+        assert _wait_until(lambda: len(polls) == followers, 120)
+        # each first poll is its connection's own scan, in its job group
+        first = _marker_job(sc)
+        own = [
+            j
+            for cid in range(1, followers + 1)
+            for j in sc.statusTracker().getJobIdsForGroup(f"bn-conn-{cid}")
+            if start < j < first
+        ]
+        assert len(own) == first - start - 1 == followers
+        for _ in range(3):
+            before = _marker_job(sc)
+            n0 = len(polls)
+            db.insert_json(batch)
+            assert _wait_until(lambda: len(polls) == n0 + followers, 60)
+            after = _marker_job(sc)
+            group = f"bn-commit-{db._commit_version}"
+            tagged = [
+                j
+                for j in sc.statusTracker().getJobIdsForGroup(group)
+                if before < j < after
+            ]
+            assert len(tagged) == 1
+            assert after - before - 1 == 1
+        assert _wait_until(
+            lambda: all(
+                len(r.records()) == 4 * (64 - i) for i, r in enumerate(readers)
+            ),
+            60,
+        )
+    finally:
+        for reader in readers:
+            reader.close()
+        server.stop()
+
+
+def test_a_failing_filter_costs_only_its_follower(db, monkeypatch):
+    """A filter that fails to compile in the shared scan is left out of
+    it: its follower gets its own error, the others their records."""
+    from basenine_spark.engine import db as db_module
+
+    db.insert_json(['{"k":1}'])
+    polls = _count_polls(db)
+    server = BasenineServer(db).start()
+    readers = {}
+    try:
+        for query in ("k >= 0", "", "k == 7"):
+            readers[query] = _Reader(server, query)
+        assert _wait_until(lambda: len(polls) == 3, 60)
+        compile_filter = db_module.compile_filter
+
+        def failing(q, schema):
+            if q.text == "k == 7":
+                raise RuntimeError("cannot compile")
+            return compile_filter(q, schema)
+
+        monkeypatch.setattr(db_module, "compile_filter", failing)
+        # a new key: every filter compiles again against the new schema
+        db.insert_json(['{"k":7,"new":1}'])
+        want = [
+            '{"k":1,"id":"%s"}' % index_to_id(0),
+            '{"k":7,"new":1,"id":"%s"}' % index_to_id(1),
+        ]
+        for query in ("k >= 0", ""):
+            reader = readers[query]
+            assert _wait_until(lambda: reader.records() == want, 30), query
+        bad = readers["k == 7"]
+        assert _wait_until(lambda: bad.records(), 30)
+        assert bad.records() == ["Error: cannot compile"]
+    finally:
+        for reader in readers.values():
+            reader.close()
+        server.stop()
+
+
+def test_case_colliding_keys_take_the_row_backend(db):
+    """Keys that differ only in case (Spark resolves columns
+    case-insensitively) no longer fail every filtered read: the row
+    backend serves the filter, for QUERY, FETCH and followers."""
+    db.insert_json(['{"b":3}'])
+    server = BasenineServer(db).start()
+    readers = {}
+    try:
+        for query in ("b == 3", ""):
+            readers[query] = _Reader(server, query)
+        db.insert_json(['{"a":1,"A":2}', '{"x":{"k":1,"K":2}}', '{"b":3}'])
+        stored = [
+            '{"b":3,"id":"%s"}' % index_to_id(0),
+            '{"a":1,"A":2,"id":"%s"}' % index_to_id(1),
+            '{"x":{"k":1,"K":2},"id":"%s"}' % index_to_id(2),
+            '{"b":3,"id":"%s"}' % index_to_id(3),
+        ]
+        for query, seqs in (
+            ("b == 3", [0, 3]),
+            ("a == 1", [1]),
+            ("A == 2", [1]),
+            ("x.k == 1", [2]),
+            ("x.K == 2", [2]),
+            ('A == 2 and redact("a")', [1]),
+        ):
+            rows, _ = db.query_with_metadata(query)
+            assert [r[0] for r in rows] == seqs, query
+            rows, _ = db.fetch_with_metadata(0, 1, query, 10)
+            assert [r[0] for r in rows] == seqs, query
+        rows, _ = db.query_with_metadata('A == 2 and redact("a")')
+        redacted = '{"a":"[REDACTED]","A":2,"id":"%s"}' % index_to_id(1)
+        assert rows[0][1] == redacted
+        want = {"b == 3": [stored[0], stored[3]], "": stored}
+        for query, reader in readers.items():
+            assert _wait_until(lambda: reader.records() == want[query], 30)
+    finally:
+        for reader in readers.values():
+            reader.close()
+        server.stop()
+
+
+def test_query_parse_error_is_logged(db, caplog):
+    """A QUERY whose filter does not parse is closed without a reply,
+    as the reference does, and leaves a warning."""
+    db.insert_json(['{"k":1}'])
+    server = BasenineServer(db).start()
+    try:
+        with caplog.at_level(logging.WARNING, logger="basenine_spark.server"):
+            with bn.BasenineClient(server.host, server.port, timeout=10) as c:
+                assert list(c.query("", "k == == 1")) == []
+        (record,) = [
+            r for r in caplog.records if r.name == "basenine_spark.server"
+        ]
+        assert record.levelno == logging.WARNING
+        assert "'k == == 1'" in record.getMessage()
+    finally:
+        server.stop()
+
+
+def test_commit_reader_reads_only_the_commits_file(db):
+    """The shared scan of a commit lists the one file that commit
+    wrote, not the log directory."""
+    for i in range(5):
+        db.insert_json(['{"k":%d}' % i])
+    read = []
+    records = db._records
+
+    def spy(*args, **kwargs):
+        df = records(*args, **kwargs)
+        read.append(df.inputFiles())
+        return df
+
+    db._records = spy
+    with db.following("k >= 0"):
+        db.insert_json(['{"k":9}'])
+        rows, _ = db.query_with_metadata(
+            "k >= 0", left_off=index_to_id(4), as_of=5
+        )
+    assert [r.value for r in rows] == ['{"k":9,"id":"%s"}' % index_to_id(5)]
+    (path,) = db._log.files(5, 5)
+    assert [[f.rsplit("/", 1)[1] for f in files] for files in read] == [
+        [path.rsplit("/", 1)[1]]
+    ]
