@@ -117,10 +117,6 @@ def index_to_id(index: int) -> str:
     return "%024d" % index
 
 
-# compiled filters kept per BasenineDB (``_match``) before the cache is
-# emptied
-MATCH_CACHE = 256
-
 # a served (seq, value) record
 _Record = Row("seq", "value")
 
@@ -224,17 +220,12 @@ def _order_limit(df: DataFrame, order: Column, limit: int) -> DataFrame:
 
 class _CommitScan:
     """One commit's shared follower scan over ``window`` (``[min_seq,
-    max_seq]``): the sorted records each served filter text keeps.
-    ``texts`` counts the followers registered per text when the scan
-    began; ``left`` is how many of them have yet to take their
-    records."""
+    max_seq]``): the sorted records each served filter text keeps, once
+    ``done`` is set."""
 
-    def __init__(self, window: tuple, texts: Counter, version: int):
+    def __init__(self, window: tuple):
         self.window = window
-        self.texts = texts
-        self.version = version
         self.rows: dict[str, list] = {}
-        self.left = 0
         self.done = threading.Event()
 
 
@@ -308,14 +299,15 @@ class BasenineDB:
         self._commit = threading.Condition()
         self._commit_version = 0
         self._committed_total = 0 if log is None else log.total_written
-        # the latest commit's window is [_commit_from, _committed_total)
+        # the latest commit's window is [_commit_from, _committed_total);
+        # _commit_path is the one file holding exactly its records, if
+        # known
         self._commit_from = self._committed_total
-        # QUERY followers' filter texts, and the commit reader's result
-        # (both guarded by _commit)
+        self._commit_path: Optional[str] = None
+        # QUERY followers' filter texts, and the latest commit's shared
+        # scan (both guarded by _commit)
         self._followers: Counter = Counter()
         self._commit_scan: Optional[_CommitScan] = None
-        # query text → (view schema, _match result)
-        self._matches: dict[str, tuple] = {}
         self._mounted_total: Optional[int] = None  # cached count, mounted
         self._latest_cache = None  # cached max natural id, mounted
 
@@ -440,7 +432,7 @@ class BasenineDB:
         ids = log.append(
             docs, insertion_filter_text=flt_text, shred_schema=shred
         )
-        self._commit_schema(batch, shred, first_new_seq)
+        self._commit_schema(batch, shred, first_new_seq, log.last_file)
         return ids
 
     def insert_json_df(self, df, schema_sampling_ratio: float = 1.0) -> int:
@@ -616,11 +608,13 @@ class BasenineDB:
         batch: Optional[T.StructType],
         shred: Optional[T.StructType],
         first_new_seq: int,
+        file: Optional[tuple] = None,
     ) -> None:
         """After an append from seq ``first_new_seq``: merge the batch's
         shape into the running union schema (no invalidation — the
         typed view never re-learns its schema from the data), persist
-        the state, and publish the commit.  ``batch`` None means the
+        the state, and publish the commit with the ``file`` the append
+        wrote (``DocumentLog.last_file``).  ``batch`` None means the
         insertion filter could drop records or rewrite values
         dynamically: the shape is then inferred from the just-appended
         slice, a batch-bounded job pruned by the seq predicate."""
@@ -646,17 +640,27 @@ class BasenineDB:
                 self._schema_acc = merged
                 self._typed_schema = finalize_type(merged)
         self._save_state()
-        self._publish_commit()
+        self._publish_commit(file)
 
-    def _publish_commit(self) -> None:
+    def _publish_commit(self, file: Optional[tuple] = None) -> None:
         """Make every record written so far visible to
         :meth:`wait_commit` callers.  Called only once the records'
         schema is merged: a follower compiling its filter against an
-        older schema would match nothing and resume past them."""
+        older schema would match nothing and resume past them.
+
+        ``file`` (``(min_seq, max_seq, path)``) is kept for the commit
+        reader when it holds exactly the new records.  The previous
+        commit's shared scan is dropped: only a follower at the new
+        frontier can use a shared result."""
         with self._commit:
             self._commit_version += 1
             self._commit_from = self._committed_total
             self._committed_total = self._log.total_written
+            window = (self._commit_from, self._committed_total - 1)
+            self._commit_path = None
+            if file is not None and file[:2] == window:
+                self._commit_path = file[2]
+            self._commit_scan = None
             self._commit.notify_all()
 
     def wait_commit(
@@ -888,8 +892,8 @@ class BasenineDB:
         ``keep`` names two columns that carry each record's ``seq`` and
         stored ``value`` beside the typed ones; ``batch`` (log rows of
         a tail micro-batch) is read in place of the log, via
-        ``from_json``; ``files`` (``DocumentLog.files``) in place of the
-        log directory.  ``schema`` is the view schema a caller compiled
+        ``from_json``; ``files`` (the commit reader's one file) in
+        place of the log directory.  ``schema`` is the view schema a caller compiled
         its filters against (default: the current one)."""
         if schema is None:
             schema = self._view_schema()
@@ -1052,23 +1056,17 @@ class BasenineDB:
         every record); otherwise ``(pre-filter or None, True)`` — the
         row backend decides, after the compilable conjuncts.  A schema
         whose names collide case-insensitively always takes the row
-        backend.  Compiled once per query text and schema."""
+        backend.  Compiled on every call: time helpers (``now()``,
+        ``seconds(n)``…) fold the clock of the compile into the
+        predicate."""
         if q.expr is None:
             return None, False
-        hit = self._matches.get(q.text)
-        if hit is not None and hit[0] is schema:
-            return hit[1]
         if _case_collision(schema):
-            match = None, True
-        else:
-            try:
-                match = compile_filter(q, schema).predicate, False
-            except UnsupportedBFL:
-                match = _pushdown(q, schema), True
-        if len(self._matches) >= MATCH_CACHE:
-            self._matches.clear()
-        self._matches[q.text] = schema, match
-        return match
+            return None, True
+        try:
+            return compile_filter(q, schema).predicate, False
+        except UnsupportedBFL:
+            return _pushdown(q, schema), True
 
     def _records(
         self,
@@ -1077,6 +1075,7 @@ class BasenineDB:
         max_seq: Optional[int] = None,
         batch: Optional[DataFrame] = None,
         files: Optional[list[str]] = None,
+        compiled: Optional[tuple] = None,
     ) -> DataFrame:
         """The log records in ``[min_seq, max_seq]`` that any query of
         ``qs`` keeps, unordered, as ``(seq, value)``; several queries
@@ -1101,14 +1100,18 @@ class BasenineDB:
           over the stored documents.  Such a query is read alone.
 
         ``batch`` (log rows of a tail micro-batch) is read in place of
-        the log, ``files`` in place of the log directory."""
+        the log, ``files`` in place of the log directory.  ``compiled``
+        is ``(view schema, [_match result per query])`` when the caller
+        has already compiled ``qs``."""
         log = self._served_log()
         if batch is None and log.live_count == 0:
             raise ValueError("no data ingested")
-        schema = None
-        if any(q.expr is not None for q in qs):
-            schema = self._view_schema()
-        matches = [self._match(q, schema) for q in qs]
+        if compiled is None:
+            schema = None
+            if any(q.expr is not None for q in qs):
+                schema = self._view_schema()
+            compiled = schema, [self._match(q, schema) for q in qs]
+        schema, matches = compiled
         exact = any(ex for _, ex in matches)
         if exact and len(qs) > 1:
             raise ValueError("a row-backend query is read alone")
@@ -1203,11 +1206,10 @@ class BasenineDB:
         is not in the shared scan (it needs the row backend, fails to
         compile, or was registered after the scan began).
 
-        The first follower to ask for a commit's range runs the scan
-        (:meth:`_scan_commit`); the others wait for it and take their
-        records.  The records are dropped once every follower they
-        served has taken them; the scan itself when the next commit's
-        scan begins, so a late follower of its range never re-runs it."""
+        The first follower to ask for the latest commit's range runs
+        the scan (:meth:`_scan_commit`); the others wait for it and
+        take their records.  The next commit drops the result
+        (:meth:`_publish_commit`)."""
         window = (min_seq, max_seq)
         with self._commit:
             scan = self._commit_scan
@@ -1216,66 +1218,73 @@ class BasenineDB:
                 latest = (self._commit_from, self._committed_total - 1)
                 if window != latest or query not in self._followers:
                     return None
-                scan = self._commit_scan = _CommitScan(
-                    window, Counter(self._followers), self._commit_version
-                )
+                scan = self._commit_scan = _CommitScan(window)
+                texts = list(self._followers)
+                path, version = self._commit_path, self._commit_version
         if owner:
             try:
-                self._scan_commit(scan)
+                self._scan_commit(scan, texts, path, version)
             finally:
                 scan.done.set()
         else:
             scan.done.wait()
-        with self._commit:
-            rows = scan.rows.get(query)
-            if rows is not None:
-                scan.left -= 1
-                if scan.left <= 0:
-                    scan.rows.clear()
-        return rows
+        return scan.rows.get(query)
 
-    def _scan_commit(self, scan: _CommitScan) -> None:
-        """Fill ``scan.rows`` for every registered filter text that
-        compiles, with one Spark job over the files of its window (a
-        directory scan with a ``seq`` range when the log does not know
-        them, ``DocumentLog.files``).  A text that fails to prepare or
-        compile is left out, and so is every text when the scan fails:
-        those followers scan on their own and report their own
-        errors."""
-        served = []
-        for text in scan.texts:
+    def _scan_commit(
+        self,
+        scan: _CommitScan,
+        texts: list[str],
+        path: Optional[str],
+        version: int,
+    ) -> None:
+        """Fill ``scan.rows`` for every filter text of ``texts`` that
+        compiles, with one Spark job over ``path``, the one file of the
+        commit's window (with no ``seq`` predicate, every commit's
+        scan is the same plan, and its generated code is compiled
+        once).  The job scans the log directory with the window's
+        ``seq`` range when the file is not known or cannot be read
+        (compaction or retention removed it).  A text that fails to
+        prepare or compile is left out, and so is every text when the
+        scan fails: those followers scan on their own and report their
+        own errors."""
+        served, schema = [], None
+        for text in texts:
             try:
                 q = self._prepare(text)
-                schema = None if q.expr is None else self._view_schema()
-                if not self._match(q, schema)[1]:
-                    served.append((text, q))
+                if q.expr is not None and schema is None:
+                    schema = self._view_schema()
+                match = self._match(q, schema)
+                if not match[1]:
+                    served.append((text, q, match))
             except Exception:  # noqa: BLE001 — its follower reports it
                 continue
         if not served:
             return
-        lo, hi = scan.window
-        files = self._log.files(lo, hi)
-        if files is not None:
-            # no seq predicate: every commit's scan is then the same
-            # plan, and its generated code is compiled once
-            lo = hi = None
-        try:
-            df = self._records([q for _, q in served], lo, hi, files=files)
-            with job_group(
-                self.spark.sparkContext,
-                f"bn-commit-{scan.version}",
-                f"commit v={scan.version} filters={len(served)}",
-            ):
-                got = df.collect()
-        except Exception:  # noqa: BLE001 — each follower re-runs alone
+        qs = [q for _, q, _ in served]
+        compiled = schema, [match for _, _, match in served]
+        reads = [] if path is None else [((None, None), [path])]
+        reads.append((scan.window, None))
+        got = None
+        for (lo, hi), files in reads:
+            try:
+                df = self._records(qs, lo, hi, files=files, compiled=compiled)
+                with job_group(
+                    self.spark.sparkContext,
+                    f"bn-commit-{version}",
+                    f"commit v={version} filters={len(qs)}",
+                ):
+                    got = df.collect()
+                break
+            except Exception:  # noqa: BLE001 — each follower re-runs alone
+                continue
+        if got is None:
             return
         got.sort(key=lambda r: r[0])
-        one = len(served) == 1  # then every row is the one query's
-        for i, (text, _) in enumerate(served):
+        one = len(qs) == 1  # then every row is the one query's
+        for i, (text, _, _) in enumerate(served):
             scan.rows[text] = [
                 _Record(r[0], r[1]) for r in got if one or r[2][i]
             ]
-        scan.left = sum(scan.texts[text] for text, _ in served)
 
     def single(self, record_id, query: str = "") -> Optional[dict]:
         """/single (M2): one record by id; the query only matters for

@@ -10,9 +10,7 @@ length-prefixed log writer      Parquet append (``native.go:313-333``)
 ``data_%09d.db`` partitions     ``part=N`` directory partitions
   (``native.go:951-964``)         (rotated by byte size)
 offsets/partitionRefs index     Parquet row-group min-max stats on
-  (``native.go:66-81``)           ``seq``, and the in-memory list of
-                                 the files this process committed
-                                 (``files``); a directory scan still
+  (``native.go:66-81``)           ``seq``; a directory scan still
                                  lists every file of the log, the
                                  stats prune only after the listing
 gob core dump + restore         the log IS the state: ``seq`` max and
@@ -37,20 +35,17 @@ counter.
 
 A directory scan (:meth:`DocumentLog.scan` without files) lists and
 plans every file of the log; its ``seq`` range predicates then skip
-row groups by their min/max stats.  The log also remembers each file
-it committed itself (:meth:`DocumentLog.files`), so the commit reader
-of ``BasenineDB`` reads only the files a commit wrote.
+row groups by their min/max stats.  A wire batch's one file is known
+by its path (:attr:`DocumentLog.last_file`), so the commit reader of
+``BasenineDB`` reads only the file a commit wrote.
 """
 
 from __future__ import annotations
 
-import bisect
-import itertools
 import json
 import math
 import os
 import shutil
-import threading
 import uuid
 from typing import Optional
 
@@ -119,10 +114,9 @@ class DocumentLog:
         self.retention_bytes = 0
         if os.path.isdir(path) and self._has_data():
             self._restore()
-        # (min_seq, max_seq, path) of files this process committed by
-        # rename, in seq order
-        self._lock = threading.Lock()
-        self._files: list[tuple[int, int, str]] = []
+        # (min_seq, max_seq, path) of the file the last append
+        # committed by rename; None when it wrote no such file
+        self.last_file: Optional[tuple[int, int, str]] = None
 
     # -- persistence / restore (S8) ------------------------------------
 
@@ -261,6 +255,7 @@ class DocumentLog:
             doc_tss.append(_doc_ts(obj.get("timestamp")))
             values.append(json.dumps(obj, separators=(",", ":")))
 
+        self.last_file = None
         if written:
             part = self._part
             tbl = pa.table(
@@ -278,8 +273,7 @@ class DocumentLog:
                         "doc", pa.array(objs, to_arrow_type(shred_schema))
                     )
                 path = self._commit_file(out, part)
-                with self._lock:
-                    self._files.append((base, base + written - 1, path))
+                self.last_file = base, base + written - 1, path
             except (pa.ArrowException, UnicodeEncodeError):
                 # a value Arrow refuses (a lone-surrogate string fails
                 # to encode before Arrow sees it)
@@ -288,7 +282,6 @@ class DocumentLog:
                     df.withColumn("part", F.lit(part).cast("long")),
                     shred_schema,
                 )
-                self._forget_files()
             batch_ts = max((t for t in doc_tss if t is not None), default=None)
             if batch_ts is not None:
                 self._part_ts[part] = max(
@@ -322,12 +315,6 @@ class DocumentLog:
             if os.path.exists(tmp):
                 os.remove(tmp)
         return os.path.join(pdir, name)
-
-    def _forget_files(self) -> None:
-        """Empty the list :meth:`files` answers from: Spark wrote or
-        rewrote files under names only a directory listing finds."""
-        with self._lock:
-            self._files.clear()
 
     def _write_spark(
         self, df: DataFrame, shred_schema: Optional[T.StructType]
@@ -516,7 +503,6 @@ class DocumentLog:
                     stamp, "seq long, id string, value string, doc_ts long"
                 ).withColumn("part", F.lit(part).cast("long"))
                 self._write_spark(out, shred_schema)
-                self._forget_files()
         finally:
             work.unpersist()
 
@@ -605,12 +591,7 @@ class DocumentLog:
             ts = t if t is not None else self._part_ts.get(oldest)
             if ts is not None:
                 self.truncated_timestamp = int(ts) + 1
-            pdir = os.path.join(self.path, f"part={oldest}")
-            shutil.rmtree(pdir)
-            with self._lock:
-                self._files = [
-                    f for f in self._files if os.path.dirname(f[2]) != pdir
-                ]
+            shutil.rmtree(os.path.join(self.path, f"part={oldest}"))
             self._part_ts.pop(oldest, None)
             parts = self._live_parts()
 
@@ -624,31 +605,13 @@ class DocumentLog:
         """The log as a DataFrame read with ``schema``.  Without
         ``files`` it is a directory scan: Spark lists and plans every
         file of the log, and ``seq`` range predicates skip row groups
-        by their min/max stats only after that.  With ``files`` (from
-        :meth:`files`, as the commit reader passes them) only those
-        files are read."""
+        by their min/max stats only after that.  With ``files`` (the
+        commit reader passes :attr:`last_file`'s) only those files are
+        read."""
         reader = self.spark.read.schema(schema)
         if files is None:
             return reader.parquet(self.path)
         return reader.option("basePath", self.path).parquet(*files)
-
-    def files(self, min_seq: int, max_seq: int) -> Optional[list[str]]:
-        """The files that hold exactly the records ``min_seq..max_seq``
-        (a reader of them needs no ``seq`` predicate), or None when a
-        directory scan must find them: a file there also holds other
-        records, or this process did not commit it by rename (Spark
-        wrote it, or it predates this process or a compaction).  Files
-        that end before ``min_seq`` are forgotten, since the commit
-        reader only moves forward."""
-        with self._lock:
-            files = self._files
-            del files[: bisect.bisect_left(files, min_seq, key=lambda f: f[1])]
-            hit = list(itertools.takewhile(lambda f: f[0] <= max_seq, files))
-        if not hit or hit[0][0] < min_seq or hit[-1][1] > max_seq:
-            return None
-        if sum(hi - lo + 1 for lo, hi, _ in hit) != max_seq - min_seq + 1:
-            return None  # a record of the range is in no listed file
-        return [p for _, _, p in hit]
 
     # -- counters / ops -------------------------------------------------
 
@@ -711,8 +674,6 @@ class DocumentLog:
             os.rename(tmp, pdir)
             shutil.rmtree(old)
             rewritten += 1
-        if rewritten:
-            self._forget_files()
         return rewritten
 
     def flush(self) -> None:
@@ -720,7 +681,6 @@ class DocumentLog:
         like the reference (offsets reset)."""
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
-        self._forget_files()
         self._count = 0
         self._removed = 0
         self._part = 0

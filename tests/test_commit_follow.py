@@ -425,9 +425,9 @@ def test_followers_get_their_streams_from_the_commit_reader(spark, tmp_path):
     scans = []
     scan_commit = shared._scan_commit
 
-    def counted(scan):
+    def counted(scan, *args):
         scans.append(scan.window)
-        scan_commit(scan)
+        scan_commit(scan, *args)
 
     shared._scan_commit = counted
     got = _follow_commits(shared)
@@ -519,7 +519,7 @@ def test_a_failing_filter_costs_only_its_follower(db, monkeypatch):
             return compile_filter(q, schema)
 
         monkeypatch.setattr(db_module, "compile_filter", failing)
-        # a new key: every filter compiles again against the new schema
+        # every filter compiles again for each commit's scan
         db.insert_json(['{"k":7,"new":1}'])
         want = [
             '{"k":1,"id":"%s"}' % index_to_id(0),
@@ -616,7 +616,53 @@ def test_commit_reader_reads_only_the_commits_file(db):
             "k >= 0", left_off=index_to_id(4), as_of=5
         )
     assert [r.value for r in rows] == ['{"k":9,"id":"%s"}' % index_to_id(5)]
-    (path,) = db._log.files(5, 5)
+    path = db._log.last_file[2]
     assert [[f.rsplit("/", 1)[1] for f in files] for files in read] == [
         [path.rsplit("/", 1)[1]]
     ]
+
+
+def test_commit_reader_falls_back_when_its_file_is_gone(db):
+    """When compaction has rewritten the commit's file, the shared scan
+    reads the commit's range from the log directory instead."""
+    import os
+
+    for i in range(5):
+        db.insert_json(['{"k":%d}' % i])
+    with db.following("k >= 0"):
+        db.insert_json(['{"k":9}'])
+        path = db._log.last_file[2]
+        assert db.compact() == 1
+        assert not os.path.exists(path)
+        rows, _ = db.query_with_metadata(
+            "k >= 0", left_off=index_to_id(4), as_of=5
+        )
+        assert db._commit_scan.rows["k >= 0"] == rows
+    assert [r.value for r in rows] == ['{"k":9,"id":"%s"}' % index_to_id(5)]
+
+
+def test_time_helpers_read_the_clock_of_each_request(db, monkeypatch):
+    """``seconds(n)`` is folded at compile time, so every FETCH and
+    every commit's shared scan compiles again: an hour later the same
+    filter no longer keeps a record a minute old."""
+    from types import SimpleNamespace
+
+    from basenine_spark.bfl import compiler
+
+    clock = [1_700_000_000.0]
+    monkeypatch.setattr(compiler, "_time", SimpleNamespace(time=lambda: clock[0]))
+    recent = "timestamp > seconds(-60)"
+    db.insert_json(['{"timestamp":%d}' % (clock[0] * 1000 - 30_000)])
+    rows, _ = db.fetch_with_metadata(0, 1, recent, 10)
+    assert [r[0] for r in rows] == [0]
+    with db.following(recent):
+        clock[0] += 3600
+        rows, _ = db.fetch_with_metadata(0, 1, recent, 10)
+        assert rows == []
+        db.insert_json(['{"timestamp":%d}' % (clock[0] * 1000 - 90_000)])
+        db.insert_json(['{"timestamp":%d}' % (clock[0] * 1000 - 30_000)])
+        rows, _ = db.query_with_metadata(
+            recent, left_off=index_to_id(1), as_of=2
+        )
+        assert db._commit_scan.rows[recent] == rows
+    assert [r[0] for r in rows] == [2]

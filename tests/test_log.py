@@ -309,54 +309,23 @@ def test_timestamp_outside_int64_is_stored_with_null_doc_ts(spark, log_path, wri
     assert db.single_json("%024d" % 0, "") == (0, expected[0])
 
 
-def test_files_name_only_this_process_wire_commits(spark, log_path):
-    """``DocumentLog.files`` answers a seq range with the files holding
-    exactly its records, and only for files this process committed
-    by rename: a Spark-written batch, a file from before boot or one
-    rewritten by compaction sends the reader to a directory scan, and
-    so does a range before one already asked for."""
+def test_last_file_names_the_wire_batch_file(spark, log_path):
+    """``DocumentLog.last_file`` is ``(min_seq, max_seq, path)`` of the
+    one file the last ``append`` committed by rename, and None when the
+    append wrote no such file (nothing kept, or Spark wrote it)."""
+    import os
+
     db = BasenineDB(spark, path=log_path)
     log = db._log
     db.insert_json(['{"k":0}', '{"k":1}'])
+    lo, hi, path = log.last_file
+    assert (lo, hi) == (0, 1) and os.path.isfile(path)
+    assert [r["seq"] for r in log.scan([path]).collect()] == [0, 1]
     db.insert_json(['{"k":2}'])
-    (first,) = log.files(0, 1)
-    assert log.files(1, 2) is None  # the first file also holds seq 0
-    (second,) = log.files(2, 2)
-    assert second != first
-    assert log.files(0, 2) is None  # forgotten: readers move forward
-    assert log.files(2, 3) is None  # seq 3 is not written
-    db.insert_json_df(spark.createDataFrame([('{"k":3}',)], ["value"]))
-    assert log.files(3, 3) is None
-    db.insert_json(['{"k":4}'])
-    db.insert_json(['{"k":5}'])
-    assert log.files(3, 4) is None
-    assert len(set(log.files(4, 5))) == 2
-    assert DocumentLog(spark, log_path).files(4, 5) is None
-    assert db.compact() == 1
-    assert log.files(4, 5) is None
-    db.flush()
-    db.insert_json(['{"k":"after"}'])
-    (path,) = log.files(0, 0)
-    assert path.startswith(log_path)
-
-
-def test_rotation_forgets_the_files_it_deletes(spark, log_path):
-    import os
-    import random
-
-    log = DocumentLog(spark, log_path)
-    log.set_retention_bytes(40_000)
-    rnd = random.Random(42)
-    for batch in range(6):
-        log.append(
-            [
-                json.dumps(
-                    {"i": batch * 50 + i, "pad": "%0512x" % rnd.getrandbits(2048)}
-                )
-                for i in range(50)
-            ]
-        )
-    assert len(log._live_parts()) <= 2 and log.live_count < 300
-    assert log.files(0, 49) is None
-    assert all(os.path.exists(p) for _, _, p in log._files)
-    assert log.files(250, 299) is not None
+    assert log.last_file[:2] == (2, 2) and log.last_file[2] != path
+    log.append(['{"k":3}'], insertion_filter_text="k == 0")
+    assert log.last_file is None
+    # a mixed-kind leaf: Arrow refuses the batch and Spark writes it
+    db.insert_json(['{"v":1}', '{"v":"s"}'])
+    assert log.last_file is None
+    assert log.total_written == 5
