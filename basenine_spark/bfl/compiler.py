@@ -1221,6 +1221,9 @@ def compile_filter(
     v = comp.compile(q.expr)
     if v.collapse is True:
         return Compiled(predicate=_false(), limit=q.limit)
+    if v.collapse is False and v.is_lit and _lit_truthy(v):
+        # keeps every record (``limit(N)`` alone, ``true``): no filter
+        return Compiled(predicate=None, limit=q.limit)
     pred = truthy_col(v)
     if v.collapse is not False:
         pred = F.when(v.collapse, _false()).otherwise(pred)

@@ -33,6 +33,11 @@ Scale notes (100 TB design):
   and whole-stage codegen; the row backend (redact / dynamic shapes) is
   an Arrow-batched ``mapInPandas`` — still embarrassingly parallel,
   no shuffle anywhere on the filter path.
+* The served reads (QUERY, FETCH, SINGLE over the wire) send stored
+  documents.  One that needs no typed column reads the log's files on
+  the driver a page at a time (``DocumentLog.read_pages``), with no
+  Spark job; a compiled filter is one Spark scan.  Their row backend
+  runs on the driver, over the records that read returns.
 * ``fetch(direction=-1)`` is top-K by id (``orderBy(desc).limit``) which
   Spark executes as TakeOrderedAndProject — no global sort.
 """
@@ -47,9 +52,10 @@ import weakref
 from collections import Counter
 from contextlib import contextmanager
 from dataclasses import dataclass
+from operator import itemgetter
 from typing import Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,7 +73,7 @@ from ..bfl.compiler import (
     split_conjuncts,
 )
 from ..bfl.macros import add_macro as _add_macro
-from .log import DocumentLog
+from .log import DocumentLog, Record
 from .schema import (
     common_leaves_unchanged,
     widen_to_merged,
@@ -115,10 +121,6 @@ def _jsonable(v):
 def index_to_id(index: int) -> str:
     """Reference ``IndexToID`` (helpers.go:15-17)."""
     return "%024d" % index
-
-
-# a served (seq, value) record
-_Record = Row("seq", "value")
 
 
 @contextmanager
@@ -216,6 +218,28 @@ def _order_limit(df: DataFrame, order: Column, limit: int) -> DataFrame:
     then, one job and no global sort."""
     df = df.orderBy(order)
     return df.limit(limit) if limit > 0 else df
+
+
+def _collected_pages(
+    df: DataFrame, limit: int, descending: bool
+) -> Iterator[list[Record]]:
+    """The ``(seq, value)`` rows of ``df`` as pages of :class:`Record`
+    sorted by seq (descending with ``descending``): all of them as one
+    page when ``limit`` is 0, else pages of at most ``limit`` rows, each
+    the TakeOrderedAndProject job of the rows past the previous page,
+    until a page comes back short.  A reader that stops once it has
+    ``limit`` records runs one job, and one that drops rows (the row
+    backend) holds one page at a time."""
+    order = _fetch_order("seq", -1 if descending else 1)
+    while True:
+        page = _order_limit(df, order, limit) if limit > 0 else df
+        rows = [Record(r[0], r[1]) for r in page.collect()]
+        rows.sort(key=itemgetter(0), reverse=descending)
+        yield rows
+        if limit <= 0 or len(rows) < limit:
+            return
+        last = rows[-1][0]
+        df = df.filter(F.col("seq") < last if descending else F.col("seq") > last)
 
 
 class _CommitScan:
@@ -805,23 +829,14 @@ class BasenineDB:
             df = df.filter(compiled.predicate)
         return df
 
-    def _row_backend(
-        self, df: DataFrame, q: Query, stored: bool = False
-    ) -> DataFrame:
-        """Arrow-batched exact evaluator: run :func:`pyeval.eval_doc`
-        (collapse/redact exact) on each row's JSON document and return
-        the surviving ones.
-
-        Typed rows (``stored=False``) are serialized to their document
-        first; the output is ``(id, value)`` with ``value`` the
-        evaluated document.  Log records (``stored=True``: ``(seq,
-        value)``, ``value`` the stored document) give ``(seq, value)``
-        with ``value`` unchanged when the query cannot redact, else the
-        redacted object in the encoding the log stores."""
-        key = "seq" if stored else self.id_col
-        schema = f"`{key}` {'long' if stored else 'string'}, value string"
+    def _row_backend(self, df: DataFrame, q: Query) -> DataFrame:
+        """Arrow-batched exact evaluator for the typed API: serialize
+        each typed row to its JSON document, run
+        :func:`pyeval.eval_doc` (collapse/redact exact) on it and return
+        the surviving ones as ``(id, value)``, ``value`` the evaluated
+        document."""
+        key = self.id_col
         query_text = q.text
-        keep = stored and collect_redact_taints(q.expr) == []
 
         def run(batches: Iterator) -> Iterator:
             import pandas as pd
@@ -831,37 +846,45 @@ class BasenineDB:
 
             parsed = _parse(query_text)
             for pdf in batches:
-                if stored:
-                    docs = zip(pdf["seq"], pdf["value"])
-                else:
-                    docs = (
-                        (
-                            str(rec.get(key)),
-                            json.dumps(
-                                _jsonable(rec),
-                                separators=(",", ":"),
-                                default=str,
-                            ),
-                        )
-                        for rec in pdf.to_dict(orient="records")
-                    )
                 keys, values = [], []
-                for k, doc in docs:
+                for rec in pdf.to_dict(orient="records"):
+                    doc = json.dumps(
+                        _jsonable(rec), separators=(",", ":"), default=str
+                    )
                     truth, obj = _eval(parsed, json.loads(doc))
                     if truth:
-                        keys.append(k)
+                        keys.append(str(rec.get(key)))
                         values.append(
-                            doc
-                            if keep
-                            else json.dumps(
+                            json.dumps(
                                 obj,
                                 separators=(",", ":"),
-                                ensure_ascii=stored,
+                                ensure_ascii=False,
                             )
                         )
                 yield pd.DataFrame({key: keys, "value": values})
 
-        return df.mapInPandas(run, schema=schema)
+        return df.mapInPandas(run, schema=f"`{key}` string, value string")
+
+    def _eval_rows(self, rows: list, q: Query, limit: int = 0) -> list:
+        """The row backend of served reads, on the driver: the records
+        of ``rows`` that :func:`pyeval.eval_doc` keeps (collapse/redact
+        exact), in order, at most ``limit`` of them when it is > 0.  A
+        kept record's ``value`` is the stored one when ``q`` cannot
+        redact, else the redacted object in the encoding the log
+        stores."""
+        from ..bfl.pyeval import eval_doc
+
+        keep = collect_redact_taints(q.expr) == []
+        out = []
+        for rec in rows:
+            truth, obj = eval_doc(q, json.loads(rec[1]))
+            if truth:
+                if not keep:
+                    rec = Record(rec[0], json.dumps(obj, separators=(",", ":")))
+                out.append(rec)
+                if len(out) == limit:
+                    break
+        return out
 
     # -- retrieval modes ---------------------------------------------------
 
@@ -1077,17 +1100,15 @@ class BasenineDB:
         files: Optional[list[str]] = None,
         compiled: Optional[tuple] = None,
     ) -> DataFrame:
-        """The log records in ``[min_seq, max_seq]`` that any query of
-        ``qs`` keeps, unordered, as ``(seq, value)``; several queries
-        add ``m``, where ``m[i]`` says whether ``qs[i]`` keeps the
-        record.  ``value`` is the document
-        as the log stores it (id included, ``DocumentLog.append``),
-        which is what the wire sends — like the reference's ``Eval``
-        result (``native.go:481``, ``eval.go:802-812``), it differs
-        from the stored bytes only in the leaves a ``redact`` replaced.
+        """The Spark read of the served records in ``[min_seq,
+        max_seq]`` that any query of ``qs`` selects, unordered, as
+        ``(seq, value)``; several queries add ``m``, where ``m[i]`` says
+        whether ``qs[i]`` keeps the record.  ``value`` is the document
+        as the log stores it (id included, ``DocumentLog.append``).
 
-        * No filter: ``seq, value`` straight from the log scan; no
-          typed view is built.
+        * No filter: ``seq, value`` of ``batch`` (log rows of a tail
+          micro-batch), the one unfiltered read that goes through
+          Spark; the log itself is read by :meth:`_pages`.
         * Filters that compile to Columns run on the typed columns,
           and the scan reads ``seq``, ``value`` and the predicates'
           columns only.  One query filters on its predicate, which
@@ -1095,12 +1116,12 @@ class BasenineDB:
           k-way OR pushed into the reader costs more to plan than it
           saves on a commit's files.
         * Anything else (redact, dynamic shapes, a view schema whose
-          names collide case-insensitively) pre-filters on its
-          compilable conjuncts the same way, then runs the row backend
-          over the stored documents.  Such a query is read alone.
+          names collide case-insensitively) filters on its compilable
+          conjuncts the same way; the caller runs the row backend
+          (:meth:`_eval_rows`) over what it returns.  Such a query is
+          read alone.
 
-        ``batch`` (log rows of a tail micro-batch) is read in place of
-        the log, ``files`` in place of the log directory.  ``compiled``
+        ``files`` is read in place of the log directory.  ``compiled``
         is ``(view schema, [_match result per query])`` when the caller
         has already compiled ``qs``."""
         log = self._served_log()
@@ -1112,13 +1133,11 @@ class BasenineDB:
                 schema = self._view_schema()
             compiled = schema, [self._match(q, schema) for q in qs]
         schema, matches = compiled
-        exact = any(ex for _, ex in matches)
-        if exact and len(qs) > 1:
+        if any(ex for _, ex in matches) and len(qs) > 1:
             raise ValueError("a row-backend query is read alone")
         preds = [p for p, _ in matches]
         if all(p is None for p in preds):
-            raw = log.scan(files) if batch is None else batch
-            df = _seq_range(raw, min_seq, max_seq)
+            df = _seq_range(batch, min_seq, max_seq)
             cols = ["seq", "value"]
         else:
             keep = _plumbing_names(schema)
@@ -1130,8 +1149,6 @@ class BasenineDB:
             cols = [
                 F.col(keep[0]).alias("seq"), F.col(keep[1]).alias("value")
             ]
-        if exact:
-            return self._row_backend(df.select(*cols), qs[0], stored=True)
         if len(qs) == 1:
             return df.select(*cols)
         flags = F.array(*(F.lit(True) if p is None else p for p in preds))
@@ -1139,6 +1156,48 @@ class BasenineDB:
         if all(p is not None for p in preds):
             df = df.filter(F.array_contains("m", True))
         return df
+
+    def _pages(
+        self,
+        q: Query,
+        min_seq: Optional[int] = None,
+        max_seq: Optional[int] = None,
+        batch: Optional[DataFrame] = None,
+        limit: int = 0,
+        descending: bool = False,
+    ) -> Iterator[list]:
+        """The served records in ``[min_seq, max_seq]`` that ``q``
+        keeps, as pages of :class:`Record` sorted by seq (descending
+        with ``descending``).  A record's ``value`` is its stored
+        document; like the reference's ``Eval`` result
+        (``native.go:481``, ``eval.go:802-812``) it differs from the
+        stored bytes only in the leaves a ``redact`` replaced.
+
+        * With no compilable predicate the log is read on the driver,
+          one page per group of files (:meth:`DocumentLog.read_pages`),
+          with no Spark job.
+        * Otherwise (or for a tail ``batch``) one Spark job collects
+          :meth:`_records` as one page; with ``limit`` > 0 a page is the
+          TakeOrderedAndProject of ``limit`` rows, and the next one is
+          read only if the reader asks for it (:func:`_collected_pages`).
+
+        A query that needs the row backend then runs it on the driver
+        over each page (:meth:`_eval_rows`), keeping at most ``limit``
+        records of a page when ``limit`` > 0."""
+        log = self._served_log()
+        if batch is None and log.live_count == 0:
+            raise ValueError("no data ingested")
+        schema = self._view_schema() if q.expr is not None else None
+        pred, exact = self._match(q, schema)
+        if pred is None and batch is None:
+            pages = log.read_pages(min_seq, max_seq, descending=descending)
+        else:
+            df = self._records(
+                [q], min_seq, max_seq, batch, compiled=(schema, [(pred, exact)])
+            )
+            pages = _collected_pages(df, limit, descending)
+        for page in pages:
+            yield self._eval_rows(page, q, limit) if exact else page
 
     def query_with_metadata(
         self,
@@ -1155,53 +1214,71 @@ class BasenineDB:
         client hands back to continue.  ``noMoreData`` stays false in
         query mode (it is a FETCH concept).
 
-        Rows are :meth:`_records`' ``(seq, value)`` in seq order.  Only
-        ``limit(N)`` orders in Spark (TakeOrderedAndProject, one job);
-        otherwise the poll is one unsorted scan, sorted on the driver —
-        no range-partition sampling job, no shuffle.  ``as_of`` bounds
-        the scan at that seq, as in :meth:`query`.
+        Rows are :class:`Record` ``(seq, value)`` in seq order, the
+        pages of :meth:`query_pages` joined; ``as_of`` bounds the read
+        at that seq, as in :meth:`query`."""
+        rows: list = []
+        frames: list[Metadata] = []
+        for page, page_frames in self.query_pages(query, left_off, as_of):
+            rows += page
+            frames += page_frames
+        return rows, frames
+
+    def query_pages(
+        self,
+        query: str = "",
+        left_off: int | str = 0,
+        as_of: int | None = None,
+    ) -> Iterator[tuple[list, list[Metadata]]]:
+        """:meth:`query_with_metadata` a page at a time: ``(rows,
+        frames)`` per page of :meth:`_pages`, the next page read only
+        once this one is taken, so a server sends each page before it
+        reads the next.  ``current`` carries across pages and
+        ``numberOfWritten`` counts from the first page; ``limit(N)``
+        ends the pages after N records.
 
         When the range is exactly the latest commit's and ``query`` is
-        a registered follower's (:meth:`following`), the rows come from
-        that commit's one shared scan (:meth:`_commit_records`)
-        instead of a scan of their own."""
+        a registered follower's (:meth:`following`), the one page comes
+        from that commit's shared read (:meth:`_commit_records`)
+        instead of a read of its own."""
         self._served_log()
         q = self._prepare(query)
         min_seq = self._resume_seq(left_off, as_of)
         rows = self._commit_records(query, min_seq, as_of)
         if rows is not None:
-            if q.limit > 0:
-                rows = rows[: q.limit]
+            pages = [rows]
         else:
-            df = self._records([q], min_seq, as_of)
-            if q.limit > 0:
-                rows = _order_limit(df, F.col("seq").asc(), q.limit).collect()
-            else:
-                rows = df.collect()
-                rows.sort(key=lambda r: r[0])
+            pages = self._pages(q, min_seq, as_of, limit=q.limit)
         meta = self.metadata()
         # the seq before the first candidate
         prev = -1 if min_seq is None else min_seq - 1
-        frames: list[Metadata] = []
-        for i, (seq, _) in enumerate(rows):
-            frames.append(
-                Metadata(
-                    current=seq - prev,
-                    total=meta.total,
-                    number_of_written=i + 1,
-                    left_off=index_to_id(seq),
-                    truncated_timestamp=meta.truncated_timestamp,
+        written = 0
+        for page in pages:
+            if q.limit > 0:
+                page = page[: q.limit - written]
+            frames: list[Metadata] = []
+            for seq, _ in page:
+                written += 1
+                frames.append(
+                    Metadata(
+                        current=seq - prev,
+                        total=meta.total,
+                        number_of_written=written,
+                        left_off=index_to_id(seq),
+                        truncated_timestamp=meta.truncated_timestamp,
+                    )
                 )
-            )
-            prev = seq
-        return rows, frames
+                prev = seq
+            yield page, frames
+            if q.limit > 0 and written >= q.limit:
+                return
 
     def _commit_records(
         self, query: str, min_seq: Optional[int], max_seq: Optional[int]
     ) -> Optional[list]:
         """A follower's sorted ``(seq, value)`` records in ``[min_seq,
         max_seq]`` from the commit reader, or None when the follower
-        must scan on its own: its range is not the latest commit's (a
+        must read on its own: its range is not the latest commit's (a
         first poll, or a follower that missed commits), or its filter
         is not in the shared scan (it needs the row backend, fails to
         compile, or was registered after the scan began).
@@ -1238,14 +1315,16 @@ class BasenineDB:
         version: int,
     ) -> None:
         """Fill ``scan.rows`` for every filter text of ``texts`` that
-        compiles, with one Spark job over ``path``, the one file of the
-        commit's window (with no ``seq`` predicate, every commit's
-        scan is the same plan, and its generated code is compiled
-        once).  The job scans the log directory with the window's
-        ``seq`` range when the file is not known or cannot be read
+        compiles, with one read of ``path``, the one file of the
+        commit's window.  When no text has a predicate the file is read
+        on the driver (:meth:`DocumentLog.read_pages`); otherwise the
+        read is one Spark job (with no ``seq`` predicate, every
+        commit's scan is the same plan, and its generated code is
+        compiled once).  The window's ``seq`` range of the log is read
+        instead when the file is not known or cannot be read
         (compaction or retention removed it).  A text that fails to
         prepare or compile is left out, and so is every text when the
-        scan fails: those followers scan on their own and report their
+        read fails: those followers read on their own and report their
         own errors."""
         served, schema = [], None
         for text in texts:
@@ -1264,9 +1343,17 @@ class BasenineDB:
         compiled = schema, [match for _, _, match in served]
         reads = [] if path is None else [((None, None), [path])]
         reads.append((scan.window, None))
+        unfiltered = all(pred is None for pred, _ in compiled[1])
         got = None
         for (lo, hi), files in reads:
             try:
+                if unfiltered:
+                    got = [
+                        r
+                        for page in self._log.read_pages(lo, hi, files)
+                        for r in page
+                    ]
+                    break
                 df = self._records(qs, lo, hi, files=files, compiled=compiled)
                 with job_group(
                     self.spark.sparkContext,
@@ -1274,16 +1361,16 @@ class BasenineDB:
                     f"commit v={version} filters={len(qs)}",
                 ):
                     got = df.collect()
+                got.sort(key=itemgetter(0))
                 break
             except Exception:  # noqa: BLE001 — each follower re-runs alone
                 continue
         if got is None:
             return
-        got.sort(key=lambda r: r[0])
-        one = len(qs) == 1  # then every row is the one query's
+        one = unfiltered or len(qs) == 1  # then every row is every query's
         for i, (text, _, _) in enumerate(served):
             scan.rows[text] = [
-                _Record(r[0], r[1]) for r in got if one or r[2][i]
+                Record(r[0], r[1]) for r in got if one or r[2][i]
             ]
 
     def single(self, record_id, query: str = "") -> Optional[dict]:
@@ -1323,23 +1410,23 @@ class BasenineDB:
     def single_json(self, record_id, query: str = ""):
         """/single's wire record ``(seq, value)``, or None when no
         record has the id: ``value`` is the stored document after the
-        query's redacts, by :meth:`_records`' rule — the bytes QUERY
+        query's redacts, by :meth:`_pages`' rule — the bytes QUERY
         and FETCH send for the same record.  The query's truth does not
-        matter (``native.go:526-601``)."""
+        matter (``native.go:526-601``).  The record is read on the
+        driver (:meth:`DocumentLog.read_pages`), with no Spark job;
+        ``record_id`` must be the id the log stores for its seq (the
+        24-digit form)."""
         log = self._served_log()
         try:
             seq = int(record_id)
         except (TypeError, ValueError):
             return None  # "Record does not exist!"
+        if isinstance(record_id, str) and record_id != index_to_id(seq):
+            # not the id the log stores for that seq (e.g. "7" for seq 7)
+            return None
         if log.live_count == 0:
             return None
-        rows = (
-            log.scan()
-            .filter((F.col("seq") == seq) & (F.col(ID_COL) == F.lit(record_id)))
-            .select("seq", "value")
-            .limit(1)
-            .collect()
-        )
+        rows = [r for page in log.read_pages(seq, seq) for r in page]
         if not rows:
             return None  # "Record does not exist!"
         value = rows[0][1]
@@ -1422,7 +1509,10 @@ class BasenineDB:
         ``limit`` matches (range exhausted by non-matching candidates),
         one trailing record-less frame carries ``noMoreData`` — the
         batch analog of the reference's final per-candidate frame.
-        Rows are :meth:`_records`' ``(seq, value)`` in page order.
+        Rows are :meth:`_pages`' ``(seq, value)`` in page order: with
+        no compilable predicate they are read on the driver, newest
+        file group first for a backward page, and the read stops once
+        ``limit`` records are kept.
 
         Granularity note (SURVEY §7.4): the reference also streams a
         frame per *non-matching* candidate; a batch API returns frames
@@ -1438,12 +1528,16 @@ class BasenineDB:
         rows: list = []
         # a log with no live committed records has nothing to scan:
         # its page is the trailing record-less noMoreData frame
-        if last_seq >= first_seq:
-            df = self._records(
-                [q], *_fetch_range(base, direction, committed)
-            )
-            order = _fetch_order("seq", direction)
-            rows = df.orderBy(order).limit(limit).collect()
+        if last_seq >= first_seq and limit > 0:
+            for page in self._pages(
+                q,
+                *_fetch_range(base, direction, committed),
+                limit=limit,
+                descending=direction < 0,
+            ):
+                rows += page[: limit - len(rows)]
+                if len(rows) >= limit:
+                    break
         meta = self.metadata()
         total, trunc = meta.total, meta.truncated_timestamp
         frames: list[Metadata] = []

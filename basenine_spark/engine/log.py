@@ -9,10 +9,12 @@ reference                       here
 length-prefixed log writer      Parquet append (``native.go:313-333``)
 ``data_%09d.db`` partitions     ``part=N`` directory partitions
   (``native.go:951-964``)         (rotated by byte size)
-offsets/partitionRefs index     Parquet row-group min-max stats on
-  (``native.go:66-81``)           ``seq``; a directory scan still
-                                 lists every file of the log, the
-                                 stats prune only after the listing
+offsets/partitionRefs index     the ``seq`` min/max in each file's
+  (``native.go:66-81``)           footer: the driver reader lists the
+                                 live partitions' committed files and
+                                 prunes them by it; a Spark directory
+                                 scan lists every file, and its row-
+                                 group stats prune after the listing
 gob core dump + restore         the log IS the state: ``seq`` max and
   (``native.go:155-258``)        partition sizes recovered by scanning
                                  footers at boot
@@ -33,11 +35,18 @@ filtered/redacted in Arrow-batched ``mapInPandas`` stages and stamped
 from per-partition offsets, the driver advancing only the sequence
 counter.
 
-A directory scan (:meth:`DocumentLog.scan` without files) lists and
-plans every file of the log; its ``seq`` range predicates then skip
-row groups by their min/max stats.  A wire batch's one file is known
-by its path (:attr:`DocumentLog.last_file`), so the commit reader of
-``BasenineDB`` reads only the file a commit wrote.
+Reads have two shapes too.  A read that needs no typed column
+(:meth:`DocumentLog.read_pages`) is served on the driver, like the
+reference's walk of its partition files in offset order
+(``native.go:374-523``): ``pyarrow`` reads ``seq`` and ``value`` of the
+committed files whose footer ``seq`` range meets the request, one
+seq-sorted page per group of overlapping files, each page read only
+once the previous one is taken — no Spark job.  A filtered read is a
+Spark scan (:meth:`DocumentLog.scan`): without files it lists and
+plans every file of the log, and its ``seq`` range predicates then
+skip row groups by their min/max stats.  A wire batch's one file is
+known by its path (:attr:`DocumentLog.last_file`), so the commit
+reader of ``BasenineDB`` reads only the file a commit wrote.
 """
 
 from __future__ import annotations
@@ -45,9 +54,13 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import shutil
+import threading
 import uuid
-from typing import Optional
+from collections import namedtuple
+from operator import itemgetter
+from typing import Iterator, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -65,6 +78,13 @@ LOG_SCHEMA = T.StructType(
         T.StructField("part", T.LongType(), False),
     ]
 )
+
+# a served log record: its seq and stored document
+Record = namedtuple("Record", "seq value")
+
+# a live partition's directory; a failed compact() leaves part=N.compact.*
+_PART_DIR = re.compile(r"part=(\d+)")
+
 
 def _doc_ts(ts) -> Optional[int]:
     """A document's ``timestamp`` as its ``doc_ts``: the value when it
@@ -100,6 +120,49 @@ def _stats_columns(schema: pa.Schema) -> list[str]:
     return out
 
 
+def _column_index(md: pq.FileMetaData, name: str) -> int:
+    """The index of top-level column ``name`` in a parquet footer, keyed
+    by full path: a shredded doc field named ``seq`` would otherwise
+    shadow the top-level column."""
+    for i in range(md.num_columns):
+        if md.schema.column(i).path == name:
+            return i
+    raise KeyError(name)
+
+
+def _seq_span(md: pq.FileMetaData) -> Optional[tuple[int, int]]:
+    """A file's ``(min, max)`` seq from its footer's row-group
+    statistics, or None when a row group lacks them (or there is
+    none)."""
+    col = _column_index(md, "seq")
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(col).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
+
+
+def _read_columns(path: str, names: list[str]) -> list[list]:
+    """Top-level columns of a parquet file as Python lists.
+    ``ParquetFile.read``, not ``pq.read_table``: the latter loads
+    ``pyarrow.dataset``, which costs the process ~4.5 MB."""
+    tbl = pq.ParquetFile(path).read(columns=names, use_threads=False)
+    return [tbl.column(n).to_pylist() for n in names]
+
+
+def _read_page(paths: list[str], descending: bool) -> list[Record]:
+    """The records of ``paths`` (one group of overlapping files) sorted
+    by seq."""
+    page: list[Record] = []
+    for path in paths:
+        page += map(Record, *_read_columns(path, ["seq", "value"]))
+    page.sort(key=itemgetter(0), reverse=descending)
+    return page
+
+
 class DocumentLog:
     """One append-only JSON-document log rooted at ``path``."""
 
@@ -112,6 +175,10 @@ class DocumentLog:
         self._part_ts: dict[int, int] = {}  # partition → max doc_ts
         self.truncated_timestamp = 0
         self.retention_bytes = 0
+        # held while compact() swaps a partition's directory and while
+        # a driver read lists the log, so no listing sees the partition
+        # missing between the two renames
+        self._swap = threading.Lock()
         if os.path.isdir(path) and self._has_data():
             self._restore()
         # (min_seq, max_seq, path) of the file the last append
@@ -160,33 +227,21 @@ class DocumentLog:
     def _footer_stats(self) -> Optional[dict]:
         """{part: (max_seq, max_doc_ts, rows)} from parquet footers, or
         None when any column chunk lacks min/max statistics."""
-        import glob
-
         out: dict[int, list] = {}
         for part in self._live_parts():
             agg = [None, None, 0]
-            for fp in glob.glob(
-                os.path.join(self.path, f"part={part}", "*.parquet")
-            ):
+            for fp in self._part_files(part):
                 md = pq.ParquetFile(fp).metadata
-                # key by full path: a shredded doc field named "seq"
-                # would otherwise shadow the top-level column
-                idx = {
-                    md.schema.column(i).path: i
-                    for i in range(md.num_columns)
-                }
+                if md.num_row_groups == 0:
+                    continue
+                seqs = _seq_span(md)
+                if seqs is None:
+                    return None
+                agg[0] = seqs[1] if agg[0] is None else max(agg[0], seqs[1])
+                agg[2] += md.num_rows
+                col = _column_index(md, "doc_ts")
                 for rg in range(md.num_row_groups):
-                    row_group = md.row_group(rg)
-                    agg[2] += row_group.num_rows
-                    seq_st = row_group.column(idx["seq"]).statistics
-                    if seq_st is None or not seq_st.has_min_max:
-                        return None
-                    agg[0] = (
-                        seq_st.max
-                        if agg[0] is None
-                        else max(agg[0], seq_st.max)
-                    )
-                    ts_st = row_group.column(idx["doc_ts"]).statistics
+                    ts_st = md.row_group(rg).column(col).statistics
                     if ts_st is not None and ts_st.has_min_max and ts_st.max is not None:
                         agg[1] = (
                             ts_st.max
@@ -538,24 +593,32 @@ class DocumentLog:
         self._maybe_rotate()
 
     def _part_size(self, part: int) -> int:
-        pdir = os.path.join(self.path, f"part={part}")
-        total = 0
-        for root, _dirs, files in os.walk(pdir):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return total
+        return sum(os.path.getsize(f) for f in self._part_files(part))
 
     def _live_parts(self) -> list[int]:
+        """The live partitions: the ``part=<int>`` directories."""
         if not os.path.isdir(self.path):
             return []
         return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith("part=")
+            int(m.group(1))
+            for m in map(_PART_DIR.fullmatch, os.listdir(self.path))
+            if m
         )
+
+    def _part_files(self, part: int) -> list[str]:
+        """Paths of a partition's committed parquet files: a name
+        starting with ``.`` or ``_`` (a :meth:`_commit_file` temp file,
+        Spark's ``_temporary/``) is not one."""
+        pdir = os.path.join(self.path, f"part={part}")
+        try:
+            names = sorted(os.listdir(pdir))
+        except FileNotFoundError:  # rotated away since the listing
+            return []
+        return [
+            os.path.join(pdir, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        ]
 
     def _maybe_rotate(self) -> None:
         """Partition rotation + bounded retention (``native.go:1049-1108``):
@@ -597,17 +660,101 @@ class DocumentLog:
 
     # -- read (S5) ------------------------------------------------------
 
+    def read_pages(
+        self,
+        min_seq: Optional[int] = None,
+        max_seq: Optional[int] = None,
+        files: Optional[list[str]] = None,
+        descending: bool = False,
+    ) -> Iterator[list[Record]]:
+        """The records with seq in ``[min_seq, max_seq]`` as pages of
+        :data:`Record`, read with ``pyarrow`` on the driver: no Spark
+        job.
+
+        The live partitions' committed files (or ``files``) are pruned
+        by the ``seq`` min/max in their footers.  Files whose seq ranges
+        overlap (a bulk or compacted file may overlap others) form one
+        group, and each group is one seq-sorted page, in ascending seq
+        order (descending with ``descending``).  A group's files are
+        read only once the previous page is taken, so a reader holds
+        one page at a time.  Only ``seq`` and ``value`` are read.
+
+        A file removed between the listing and its read (compaction
+        rewrote it, retention dropped its partition) makes the reader
+        list the log again from the first seq it has not returned; with
+        ``files`` the read raises ``FileNotFoundError`` instead.  So
+        :meth:`compact` (which swaps a partition's directory while no
+        read lists the log) makes a read lose or repeat no record,
+        while records that retention drops during a read may be missing
+        from it, as from a read that starts after the drop.  A file
+        with rows but no ``seq`` statistics in its footer is an error:
+        both writers of the log write them."""
+        lo = -math.inf if min_seq is None else min_seq
+        hi = math.inf if max_seq is None else max_seq
+        while True:
+            try:
+                for paths, first, last in self._page_groups(
+                    lo, hi, files, descending
+                ):
+                    page = _read_page(paths, descending)
+                    if first < lo or last > hi:
+                        page = [r for r in page if lo <= r[0] <= hi]
+                    if descending:
+                        hi = first - 1
+                    else:
+                        lo = last + 1
+                    yield page
+                return
+            except FileNotFoundError:
+                if files is not None:
+                    raise
+
+    def _page_groups(
+        self, lo, hi, files: Optional[list[str]], descending: bool
+    ) -> list[list]:
+        """``[paths, min seq, max seq]`` of each group of overlapping
+        files that holds a seq in ``[lo, hi]``, in page order."""
+        if files is None:
+            with self._swap:
+                files = [
+                    f
+                    for part in self._live_parts()
+                    for f in self._part_files(part)
+                ]
+        spans = []
+        for path in files:
+            md = pq.read_metadata(path)
+            span = _seq_span(md)
+            if span is None:
+                if md.num_rows:
+                    raise ValueError(f"{path}: no seq statistics in its footer")
+                continue
+            if span[0] <= hi and span[1] >= lo:
+                spans.append((*span, path))
+        spans.sort()
+        groups: list = []
+        for first, last, path in spans:
+            if groups and first <= groups[-1][2]:
+                groups[-1][0].append(path)
+                groups[-1][2] = max(groups[-1][2], last)
+            else:
+                groups.append([[path], first, last])
+        if descending:
+            groups.reverse()
+        return groups
+
     def scan(
         self,
         files: Optional[list[str]] = None,
         schema: T.StructType = LOG_SCHEMA,
     ) -> DataFrame:
-        """The log as a DataFrame read with ``schema``.  Without
-        ``files`` it is a directory scan: Spark lists and plans every
-        file of the log, and ``seq`` range predicates skip row groups
-        by their min/max stats only after that.  With ``files`` (the
-        commit reader passes :attr:`last_file`'s) only those files are
-        read."""
+        """The log as a Spark DataFrame read with ``schema``, for the
+        reads that need a typed column or the log's other columns.
+        Without ``files`` it is a directory scan: Spark lists and plans
+        every file of the log, and ``seq`` range predicates skip row
+        groups by their min/max stats only after that.  With ``files``
+        (the commit reader passes :attr:`last_file`'s) only those files
+        are read."""
         reader = self.spark.read.schema(schema)
         if files is None:
             return reader.parquet(self.path)
@@ -649,9 +796,7 @@ class DocumentLog:
         rewritten = 0
         for part in self._live_parts():
             pdir = os.path.join(self.path, f"part={part}")
-            n_files = sum(
-                1 for f in os.listdir(pdir) if f.endswith(".parquet")
-            )
+            n_files = len(self._part_files(part))
             size = self._part_size(part)
             want = max(1, math.ceil(size / target_bytes))
             if n_files <= want:
@@ -670,8 +815,9 @@ class DocumentLog:
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
-            os.rename(pdir, old)
-            os.rename(tmp, pdir)
+            with self._swap:
+                os.rename(pdir, old)
+                os.rename(tmp, pdir)
             shutil.rmtree(old)
             rewritten += 1
         return rewritten

@@ -28,21 +28,23 @@ first line         connection mode (``server.go:234-280``)
 ``/reset``         immediate, → ``OK``
 =================  ====================================================
 
-Spark-first shape: the server is a *driver-side* component — each
-connection's queries run as ordinary pruned Spark scans against the
-document log (persistent or in a private temporary directory, one
-engine either way), so the heavy lifting (filter pushdown, file
-pruning via the physical ``seq`` column, typed fast path vs row
-backend) is exactly the batch engine's.  Like the reference, which
-writes each matching record's stored bytes to the socket
-(``native.go:481-495``), QUERY/FETCH/SINGLE send each record's stored
-document (``BasenineDB._records``): an unfiltered scan reads only
-``seq`` and ``value``; a filter that compiles runs on the typed columns
-and projects the same two; a redact query rewrites only the redacted
-leaves of the stored document.  Nothing else is re-serialized.  A
-QUERY poll is one unsorted scan sorted by seq on the driver; only
-``limit(N)`` (TakeOrderedAndProject) orders in Spark.  Replies are
-written in sendall calls of about ``SEND_CHUNK_BYTES``.  A mounted
+Shape: the server is a *driver-side* component over the document log
+(persistent or in a private temporary directory, one engine either
+way).  Like the reference, which walks its partition files in offset
+order and writes each matching record's stored bytes to the socket
+(``native.go:374-523``), QUERY/FETCH/SINGLE send each record's stored
+document (``BasenineDB._pages``).  A read with no compilable filter
+(no filter, SINGLE, or a filter only the row backend can decide) reads
+``seq`` and ``value`` of the log's committed files with ``pyarrow`` on
+the driver, one seq-sorted page per group of files, with no Spark job.
+A filter that compiles is a pruned Spark scan (filter pushdown, file
+pruning via the physical ``seq`` column) that runs on the typed
+columns and projects the same two, sorted by seq on the driver; only
+``limit(N)`` (TakeOrderedAndProject) orders in Spark.  A redact query
+rewrites only the redacted leaves of the stored document, on the
+driver.  Nothing else is re-serialized.  Replies are written in
+sendall calls of about ``SEND_CHUNK_BYTES``, and a QUERY sends each
+page before it reads the next.  A mounted
 table is not served.  Follow mode re-expresses the reference's
 fsnotify wait (``native.go:520-522,1139-1155``) as a commit-driven
 incremental read: a follower sleeps on the db's commit clock
@@ -51,14 +53,15 @@ its keys merged into the typed schema — then reads from the last
 served sequence up to the committed total.  Like the reference, which
 scans each new partition once and evaluates every follower's filter on
 what it finds (``native.go:374-523``), the followers of one commit
-share one Spark job: the first follower to wake runs the db's commit
-reader over the files that commit wrote, with one match flag per
+share one read: the first follower to wake runs the db's commit
+reader over the file that commit wrote, with one match flag per
 registered filter, and the others take their records from it.  A
 follower that is not at the frontier (its first poll, or a slow socket
-that missed commits) or whose filter needs the row backend scans on
-its own, from its resume seq.  So an idle tail costs no Spark job and
-a busy tail costs one per committed batch, however many followers it
-has.  The per-connection state is one integer (the resume seq); the
+that missed commits) or whose filter needs the row backend reads on
+its own, from its resume seq.  So an idle tail costs no Spark job, a
+busy tail costs at most one per committed batch, however many
+followers it has, and none when no follower has a compilable
+filter.  The per-connection state is one integer (the resume seq); the
 log's counters, typed schema and ``_state.json`` live in the serving
 process, so one daemon owns its log directory, as in the reference.
 Each connection's Spark jobs carry a job group ``bn-conn-<id>`` and a
@@ -121,7 +124,7 @@ POLL_INTERVAL = 0.15
 
 def row_to_doc(row) -> str:
     """The wire document of one served ``(seq, value)`` record
-    (``BasenineDB._records``): its ``value``."""
+    (``BasenineDB._pages``): its ``value``."""
     return row[1]
 
 
@@ -466,7 +469,9 @@ class BasenineServer:
     ) -> None:
         """QUERY mode (follow): snapshot, then one incremental read per
         committed batch (``BasenineDB.wait_commit``), from the commit's
-        shared scan while this follower is up to date.  Wire
+        shared read while this follower is up to date.  Each read comes
+        a page at a time (``BasenineDB.query_pages``), and a page is
+        sent before the next one is read.  Wire
         framing is record line then ``/metadata`` frame
         (``native.go:488-511``); ``limit(N)`` stops the stream but not
         the connection (``native.go:513-517``)."""
@@ -505,37 +510,43 @@ class BasenineServer:
                 # a QUERY connection may open before the first
                 # INSERT (server_test.go InsertionFilter flow)
                 continue
-            try:
-                # bounded by the commit: a batch whose schema is not
-                # merged yet would fail the filter and be skipped
-                rows, frames = self.db.query_with_metadata(
-                    qtext, left_off=left_off, as_of=committed - 1
-                )
-            except Exception as e:  # noqa: BLE001
-                self._send(conn, f"Error: {e}")
-                return
+            # bounded by the commit: a batch whose schema is not
+            # merged yet would fail the filter and be skipped
+            pages = self.db.query_pages(
+                qtext, left_off=left_off, as_of=committed - 1
+            )
             poll_base = written
             out = _ChunkedWriter(self._send, conn)
-            for row, frame in zip(rows, frames):
-                if limit > 0 and written >= limit:
+            while not (limit > 0 and written >= limit):
+                try:
+                    page = next(pages, None)
+                except Exception as e:  # noqa: BLE001
+                    self._send(conn, f"Error: {e}")
+                    return
+                if page is None:
                     break
-                if not out.write(row_to_doc(row)):
+                for row, frame in zip(*page):
+                    if limit > 0 and written >= limit:
+                        break
+                    if not out.write(row_to_doc(row)):
+                        return
+                    # numberOfWritten is cumulative across the whole
+                    # stream (native.go:495-505), not per re-scan
+                    frame.number_of_written += poll_base
+                    # the server's own follow-resume always tracks the
+                    # DELIVERED seq; compat mode changes only the token
+                    # on the wire (the reference's index+1 mint), never
+                    # the internal arithmetic
+                    last_seq = max(last_seq, row[0])
+                    if self.compat_left_off:
+                        frame.left_off = index_to_id(row[0] + 1)
+                    if not out.write(f"{CMD_METADATA} {frame.to_json()}"):
+                        return
+                    written += 1
+                # each page goes out before the next one is read
+                if not out.flush():
                     return
-                # numberOfWritten is cumulative across the whole stream
-                # (native.go:495-505), not per re-scan
-                frame.number_of_written += poll_base
-                # the server's own follow-resume always tracks the
-                # DELIVERED seq; compat mode changes only the token on
-                # the wire (the reference's index+1 mint), never the
-                # internal arithmetic
-                last_seq = max(last_seq, row[0])
-                if self.compat_left_off:
-                    frame.left_off = index_to_id(row[0] + 1)
-                if not out.write(f"{CMD_METADATA} {frame.to_json()}"):
-                    return
-                written += 1
-            if not out.flush():
-                return
+            pages.close()
             if limit > 0 and written >= limit:
                 # stream done; the connection stays open until the
                 # client hangs up (native.go:513-517)

@@ -12,7 +12,7 @@ blocking resume ``native.go:520-522``, ``watchPartitions``
 Spark-first mapping: the fsnotify loop dissolves into a Structured
 Streaming **file source** over the Parquet log directory — Spark's own
 source listing is the wake-up mechanism; each micro-batch goes through
-``BasenineDB._records``, the path QUERY and FETCH serve from, and
+``BasenineDB._pages``, the path QUERY and FETCH serve from, and
 delivers the matching stored documents in seq order. ``limit(N)``
 stops the streaming query from the driver loop
 (SURVEY §7.4 item 6).
@@ -142,10 +142,13 @@ class TailQuery:
             )
             db._typed_schema = finalize_type(db._schema_acc)
         # the same (seq, value) records QUERY serves, from this batch
-        rows = db._records(
-            [self.prepared], min_seq=self.min_seq, batch=batch_df
-        )
-        rows = sorted(rows.collect())
+        rows = [
+            r
+            for page in db._pages(
+                self.prepared, min_seq=self.min_seq, batch=batch_df
+            )
+            for r in page
+        ]
         if self.frame_cadence == "scanned":
             self._emit_scanned(batch_df, rows)
             return

@@ -29,17 +29,18 @@ def slow_poll(monkeypatch):
 
 
 def _count_polls(db) -> list:
-    """Wrap the db instance's ``query_with_metadata``; the returned list
-    gets the ``as_of`` of each finished call."""
+    """Wrap the db instance's ``query_pages`` (a follower's poll); the
+    returned list gets the ``as_of`` of each poll once it has read all
+    its pages, before the server sends them."""
     calls = []
-    poll = db.query_with_metadata
+    poll = db.query_pages
 
     def counted(*args, **kwargs):
-        result = poll(*args, **kwargs)
+        pages = list(poll(*args, **kwargs))
         calls.append(kwargs.get("as_of"))
-        return result
+        yield from pages
 
-    db.query_with_metadata = counted
+    db.query_pages = counted
     return calls
 
 
@@ -95,7 +96,7 @@ def test_poll_stops_at_the_committed_total(db):
     ``{"b":2}`` fails the filter on the old schema while ``{"a":2}``
     matches, and resuming after ``{"a":2}`` would lose ``{"b":2}``."""
     db.insert_json(['{"a":0}'])
-    commit, poll = db._commit_schema, db.query_with_metadata
+    commit, poll = db._commit_schema, db.query_pages
     slow_commits, polls = [], []
 
     def slow_commit(*args):
@@ -107,10 +108,10 @@ def test_poll_stops_at_the_committed_total(db):
         if polls:
             time.sleep(1.5)  # the next batch appends meanwhile
         polls.append(kwargs.get("as_of"))
-        return poll(*args, **kwargs)
+        yield from poll(*args, **kwargs)
 
     db._commit_schema = slow_commit
-    db.query_with_metadata = slow_poll
+    db.query_pages = slow_poll
     server = BasenineServer(db).start()
     try:
         with bn.BasenineClient(server.host, server.port, timeout=10) as c:

@@ -177,13 +177,25 @@ def test_limit_poll_plans_take_ordered(polled):
     assert [seq for seq, _ in rows] == [s for s in range(300) if s % 5 >= 3][:7]
 
 
-def test_poll_reads_seq_value_and_predicate_columns(polled):
+def test_poll_reads_seq_value_and_predicate_columns(polled, monkeypatch):
     plan = _plan(polled, "status >= 500", index_to_id(10))
     (read_schema,) = re.findall(r"ReadSchema: (struct<.*?>)(?:\s|,|$)", plan)
     fields = re.findall(r"(\w+):", read_schema)
     assert fields == ["seq", "value", "doc", "status"], read_schema
-    plan = _plan(polled, "", 0)
-    assert re.findall(r"ReadSchema: (\S+)", plan) == ["struct<seq:bigint,value:string>"]
+    # the unfiltered poll reads the files on the driver: seq and value
+    import pyarrow.parquet as pq
+
+    asked = []
+    read = pq.ParquetFile.read
+
+    def spy(self, columns=None, **kwargs):
+        asked.append(columns)
+        return read(self, columns=columns, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read", spy)
+    rows, _ = polled.query_with_metadata("", left_off=0)
+    assert len(rows) == 300
+    assert asked and all(c == ["seq", "value"] for c in asked), asked
 
 
 # -- chunked writes -------------------------------------------------------
@@ -347,13 +359,13 @@ def test_row_backend_keeps_non_ascii_bytes(spark, tmp_path, monkeypatch):
         % index_to_id(0)
     )
     calls = []
-    row_backend = BasenineDB._row_backend
+    eval_rows = BasenineDB._eval_rows
 
-    def counted(self, df, q, stored=False):
+    def counted(self, rows, q, limit=0):
         calls.append(q.text)
-        return row_backend(self, df, q, stored)
+        return eval_rows(self, rows, q, limit)
 
-    monkeypatch.setattr(BasenineDB, "_row_backend", counted)
+    monkeypatch.setattr(BasenineDB, "_eval_rows", counted)
     redacted = stored.replace('"Zo\\u00eb"', '"[REDACTED]"')
     for query, want in (("who..n == 1", stored), ('redact("who.name")', redacted)):
         rows, _ = db.query_with_metadata(query)

@@ -69,14 +69,14 @@ def run(spark, n_files: int, n_followers: int, commits: int, own: bool):
         if own:
             db._commit_records = lambda *args: None
         calls = []
-        poll = db.query_with_metadata
+        poll = db.query_pages
 
         def counted(*args, **kwargs):
-            result = poll(*args, **kwargs)
+            pages = list(poll(*args, **kwargs))
             calls.append(1)
-            return result
+            yield from pages
 
-        db.query_with_metadata = counted
+        db.query_pages = counted
         server = BasenineServer(db).start()
         clients = []
 
