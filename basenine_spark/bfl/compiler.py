@@ -108,6 +108,14 @@ class Compiled:
 
     predicate: Optional[Column]  # None ⇔ empty query ⇔ match-all
     limit: int = 0
+    # pyeval.eval_doc over a row of the typed view (every schema field
+    # present, null where the record has none, a null array empty)
+    # keeps exactly the rows the predicate keeps; False when the query
+    # takes a wildcard over a struct (a static collapse to the
+    # predicate, the struct's values to pyeval) or compares an array
+    # with an array (there the predicate tells a null array from the
+    # empty one pyeval is given for it)
+    row_equivalent: bool = True
 
 
 # ---------------------------------------------------------------------------
@@ -633,6 +641,7 @@ class _PathResolver:
 
     def __init__(self, schema: T.StructType):
         self.schema = schema
+        self.row_equivalent = True  # see Compiled.row_equivalent
 
     def resolve(self, segments: List[Any]) -> Val:
         if not segments:
@@ -677,6 +686,8 @@ class _PathResolver:
                     dt = dt.valueType
                     multi = True
                 else:
+                    if isinstance(dt, T.StructType):
+                        self.row_equivalent = False
                     raise _StaticCollapse()
             else:  # RecursiveDescent on typed columns
                 raise UnsupportedBFL(
@@ -739,6 +750,8 @@ class _PathResolver:
                     dt.valueType,
                     collapse,
                 )
+            if isinstance(dt, T.StructType):
+                self.row_equivalent = False
             raise _StaticCollapse()
         raise UnsupportedBFL(f"segment {seg!r} after wildcard needs the row backend")
 
@@ -901,12 +914,19 @@ def _compile_docfunc(path: Path, resolver: _PathResolver) -> Val:
 # ---------------------------------------------------------------------------
 
 
+def clock_ms() -> int:
+    """The clock time helpers read, in epoch milliseconds: a compile
+    folds it into the predicate, and a driver-side evaluation of a
+    compilable filter passes it to :func:`pyeval.eval_doc`."""
+    return int(_time.time() * 1000)
+
+
 class _Compiler:
     def __init__(self, schema: T.StructType, now_ms: Optional[int] = None):
         self.resolver = _PathResolver(schema)
         # Compile-time time base (precompute.go:146-186): one fixed `now`
         # per compiled query, like the reference.
-        self.now_ms = now_ms if now_ms is not None else int(_time.time() * 1000)
+        self.now_ms = now_ms if now_ms is not None else clock_ms()
 
     # entry ------------------------------------------------------------------
 
@@ -1031,6 +1051,8 @@ class _Compiler:
 
         left = self._expr(expr.left)
         right = self._expr(expr.right)
+        if left.kind == K_ARRAY and right.kind == K_ARRAY:
+            self.resolver.row_equivalent = False
         collapse = _or_cond(left.collapse, right.collapse)
         if op in ("==", "!="):
             if left.is_lit and right.is_lit:
@@ -1219,15 +1241,16 @@ def compile_filter(
     schema = df_or_schema.schema if isinstance(df_or_schema, DataFrame) else df_or_schema
     comp = _Compiler(schema, now_ms=now_ms)
     v = comp.compile(q.expr)
+    same = comp.resolver.row_equivalent
     if v.collapse is True:
-        return Compiled(predicate=_false(), limit=q.limit)
+        return Compiled(predicate=_false(), limit=q.limit, row_equivalent=same)
     if v.collapse is False and v.is_lit and _lit_truthy(v):
         # keeps every record (``limit(N)`` alone, ``true``): no filter
-        return Compiled(predicate=None, limit=q.limit)
+        return Compiled(predicate=None, limit=q.limit, row_equivalent=same)
     pred = truthy_col(v)
     if v.collapse is not False:
         pred = F.when(v.collapse, _false()).otherwise(pred)
-    return Compiled(predicate=pred, limit=q.limit)
+    return Compiled(predicate=pred, limit=q.limit, row_equivalent=same)
 
 
 # ---------------------------------------------------------------------------

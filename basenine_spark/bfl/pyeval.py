@@ -22,7 +22,9 @@ import base64
 import binascii
 import calendar
 import json
+import operator
 import re
+import time
 from datetime import datetime, timezone
 from typing import Any, List, Optional, Tuple
 
@@ -134,13 +136,16 @@ def _neq(a: Any, b: Any) -> bool:
     return not _eql(a, b)
 
 
+_SCALAR_CMP = {
+    ">": operator.gt,
+    "<": operator.lt,
+    ">=": operator.ge,
+    "<=": operator.le,
+}
+
+
 def _cmp(op: str, a: Any, b: Any) -> bool:
-    scalar = {
-        ">": lambda x, y: x > y,
-        "<": lambda x, y: x < y,
-        ">=": lambda x, y: x >= y,
-        "<=": lambda x, y: x <= y,
-    }[op]
+    scalar = _SCALAR_CMP[op]
     if isinstance(a, list):
         if isinstance(b, list):
             # universal over the cross product (eval.go:180-188)
@@ -471,21 +476,21 @@ def _eval_path(path: Path, ctx: _Ctx) -> Any:
 
 
 def _eval_binary(expr: BinaryOp, ctx: _Ctx, param_mode: bool = False) -> Any:
-    ev = (lambda e: _eval_param(e, ctx)) if param_mode else (lambda e: _eval(e, ctx))
+    ev = _eval_param if param_mode else _eval
     op = expr.op
     if op in ("and", "or"):
-        left = ev(expr.left)
+        left = ev(expr.left, ctx)
         lb = bool_operand(left)
         # short-circuit (eval.go:753-761) — also skips collapse on the right
         if op == "and" and not lb:
             return False
         if op == "or" and lb:
             return True
-        right = ev(expr.right)
+        right = ev(expr.right, ctx)
         rb = bool_operand(right)
         return (lb and rb) if op == "and" else (lb or rb)
-    left = ev(expr.left)
-    right = ev(expr.right)
+    left = ev(expr.left, ctx)
+    right = ev(expr.right, ctx)
     if op == "==":
         return _eql(left, right)
     if op == "!=":
@@ -531,9 +536,7 @@ def eval_doc(
     ``eval_test.go:123``)."""
     if query.expr is None:
         return True, obj
-    import time as _time
-
-    ctx = _Ctx(obj, now_ms if now_ms is not None else int(_time.time() * 1000))
+    ctx = _Ctx(obj, now_ms if now_ms is not None else int(time.time() * 1000))
     try:
         truth = bool_operand(_eval(query.expr, ctx))
     except _Collapse:

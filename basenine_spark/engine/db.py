@@ -37,7 +37,9 @@ Scale notes (100 TB design):
   documents.  One that needs no typed column reads the log's files on
   the driver a page at a time (``DocumentLog.read_pages``), with no
   Spark job; a compiled filter is one Spark scan.  Their row backend
-  runs on the driver, over the records that read returns.
+  runs on the driver, over the records that read returns.  A commit's
+  QUERY followers evaluate their filters on the driver over the typed
+  rows of the commit's one file (``_eval_commit``), with no Spark job.
 * ``fetch(direction=-1)`` is top-K by id (``orderBy(desc).limit``) which
   Spark executes as TakeOrderedAndProject — no global sort.
 """
@@ -45,6 +47,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import json
+import math
 import shutil
 import tempfile
 import threading
@@ -64,6 +67,7 @@ from ..bfl.ast import Query
 from ..bfl.compiler import (
     UnsupportedBFL,
     apply_redact_paths,
+    clock_ms,
     collect_path_reads,
     collect_redact_taints,
     compile_filter,
@@ -73,7 +77,8 @@ from ..bfl.compiler import (
     split_conjuncts,
 )
 from ..bfl.macros import add_macro as _add_macro
-from .log import DocumentLog, Record
+from ..bfl.pyeval import eval_doc
+from .log import DocumentLog, Record, _read_columns
 from .schema import (
     common_leaves_unchanged,
     widen_to_merged,
@@ -242,6 +247,50 @@ def _collected_pages(
         df = df.filter(F.col("seq") < last if descending else F.col("seq") > last)
 
 
+class _Unproven(Exception):
+    """A value the driver's evaluation and Spark's can judge apart."""
+
+
+def _projector(dt: T.DataType):
+    """A function from a value of ``dt`` as ``pyarrow`` reads it from a
+    wire file's ``doc`` column to the value a compiled predicate sees in
+    the typed view of that file, for :func:`pyeval.eval_doc`:
+
+    * a struct has every field of ``dt``, None where the file has none;
+      a null struct has every field null (Spark reads a field of a null
+      struct as null);
+    * a null array is empty (a compiled predicate finds no element in
+      either);
+    * a double or decimal is a Python float (the compiler reads both as
+      doubles);
+    * a NaN or infinite double raises :class:`_Unproven`: Spark orders
+      NaN above every number and counts it as positive, pyeval does
+      not."""
+    if isinstance(dt, T.StructType):
+        fields = [(f.name, _projector(f.dataType)) for f in dt.fields]
+
+        def struct(v):
+            v = v or {}
+            return {name: project(v.get(name)) for name, project in fields}
+
+        return struct
+    if isinstance(dt, T.ArrayType):
+        elem = _projector(dt.elementType)
+        return lambda v: [] if v is None else [elem(x) for x in v]
+    if isinstance(dt, (T.DoubleType, T.FloatType, T.DecimalType)):
+
+        def double(v):
+            if v is None:
+                return None
+            v = float(v)
+            if not math.isfinite(v):
+                raise _Unproven(v)
+            return v
+
+        return double
+    return lambda v: v
+
+
 class _CommitScan:
     """One commit's shared follower scan over ``window`` (``[min_seq,
     max_seq]``): the sorted records each served filter text keeps, once
@@ -332,6 +381,8 @@ class BasenineDB:
         # scan (both guarded by _commit)
         self._followers: Counter = Counter()
         self._commit_scan: Optional[_CommitScan] = None
+        # (view schema, {query text: _row_equivalent}) of the commit reader
+        self._compile_flags: tuple = (None, {})
         self._mounted_total: Optional[int] = None  # cached count, mounted
         self._latest_cache = None  # cached max natural id, mounted
 
@@ -429,15 +480,17 @@ class BasenineDB:
             )
         return self._log
 
-    def insert_json(self, lines: list[str]) -> list[str]:
+    def insert_json(self, lines: list) -> list[str]:
         """INSERT mode: each line one JSON object; applies the insertion
         filter (with redact) and assigns contiguous ids
-        (``native.go:266-334``).  Returns assigned ids.  The whole batch
-        is validated before any id is assigned: a line that is not
-        JSON, or is JSON but not an object, raises ``ValueError`` and
-        nothing is written (a bad line must not orphan ids)."""
+        (``native.go:266-334``).  Returns assigned ids.  A line may also
+        be an already-parsed object (the server's own parse is reused;
+        it is stamped in place).  The whole batch is validated before
+        any id is assigned: a line that is not JSON, or is JSON but not
+        an object, raises ``ValueError`` and nothing is written (a bad
+        line must not orphan ids)."""
         log = self._writable_log()
-        docs = [json.loads(line) for line in lines]
+        docs = [json.loads(x) if isinstance(x, str) else x for x in lines]
         for i, doc in enumerate(docs):
             if not isinstance(doc, dict):
                 raise ValueError(
@@ -1091,6 +1144,34 @@ class BasenineDB:
         except UnsupportedBFL:
             return _pushdown(q, schema), True
 
+    def _row_equivalent(
+        self, q: Query, schema: Optional[T.StructType]
+    ) -> Optional[bool]:
+        """How the commit reader may decide ``q`` under the view
+        ``schema``: None when ``q`` needs the row backend (as in
+        :meth:`_match`), else whether :func:`pyeval.eval_doc` over the
+        typed rows keeps what its predicate keeps
+        (:attr:`Compiled.row_equivalent`).  Cached per query text and
+        schema, so a commit compiles a filter only when the filter or
+        the schema is new; the predicate itself is not kept, since it
+        holds the clock of its compile."""
+        if q.expr is None:
+            return True
+        known, flags = self._compile_flags
+        if known is not schema:
+            flags = {}
+            self._compile_flags = schema, flags
+        if q.text not in flags:
+            try:
+                flags[q.text] = (
+                    None
+                    if _case_collision(schema)
+                    else compile_filter(q, schema).row_equivalent
+                )
+            except UnsupportedBFL:
+                flags[q.text] = None
+        return flags[q.text]
+
     def _records(
         self,
         qs: list[Query],
@@ -1108,7 +1189,9 @@ class BasenineDB:
 
         * No filter: ``seq, value`` of ``batch`` (log rows of a tail
           micro-batch), the one unfiltered read that goes through
-          Spark; the log itself is read by :meth:`_pages`.
+          Spark; the log itself is read by :meth:`_pages`.  A commit's
+          followers are decided on the driver, and read through here
+          only when it cannot decide them (:meth:`_spark_commit`).
         * Filters that compile to Columns run on the typed columns,
           and the scan reads ``seq``, ``value`` and the predicates'
           columns only.  One query filters on its predicate, which
@@ -1284,8 +1367,10 @@ class BasenineDB:
         compile, or was registered after the scan began).
 
         The first follower to ask for the latest commit's range runs
-        the scan (:meth:`_scan_commit`); the others wait for it and
-        take their records.  The next commit drops the result
+        the scan (:meth:`_scan_commit`: on the driver over the commit's
+        one file, with no Spark job and no compile of a filter already
+        seen under the view schema); the others wait for it and take
+        their records.  The next commit drops the result
         (:meth:`_publish_commit`)."""
         window = (min_seq, max_seq)
         with self._commit:
@@ -1315,45 +1400,106 @@ class BasenineDB:
         version: int,
     ) -> None:
         """Fill ``scan.rows`` for every filter text of ``texts`` that
-        compiles, with one read of ``path``, the one file of the
-        commit's window.  When no text has a predicate the file is read
-        on the driver (:meth:`DocumentLog.read_pages`); otherwise the
-        read is one Spark job (with no ``seq`` predicate, every
-        commit's scan is the same plan, and its generated code is
-        compiled once).  The window's ``seq`` range of the log is read
-        instead when the file is not known or cannot be read
-        (compaction or retention removed it).  A text that fails to
-        prepare or compile is left out, and so is every text when the
-        read fails: those followers read on their own and report their
-        own errors."""
+        compiles (:meth:`_row_equivalent`), with one read of the commit's
+        window: on the driver (:meth:`_eval_commit`), or, when the
+        driver cannot decide, one Spark job (:meth:`_spark_commit`).  A
+        text that fails to prepare or compile is left out, and so is
+        every text when the read fails: those followers read on their
+        own and report their own errors."""
         served, schema = [], None
         for text in texts:
             try:
                 q = self._prepare(text)
                 if q.expr is not None and schema is None:
                     schema = self._view_schema()
-                match = self._match(q, schema)
-                if not match[1]:
-                    served.append((text, q, match))
+                if self._row_equivalent(q, schema) is not None:
+                    served.append((text, q))
             except Exception:  # noqa: BLE001 — its follower reports it
                 continue
         if not served:
             return
-        qs = [q for _, q, _ in served]
-        compiled = schema, [match for _, _, match in served]
+        qs = [q for _, q in served]
+        try:
+            kept = self._eval_commit(qs, schema, path, scan.window)
+            if kept is None:
+                kept = self._spark_commit(qs, schema, path, scan.window, version)
+        except Exception:  # noqa: BLE001 — each follower re-runs alone
+            return
+        if kept is not None:
+            scan.rows.update((text, rows) for (text, _), rows in zip(served, kept))
+
+    def _eval_commit(
+        self,
+        qs: list[Query],
+        schema: Optional[T.StructType],
+        path: Optional[str],
+        window: tuple,
+    ) -> Optional[list[list[Record]]]:
+        """The records of the commit's ``window`` that each query of
+        ``qs`` keeps, sorted by seq and decided on the driver with no
+        Spark job — or None when only the commit's Spark scan can
+        decide them.
+
+        With no filter they are the window's stored records
+        (:meth:`DocumentLog.read_pages`).  Otherwise the driver reads
+        ``seq``, ``value`` and ``doc`` of ``path``, the commit's one
+        file, projects each ``doc`` onto the view ``schema`` as Spark
+        reads it (:func:`_projector`) and keeps a record for a query
+        when :func:`pyeval.eval_doc` finds it true, with one clock for
+        the commit (:func:`compiler.clock_ms`).  That is the one Spark
+        fallback's rule: it runs when the file is not known or cannot
+        be read, when the log is not shredded (a file may lack
+        ``doc``), or when the file holds a value the two evaluators
+        judge apart (a NaN or infinite double), and for a query whose
+        predicate a typed row cannot stand in for
+        (:meth:`_row_equivalent`).  A view schema whose names collide
+        case-insensitively never gets here: its filters need the row
+        backend."""
+        if all(q.expr is None for q in qs):
+            records = [r for page in self._log.read_pages(*window) for r in page]
+            return [records] * len(qs)
+        if (
+            path is None
+            or not self._shred_ok
+            or not all(self._row_equivalent(q, schema) for q in qs)
+        ):
+            return None
+        try:
+            seqs, values, docs = _read_columns(path, ["seq", "value", "doc"])
+            project = _projector(schema)
+            rows = [project(doc) for doc in docs]
+        except Exception:  # noqa: BLE001 — gone, no doc column, _Unproven
+            return None
+        now_ms = clock_ms()
+        kept: list[list[Record]] = [[] for _ in qs]
+        # a wire file holds its records in seq order
+        for seq, value, row in zip(seqs, values, rows):
+            for out, q in zip(kept, qs):
+                if eval_doc(q, row, now_ms)[0]:
+                    out.append(Record(seq, value))
+        return kept
+
+    def _spark_commit(
+        self,
+        qs: list[Query],
+        schema: Optional[T.StructType],
+        path: Optional[str],
+        window: tuple,
+        version: int,
+    ) -> Optional[list[list[Record]]]:
+        """:meth:`_eval_commit`'s result from one Spark job over
+        ``path`` (with no ``seq`` predicate, every commit's scan is the
+        same plan, and its generated code is compiled once), or over
+        the log's ``window`` when the file is not known or cannot be
+        read (compaction or retention removed it).  None when the read
+        fails, or when no query has a predicate for Spark to run."""
+        compiled = schema, [self._match(q, schema) for q in qs]
+        if all(pred is None for pred, _ in compiled[1]):
+            return None
         reads = [] if path is None else [((None, None), [path])]
-        reads.append((scan.window, None))
-        unfiltered = all(pred is None for pred, _ in compiled[1])
-        got = None
+        reads.append((window, None))
         for (lo, hi), files in reads:
             try:
-                if unfiltered:
-                    got = [
-                        r
-                        for page in self._log.read_pages(lo, hi, files)
-                        for r in page
-                    ]
-                    break
                 df = self._records(qs, lo, hi, files=files, compiled=compiled)
                 with job_group(
                     self.spark.sparkContext,
@@ -1361,17 +1507,17 @@ class BasenineDB:
                     f"commit v={version} filters={len(qs)}",
                 ):
                     got = df.collect()
-                got.sort(key=itemgetter(0))
                 break
-            except Exception:  # noqa: BLE001 — each follower re-runs alone
+            except Exception:  # noqa: BLE001 — try the next read
                 continue
-        if got is None:
-            return
-        one = unfiltered or len(qs) == 1  # then every row is every query's
-        for i, (text, _, _) in enumerate(served):
-            scan.rows[text] = [
-                Record(r[0], r[1]) for r in got if one or r[2][i]
-            ]
+        else:
+            return None
+        got.sort(key=itemgetter(0))
+        one = len(qs) == 1  # then every row is its query's
+        return [
+            [Record(r[0], r[1]) for r in got if one or r[2][i]]
+            for i in range(len(qs))
+        ]
 
     def single(self, record_id, query: str = "") -> Optional[dict]:
         """/single (M2): one record by id; the query only matters for

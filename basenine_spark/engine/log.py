@@ -179,6 +179,10 @@ class DocumentLog:
         # a driver read lists the log, so no listing sees the partition
         # missing between the two renames
         self._swap = threading.Lock()
+        # committed file → its seq span from the footer (None: no rows);
+        # a file never changes under its name, and a listing drops the
+        # paths it no longer returns
+        self._spans: dict[str, Optional[tuple[int, int]]] = {}
         if os.path.isdir(path) and self._has_data():
             self._restore()
         # (min_seq, max_seq, path) of the file the last append
@@ -664,16 +668,15 @@ class DocumentLog:
         self,
         min_seq: Optional[int] = None,
         max_seq: Optional[int] = None,
-        files: Optional[list[str]] = None,
         descending: bool = False,
     ) -> Iterator[list[Record]]:
         """The records with seq in ``[min_seq, max_seq]`` as pages of
         :data:`Record`, read with ``pyarrow`` on the driver: no Spark
         job.
 
-        The live partitions' committed files (or ``files``) are pruned
-        by the ``seq`` min/max in their footers.  Files whose seq ranges
-        overlap (a bulk or compacted file may overlap others) form one
+        The live partitions' committed files are pruned by the ``seq``
+        min/max in their footers, each footer read once per file
+        (:meth:`_span`).  Files whose seq ranges overlap (a bulk or compacted file may overlap others) form one
         group, and each group is one seq-sorted page, in ascending seq
         order (descending with ``descending``).  A group's files are
         read only once the previous page is taken, so a reader holds
@@ -681,8 +684,7 @@ class DocumentLog:
 
         A file removed between the listing and its read (compaction
         rewrote it, retention dropped its partition) makes the reader
-        list the log again from the first seq it has not returned; with
-        ``files`` the read raises ``FileNotFoundError`` instead.  So
+        list the log again from the first seq it has not returned.  So
         :meth:`compact` (which swaps a partition's directory while no
         read lists the log) makes a read lose or repeat no record,
         while records that retention drops during a read may be missing
@@ -693,9 +695,7 @@ class DocumentLog:
         hi = math.inf if max_seq is None else max_seq
         while True:
             try:
-                for paths, first, last in self._page_groups(
-                    lo, hi, files, descending
-                ):
+                for paths, first, last in self._page_groups(lo, hi, descending):
                     page = _read_page(paths, descending)
                     if first < lo or last > hi:
                         page = [r for r in page if lo <= r[0] <= hi]
@@ -706,30 +706,21 @@ class DocumentLog:
                     yield page
                 return
             except FileNotFoundError:
-                if files is not None:
-                    raise
+                continue
 
-    def _page_groups(
-        self, lo, hi, files: Optional[list[str]], descending: bool
-    ) -> list[list]:
+    def _page_groups(self, lo, hi, descending: bool) -> list[list]:
         """``[paths, min seq, max seq]`` of each group of overlapping
         files that holds a seq in ``[lo, hi]``, in page order."""
-        if files is None:
-            with self._swap:
-                files = [
-                    f
-                    for part in self._live_parts()
-                    for f in self._part_files(part)
-                ]
+        with self._swap:
+            files = [
+                f for part in self._live_parts() for f in self._part_files(part)
+            ]
+        known = self._spans
+        self._spans = {p: known[p] for p in files if p in known}
         spans = []
         for path in files:
-            md = pq.read_metadata(path)
-            span = _seq_span(md)
-            if span is None:
-                if md.num_rows:
-                    raise ValueError(f"{path}: no seq statistics in its footer")
-                continue
-            if span[0] <= hi and span[1] >= lo:
+            span = self._span(path)
+            if span is not None and span[0] <= hi and span[1] >= lo:
                 spans.append((*span, path))
         spans.sort()
         groups: list = []
@@ -742,6 +733,20 @@ class DocumentLog:
         if descending:
             groups.reverse()
         return groups
+
+    def _span(self, path: str) -> Optional[tuple[int, int]]:
+        """A committed file's seq span (None: it has no rows), read from
+        its footer the first time it is asked for."""
+        try:
+            return self._spans[path]
+        except KeyError:
+            pass
+        md = pq.read_metadata(path)
+        span = _seq_span(md)
+        if span is None and md.num_rows:
+            raise ValueError(f"{path}: no seq statistics in its footer")
+        self._spans[path] = span
+        return span
 
     def scan(
         self,

@@ -112,7 +112,7 @@ def merge_types(a: T.DataType, b: T.DataType) -> T.DataType:
                     n,
                     merge_types(fa[n], fb[n])
                     if n in fa and n in fb
-                    else (fa.get(n) or fb[n]),
+                    else (fa[n] if n in fa else fb[n]),
                     True,
                 )
                 for n in names

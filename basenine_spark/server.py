@@ -54,16 +54,19 @@ served sequence up to the committed total.  Like the reference, which
 scans each new partition once and evaluates every follower's filter on
 what it finds (``native.go:374-523``), the followers of one commit
 share one read: the first follower to wake runs the db's commit
-reader over the file that commit wrote, with one match flag per
-registered filter, and the others take their records from it.  A
-follower that is not at the frontier (its first poll, or a slow socket
-that missed commits) or whose filter needs the row backend reads on
-its own, from its resume seq.  So an idle tail costs no Spark job, a
-busy tail costs at most one per committed batch, however many
-followers it has, and none when no follower has a compilable
-filter.  The per-connection state is one integer (the resume seq); the
-log's counters, typed schema and ``_state.json`` live in the serving
-process, so one daemon owns its log directory, as in the reference.
+reader over the file that commit wrote, which evaluates every
+registered filter on the driver over that file's typed rows, and the
+others take their records from it.  A follower that is not at the
+frontier (its first poll, or a slow socket that missed commits) or
+whose filter needs the row backend reads on its own, from its resume
+seq.  So an idle tail costs no Spark job, and neither does a busy one
+whose batches arrive over the wire, however many followers it has; a
+commit the driver cannot decide (a file Spark wrote, an unshredded
+log, a NaN or infinite double, a filter a typed row cannot stand in
+for) costs one Spark job.  The per-connection state is one integer
+(the resume seq); the log's counters, typed schema and
+``_state.json`` live in the serving process, so one daemon owns its
+log directory, as in the reference.
 Each connection's Spark jobs carry a job group ``bn-conn-<id>`` and a
 description with its mode and a query hash; a commit reader's job is
 in ``bn-commit-<version>``.
@@ -418,11 +421,12 @@ class BasenineServer:
         client costs one parquet file and one schema commit per batch,
         not per record — while ids stay contiguous in arrival order.
         The batch is written on the driver, without a Spark job
-        (``DocumentLog.append``).  A non-JSON-object
+        (``DocumentLog.append``); each line is parsed once, here, and
+        the db takes the parsed objects.  A non-JSON-object
         line ends the connection after the valid prefix is flushed
         (reference: ``InsertData`` returns the unmarshal error and the
         connection loop breaks, ``server.go:163-164,211-213``)."""
-        pending: list[str] = []
+        pending: list[dict] = []
 
         def flush() -> None:
             if not pending:
@@ -442,13 +446,13 @@ class BasenineServer:
             if not line:
                 continue
             try:
-                ok = isinstance(json.loads(line), dict)
+                doc = json.loads(line)
             except ValueError:
-                ok = False
-            if not ok:
+                doc = None
+            if not isinstance(doc, dict):
                 flush()
                 return
-            pending.append(line)
+            pending.append(doc)
             if len(pending) >= INSERT_BATCH_MAX:
                 flush()
 

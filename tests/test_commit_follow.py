@@ -5,11 +5,13 @@ read of a batch whose schema is not merged yet."""
 
 import json
 import logging
+import re
 import socket
 import threading
 import time
 
 import pytest
+from corpus import EVAL_ROWS
 
 from basenine_spark import client as bn
 from basenine_spark.engine.db import BasenineDB, index_to_id
@@ -97,7 +99,7 @@ def test_poll_stops_at_the_committed_total(db):
     matches, and resuming after ``{"a":2}`` would lose ``{"b":2}``."""
     db.insert_json(['{"a":0}'])
     commit, poll = db._commit_schema, db.query_pages
-    slow_commits, polls = [], []
+    slow_commits, polls, finished = [], [], []
 
     def slow_commit(*args):
         if slow_commits:
@@ -109,6 +111,7 @@ def test_poll_stops_at_the_committed_total(db):
             time.sleep(1.5)  # the next batch appends meanwhile
         polls.append(kwargs.get("as_of"))
         yield from poll(*args, **kwargs)
+        finished.append(True)
 
     db._commit_schema = slow_commit
     db.query_pages = slow_poll
@@ -116,7 +119,9 @@ def test_poll_stops_at_the_committed_total(db):
     try:
         with bn.BasenineClient(server.host, server.port, timeout=10) as c:
             frames = c.query("", "a == 2 or b == 2")
-            assert _wait_until(lambda: polls, 30)
+            # the first poll has returned, so it cannot outlast the
+            # slow commit and wake to both commits at once
+            assert _wait_until(lambda: finished, 30)
             db.insert_json(['{"a":1}'])
             slow_commits.append(True)
             db.insert_json(['{"b":2}', '{"a":2}'])
@@ -451,8 +456,11 @@ def _marker_job(sc) -> int:
 
 @pytest.mark.parametrize("followers", [1, 8, 64])
 def test_one_spark_job_per_commit(spark, db, followers):
-    """However many compiled-filter followers there are, a commit costs
-    one Spark job: the commit reader's, tagged with its version."""
+    """However many compiled-filter followers there are, a commit of a
+    wire-written file costs no Spark job: the commit reader evaluates
+    every filter on the driver.  A commit whose file Spark wrote (a
+    mixed-kind leaf) costs one job, the commit reader's, tagged with its
+    version."""
     assert not spark.streams.active  # every job in the window is ours
     sc = spark.sparkContext
     batch = ['{"k":%d}' % i for i in range(64)]
@@ -460,6 +468,22 @@ def test_one_spark_job_per_commit(spark, db, followers):
     polls = _count_polls(db)
     server = BasenineServer(db).start()
     readers = []
+
+    def commit(lines) -> tuple[list, int]:
+        """The commit-tagged jobs and all jobs of one commit."""
+        before = _marker_job(sc)
+        n0 = len(polls)
+        db.insert_json(lines)
+        assert _wait_until(lambda: len(polls) == n0 + followers, 60)
+        after = _marker_job(sc)
+        group = f"bn-commit-{db._commit_version}"
+        tagged = [
+            j
+            for j in sc.statusTracker().getJobIdsForGroup(group)
+            if before < j < after
+        ]
+        return tagged, after - before - 1
+
     try:
         start = _marker_job(sc)
         readers = [_Reader(server, f"k >= {i}") for i in range(followers)]
@@ -474,22 +498,15 @@ def test_one_spark_job_per_commit(spark, db, followers):
         ]
         assert len(own) == first - start - 1 == followers
         for _ in range(3):
-            before = _marker_job(sc)
-            n0 = len(polls)
-            db.insert_json(batch)
-            assert _wait_until(lambda: len(polls) == n0 + followers, 60)
-            after = _marker_job(sc)
-            group = f"bn-commit-{db._commit_version}"
-            tagged = [
-                j
-                for j in sc.statusTracker().getJobIdsForGroup(group)
-                if before < j < after
-            ]
-            assert len(tagged) == 1
-            assert after - before - 1 == 1
+            assert commit(batch) == ([], 0)
+        # Arrow refuses a number under a string leaf: Spark writes it
+        tagged, jobs = commit(['{"k":100,"t":1}', '{"k":100,"t":"x"}'])
+        assert db._commit_path is None
+        assert len(tagged) == 1 and jobs > 1
         assert _wait_until(
             lambda: all(
-                len(r.records()) == 4 * (64 - i) for i, r in enumerate(readers)
+                len(r.records()) == 4 * (64 - i) + 2
+                for i, r in enumerate(readers)
             ),
             60,
         )
@@ -520,7 +537,8 @@ def test_a_failing_filter_costs_only_its_follower(db, monkeypatch):
             return compile_filter(q, schema)
 
         monkeypatch.setattr(db_module, "compile_filter", failing)
-        # every filter compiles again for each commit's scan
+        # the new key changes the view schema, so the commit's scan
+        # compiles every filter again
         db.insert_json(['{"k":7,"new":1}'])
         want = [
             '{"k":1,"id":"%s"}' % index_to_id(0),
@@ -597,30 +615,30 @@ def test_query_parse_error_is_logged(db, caplog):
         server.stop()
 
 
-def test_commit_reader_reads_only_the_commits_file(db):
-    """The shared scan of a commit lists the one file that commit
-    wrote, not the log directory."""
+def test_commit_reader_reads_only_the_commits_file(db, monkeypatch):
+    """The shared scan of a commit reads the one file that commit
+    wrote, on the driver: no Spark read, no listing of the log."""
+    from basenine_spark.engine import db as db_module
+
     for i in range(5):
         db.insert_json(['{"k":%d}' % i])
     read = []
-    records = db._records
+    read_columns = db_module._read_columns
 
-    def spy(*args, **kwargs):
-        df = records(*args, **kwargs)
-        read.append(df.inputFiles())
-        return df
+    def spy(path, names):
+        read.append(path)
+        return read_columns(path, names)
 
-    db._records = spy
+    monkeypatch.setattr(db_module, "_read_columns", spy)
+    db._records = db._log.read_pages = None  # neither may run
     with db.following("k >= 0"):
         db.insert_json(['{"k":9}'])
         rows, _ = db.query_with_metadata(
             "k >= 0", left_off=index_to_id(4), as_of=5
         )
+        assert db._commit_scan.rows["k >= 0"] == rows
     assert [r.value for r in rows] == ['{"k":9,"id":"%s"}' % index_to_id(5)]
-    path = db._log.last_file[2]
-    assert [[f.rsplit("/", 1)[1] for f in files] for files in read] == [
-        [path.rsplit("/", 1)[1]]
-    ]
+    assert read == [db._log.last_file[2]]
 
 
 def test_commit_reader_falls_back_when_its_file_is_gone(db):
@@ -643,15 +661,18 @@ def test_commit_reader_falls_back_when_its_file_is_gone(db):
 
 
 def test_time_helpers_read_the_clock_of_each_request(db, monkeypatch):
-    """``seconds(n)`` is folded at compile time, so every FETCH and
-    every commit's shared scan compiles again: an hour later the same
-    filter no longer keeps a record a minute old."""
+    """``seconds(n)`` is folded at compile time, so every FETCH compiles
+    again, and a commit's shared scan evaluates it on the driver with
+    the same clock (``compiler.clock_ms``), read for that commit: an
+    hour later the same filter no longer keeps a record a minute old."""
     from types import SimpleNamespace
 
     from basenine_spark.bfl import compiler
 
     clock = [1_700_000_000.0]
+    # the one clock: what compiles fold and the commit reader passes
     monkeypatch.setattr(compiler, "_time", SimpleNamespace(time=lambda: clock[0]))
+    db._spark_commit = None  # the commits below are decided on the driver
     recent = "timestamp > seconds(-60)"
     db.insert_json(['{"timestamp":%d}' % (clock[0] * 1000 - 30_000)])
     rows, _ = db.fetch_with_metadata(0, 1, recent, 10)
@@ -667,3 +688,145 @@ def test_time_helpers_read_the_clock_of_each_request(db, monkeypatch):
         )
         assert db._commit_scan.rows[recent] == rows
     assert [r[0] for r in rows] == [2]
+
+
+# -- the commit reader on the driver: the records Spark keeps -----------
+
+
+def _both_ways(db, texts):
+    """For the latest commit: the texts of ``texts`` a typed row can
+    decide (:meth:`BasenineDB._row_equivalent`), and the records each of
+    them keeps, decided on the driver and by the commit's Spark scan."""
+    schema = db._view_schema()
+    qs = [db._prepare(t) for t in texts]
+    qs = [q for q in qs if db._row_equivalent(q, schema)]
+    args = (qs, schema, db._commit_path, (db._commit_from, db._committed_total - 1))
+    driver = db._eval_commit(*args)
+    spark = db._spark_commit(*args, db._commit_version)
+    return [q.text for q in qs], driver, spark
+
+
+_CORPUS_QUERIES = sorted({re.sub(r"\bid\b", "rid", r[0]) for r in EVAL_ROWS})
+_CORPUS_DOCS = sorted({r[1] for r in EVAL_ROWS})
+
+
+@pytest.mark.parametrize("doc", _CORPUS_DOCS, ids=range(len(_CORPUS_DOCS)))
+def test_driver_commit_matches_spark_on_the_corpus(db, doc):
+    """Every golden-corpus query that compiles, over each corpus
+    document's commit: the driver keeps what the Spark scan keeps.  The
+    log injects ``id``, so a document's own ``id`` is ``rid``."""
+    obj = {("rid" if k == "id" else k): v for k, v in json.loads(doc).items()}
+    db.insert_json([json.dumps(obj)])
+    texts, driver, spark = _both_ways(db, _CORPUS_QUERIES)
+    assert texts and driver is not None
+    assert dict(zip(texts, driver)) == dict(zip(texts, spark))
+
+
+# keys absent in some documents, int → double widening, explicit nulls,
+# nested structs and arrays, a >64-bit integer; the second batch adds
+# keys
+_MIXED = [
+    [
+        '{"a":1,"s":"x","n":{"p":1,"q":"z"},"arr":[1,2],'
+        '"oa":[{"x":1},{"x":null}],"z":[[1],[2,3]]}',
+        '{"a":2.5,"n":null,"arr":null,"z":[[],null]}',
+        '{"s":null,"n":{"p":null},"arr":[],"oa":[null,{"x":3}],'
+        '"big":12345678901234567890123}',
+        '{"a":-3,"b":true,"arr2":[1,2],"j":"{\\"k\\":[1,2]}","big":5}',
+        '{"b":false,"arr2":[],"oa":[],"e":{},"l":[]}',
+        "{}",
+    ],
+    [
+        '{"a":1000000,"c":{"d":{"e":5}},"arr":[3]}',
+        '{"c":null,"new":"k","a":7}',
+        '{"new":null,"b":null,"a":2}',
+    ],
+]
+_MIXED_QUERIES = [
+    "a > 1", "a < 1", "a == 1", "a == nil", "a != nil", "a", "!a",
+    "a == 1000000", 'a == "1000000"', "a >= 2.5",
+    "s == nil", "s != nil", 's == "x"', "s", 's.startsWith("x")',
+    "n == nil", "n != nil", "n", "!n", "n.p == nil", "n.p == 1",
+    "n.q == nil", "(n.p == nil) or a", "!(n.p == nil)",
+    "arr == nil", "arr != nil", "arr", "arr == 1", "arr != 1", "arr > 1",
+    "arr < 3", "arr[0] == 1", "arr[0] == nil", "arr[1] == nil",
+    "arr.* == 2", "arr.* > 0", "arr.* != 2",
+    "oa[0].x == 1", "oa[0].x == nil", "oa[0] == nil", "oa.*.x == nil",
+    "oa.*.x > 2", "oa", "z[0] == 1", "z[1] == nil", "z.*.* == 3",
+    "big > 1", "big == 12345678901234567890123", "big", "big == 5",
+    "b", "b == true", "b == nil", "b != false", "!b",
+    "c.d.e == 5", "c.d.e == nil", "c.d == nil", "c == nil",
+    "new == nil", 'new == "k"', "e == nil", "l == nil",
+    "j.json().k[0] == 1", "j.json().k == 2", "j.json() == nil",
+    "rid == nil", "id == nil", "true", "false", "limit(3)", "a > 1 or b",
+    "timestamp > seconds(-60)", "now() > 0",
+]
+# a typed row cannot stand in for these: Spark decides them
+_SPARK_ONLY = [
+    "n.* == 1", "n.* == nil", "arr == arr2", "arr > arr2", "arr2 <= arr",
+    "arr.* == arr2.*",
+]
+
+
+def test_driver_commit_matches_spark_on_a_mixed_log(db):
+    kept = []
+    for batch in _MIXED:
+        db.insert_json(batch)
+        assert db._commit_path is not None and db._shred_ok
+        texts, driver, spark = _both_ways(db, _MIXED_QUERIES + _SPARK_ONLY)
+        assert texts == _MIXED_QUERIES
+        assert driver is not None
+        kept.append(dict(zip(texts, driver)))
+        assert kept[-1] == dict(zip(texts, spark))
+    # a decimal is a double to the compiled predicate and to the driver
+    assert [r.seq for r in kept[0]["big > 1"]] == [2, 3]
+    schema = db._view_schema()
+    for text in _SPARK_ONLY:
+        assert db._row_equivalent(db._prepare(text), schema) is False, text
+
+
+def test_non_finite_doubles_take_the_spark_scan(db):
+    """Spark orders NaN above every number and counts it as positive;
+    pyeval does not.  A commit file holding a NaN or an infinity is
+    decided by the Spark scan, and its followers get Spark's records."""
+    db.insert_json(['{"x":0.5}'])
+    db.insert_json(['{"x":NaN}', '{"x":2.0}', '{"x":-Infinity}'])
+    texts, driver, spark = _both_ways(db, ["x > 1", "x", "x < 0"])
+    assert driver is None
+    seqs = {t: [r.seq for r in rows] for t, rows in zip(texts, spark)}
+    assert seqs == {"x > 1": [1, 2], "x": [1, 2], "x < 0": [3]}
+    with db.following("x > 1"), db.following("x < 0"):
+        db.insert_json(['{"x":Infinity}', '{"x":3.0}'])
+        rows, _ = db.query_with_metadata(
+            "x > 1", left_off=index_to_id(3), as_of=5
+        )
+    assert [r.seq for r in rows] == [4, 5]
+
+
+def test_a_wire_insert_line_is_parsed_once(db, monkeypatch):
+    """The server parses each INSERT line for its object check and hands
+    the db the parsed objects; ``insert_json`` takes them as they are."""
+    got = []
+    insert = db.insert_json
+
+    def spy(lines):
+        got.extend(lines)
+        return insert(lines)
+
+    db.insert_json = spy
+    server = BasenineServer(db).start()
+    try:
+        with bn.BasenineClient(server.host, server.port) as c:
+            c.insert(['{"k":1}', '{"k":2,"s":"x"}'])
+        assert _wait_until(lambda: db._committed_total == 2, 30)
+    finally:
+        server.stop()
+    assert got == [
+        {"k": 1, "id": index_to_id(0)},
+        {"k": 2, "s": "x", "id": index_to_id(1)},
+    ]
+    rows, _ = db.query_with_metadata("")
+    assert [r.value for r in rows] == [
+        '{"k":1,"id":"%s"}' % index_to_id(0),
+        '{"k":2,"s":"x","id":"%s"}' % index_to_id(1),
+    ]

@@ -39,11 +39,10 @@ def _jobs_of(spark, fn):
     return result, len(sc.statusTracker().getJobIdsForGroup(group)) - before
 
 
-def _spark_pages(self, min_seq=None, max_seq=None, files=None, descending=False):
-    """The unfiltered read as a Spark scan: the directory (or
-    ``files``) bounded by a ``seq`` range, collected and sorted on the
-    driver, as one page."""
-    df = self.scan(files)
+def _spark_pages(self, min_seq=None, max_seq=None, descending=False):
+    """The unfiltered read as a Spark scan: the directory bounded by a
+    ``seq`` range, collected and sorted on the driver, as one page."""
+    df = self.scan()
     if min_seq is not None:
         df = df.filter(F.col("seq") >= min_seq)
     if max_seq is not None:
@@ -147,7 +146,7 @@ def mixed(spark, tmp_path_factory):
     for b in range(3):
         db.insert_json(_docs(82 + 10 * b, 92 + 10 * b))
     assert log._live_parts() == [1, 2]
-    groups = log._page_groups(-math.inf, math.inf, None, False)
+    groups = log._page_groups(-math.inf, math.inf, False)
     # the two compacted files overlap: one group, then one per wire file
     assert [len(paths) for paths, _, _ in groups] == [2, 1, 1, 1]
     return db
@@ -291,7 +290,7 @@ def test_a_file_removed_after_the_listing_loses_no_record(five_files):
     log = db._log
     pages = log.read_pages()
     first = next(pages)
-    paths = [p for p, _, _ in log._page_groups(-math.inf, math.inf, None, False)]
+    paths = [p for p, _, _ in log._page_groups(-math.inf, math.inf, False)]
     assert db.compact() == 1
     assert not any(os.path.exists(p) for group in paths for p in group)
     rest = [r for page in pages for r in page]
@@ -490,3 +489,34 @@ def test_a_read_waits_for_a_compaction_swap(five_files, monkeypatch):
     swap.reader.join(60)
     assert swap.waited
     assert got == list(range(25))
+
+
+def test_a_file_footer_is_read_once(spark, tmp_path, monkeypatch):
+    """The seq span of a committed file is read from its footer once: a
+    second SINGLE on a 50-file log opens no footer of an unchanged
+    file, a new file's is read once, and a compaction drops the spans
+    of the files it replaced."""
+    db = BasenineDB(spark, path=str(tmp_path / "store"))
+    for b in range(50):
+        db.insert_json(_docs(b, b + 1))
+    opened = []
+    read_metadata = log_module.pq.read_metadata
+
+    def spy(path, *args, **kwargs):
+        opened.append(path)
+        return read_metadata(path, *args, **kwargs)
+
+    monkeypatch.setattr(log_module.pq, "read_metadata", spy)
+    assert db.single_json(index_to_id(7))[0] == 7
+    assert len(opened) == 50
+    opened.clear()
+    assert db.single_json(index_to_id(8))[0] == 8
+    assert opened == []
+    db.insert_json(_docs(50, 51))
+    assert db.single_json(index_to_id(50))[0] == 50
+    assert opened == [db._log.last_file[2]]
+    assert db.compact() == 1
+    assert [r.seq for r in db.query_with_metadata("")[0]] == list(range(51))
+    assert set(db._log._spans) == {
+        f for part in db._log._live_parts() for f in db._log._part_files(part)
+    }

@@ -43,6 +43,8 @@ CASES = [
     ['{"a": [1, "x"]}', '{"a": 7}'],
     ['{"a": [1]}', '{"a": "xyz"}'],
     ['{"a": 1, "b": [1, "x"]}'],
+    # an empty object under a key the next document lacks
+    ['{"e": {}, "a": 1}', '{"a": 2}'],
 ]
 
 

@@ -9,13 +9,15 @@ its own client thread.  Every commit is one 200-document
 ``insert_json``.  Its wall time runs from the insert until every
 follower's poll for it has returned; its jobs are all Spark jobs
 started in that span (job ids are dense: two marker jobs bracket it)
-and, of those, the jobs in the commit reader's job group.
-``--own`` gives every poll its own scan, as before the commit reader.
+and, of those, the jobs in the commit reader's job group.  The commit
+reader evaluates the filters on the driver; ``--spark`` makes it run
+its Spark fallback for every commit instead, and ``--own`` gives every
+poll its own scan, as before the commit reader.
 
 Usage::
 
     python tools/follow_probe.py [--followers 1,8,64] [--files 50,500]
-                                 [--commits 6] [--own]
+                                 [--commits 6] [--own | --spark]
 
 Prints one line per (files, followers): the median and max commit wall
 time, and jobs per commit (all / commit-tagged).  Not a gate.
@@ -53,7 +55,7 @@ def _wait(cond, timeout: float = 300.0) -> None:
         time.sleep(0.002)
 
 
-def run(spark, n_files: int, n_followers: int, commits: int, own: bool):
+def run(spark, n_files: int, n_followers: int, commits: int, mode: str):
     from gen import Traffic
 
     from basenine_spark import client as bn
@@ -66,8 +68,10 @@ def run(spark, n_files: int, n_followers: int, commits: int, own: bool):
         db = BasenineDB(spark, path=os.path.join(tmp, "store"))
         for _ in range(n_files):
             db.insert_json(traffic.extend(BATCH))
-        if own:
+        if mode == "own":
             db._commit_records = lambda *args: None
+        elif mode == "spark":
+            db._eval_commit = lambda *args: None
         calls = []
         poll = db.query_pages
 
@@ -115,7 +119,7 @@ def run(spark, n_files: int, n_followers: int, commits: int, own: bool):
     walls, jobs, tagged = walls[1:], jobs[1:], tagged[1:]
     print(
         f"files={n_files} followers={n_followers} "
-        f"mode={'own' if own else 'shared'} "
+        f"mode={mode} "
         f"commit_ms_p50={statistics.median(walls):.0f} "
         f"commit_ms_max={max(walls):.0f} "
         f"jobs_per_commit={statistics.mean(jobs):.2f} "
@@ -129,8 +133,11 @@ def main() -> int:
     ap.add_argument("--followers", default="1,8,64")
     ap.add_argument("--files", default="50,500")
     ap.add_argument("--commits", type=int, default=6)
-    ap.add_argument("--own", action="store_true")
+    modes = ap.add_mutually_exclusive_group()
+    modes.add_argument("--own", action="store_true")
+    modes.add_argument("--spark", action="store_true")
     args = ap.parse_args()
+    mode = "own" if args.own else "spark" if args.spark else "driver"
 
     from pyspark.sql import SparkSession
 
@@ -144,7 +151,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     for n_files in (int(x) for x in args.files.split(",")):
         for n in (int(x) for x in args.followers.split(",")):
-            run(spark, n_files, n, args.commits, args.own)
+            run(spark, n_files, n, args.commits, mode)
     spark.stop()
     return 0
 
