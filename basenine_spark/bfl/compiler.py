@@ -112,9 +112,11 @@ class Compiled:
     # present, null where the record has none, a null array empty)
     # keeps exactly the rows the predicate keeps; False when the query
     # takes a wildcard over a struct (a static collapse to the
-    # predicate, the struct's values to pyeval) or compares an array
+    # predicate, the struct's values to pyeval), compares an array
     # with an array (there the predicate tells a null array from the
-    # empty one pyeval is given for it)
+    # empty one pyeval is given for it) or matches a regex against a
+    # value (Java's rlike to the predicate, Python's re to pyeval:
+    # ``\p{L}`` is Java only, and ``.`` matches ``\r`` in Python only)
     row_equivalent: bool = True
 
 
@@ -1062,6 +1064,9 @@ class _Compiler:
                 rv = _pyval(right)
                 res = pyeval._eql(lv, rv)
                 return Val(kind=K_BOOL, lit=res if op == "==" else not res, is_lit=True)
+            kinds = {left.kind, right.kind}
+            if K_REGEX in kinds and not kinds <= {K_REGEX, K_ARRAY, K_OPAQUE}:
+                self.resolver.row_equivalent = False  # an rlike
             col = _compile_eql(left, right, negate=(op == "!="))
             return Val(kind=K_BOOL, col=col, collapse=collapse, nonnull=True)
         if left.is_lit and right.is_lit:

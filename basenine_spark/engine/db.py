@@ -65,6 +65,7 @@ from pyspark.sql import types as T
 from ..bfl import expand_macros, parse, validate as bfl_validate
 from ..bfl.ast import Query
 from ..bfl.compiler import (
+    Compiled,
     UnsupportedBFL,
     apply_redact_paths,
     clock_ms,
@@ -1124,32 +1125,44 @@ class BasenineDB:
             )
         return self._log
 
+    @staticmethod
+    def _compiled(
+        q: Query, schema: Optional[T.StructType]
+    ) -> Optional[Compiled]:
+        """``q`` compiled under the view ``schema``, or None when the row
+        backend decides it: a schema whose names collide
+        case-insensitively, or a query the compiler cannot express
+        (:class:`UnsupportedBFL`).  Compiled on every call: time helpers
+        (``now()``, ``seconds(n)``…) fold the clock of the compile into
+        the predicate."""
+        if _case_collision(schema):
+            return None
+        try:
+            return compile_filter(q, schema)
+        except UnsupportedBFL:
+            return None
+
     def _match(
         self, q: Query, schema: Optional[T.StructType]
     ) -> tuple[Optional[Column], bool]:
         """How ``q`` selects log records under the view ``schema``:
         ``(predicate, False)`` when it compiles to a Column (None keeps
         every record); otherwise ``(pre-filter or None, True)`` — the
-        row backend decides, after the compilable conjuncts.  A schema
-        whose names collide case-insensitively always takes the row
-        backend.  Compiled on every call: time helpers (``now()``,
-        ``seconds(n)``…) fold the clock of the compile into the
-        predicate."""
+        row backend decides (:meth:`_compiled`), after the compilable
+        conjuncts."""
         if q.expr is None:
             return None, False
-        if _case_collision(schema):
-            return None, True
-        try:
-            return compile_filter(q, schema).predicate, False
-        except UnsupportedBFL:
-            return _pushdown(q, schema), True
+        compiled = self._compiled(q, schema)
+        if compiled is not None:
+            return compiled.predicate, False
+        return (None if _case_collision(schema) else _pushdown(q, schema)), True
 
     def _row_equivalent(
         self, q: Query, schema: Optional[T.StructType]
     ) -> Optional[bool]:
         """How the commit reader may decide ``q`` under the view
-        ``schema``: None when ``q`` needs the row backend (as in
-        :meth:`_match`), else whether :func:`pyeval.eval_doc` over the
+        ``schema``: None when ``q`` needs the row backend
+        (:meth:`_compiled`), else whether :func:`pyeval.eval_doc` over the
         typed rows keeps what its predicate keeps
         (:attr:`Compiled.row_equivalent`).  Cached per query text and
         schema, so a commit compiles a filter only when the filter or
@@ -1162,14 +1175,8 @@ class BasenineDB:
             flags = {}
             self._compile_flags = schema, flags
         if q.text not in flags:
-            try:
-                flags[q.text] = (
-                    None
-                    if _case_collision(schema)
-                    else compile_filter(q, schema).row_equivalent
-                )
-            except UnsupportedBFL:
-                flags[q.text] = None
+            compiled = self._compiled(q, schema)
+            flags[q.text] = None if compiled is None else compiled.row_equivalent
         return flags[q.text]
 
     def _records(
@@ -1450,11 +1457,11 @@ class BasenineDB:
         fallback's rule: it runs when the file is not known or cannot
         be read, when the log is not shredded (a file may lack
         ``doc``), or when the file holds a value the two evaluators
-        judge apart (a NaN or infinite double), and for a query whose
-        predicate a typed row cannot stand in for
-        (:meth:`_row_equivalent`).  A view schema whose names collide
-        case-insensitively never gets here: its filters need the row
-        backend."""
+        judge apart (a NaN or infinite double) or pyeval fails on a
+        row, and for a query whose predicate a typed row cannot stand
+        in for (:meth:`_row_equivalent`).  A view schema whose names
+        collide case-insensitively never gets here: its filters need
+        the row backend."""
         if all(q.expr is None for q in qs):
             records = [r for page in self._log.read_pages(*window) for r in page]
             return [records] * len(qs)
@@ -1464,19 +1471,19 @@ class BasenineDB:
             or not all(self._row_equivalent(q, schema) for q in qs)
         ):
             return None
+        kept: list[list[Record]] = [[] for _ in qs]
         try:
             seqs, values, docs = _read_columns(path, ["seq", "value", "doc"])
             project = _projector(schema)
             rows = [project(doc) for doc in docs]
-        except Exception:  # noqa: BLE001 — gone, no doc column, _Unproven
-            return None
-        now_ms = clock_ms()
-        kept: list[list[Record]] = [[] for _ in qs]
-        # a wire file holds its records in seq order
-        for seq, value, row in zip(seqs, values, rows):
-            for out, q in zip(kept, qs):
-                if eval_doc(q, row, now_ms)[0]:
-                    out.append(Record(seq, value))
+            now_ms = clock_ms()
+            # a wire file holds its records in seq order
+            for seq, value, row in zip(seqs, values, rows):
+                for out, q in zip(kept, qs):
+                    if eval_doc(q, row, now_ms)[0]:
+                        out.append(Record(seq, value))
+        except Exception:  # noqa: BLE001 — gone, no doc column, _Unproven,
+            return None  # or an evaluation pyeval cannot make
         return kept
 
     def _spark_commit(

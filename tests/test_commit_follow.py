@@ -764,7 +764,7 @@ _MIXED_QUERIES = [
 # a typed row cannot stand in for these: Spark decides them
 _SPARK_ONLY = [
     "n.* == 1", "n.* == nil", "arr == arr2", "arr > arr2", "arr2 <= arr",
-    "arr.* == arr2.*",
+    "arr.* == arr2.*", 's == r"x"', 's != r"^x$"',
 ]
 
 
@@ -801,6 +801,48 @@ def test_non_finite_doubles_take_the_spark_scan(db):
             "x > 1", left_off=index_to_id(3), as_of=5
         )
     assert [r.seq for r in rows] == [4, 5]
+
+
+def test_regex_filters_take_the_spark_scan(db):
+    """A regex is matched by Java's ``rlike`` in a compiled predicate
+    and by Python's ``re`` in pyeval, which differ: ``\\p{L}`` is Java
+    only, and ``.`` matches ``\\r`` in Python only.  The compiler flags a
+    regex match, and the commit's Spark scan decides it."""
+    db.insert_json(['{"s":"a\\rb"}', '{"s":"\\u00e9"}', '{"s":"1"}'])
+    schema = db._view_schema()
+    qs = [
+        db._prepare(t)
+        for t in ('s == r"a.b"', 's != r"a.b"', r's == r"\\p{L}+"')
+    ]
+    assert [db._row_equivalent(q, schema) for q in qs] == [False] * 3
+    window = (db._commit_from, db._committed_total - 1)
+    assert db._eval_commit(qs, schema, db._commit_path, window) is None
+    kept = db._spark_commit(
+        qs, schema, db._commit_path, window, db._commit_version
+    )
+    assert [[r.seq for r in rows] for rows in kept] == [[], [0, 1, 2], [0, 1]]
+
+
+def test_an_evaluation_error_takes_the_spark_scan(db, monkeypatch):
+    """A filter pyeval fails to evaluate sends the commit to its one
+    Spark scan; no follower is left to read alone."""
+    from basenine_spark.engine import db as db_module
+
+    db.insert_json(['{"k":1}', '{"k":5}'])
+    eval_doc = db_module.eval_doc
+
+    def failing(q, row, now_ms):
+        if q.text == "k > 2":
+            raise RuntimeError("cannot evaluate")
+        return eval_doc(q, row, now_ms)
+
+    monkeypatch.setattr(db_module, "eval_doc", failing)
+    scan = db_module._CommitScan((db._commit_from, db._committed_total - 1))
+    db._scan_commit(
+        scan, ["k > 2", "k >= 0"], db._commit_path, db._commit_version
+    )
+    seqs = {t: [r.seq for r in rows] for t, rows in scan.rows.items()}
+    assert seqs == {"k > 2": [1], "k >= 0": [0, 1]}
 
 
 def test_a_wire_insert_line_is_parsed_once(db, monkeypatch):
