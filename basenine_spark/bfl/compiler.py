@@ -50,7 +50,7 @@ behavior (``redact``, dynamic shapes) use the row backend
 from __future__ import annotations
 
 import time as _time
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from typing import Any, Callable, List, Optional, Tuple, Union
 
 from pyspark.sql import Column, DataFrame
@@ -70,7 +70,6 @@ from .ast import (
     NumberLit,
     Path,
     Query,
-    RecursiveDescent,
     RegexLit,
     StringLit,
     SubExpression,

@@ -32,7 +32,6 @@ import re
 from typing import List, Optional, Tuple
 
 from .ast import (
-    HELPERS,
     BinaryOp,
     BoolLit,
     Expr,

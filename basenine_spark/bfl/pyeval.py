@@ -25,7 +25,7 @@ import json
 import operator
 import re
 import time
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Any, List, Optional, Tuple
 
 from .ast import (

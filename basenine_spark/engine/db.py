@@ -39,7 +39,8 @@ Scale notes (100 TB design):
   Spark job; a compiled filter is one Spark scan.  Their row backend
   runs on the driver, over the records that read returns.  A commit's
   QUERY followers evaluate their filters on the driver over the typed
-  rows of the commit's one file (``_eval_commit``), with no Spark job.
+  rows of the one file that holds the commit (``_eval_commit``), with
+  no Spark job.
 * ``fetch(direction=-1)`` is top-K by id (``orderBy(desc).limit``) which
   Spark executes as TakeOrderedAndProject — no global sort.
 """
@@ -79,7 +80,7 @@ from ..bfl.compiler import (
 )
 from ..bfl.macros import add_macro as _add_macro
 from ..bfl.pyeval import eval_doc
-from .log import DocumentLog, Record, _read_columns
+from .log import DocumentLog, Record, _read_columns, _read_page
 from .schema import (
     common_leaves_unchanged,
     widen_to_merged,
@@ -254,7 +255,7 @@ class _Unproven(Exception):
 
 def _projector(dt: T.DataType):
     """A function from a value of ``dt`` as ``pyarrow`` reads it from a
-    wire file's ``doc`` column to the value a compiled predicate sees in
+    log file's ``doc`` column to the value a compiled predicate sees in
     the typed view of that file, for :func:`pyeval.eval_doc`:
 
     * a struct has every field of ``dt``, None where the file has none;
@@ -330,12 +331,7 @@ class BasenineDB:
     """One logical append-only document collection (the reference has
     exactly one implicit table, SURVEY.md §1.1)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        id_col: str = ID_COL,
-        path: Optional[str] = None,
-    ):
+    def __init__(self, spark: SparkSession, path: Optional[str] = None):
         """Records live in a partitioned-Parquet :class:`DocumentLog`;
         the schema-free document is the record of truth and a typed
         view is derived per schema generation.  ``path`` makes the db
@@ -347,7 +343,7 @@ class BasenineDB:
         if path is None:
             path = tempfile.mkdtemp(prefix="basenine-")
             weakref.finalize(self, shutil.rmtree, path, ignore_errors=True)
-        self._setup(spark, id_col, DocumentLog(spark, path))
+        self._setup(spark, ID_COL, DocumentLog(spark, path))
         self._load_state()
 
     def _setup(
@@ -373,11 +369,8 @@ class BasenineDB:
         self._commit = threading.Condition()
         self._commit_version = 0
         self._committed_total = 0 if log is None else log.total_written
-        # the latest commit's window is [_commit_from, _committed_total);
-        # _commit_path is the one file holding exactly its records, if
-        # known
+        # the latest commit's window is [_commit_from, _committed_total)
         self._commit_from = self._committed_total
-        self._commit_path: Optional[str] = None
         # QUERY followers' filter texts, and the latest commit's shared
         # scan (both guarded by _commit)
         self._followers: Counter = Counter()
@@ -510,10 +503,10 @@ class BasenineDB:
         ids = log.append(
             docs, insertion_filter_text=flt_text, shred_schema=shred
         )
-        self._commit_schema(batch, shred, first_new_seq, log.last_file)
+        self._commit_schema(batch, shred, first_new_seq)
         return ids
 
-    def insert_json_df(self, df, schema_sampling_ratio: float = 1.0) -> int:
+    def insert_json_df(self, df) -> int:
         """Bulk INSERT of a DataFrame holding ONE string column of
         JSON lines — the backfill path: unlike
         :meth:`insert_json` (the wire-protocol shape, where the server
@@ -525,22 +518,7 @@ class BasenineDB:
         the driver advances the id counter and merges schemas.
         Returns the number of records written (ids are contiguous
         from the pre-call counter in the DataFrame's partition
-        order).
-
-        ``schema_sampling_ratio`` < 1.0 passes Spark's JSON
-        ``samplingRatio`` to the inference scan — at backfill scale
-        the batch-schema pass need not read every record (the stored
-        docs stay the record of truth). Caveat, and the difference
-        from the wire path (which parses EVERY record into the
-        schema accumulator): a rare key absent from the sampled
-        inference is also absent from the accumulated typed schema,
-        so typed-view reads (typed columns AND the from_json
-        fallback, which uses the same accumulated schema) silently
-        lack that field until a later batch happens to sample it —
-        the stored payload stays exact, but typed-view visibility of
-        the rare key is delayed, not merely un-shredded. Use the
-        default full-pass ratio when the batch may carry keys seen
-        nowhere else."""
+        order)."""
         log = self._writable_log()
         flt_text, flt_q, pure_paths = self._filter_plan()
         first_new_seq = log.total_written
@@ -580,16 +558,14 @@ class BasenineDB:
             # mirrors, evaluated by Spark's JSON reader JVM-side (no
             # Python round-trip; see infer_json_lines_schema)
             try:
-                inferred = infer_json_lines_schema(
-                    self.spark, df, schema_sampling_ratio
-                )
+                inferred = infer_json_lines_schema(self.spark, df)
             except Exception:
                 # empty batch (or all-corrupt, which append_df rejects
                 # anyway): nothing to infer, nothing will be written
                 inferred = None
             if inferred is not None and not inferred.fields:
                 inferred = None
-            # A FULL-pass inference that surfaced no _corrupt_record
+            # An inference that surfaced no _corrupt_record
             # has already Jackson-validated every line, and the reader
             # is pinned to json.loads acceptance (strict-mode pin +
             # allowNonNumericNumbers, tests/test_bulk_ingest.py) — the
@@ -602,7 +578,6 @@ class BasenineDB:
             if (
                 not send_filter_text
                 and not prevalidated
-                and schema_sampling_ratio >= 1.0
                 and inferred is not None
                 and "_corrupt_record" not in inferred.fieldNames()
             ):
@@ -686,13 +661,11 @@ class BasenineDB:
         batch: Optional[T.StructType],
         shred: Optional[T.StructType],
         first_new_seq: int,
-        file: Optional[tuple] = None,
     ) -> None:
         """After an append from seq ``first_new_seq``: merge the batch's
         shape into the running union schema (no invalidation — the
         typed view never re-learns its schema from the data), persist
-        the state, and publish the commit with the ``file`` the append
-        wrote (``DocumentLog.last_file``).  ``batch`` None means the
+        the state, and publish the commit.  ``batch`` None means the
         insertion filter could drop records or rewrite values
         dynamically: the shape is then inferred from the just-appended
         slice, a batch-bounded job pruned by the seq predicate."""
@@ -718,26 +691,19 @@ class BasenineDB:
                 self._schema_acc = merged
                 self._typed_schema = finalize_type(merged)
         self._save_state()
-        self._publish_commit(file)
+        self._publish_commit()
 
-    def _publish_commit(self, file: Optional[tuple] = None) -> None:
+    def _publish_commit(self) -> None:
         """Make every record written so far visible to
         :meth:`wait_commit` callers.  Called only once the records'
         schema is merged: a follower compiling its filter against an
-        older schema would match nothing and resume past them.
-
-        ``file`` (``(min_seq, max_seq, path)``) is kept for the commit
-        reader when it holds exactly the new records.  The previous
-        commit's shared scan is dropped: only a follower at the new
-        frontier can use a shared result."""
+        older schema would match nothing and resume past them.  The
+        previous commit's shared scan is dropped: only a follower at
+        the new frontier can use a shared result."""
         with self._commit:
             self._commit_version += 1
             self._commit_from = self._committed_total
             self._committed_total = self._log.total_written
-            window = (self._commit_from, self._committed_total - 1)
-            self._commit_path = None
-            if file is not None and file[:2] == window:
-                self._commit_path = file[2]
             self._commit_scan = None
             self._commit.notify_all()
 
@@ -797,13 +763,9 @@ class BasenineDB:
           recursive descent over typed columns, dynamic shapes);
         * full-pass schema inference yields no fields (empty batch).
 
-        The compile schema comes from a FULL-pass inference over the
-        batch regardless of ``schema_sampling_ratio`` — a sampled
-        schema missing a key the filter reads would collapse the
-        predicate to false for every row carrying it, which the
-        per-document row backend would never do. Full-pass inference
-        sees every key, so missing-path collapse triggers exactly when
-        the row backend's P14/P15 collapse would."""
+        The compile schema comes from a full-pass inference over the
+        batch, which sees every key, so missing-path collapse triggers
+        exactly when the row backend's P14/P15 collapse would."""
         # mutating filters can never take this path — skip them BEFORE
         # paying the validation count and the full inference pass
         taints = collect_redact_taints(q.expr)
@@ -969,9 +931,10 @@ class BasenineDB:
         ``keep`` names two columns that carry each record's ``seq`` and
         stored ``value`` beside the typed ones; ``batch`` (log rows of
         a tail micro-batch) is read in place of the log, via
-        ``from_json``; ``files`` (the commit reader's one file) in
-        place of the log directory.  ``schema`` is the view schema a caller compiled
-        its filters against (default: the current one)."""
+        ``from_json``; ``files`` (the ones that hold a commit) in
+        place of the log directory.  ``schema`` is the view schema a
+        caller compiled its filters against (default: the current
+        one)."""
         if schema is None:
             schema = self._view_schema()
         shredded = batch is None and self._shred_ok and bool(schema.fields)
@@ -1374,11 +1337,11 @@ class BasenineDB:
         compile, or was registered after the scan began).
 
         The first follower to ask for the latest commit's range runs
-        the scan (:meth:`_scan_commit`: on the driver over the commit's
-        one file, with no Spark job and no compile of a filter already
-        seen under the view schema); the others wait for it and take
-        their records.  The next commit drops the result
-        (:meth:`_publish_commit`)."""
+        the scan (:meth:`_scan_commit`: on the driver over the one file
+        that holds the commit, with no Spark job and no compile of a
+        filter already seen under the view schema); the others wait
+        for it and take their records.  The next commit drops the
+        result (:meth:`_publish_commit`)."""
         window = (min_seq, max_seq)
         with self._commit:
             scan = self._commit_scan
@@ -1389,10 +1352,10 @@ class BasenineDB:
                     return None
                 scan = self._commit_scan = _CommitScan(window)
                 texts = list(self._followers)
-                path, version = self._commit_path, self._commit_version
+                version = self._commit_version
         if owner:
             try:
-                self._scan_commit(scan, texts, path, version)
+                self._scan_commit(scan, texts, version)
             finally:
                 scan.done.set()
         else:
@@ -1400,19 +1363,17 @@ class BasenineDB:
         return scan.rows.get(query)
 
     def _scan_commit(
-        self,
-        scan: _CommitScan,
-        texts: list[str],
-        path: Optional[str],
-        version: int,
+        self, scan: _CommitScan, texts: list[str], version: int
     ) -> None:
         """Fill ``scan.rows`` for every filter text of ``texts`` that
-        compiles (:meth:`_row_equivalent`), with one read of the commit's
-        window: on the driver (:meth:`_eval_commit`), or, when the
-        driver cannot decide, one Spark job (:meth:`_spark_commit`).  A
-        text that fails to prepare or compile is left out, and so is
-        every text when the read fails: those followers read on their
-        own and report their own errors."""
+        compiles (:meth:`_row_equivalent`), with one read of the files
+        the log's index names for the commit's window
+        (:meth:`DocumentLog.files`): on the driver
+        (:meth:`_eval_commit`), or, when the driver cannot decide, one
+        Spark job (:meth:`_spark_commit`).  A text that fails to prepare
+        or compile is left out, and so is every text when the read
+        fails: those followers read on their own and report their own
+        errors."""
         served, schema = [], None
         for text in texts:
             try:
@@ -1427,9 +1388,10 @@ class BasenineDB:
             return
         qs = [q for _, q in served]
         try:
-            kept = self._eval_commit(qs, schema, path, scan.window)
+            files = self._log.files(*scan.window)
+            kept = self._eval_commit(qs, schema, files, scan.window)
             if kept is None:
-                kept = self._spark_commit(qs, schema, path, scan.window, version)
+                kept = self._spark_commit(qs, schema, files, scan.window, version)
         except Exception:  # noqa: BLE001 — each follower re-runs alone
             return
         if kept is not None:
@@ -1439,46 +1401,51 @@ class BasenineDB:
         self,
         qs: list[Query],
         schema: Optional[T.StructType],
-        path: Optional[str],
+        files: list[tuple],
         window: tuple,
     ) -> Optional[list[list[Record]]]:
         """The records of the commit's ``window`` that each query of
         ``qs`` keeps, sorted by seq and decided on the driver with no
         Spark job — or None when only the commit's Spark scan can
-        decide them.
+        decide them.  ``files`` are ``(first seq, last seq, path)`` of
+        the files that hold the window (:meth:`DocumentLog.files`).
 
-        With no filter they are the window's stored records
-        (:meth:`DocumentLog.read_pages`).  Otherwise the driver reads
-        ``seq``, ``value`` and ``doc`` of ``path``, the commit's one
-        file, projects each ``doc`` onto the view ``schema`` as Spark
-        reads it (:func:`_projector`) and keeps a record for a query
-        when :func:`pyeval.eval_doc` finds it true, with one clock for
-        the commit (:func:`compiler.clock_ms`).  That is the one Spark
-        fallback's rule: it runs when the file is not known or cannot
-        be read, when the log is not shredded (a file may lack
-        ``doc``), or when the file holds a value the two evaluators
-        judge apart (a NaN or infinite double) or pyeval fails on a
-        row, and for a query whose predicate a typed row cannot stand
-        in for (:meth:`_row_equivalent`).  A view schema whose names
-        collide case-insensitively never gets here: its filters need
-        the row backend."""
+        With no filter they are the window's stored records, read from
+        those files.  Otherwise the driver decides a window that one
+        file holds exactly, whichever writer wrote it: it reads
+        ``seq``, ``value`` and ``doc`` of that file, projects each
+        ``doc`` onto the view ``schema`` as Spark reads it
+        (:func:`_projector`) and keeps a record for a query when
+        :func:`pyeval.eval_doc` finds it true, with one clock for the
+        commit (:func:`compiler.clock_ms`).  That is the one Spark
+        fallback's rule: it runs when the window is not one file's
+        (a bulk append of several files, or a compacted file), when the
+        file cannot be read, when the log is not shredded (a file may
+        lack ``doc``), or when the file holds a value the two
+        evaluators judge apart (a NaN or infinite double) or pyeval
+        fails on a row, and for a query whose predicate a typed row
+        cannot stand in for (:meth:`_row_equivalent`).  A view schema
+        whose names collide case-insensitively never gets here: its
+        filters need the row backend."""
+        lo, hi = window
         if all(q.expr is None for q in qs):
-            records = [r for page in self._log.read_pages(*window) for r in page]
-            return [records] * len(qs)
+            page = _read_page([path for _, _, path in files], False)
+            return [[r for r in page if lo <= r.seq <= hi]] * len(qs)
+        if not files:  # nothing left in the window
+            return [[] for _ in qs]
         if (
-            path is None
+            [f[:2] for f in files] != [window]
             or not self._shred_ok
             or not all(self._row_equivalent(q, schema) for q in qs)
         ):
             return None
         kept: list[list[Record]] = [[] for _ in qs]
         try:
-            seqs, values, docs = _read_columns(path, ["seq", "value", "doc"])
+            columns = _read_columns(files[0][2], ["seq", "value", "doc"])
             project = _projector(schema)
-            rows = [project(doc) for doc in docs]
             now_ms = clock_ms()
-            # a wire file holds its records in seq order
-            for seq, value, row in zip(seqs, values, rows):
+            for seq, value, doc in sorted(zip(*columns), key=itemgetter(0)):
+                row = project(doc)
                 for out, q in zip(kept, qs):
                     if eval_doc(q, row, now_ms)[0]:
                         out.append(Record(seq, value))
@@ -1490,34 +1457,33 @@ class BasenineDB:
         self,
         qs: list[Query],
         schema: Optional[T.StructType],
-        path: Optional[str],
+        files: list[tuple],
         window: tuple,
         version: int,
     ) -> Optional[list[list[Record]]]:
-        """:meth:`_eval_commit`'s result from one Spark job over
-        ``path`` (with no ``seq`` predicate, every commit's scan is the
-        same plan, and its generated code is compiled once), or over
-        the log's ``window`` when the file is not known or cannot be
-        read (compaction or retention removed it).  None when the read
-        fails, or when no query has a predicate for Spark to run."""
+        """:meth:`_eval_commit`'s result from one Spark job over the
+        paths of ``files``, bounded by the ``window`` only when a file
+        holds records outside it (with no ``seq`` predicate, every
+        commit's scan of its own file is the same plan, and its
+        generated code is compiled once).  None when the read fails
+        (compaction or retention removed a file), or when no query has
+        a predicate for Spark to run."""
         compiled = schema, [self._match(q, schema) for q in qs]
         if all(pred is None for pred, _ in compiled[1]):
             return None
-        reads = [] if path is None else [((None, None), [path])]
-        reads.append((window, None))
-        for (lo, hi), files in reads:
-            try:
-                df = self._records(qs, lo, hi, files=files, compiled=compiled)
-                with job_group(
-                    self.spark.sparkContext,
-                    f"bn-commit-{version}",
-                    f"commit v={version} filters={len(qs)}",
-                ):
-                    got = df.collect()
-                break
-            except Exception:  # noqa: BLE001 — try the next read
-                continue
-        else:
+        lo, hi = window
+        if all(lo <= first and last <= hi for first, last, _ in files):
+            lo = hi = None
+        paths = [path for _, _, path in files]
+        try:
+            df = self._records(qs, lo, hi, files=paths, compiled=compiled)
+            with job_group(
+                self.spark.sparkContext,
+                f"bn-commit-{version}",
+                f"commit v={version} filters={len(qs)}",
+            ):
+                got = df.collect()
+        except Exception:  # noqa: BLE001 — each follower re-runs alone
             return None
         got.sort(key=itemgetter(0))
         one = len(qs) == 1  # then every row is its query's

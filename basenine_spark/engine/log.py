@@ -9,15 +9,15 @@ reference                       here
 length-prefixed log writer      Parquet append (``native.go:313-333``)
 ``data_%09d.db`` partitions     ``part=N`` directory partitions
   (``native.go:951-964``)         (rotated by byte size)
-offsets/partitionRefs index     the ``seq`` min/max in each file's
-  (``native.go:66-81``)           footer: the driver reader lists the
-                                 live partitions' committed files and
-                                 prunes them by it; a Spark directory
-                                 scan lists every file, and its row-
-                                 group stats prune after the listing
+offsets/partitionRefs index     one in-memory entry per committed
+  (``native.go:66-81``)           file: its seq span, row count and
+                                 max ``doc_ts``, taken from the batch
+                                 a wire append wrote or from the
+                                 file's footer, read once; the driver
+                                 reader prunes the listed files by it
 gob core dump + restore         the log IS the state: ``seq`` max and
-  (``native.go:155-258``)        partition sizes recovered by scanning
-                                 footers at boot
+  (``native.go:155-258``)        partition sizes folded from that
+                                 index, built from the footers at boot
 2-partition retention           keep newest partitions whose total
   (``native.go:1049-1108``)      size ≤ limit/2 (``native.go:1207``),
                                  delete older; truncatedTimestamp =
@@ -39,14 +39,14 @@ Reads have two shapes too.  A read that needs no typed column
 (:meth:`DocumentLog.read_pages`) is served on the driver, like the
 reference's walk of its partition files in offset order
 (``native.go:374-523``): ``pyarrow`` reads ``seq`` and ``value`` of the
-committed files whose footer ``seq`` range meets the request, one
+committed files whose indexed ``seq`` span meets the request, one
 seq-sorted page per group of overlapping files, each page read only
 once the previous one is taken — no Spark job.  A filtered read is a
 Spark scan (:meth:`DocumentLog.scan`): without files it lists and
 plans every file of the log, and its ``seq`` range predicates then
-skip row groups by their min/max stats.  A wire batch's one file is
-known by its path (:attr:`DocumentLog.last_file`), so the commit
-reader of ``BasenineDB`` reads only the file a commit wrote.
+skip row groups by their min/max stats.  The commit reader of
+``BasenineDB`` asks the index for the files that hold a commit's seqs
+(:meth:`DocumentLog.files`) and reads only those.
 """
 
 from __future__ import annotations
@@ -81,6 +81,13 @@ LOG_SCHEMA = T.StructType(
 
 # a served log record: its seq and stored document
 Record = namedtuple("Record", "seq value")
+
+# a committed file with rows, as the log's index keeps it: its seq
+# span, row count and max doc_ts (None: no record has one)
+_Entry = namedtuple("_Entry", "first last rows max_ts")
+
+# a bulk append packs ⌈records / this⌉ files
+INGEST_ROWS_PER_FILE = 32768
 
 # a live partition's directory; a failed compact() leaves part=N.compact.*
 _PART_DIR = re.compile(r"part=(\d+)")
@@ -130,19 +137,40 @@ def _column_index(md: pq.FileMetaData, name: str) -> int:
     raise KeyError(name)
 
 
-def _seq_span(md: pq.FileMetaData) -> Optional[tuple[int, int]]:
-    """A file's ``(min, max)`` seq from its footer's row-group
-    statistics, or None when a row group lacks them (or there is
-    none)."""
-    col = _column_index(md, "seq")
-    lo = hi = None
+def _row_group_stats(md: pq.FileMetaData, name: str) -> list:
+    """The statistics of top-level column ``name`` in each row group
+    of a parquet footer that has min/max ones."""
+    col = _column_index(md, name)
+    out = []
     for rg in range(md.num_row_groups):
         st = md.row_group(rg).column(col).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
+        if st is not None and st.has_min_max:
+            out.append(st)
+    return out
+
+
+def _footer_entry(path: str) -> Optional[_Entry]:
+    """A committed file's index entry from its footer, or None when it
+    has no rows.  A file with rows but no ``seq`` statistics is an
+    error: both writers of the log write them."""
+    md = pq.read_metadata(path)
+    if not md.num_rows:
+        return None
+    seq = _row_group_stats(md, "seq")
+    if len(seq) < md.num_row_groups:
+        raise ValueError(f"{path}: no seq statistics in its footer")
+    ts = [st.max for st in _row_group_stats(md, "doc_ts") if st.max is not None]
+    return _Entry(
+        min(st.min for st in seq),
+        max(st.max for st in seq),
+        md.num_rows,
+        max(ts, default=None),
+    )
+
+
+def _max_ts(entries: list[_Entry]) -> Optional[int]:
+    """The max ``doc_ts`` of the files of ``entries``."""
+    return max((e.max_ts for e in entries if e.max_ts is not None), default=None)
 
 
 def _read_columns(path: str, names: list[str]) -> list[list]:
@@ -175,19 +203,18 @@ class DocumentLog:
         self._part_ts: dict[int, int] = {}  # partition → max doc_ts
         self.truncated_timestamp = 0
         self.retention_bytes = 0
-        # held while compact() swaps a partition's directory and while
-        # a driver read lists the log, so no listing sees the partition
-        # missing between the two renames
+        # held while compact() swaps a partition's directory, while a
+        # wire append commits a file and while a driver read lists the
+        # log, so no listing sees the partition missing between the two
+        # renames or drops the entry of a file committed after it
         self._swap = threading.Lock()
-        # committed file → its seq span from the footer (None: no rows);
-        # a file never changes under its name, and a listing drops the
-        # paths it no longer returns
-        self._spans: dict[str, Optional[tuple[int, int]]] = {}
+        # the index: committed file → its entry (None: no rows), from
+        # the batch a wire append wrote or from the file's footer, read
+        # once; a file never changes under its name, and a listing
+        # drops the paths it no longer returns
+        self._files: dict[str, Optional[_Entry]] = {}
         if os.path.isdir(path) and self._has_data():
             self._restore()
-        # (min_seq, max_seq, path) of the file the last append
-        # committed by rename; None when it wrote no such file
-        self.last_file: Optional[tuple[int, int, str]] = None
 
     # -- persistence / restore (S8) ------------------------------------
 
@@ -198,63 +225,25 @@ class DocumentLog:
         return False
 
     def _restore(self) -> None:
-        """Restart survival (``native.go:155-258``): all state is derived
-        from parquet FOOTER metadata only — max seq, row counts and max
-        event-times come from row-group statistics, so boot cost is
-        O(files), never a corpus scan (at 100 TB a restart must not read
-        the data).  Falls back to a columnar Spark scan only if some
-        footer lacks statistics."""
-        try:
-            stats = self._footer_stats()
-        except Exception:
-            stats = None
-        if stats is None:  # stats-less writer produced this log
-            df = self.scan()
-            agg = df.groupBy("part").agg(
-                F.max("seq").alias("max_seq"),
-                F.max("doc_ts").alias("max_ts"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()
-            stats = {
-                r["part"]: (r["max_seq"], r["max_ts"], r["n"]) for r in agg
-            }
-        if not stats:
+        """Restart survival (``native.go:155-258``): all state is folded
+        from the index, which boot builds from the parquet FOOTERS only
+        — max seq, row counts and max event-times come from row-group
+        statistics, so boot cost is O(files), never a corpus scan (at
+        100 TB a restart must not read the data), and the first read
+        after it opens no footer.  A committed file with rows but no
+        ``seq`` statistics raises ``ValueError``."""
+        parts = {p: self._part_entries(p) for p in self._live_parts()}
+        parts = {p: entries for p, entries in parts.items() if entries}
+        if not parts:
             return
-        self._count = max(s[0] for s in stats.values()) + 1
-        self._part = max(stats)
-        self._part_ts = {
-            p: s[1] for p, s in stats.items() if s[1] is not None
-        }
-        live = sum(s[2] for s in stats.values())
+        self._count = max(e.last for es in parts.values() for e in es) + 1
+        self._part = max(parts)
+        for p, entries in parts.items():
+            ts = _max_ts(entries)
+            if ts is not None:
+                self._part_ts[p] = ts
+        live = sum(e.rows for es in parts.values() for e in es)
         self._removed = self._count - live  # retention-dropped before restart
-
-    def _footer_stats(self) -> Optional[dict]:
-        """{part: (max_seq, max_doc_ts, rows)} from parquet footers, or
-        None when any column chunk lacks min/max statistics."""
-        out: dict[int, list] = {}
-        for part in self._live_parts():
-            agg = [None, None, 0]
-            for fp in self._part_files(part):
-                md = pq.ParquetFile(fp).metadata
-                if md.num_row_groups == 0:
-                    continue
-                seqs = _seq_span(md)
-                if seqs is None:
-                    return None
-                agg[0] = seqs[1] if agg[0] is None else max(agg[0], seqs[1])
-                agg[2] += md.num_rows
-                col = _column_index(md, "doc_ts")
-                for rg in range(md.num_row_groups):
-                    ts_st = md.row_group(rg).column(col).statistics
-                    if ts_st is not None and ts_st.has_min_max and ts_st.max is not None:
-                        agg[1] = (
-                            ts_st.max
-                            if agg[1] is None
-                            else max(agg[1], ts_st.max)
-                        )
-            if agg[0] is not None:
-                out[part] = agg
-        return {p: tuple(v) for p, v in out.items()}
 
     # -- append (S1/S2/S3/S4) ------------------------------------------
 
@@ -314,9 +303,9 @@ class DocumentLog:
             doc_tss.append(_doc_ts(obj.get("timestamp")))
             values.append(json.dumps(obj, separators=(",", ":")))
 
-        self.last_file = None
         if written:
             part = self._part
+            batch_ts = max((t for t in doc_tss if t is not None), default=None)
             tbl = pa.table(
                 {
                     "seq": pa.array(seqs, pa.int64()),
@@ -331,8 +320,8 @@ class DocumentLog:
                     out = tbl.append_column(
                         "doc", pa.array(objs, to_arrow_type(shred_schema))
                     )
-                path = self._commit_file(out, part)
-                self.last_file = base, base + written - 1, path
+                entry = _Entry(base, base + written - 1, written, batch_ts)
+                self._commit_file(out, part, entry)
             except (pa.ArrowException, UnicodeEncodeError):
                 # a value Arrow refuses (a lone-surrogate string fails
                 # to encode before Arrow sees it)
@@ -341,7 +330,6 @@ class DocumentLog:
                     df.withColumn("part", F.lit(part).cast("long")),
                     shred_schema,
                 )
-            batch_ts = max((t for t in doc_tss if t is not None), default=None)
             if batch_ts is not None:
                 self._part_ts[part] = max(
                     batch_ts, self._part_ts.get(part, batch_ts)
@@ -351,11 +339,12 @@ class DocumentLog:
         self._maybe_rotate()
         return ids
 
-    def _commit_file(self, tbl: pa.Table, part: int) -> str:
-        """Write ``tbl`` as one parquet file of ``part=N/``, made visible
-        by an atomic rename, and return its path: it is written under a
-        ``.``-prefixed name, which Spark's file index skips, so a
-        concurrent scan never lists a half-written file."""
+    def _commit_file(self, tbl: pa.Table, part: int, entry: _Entry) -> None:
+        """Write ``tbl`` as one parquet file of ``part=N/`` and index it
+        as ``entry``, so no read opens its footer.  It is written under
+        a ``.``-prefixed name, which Spark's file index skips, and made
+        visible by an atomic rename, so a concurrent scan never lists a
+        half-written file."""
         pdir = os.path.join(self.path, f"part={part}")
         os.makedirs(pdir, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
@@ -369,11 +358,12 @@ class DocumentLog:
                 store_schema=False,
                 write_statistics=_stats_columns(tbl.schema),
             )
-            os.rename(tmp, os.path.join(pdir, name))
+            with self._swap:
+                os.rename(tmp, os.path.join(pdir, name))
+                self._files[os.path.join(pdir, name)] = entry
         finally:
             if os.path.exists(tmp):
                 os.remove(tmp)
-        return os.path.join(pdir, name)
 
     def _write_spark(
         self, df: DataFrame, shred_schema: Optional[T.StructType]
@@ -504,12 +494,7 @@ class DocumentLog:
                 # once. Coalesce concatenates parent partitions in
                 # index order, so ids still follow the input order —
                 # and the stamp guards that assumption loudly.
-                n_files = max(
-                    1,
-                    -(-written // int(
-                        os.environ.get("BN_INGEST_ROWS_PER_FILE", "32768")
-                    )),
-                )
+                n_files = max(1, -(-written // INGEST_ROWS_PER_FILE))
 
                 def stamp(batches):
                     import json as _json
@@ -572,21 +557,9 @@ class DocumentLog:
         return written
 
     def _refresh_part_ts(self, part: int) -> None:
-        try:
-            footer = (self._footer_stats() or {}).get(part)
-        except Exception:
-            footer = None
-        if footer is not None:  # O(files), no job
-            if footer[1] is not None:
-                self._part_ts[part] = footer[1]
-            return
-        pdir = os.path.join(self.path, f"part={part}")
-        df = self.spark.read.schema(
-            T.StructType([f for f in LOG_SCHEMA.fields if f.name != "part"])
-        ).parquet(pdir)
-        row = df.agg(F.max("doc_ts").alias("t")).collect()[0]
-        if row["t"] is not None:
-            self._part_ts[part] = row["t"]
+        ts = _max_ts(self._part_entries(part))
+        if ts is not None:
+            self._part_ts[part] = ts
 
     # -- retention (S6/S7/M7) ------------------------------------------
 
@@ -624,6 +597,11 @@ class DocumentLog:
             if n.endswith(".parquet") and not n.startswith((".", "_"))
         ]
 
+    def _part_entries(self, part: int) -> list[_Entry]:
+        """The index entries of a partition's committed files with
+        rows."""
+        return [e for e in map(self._entry, self._part_files(part)) if e]
+
     def _maybe_rotate(self) -> None:
         """Partition rotation + bounded retention (``native.go:1049-1108``):
         when the write partition exceeds limit/2, start a new one; keep at
@@ -638,24 +616,11 @@ class DocumentLog:
         parts = self._live_parts()
         while len(parts) > 2:  # ≤2 live partitions (native.go:1088-1105)
             oldest = parts[0]
-            try:
-                footer = (self._footer_stats() or {}).get(oldest)
-            except Exception:
-                footer = None
-            if footer is not None:  # O(files): footer metadata only
-                n, t = footer[2], footer[1]
-            else:
-                dropped = self.spark.read.schema(
-                    T.StructType(
-                        [f for f in LOG_SCHEMA.fields if f.name != "part"]
-                    )
-                ).parquet(os.path.join(self.path, f"part={oldest}"))
-                row = dropped.agg(
-                    F.count(F.lit(1)).alias("n"), F.max("doc_ts").alias("t")
-                ).collect()[0]
-                n, t = row["n"], row["t"]
-            self._removed += n
-            ts = t if t is not None else self._part_ts.get(oldest)
+            entries = self._part_entries(oldest)  # the index: no data read
+            self._removed += sum(e.rows for e in entries)
+            ts = _max_ts(entries)
+            if ts is None:
+                ts = self._part_ts.get(oldest)
             if ts is not None:
                 self.truncated_timestamp = int(ts) + 1
             shutil.rmtree(os.path.join(self.path, f"part={oldest}"))
@@ -674,11 +639,11 @@ class DocumentLog:
         :data:`Record`, read with ``pyarrow`` on the driver: no Spark
         job.
 
-        The live partitions' committed files are pruned by the ``seq``
-        min/max in their footers, each footer read once per file
-        (:meth:`_span`).  Files whose seq ranges overlap (a bulk or compacted file may overlap others) form one
-        group, and each group is one seq-sorted page, in ascending seq
-        order (descending with ``descending``).  A group's files are
+        The live partitions' committed files are pruned by their ``seq``
+        spans in the index (:meth:`files`).  Files whose spans overlap
+        (a bulk or compacted file may overlap others) form one group,
+        and each group is one seq-sorted page, in ascending seq order
+        (descending with ``descending``).  A group's files are
         read only once the previous page is taken, so a reader holds
         one page at a time.  Only ``seq`` and ``value`` are read.
 
@@ -688,9 +653,7 @@ class DocumentLog:
         :meth:`compact` (which swaps a partition's directory while no
         read lists the log) makes a read lose or repeat no record,
         while records that retention drops during a read may be missing
-        from it, as from a read that starts after the drop.  A file
-        with rows but no ``seq`` statistics in its footer is an error:
-        both writers of the log write them."""
+        from it, as from a read that starts after the drop."""
         lo = -math.inf if min_seq is None else min_seq
         hi = math.inf if max_seq is None else max_seq
         while True:
@@ -711,20 +674,8 @@ class DocumentLog:
     def _page_groups(self, lo, hi, descending: bool) -> list[list]:
         """``[paths, min seq, max seq]`` of each group of overlapping
         files that holds a seq in ``[lo, hi]``, in page order."""
-        with self._swap:
-            files = [
-                f for part in self._live_parts() for f in self._part_files(part)
-            ]
-        known = self._spans
-        self._spans = {p: known[p] for p in files if p in known}
-        spans = []
-        for path in files:
-            span = self._span(path)
-            if span is not None and span[0] <= hi and span[1] >= lo:
-                spans.append((*span, path))
-        spans.sort()
         groups: list = []
-        for first, last, path in spans:
+        for first, last, path in self.files(lo, hi):
             if groups and first <= groups[-1][2]:
                 groups[-1][0].append(path)
                 groups[-1][2] = max(groups[-1][2], last)
@@ -734,19 +685,35 @@ class DocumentLog:
             groups.reverse()
         return groups
 
-    def _span(self, path: str) -> Optional[tuple[int, int]]:
-        """A committed file's seq span (None: it has no rows), read from
-        its footer the first time it is asked for."""
+    def files(self, min_seq=-math.inf, max_seq=math.inf) -> list[tuple]:
+        """``(first seq, last seq, path)`` of each committed file of the
+        live partitions that holds a seq in ``[min_seq, max_seq]``,
+        sorted, by the index: a footer is opened only for a file the
+        index has no entry for (:meth:`_entry`)."""
+        with self._swap:
+            paths = [
+                f for part in self._live_parts() for f in self._part_files(part)
+            ]
+            known = self._files
+            self._files = {p: known[p] for p in paths if p in known}
+        out = []
+        for path in paths:
+            e = self._entry(path)
+            if e is not None and e.first <= max_seq and e.last >= min_seq:
+                out.append((e.first, e.last, path))
+        out.sort()
+        return out
+
+    def _entry(self, path: str) -> Optional[_Entry]:
+        """A committed file's index entry (None: it has no rows), read
+        from its footer the first time it is asked for
+        (:func:`_footer_entry`)."""
         try:
-            return self._spans[path]
+            return self._files[path]
         except KeyError:
             pass
-        md = pq.read_metadata(path)
-        span = _seq_span(md)
-        if span is None and md.num_rows:
-            raise ValueError(f"{path}: no seq statistics in its footer")
-        self._spans[path] = span
-        return span
+        entry = self._files[path] = _footer_entry(path)
+        return entry
 
     def scan(
         self,
@@ -758,8 +725,8 @@ class DocumentLog:
         Without ``files`` it is a directory scan: Spark lists and plans
         every file of the log, and ``seq`` range predicates skip row
         groups by their min/max stats only after that.  With ``files``
-        (the commit reader passes :attr:`last_file`'s) only those files
-        are read."""
+        (the commit reader passes those :meth:`files` names for its
+        commit) only those files are read."""
         reader = self.spark.read.schema(schema)
         if files is None:
             return reader.parquet(self.path)
@@ -836,4 +803,5 @@ class DocumentLog:
         self._removed = 0
         self._part = 0
         self._part_ts = {}
+        self._files = {}
         self.truncated_timestamp = 0

@@ -270,7 +270,7 @@ def _shred_canon(dt: T.DataType) -> Optional[T.DataType]:
     return dt
 
 
-def infer_json_lines_schema(spark, lines_df, sampling_ratio: float = 1.0):
+def infer_json_lines_schema(spark, lines_df):
     """Distributed JSON schema inference over a single-string-column
     DataFrame of JSON lines, staying JVM-side end-to-end.
 
@@ -315,13 +315,9 @@ def infer_json_lines_schema(spark, lines_df, sampling_ratio: float = 1.0):
         reader = spark._jsparkSession.read()
         for k, v in strict_opts.items():
             reader = reader.option(k, v)
-        if sampling_ratio < 1.0:
-            reader = reader.option("samplingRatio", str(sampling_ratio))
         return _PyDF(reader.json(jds), spark).schema
     except Exception:
         reader = spark.read
         for k, v in strict_opts.items():
             reader = reader.option(k, v)
-        if sampling_ratio < 1.0:
-            reader = reader.option("samplingRatio", sampling_ratio)
         return reader.json(one_col.rdd.map(lambda r: r[0])).schema

@@ -208,8 +208,7 @@ def morton_keys(
 def _footer_minmax(md, col_idx: int):
     """(lo, hi) across a file's row groups from the parquet footer, or
     None when ANY row group lacks min/max statistics (a stats-less
-    writer, or a type parquet keeps no stats for) — mirroring the
-    None/has_min_max guard in ``engine/log._footer_stats``; callers
+    writer, or a type parquet keeps no stats for); callers
     must treat None as "cannot prune" (the conservative decision a
     stats-driven scan makes)."""
     los, his = [], []

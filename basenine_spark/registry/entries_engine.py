@@ -4,34 +4,24 @@ registration ORDER is load-bearing (the driver window is the first
 in __init__.py."""
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..bfl.compiler import UnsupportedBFL, compile_filter
+from ..bfl.compiler import compile_filter
 from ..engine.db import BasenineDB
 from ..ops import (
-    bpe,
     dedup,
-    expectations,
-    graph,
-    layout,
     multimodal,
     pipeline,
     privacy,
-    quality_model,
     relational,
     sampling,
     similarity,
     text,
     timeseries,
 )
-from ..ops.util import stable_round_sql
 from ..sources.tables import load_table
-from ..streaming import replay as streaming_replay
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
 from ._core import ORACLES, QueryFn, SPARK_QUERIES, _register  # noqa: F401
 
 

@@ -3,34 +3,8 @@ from the monolithic registry.py (round 12); _finalize_order() runs
 at import time, after every entries module has registered."""
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..bfl.compiler import UnsupportedBFL, compile_filter
-from ..engine.db import BasenineDB
-from ..ops import (
-    bpe,
-    dedup,
-    expectations,
-    graph,
-    layout,
-    multimodal,
-    pipeline,
-    privacy,
-    quality_model,
-    relational,
-    sampling,
-    similarity,
-    text,
-    timeseries,
-)
-from ..ops.util import stable_round_sql
-from ..sources.tables import load_table
-from ..streaming import replay as streaming_replay
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
 from ._core import ORACLES, QueryFn, SPARK_QUERIES, _register  # noqa: F401
 from .entries_engine import _bfl_events
 

@@ -53,20 +53,21 @@ its keys merged into the typed schema — then reads from the last
 served sequence up to the committed total.  Like the reference, which
 scans each new partition once and evaluates every follower's filter on
 what it finds (``native.go:374-523``), the followers of one commit
-share one read: the first follower to wake runs the db's commit
-reader over the file that commit wrote, which evaluates every
-registered filter on the driver over that file's typed rows, and the
-others take their records from it.  A follower that is not at the
-frontier (its first poll, or a slow socket that missed commits) or
-whose filter needs the row backend reads on its own, from its resume
-seq.  So an idle tail costs no Spark job, and neither does a busy one
-whose batches arrive over the wire, however many followers it has; a
-commit the driver cannot decide (a file Spark wrote, an unshredded
-log, a NaN or infinite double, a filter a typed row cannot stand in
-for) costs one Spark job.  The per-connection state is one integer
-(the resume seq); the log's counters, typed schema and
-``_state.json`` live in the serving process, so one daemon owns its
-log directory, as in the reference.
+share one read: the first follower to wake runs the db's commit reader
+over the files the log's index names for that commit; when one file
+holds exactly the commit, whichever writer wrote it, the reader
+evaluates every registered filter on the driver over that file's typed
+rows, and the others take their records from it.  A follower that is
+not at the frontier (its first poll, or a slow socket that missed
+commits) or whose filter needs the row backend reads on its own, from
+its resume seq.  So an idle tail costs no Spark job, and neither does
+a busy one whose batches arrive over the wire, however many followers
+it has; a commit the driver cannot decide (a window no one file holds
+exactly, an unshredded log, a NaN or infinite double, a filter a typed
+row cannot stand in for) costs one Spark job.  The per-connection
+state is one integer (the resume seq); the log's counters, typed
+schema and ``_state.json`` live in the serving process, so one daemon
+owns its log directory, as in the reference.
 Each connection's Spark jobs carry a job group ``bn-conn-<id>`` and a
 description with its mode and a query hash; a commit reader's job is
 in ``bn-commit-<version>``.

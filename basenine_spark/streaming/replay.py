@@ -34,7 +34,6 @@ shape relied on.
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 import uuid
@@ -48,6 +47,11 @@ from pyspark.sql.window import Window
 from ..engine.db import BasenineDB
 from ..sources.tables import load_table
 
+# a replayed stream's shuffle partitions: one per this many rows, and
+# at least STREAM_MIN_PARTITIONS (never above the session default)
+STREAM_ROWS_PER_PARTITION = 16384
+STREAM_MIN_PARTITIONS = 8
+
 
 @contextmanager
 def _stream_partitions(spark: SparkSession, n_rows: int):
@@ -59,24 +63,24 @@ def _stream_partitions(spark: SparkSession, n_rows: int):
     the shuffle-partition count, not the data: the measured exposure
     replay spent ~56 s of cumulative commit time across 128 instances
     for ~120k state rows. Size the stream's shuffle partitions to the
-    replayed volume (``BN_STREAM_ROWS_PER_PARTITION`` rows per
-    partition, default 16384), never ABOVE the session default — a
+    replayed volume (``STREAM_ROWS_PER_PARTITION`` rows per
+    partition, at least ``STREAM_MIN_PARTITIONS``), never ABOVE the session default — a
     cluster-sized session keeps its parallelism; only the
     small-relative-to-default replays shed empty state instances. The
     conf is restored after the stream is planned; the partition count
     is pinned into the query's checkpoint by Spark, and every replay
     projection is partition-count invariant (sets / per-key folds /
     final aggregates)."""
-    target = max(1, int(os.environ.get("BN_STREAM_ROWS_PER_PARTITION",
-                                       "16384")))
-    floor = max(1, int(os.environ.get("BN_STREAM_MIN_PARTITIONS", "8")))
     cur = spark.conf.get("spark.sql.shuffle.partitions")
     # volume-derived, but floored: a stream whose per-row work is
     # CPU-bound Python (applyInPandasWithState folds) still needs
     # compute parallelism even when its state would fit one store —
     # measured: semdedup at 1 partition serialized its per-cluster
     # cosine folds and LOST more than the commit overhead saved
-    n = min(int(cur), max(floor, -(-int(n_rows) // target)))
+    n = min(
+        int(cur),
+        max(STREAM_MIN_PARTITIONS, -(-int(n_rows) // STREAM_ROWS_PER_PARTITION)),
+    )
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield

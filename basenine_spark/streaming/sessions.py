@@ -24,7 +24,6 @@ from typing import Any, Iterator, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

@@ -249,16 +249,18 @@ def test_insert_parses_each_line_once(spark, tmp_path, monkeypatch):
 def test_append_with_retention_reads_no_footer(spark, tmp_path, monkeypatch):
     """``truncatedTimestamp`` bookkeeping takes the batch's own max
     ``timestamp``; an append opens no parquet footer."""
+    from basenine_spark.engine import log as log_module
+
     log = DocumentLog(spark, str(tmp_path / "log"))
     log.set_retention_bytes(10_000_000)
     calls = []
-    stats = DocumentLog._footer_stats
+    read_metadata = log_module.pq.read_metadata
 
-    def counted(self):
-        calls.append(1)
-        return stats(self)
+    def counted(path, *args, **kwargs):
+        calls.append(path)
+        return read_metadata(path, *args, **kwargs)
 
-    monkeypatch.setattr(DocumentLog, "_footer_stats", counted)
+    monkeypatch.setattr(log_module.pq, "read_metadata", counted)
     log.append(['{"timestamp":5}', '{"timestamp":9}', '{"x":1}'])
     log.append(['{"timestamp":7}'])
     assert calls == []

@@ -114,25 +114,6 @@ def test_bulk_preserves_shredded_storage(spark, tmp_path):
     assert "doc" in raw.columns
 
 
-def test_bulk_sampled_inference_still_exact_storage(spark, tmp_path):
-    """schema_sampling_ratio trades inference coverage, never storage:
-    stored payloads and ids are identical to the full-inference run."""
-    from basenine_spark.engine.db import BasenineDB
-
-    df = _lines_df(spark, n=40)
-    full = BasenineDB(spark, path=str(tmp_path / "full"))
-    full.insert_json_df(df)
-    sampled = BasenineDB(spark, path=str(tmp_path / "sampled"))
-    sampled.insert_json_df(df, schema_sampling_ratio=0.2)
-    f_rows = sorted(
-        (r["id"], r["value"]) for r in full._log.scan().collect()
-    )
-    s_rows = sorted(
-        (r["id"], r["value"]) for r in sampled._log.scan().collect()
-    )
-    assert f_rows == s_rows
-
-
 def test_bulk_pure_filter_matches_wire(spark, tmp_path):
     """A pure (non-mutating) insertion filter takes the vectorized
     Column fast path on the bulk route (r12) — stored rows, ids, and

@@ -456,11 +456,11 @@ def _marker_job(sc) -> int:
 
 @pytest.mark.parametrize("followers", [1, 8, 64])
 def test_one_spark_job_per_commit(spark, db, followers):
-    """However many compiled-filter followers there are, a commit of a
-    wire-written file costs no Spark job: the commit reader evaluates
-    every filter on the driver.  A commit whose file Spark wrote (a
-    mixed-kind leaf) costs one job, the commit reader's, tagged with its
-    version."""
+    """However many compiled-filter followers there are, a commit that
+    one file holds costs the commit reader no Spark job: it evaluates
+    every filter on the driver.  That holds for a wire-written file and
+    for one Spark wrote (a mixed-kind leaf), whose jobs are the
+    write's."""
     assert not spark.streams.active  # every job in the window is ours
     sc = spark.sparkContext
     batch = ['{"k":%d}' % i for i in range(64)]
@@ -501,8 +501,7 @@ def test_one_spark_job_per_commit(spark, db, followers):
             assert commit(batch) == ([], 0)
         # Arrow refuses a number under a string leaf: Spark writes it
         tagged, jobs = commit(['{"k":100,"t":1}', '{"k":100,"t":"x"}'])
-        assert db._commit_path is None
-        assert len(tagged) == 1 and jobs > 1
+        assert tagged == [] and jobs >= 1
         assert _wait_until(
             lambda: all(
                 len(r.records()) == 4 * (64 - i) + 2
@@ -617,7 +616,7 @@ def test_query_parse_error_is_logged(db, caplog):
 
 def test_commit_reader_reads_only_the_commits_file(db, monkeypatch):
     """The shared scan of a commit reads the one file that commit
-    wrote, on the driver: no Spark read, no listing of the log."""
+    wrote, on the driver: no Spark read, and no other file."""
     from basenine_spark.engine import db as db_module
 
     for i in range(5):
@@ -638,19 +637,49 @@ def test_commit_reader_reads_only_the_commits_file(db, monkeypatch):
         )
         assert db._commit_scan.rows["k >= 0"] == rows
     assert [r.value for r in rows] == ['{"k":9,"id":"%s"}' % index_to_id(5)]
-    assert read == [db._log.last_file[2]]
+    assert read == [path for _, _, path in db._log.files(5, 5)]
+
+
+def test_a_wire_commits_shared_read_opens_no_footer(db, monkeypatch):
+    """The log indexes a wire commit's file from the batch it wrote, so
+    the commit reader, unfiltered and filtered followers alike, finds
+    the file without opening a footer."""
+    from basenine_spark.engine import log as log_module
+
+    for i in range(5):
+        db.insert_json(['{"k":%d}' % i])
+    db.query_with_metadata("")  # the five files are indexed
+    opened = []
+    read_metadata = log_module.pq.read_metadata
+
+    def spy(path, *args, **kwargs):
+        opened.append(path)
+        return read_metadata(path, *args, **kwargs)
+
+    monkeypatch.setattr(log_module.pq, "read_metadata", spy)
+    for texts in ([""], ["", "k >= 0"]):
+        with db.following(texts[0]), db.following(texts[-1]):
+            db.insert_json(['{"k":9}'])
+            seq = db._committed_total - 1
+            for text in texts:
+                rows, _ = db.query_with_metadata(
+                    text, left_off=index_to_id(seq - 1), as_of=seq
+                )
+                assert db._commit_scan.rows[text] == rows
+                assert [r.seq for r in rows] == [seq]
+    assert opened == []
 
 
 def test_commit_reader_falls_back_when_its_file_is_gone(db):
     """When compaction has rewritten the commit's file, the shared scan
-    reads the commit's range from the log directory instead."""
+    reads the commit's range from the compacted file the index names."""
     import os
 
     for i in range(5):
         db.insert_json(['{"k":%d}' % i])
     with db.following("k >= 0"):
         db.insert_json(['{"k":9}'])
-        path = db._log.last_file[2]
+        ((_, _, path),) = db._log.files(5, 5)
         assert db.compact() == 1
         assert not os.path.exists(path)
         rows, _ = db.query_with_metadata(
@@ -700,7 +729,8 @@ def _both_ways(db, texts):
     schema = db._view_schema()
     qs = [db._prepare(t) for t in texts]
     qs = [q for q in qs if db._row_equivalent(q, schema)]
-    args = (qs, schema, db._commit_path, (db._commit_from, db._committed_total - 1))
+    window = (db._commit_from, db._committed_total - 1)
+    args = (qs, schema, db._log.files(*window), window)
     driver = db._eval_commit(*args)
     spark = db._spark_commit(*args, db._commit_version)
     return [q.text for q in qs], driver, spark
@@ -772,7 +802,7 @@ def test_driver_commit_matches_spark_on_a_mixed_log(db):
     kept = []
     for batch in _MIXED:
         db.insert_json(batch)
-        assert db._commit_path is not None and db._shred_ok
+        assert db._shred_ok
         texts, driver, spark = _both_ways(db, _MIXED_QUERIES + _SPARK_ONLY)
         assert texts == _MIXED_QUERIES
         assert driver is not None
@@ -783,6 +813,40 @@ def test_driver_commit_matches_spark_on_a_mixed_log(db):
     schema = db._view_schema()
     for text in _SPARK_ONLY:
         assert db._row_equivalent(db._prepare(text), schema) is False, text
+
+
+# leaves that hold numbers, strings, objects, arrays, booleans and
+# nulls: a string leaf in the batch schema, which Arrow refuses and
+# Spark's from_json writes as each value's JSON text
+_MIXED_KIND = [
+    '{"v":1,"k":1}', '{"v":"s","k":2}', '{"v":{"a":1},"k":3}',
+    '{"v":[1,2],"k":4}', '{"v":null,"k":5}', '{"v":true}', '{"v":1.5}',
+    '{"v":"1","w":{"x":1}}', '{"w":{"x":"y"}}',
+]
+_MIXED_KIND_QUERIES = [
+    'v == "1"', "v == 1", 'v == "s"', "v == nil", "v != nil", "v", "!v",
+    'v.startsWith("{")', 'v == "true"', "v == true", 'v == "1.5"',
+    "k > 2", "k == nil", 'w.x == "1"', "w.x == 1", "w.x == nil",
+    'v == "[1,2]"', "true",
+]
+
+
+def test_driver_commit_matches_spark_on_a_spark_written_batch(db):
+    """A batch with a mixed-kind leaf is written by Spark as one file;
+    the commit reader decides it on the driver, over the JSON text
+    Spark stored, and keeps what the commit's Spark scan keeps."""
+    db.insert_json(['{"k":0}'])
+    db.insert_json(_MIXED_KIND)
+    window = (db._commit_from, db._committed_total - 1)
+    ((_, _, path),) = db._log.files(*window)
+    import pyarrow.parquet as pq
+
+    assert pq.read_metadata(path).created_by.startswith("parquet-mr")
+    texts, driver, spark = _both_ways(db, _MIXED_KIND_QUERIES)
+    assert texts == _MIXED_KIND_QUERIES
+    assert driver is not None
+    assert dict(zip(texts, driver)) == dict(zip(texts, spark))
+    assert [r.seq for r in dict(zip(texts, driver))['v == "s"']] == [2]
 
 
 def test_non_finite_doubles_take_the_spark_scan(db):
@@ -816,10 +880,9 @@ def test_regex_filters_take_the_spark_scan(db):
     ]
     assert [db._row_equivalent(q, schema) for q in qs] == [False] * 3
     window = (db._commit_from, db._committed_total - 1)
-    assert db._eval_commit(qs, schema, db._commit_path, window) is None
-    kept = db._spark_commit(
-        qs, schema, db._commit_path, window, db._commit_version
-    )
+    files = db._log.files(*window)
+    assert db._eval_commit(qs, schema, files, window) is None
+    kept = db._spark_commit(qs, schema, files, window, db._commit_version)
     assert [[r.seq for r in rows] for rows in kept] == [[], [0, 1, 2], [0, 1]]
 
 
@@ -838,9 +901,7 @@ def test_an_evaluation_error_takes_the_spark_scan(db, monkeypatch):
 
     monkeypatch.setattr(db_module, "eval_doc", failing)
     scan = db_module._CommitScan((db._commit_from, db._committed_total - 1))
-    db._scan_commit(
-        scan, ["k > 2", "k >= 0"], db._commit_path, db._commit_version
-    )
+    db._scan_commit(scan, ["k > 2", "k >= 0"], db._commit_version)
     seqs = {t: [r.seq for r in rows] for t, rows in scan.rows.items()}
     assert seqs == {"k > 2": [1], "k >= 0": [0, 1]}
 

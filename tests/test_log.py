@@ -309,23 +309,75 @@ def test_timestamp_outside_int64_is_stored_with_null_doc_ts(spark, log_path, wri
     assert db.single_json("%024d" % 0, "") == (0, expected[0])
 
 
-def test_last_file_names_the_wire_batch_file(spark, log_path):
-    """``DocumentLog.last_file`` is ``(min_seq, max_seq, path)`` of the
-    one file the last ``append`` committed by rename, and None when the
-    append wrote no such file (nothing kept, or Spark wrote it)."""
+def test_a_wire_commit_indexes_its_file(spark, log_path):
+    """A wire append indexes the one file it commits by rename from the
+    batch itself (seq span, rows, max ``doc_ts``); a file Spark wrote
+    (a mixed-kind leaf) is indexed from its footer when first listed,
+    and an append that keeps nothing writes no file."""
     import os
 
     db = BasenineDB(spark, path=log_path)
     log = db._log
-    db.insert_json(['{"k":0}', '{"k":1}'])
-    lo, hi, path = log.last_file
+    db.insert_json(['{"k":0,"timestamp":7}', '{"k":1}'])
+    ((lo, hi, path),) = log.files()
     assert (lo, hi) == (0, 1) and os.path.isfile(path)
+    assert log._files[path] == (0, 1, 2, 7)
     assert [r["seq"] for r in log.scan([path]).collect()] == [0, 1]
     db.insert_json(['{"k":2}'])
-    assert log.last_file[:2] == (2, 2) and log.last_file[2] != path
+    assert [f[:2] for f in log.files()] == [(0, 1), (2, 2)]
     log.append(['{"k":3}'], insertion_filter_text="k == 0")
-    assert log.last_file is None
+    assert len(log.files()) == 2
     # a mixed-kind leaf: Arrow refuses the batch and Spark writes it
-    db.insert_json(['{"v":1}', '{"v":"s"}'])
-    assert log.last_file is None
+    db.insert_json(['{"v":1,"timestamp":9}', '{"v":"s"}'])
+    spark_file = [p for p in log._part_files(0) if p not in log._files]
+    assert len(spark_file) == 1
+    assert log.files(3, 4) == [(3, 4, spark_file[0])]
+    assert log._files[spark_file[0]] == (3, 4, 2, 9)
     assert log.total_written == 5
+
+
+def test_first_read_after_restart_opens_no_footer(spark, log_path, monkeypatch):
+    """Boot reads each committed file's footer once into the log's
+    index, so the first replay and SINGLE after a restart open none."""
+    from basenine_spark.engine import log as log_module
+
+    db = BasenineDB(spark, path=log_path)
+    for b in range(3):
+        db.insert_json([json.dumps({"n": 2 * b + i}) for i in range(2)])
+    restarted = BasenineDB(spark, path=log_path)
+    opened = []
+    read_metadata = log_module.pq.read_metadata
+
+    def spy(path, *args, **kwargs):
+        opened.append(path)
+        return read_metadata(path, *args, **kwargs)
+
+    monkeypatch.setattr(log_module.pq, "read_metadata", spy)
+    rows, _ = restarted.query_with_metadata("")
+    assert [r.seq for r in rows] == list(range(6))
+    assert restarted.single_json("%024d" % 3)[0] == 3
+    assert opened == []
+
+
+def test_boot_raises_on_a_file_without_seq_statistics(spark, log_path):
+    """A committed file with rows but no ``seq`` statistics is an error
+    at boot, as it is for a driver read: no writer of the log makes
+    one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    DocumentLog(spark, log_path).append(['{"k":0}'])
+    tbl = pa.table(
+        {
+            "seq": pa.array([1], pa.int64()),
+            "id": pa.array(["%024d" % 1]),
+            "value": pa.array(['{"k":1}']),
+            "doc_ts": pa.array([None], pa.int64()),
+        }
+    )
+    path = os.path.join(log_path, "part=0", "part-nostats.parquet")
+    pq.write_table(tbl, path, write_statistics=False)
+    with pytest.raises(ValueError, match="no seq statistics"):
+        DocumentLog(spark, log_path)

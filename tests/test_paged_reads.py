@@ -9,6 +9,7 @@ import os
 import socket
 import threading
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -136,7 +137,8 @@ def mixed(spark, tmp_path_factory):
     db.insert_json(
         ['{"k":50,"v":1,"pad":"%s"}' % PAD, '{"k":51,"v":"s","pad":"%s"}' % PAD]
     )
-    assert log.last_file is None  # Spark wrote the mixed-kind batch
+    ((_, _, path),) = log.files(50, 51)
+    assert pq.read_metadata(path).created_by.startswith("parquet-mr")
     db.insert_json_df(spark.createDataFrame([(d,) for d in _docs(52, 72)], ["value"]))
     db.insert_json(_docs(72, 82))
     assert len(log._part_files(1)) == 4
@@ -318,7 +320,7 @@ def test_unfiltered_commit_reader_falls_back_when_its_file_is_gone(five_files):
     db = five_files
     with db.following(""):
         db.insert_json(_docs(25, 26))
-        path = db._log.last_file[2]
+        ((_, _, path),) = db._log.files(25, 25)
         assert db.compact() == 1
         assert not os.path.exists(path)
         rows, _ = db.query_with_metadata("", left_off=index_to_id(24), as_of=25)
@@ -406,7 +408,7 @@ def test_stray_partition_directories_are_not_read(spark, tmp_path):
     db = BasenineDB(spark, path=path)
     db.insert_json(_docs(0, 5))
     db.insert_json(_docs(5, 10))
-    stray = db._log.last_file[2]
+    stray = db._log.files(5, 9)[0][2]
     for d in ("part=0.compact.tmp", "part=0.compact.old", "part=0/_temporary/0"):
         os.makedirs(os.path.join(path, d), exist_ok=True)
     import shutil
@@ -432,14 +434,25 @@ def test_stray_partition_directories_are_not_read(spark, tmp_path):
     assert [r.seq for r in rows] == list(range(15))
 
 
-def test_concurrent_replays_and_inserts_stay_contiguous(spark, tmp_path):
+def test_concurrent_replays_and_inserts_stay_contiguous(
+    spark, tmp_path, monkeypatch
+):
     """Replays running while batches commit see contiguous seqs from 0
-    up to their snapshot bound."""
+    up to their snapshot bound, and no listing drops the index entry a
+    commit made: no footer is read."""
     import sys
 
     db = BasenineDB(spark, path=str(tmp_path / "store"))
     db.insert_json(_docs(0, 10))
     errors = []
+    opened = []
+    read_metadata = log_module.pq.read_metadata
+
+    def spy(path, *args, **kwargs):
+        opened.append(path)
+        return read_metadata(path, *args, **kwargs)
+
+    monkeypatch.setattr(log_module.pq, "read_metadata", spy)
 
     def replay():
         for _ in range(20):
@@ -462,6 +475,7 @@ def test_concurrent_replays_and_inserts_stay_contiguous(spark, tmp_path):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert not errors
+    assert opened == []
 
 
 def test_a_read_waits_for_a_compaction_swap(five_files, monkeypatch):
@@ -492,13 +506,14 @@ def test_a_read_waits_for_a_compaction_swap(five_files, monkeypatch):
 
 
 def test_a_file_footer_is_read_once(spark, tmp_path, monkeypatch):
-    """The seq span of a committed file is read from its footer once: a
-    second SINGLE on a 50-file log opens no footer of an unchanged
-    file, a new file's is read once, and a compaction drops the spans
-    of the files it replaced."""
+    """The log's index entry of a committed file is read from its footer
+    once: after a restart, nothing reads a footer again; a new wire
+    file is indexed from its batch, so its footer is never read; and a
+    compaction drops the entries of the files it replaced."""
     db = BasenineDB(spark, path=str(tmp_path / "store"))
     for b in range(50):
         db.insert_json(_docs(b, b + 1))
+    db = BasenineDB(spark, path=str(tmp_path / "store"))  # a restart
     opened = []
     read_metadata = log_module.pq.read_metadata
 
@@ -508,15 +523,13 @@ def test_a_file_footer_is_read_once(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(log_module.pq, "read_metadata", spy)
     assert db.single_json(index_to_id(7))[0] == 7
-    assert len(opened) == 50
-    opened.clear()
     assert db.single_json(index_to_id(8))[0] == 8
-    assert opened == []
     db.insert_json(_docs(50, 51))
     assert db.single_json(index_to_id(50))[0] == 50
-    assert opened == [db._log.last_file[2]]
+    assert opened == []
     assert db.compact() == 1
     assert [r.seq for r in db.query_with_metadata("")[0]] == list(range(51))
-    assert set(db._log._spans) == {
+    assert len(opened) == 1  # the compacted file's
+    assert set(db._log._files) == {
         f for part in db._log._live_parts() for f in db._log._part_files(part)
     }

@@ -55,12 +55,3 @@ def test_infer_json_lines_schema_flags_corrupt(spark):
     )
     s = infer_json_lines_schema(spark, df)
     assert "_corrupt_record" in s.fieldNames()
-
-
-def test_infer_json_lines_schema_sampled(spark):
-    from basenine_spark.engine.schema import infer_json_lines_schema
-
-    rows = [('{"a": %d}' % i,) for i in range(500)]
-    df = spark.createDataFrame(rows, "j string")
-    s = infer_json_lines_schema(spark, df, sampling_ratio=0.2)
-    assert s.fieldNames() == ["a"]

@@ -10,9 +10,10 @@ its own client thread.  Every commit is one 200-document
 follower's poll for it has returned; its jobs are all Spark jobs
 started in that span (job ids are dense: two marker jobs bracket it)
 and, of those, the jobs in the commit reader's job group.  The commit
-reader evaluates the filters on the driver; ``--spark`` makes it run
-its Spark fallback for every commit instead, and ``--own`` gives every
-poll its own scan, as before the commit reader.
+reader asks the log's index for the commit's file and evaluates the
+filters on the driver over it; ``--spark`` makes it run its Spark scan
+of that file for every commit instead, and ``--own`` gives every poll
+its own scan, as before the commit reader.
 
 Usage::
 
